@@ -18,6 +18,8 @@ plus the persistence the reference got from snapshot replication:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 from imdb_mapreduce_spark.ingest import (
@@ -26,7 +28,8 @@ from imdb_mapreduce_spark.ingest import (
     movie_to_cast,
 )
 from imdb_mapreduce_spark.operators import graph_export
-from imdb_mapreduce_spark.operators.graph import BfsResult, costar_bfs
+from imdb_mapreduce_spark.operators.graph import COSTAR_COLS, BfsResult, avg_degree
+from imdb_mapreduce_spark.operators.graph import costar_bfs
 from imdb_mapreduce_spark.operators.lookup import cast_of, movies_of
 from imdb_mapreduce_spark.sources.imdb import (
     read_names_tsv,
@@ -44,6 +47,8 @@ class ImdbEngine:
 
     def __init__(self, cast_edges: DataFrame, cache: bool = True):
         self.cast_edges = cast_edges.cache() if cache else cast_edges
+        self._degrees: dict[str, float] = {}  # per query direction, on first use
+        self._degrees_lock = threading.Lock()  # the service's handler threads
 
     # -- construction ------------------------------------------------------
 
@@ -105,15 +110,11 @@ class ImdbEngine:
     ) -> tuple[list[str], list[tuple[str, str, int]]]:
         """The flagship query, reference reply shape ``{Vertices, Edges}``
         (``master.erl:263``): display-sorted vertices + (src, dst, level)
-        edges. Collects — the result is bounded by the ``max_vertices``
-        budget (pass ``None`` for an explicitly unbounded batch use)."""
+        edges. One collect, bounded by the ``max_vertices`` budget (pass
+        ``None`` for an explicitly unbounded batch use); sorted on the driver."""
         res = self.request_df(name, node_type, level, max_vertices)
-        vertices = graph_export.sorted_vertices(res)
-        edges = [
-            (r["src"], r["dst"], r["level"])
-            for r in res.edges.orderBy("level", "src", "dst").collect()
-        ]
-        return vertices, edges
+        edges = graph_export.collect_edges(res)
+        return graph_export.sorted_vertices(res, edges), edges
 
     def request_df(
         self,
@@ -125,9 +126,19 @@ class ImdbEngine:
         """Same query, distributed result (no collect) for composition —
         unbudgeted by default (a DataFrame consumer composes further
         instead of collecting)."""
+        # level 1 runs no round; an unknown node_type is costar_bfs's to reject
+        degree = self._degree(node_type) if level > 1 and node_type in COSTAR_COLS else None
         return costar_bfs(
-            self.cast_edges, name, node_type, level, max_vertices=max_vertices
+            self.cast_edges, name, node_type, level, max_vertices=max_vertices, degree=degree
         )
+
+    def _degree(self, node_type: str) -> float:
+        """:func:`avg_degree` of a query direction, computed once per engine."""
+        with self._degrees_lock:
+            if node_type not in self._degrees:
+                node_col = COSTAR_COLS[node_type][0]
+                self._degrees[node_type] = avg_degree(self.cast_edges, node_col)
+            return self._degrees[node_type]
 
     def cast_of(self, title: str) -> DataFrame:
         return cast_of(self.cast_edges, title)

@@ -29,17 +29,25 @@ re-shuffled in any round: only the tiny frontier-derived sides move. This
 is the durable analog of the reference keeping both adjacency directions
 (``dataInit.erl`` A1/A2), and is pinned by
 ``tests/test_storage.py::test_bucketed_bfs_round_join_needs_no_edge_shuffle``.
+
+Seeds are JVM ``range`` leaves (:func:`one_row`): a local-rows
+``createDataFrame`` is a Python RDD whose every scan starts Python-worker
+tasks (~250 ms each on 4 cores). A round runs its ``count`` and broadcast
+jobs (5 on an 18.6k-edge cast graph), plus one degree job if not passed in.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import cache, reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MOVIE = "movie"
 ACTOR = "actor"
+# query direction → (node_col, via_col) over the (tconst, title, actor) table
+COSTAR_COLS = {ACTOR: ("actor", "title"), MOVIE: ("title", "actor")}
 
 
 class BfsBudgetExceeded(RuntimeError):
@@ -63,6 +71,22 @@ class BfsBudgetExceeded(RuntimeError):
             f"{level} > max_vertices={budget}; narrow the query (lower "
             "level) or raise the budget"
         )
+
+
+def one_row(spark, *cols: Column) -> DataFrame:
+    """One row of ``cols`` on a one-partition JVM ``range`` leaf — not the
+    Python RDD (``sc.parallelize``) a local-rows ``createDataFrame`` is."""
+    return spark.range(0, 1, 1, 1).select(*cols)
+
+
+def avg_degree(edges: DataFrame, node_col: str) -> float:
+    """Edges per distinct ``node_col`` (HyperLogLog estimate). One job, no
+    shuffle of the edge table: count and sketch both fold map-side."""
+    stats = edges.agg(
+        F.count(F.lit(1)).alias("n_edges"),
+        F.approx_count_distinct(node_col).alias("n_nodes"),
+    ).collect()[0]
+    return stats["n_edges"] / max(1, stats["n_nodes"])
 
 
 # Pre-join fail-fast slack: a round is refused BEFORE its expansion join
@@ -93,16 +117,15 @@ def _bfs_rounds(
     ordering that keeps Catalyst from pushing the anti-join into a
     full-table exchange), guarded broadcasts, per-round localCheckpoint,
     budget enforcement, vertex assembly — lives exactly once."""
-    frontier = spark.createDataFrame([(root,)], ["node"])
-    frontier_rows = 1
-    visited = frontier
-    visited_rows = 1
     # node domain follows the root's Python type (string for name graphs,
     # long for id graphs — the id form keeps bucketed layouts usable)
     node_sql = "string" if isinstance(root, str) else "bigint"
-    result_edges = spark.createDataFrame(
-        [], f"src {node_sql}, dst {node_sql}, level int"
-    )
+    root_lit = F.lit(root).cast(node_sql)
+    frontier = one_row(spark, root_lit.alias("node"))
+    frontier_rows = 1
+    visited = frontier
+    visited_rows = 1
+    rounds: list[DataFrame] = []
 
     for lvl in range(1, level):
         pairs, est_candidates = expand(frontier, frontier_rows)
@@ -130,7 +153,7 @@ def _bfs_rounds(
         frontier_rows = children.count()
         if frontier_rows == 0:
             break
-        result_edges = result_edges.unionByName(children)
+        rounds.append(children)
         new_nodes = children.select(F.col("dst").alias("node"))
         visited = visited.unionByName(new_nodes)
         visited_rows += frontier_rows
@@ -138,10 +161,14 @@ def _bfs_rounds(
             raise BfsBudgetExceeded(visited_rows, max_vertices, lvl)
         frontier = new_nodes
 
+    if not rounds:  # level 1, or a root without neighbours: no edges
+        cols = (root_lit.alias("src"), root_lit.alias("dst"), F.lit(0).alias("level"))
+        rounds.append(one_row(spark, *cols).limit(0))
+    result_edges = reduce(DataFrame.unionByName, rounds)
     vertices = (
         result_edges.select(F.col("src").alias("name"))
         .unionByName(result_edges.select(F.col("dst").alias("name")))
-        .unionByName(spark.createDataFrame([(root,)], ["name"]))
+        .unionByName(one_row(spark, root_lit.alias("name")))
         .distinct()
     )
     return BfsResult(
@@ -216,6 +243,7 @@ def bipartite_bfs(
     max_broadcast_rows: int = 1_000_000,
     edges_inverted: DataFrame | None = None,
     max_vertices: int | None = None,
+    degree: float | None = None,
 ) -> BfsResult:
     """Generic k-level same-type expansion over any bipartite edge table
     (G1+G2, J4, J5, A4). ``node_col`` is the queried entity type, ``via_col``
@@ -224,8 +252,8 @@ def bipartite_bfs(
 
     Broadcast guard: each round knows the frontier's exact row count (the
     checkpoint materializes it) and estimates the first hop as
-    frontier × average degree (degree stats computed once, lazily, the
-    first time a frontier outgrows the trivial case). A side is broadcast
+    frontier × average degree (``degree``, else :func:`avg_degree` run once,
+    lazily, when a frontier outgrows the trivial case). A side is broadcast
     only while its estimate stays under ``max_broadcast_rows``; past that
     the hint is dropped and AQE chooses from runtime sizes, so the
     operator is safe at any level, not just the GUI's 1..4.
@@ -247,23 +275,13 @@ def bipartite_bfs(
     retry with a higher budget if the fail-fast was too conservative.
     """
     spark = edges.sparkSession
-    stats_cache: list[float] = []  # lazy avg degree: count jobs only if needed
-
-    def _avg_degree() -> float:
-        if not stats_cache:
-            # One job, no shuffle of the edge table: count + HLL sketch
-            # both fold map-side; only sketches cross the wire.
-            stats = edges.agg(
-                F.count(F.lit(1)).alias("n_edges"),
-                F.approx_count_distinct(node_col).alias("n_nodes"),
-            ).collect()[0]
-            stats_cache.append(stats["n_edges"] / max(1, stats["n_nodes"]))
-        return stats_cache[0]
+    # lazy: the degree job runs only if a round needs the degree
+    deg_of = cache(lambda: avg_degree(edges, node_col) if degree is None else degree)
 
     # level k = k-1 expansion rounds (master.erl:259,271). Aggregate-
     # before-anti-join rationale lives in _bfs_rounds (shared machinery).
     def expand(frontier: DataFrame, frontier_rows: int):
-        deg = _avg_degree() if (frontier_rows > 1 or max_vertices) else None
+        deg = deg_of() if (frontier_rows > 1 or max_vertices) else None
         hop1_estimate = frontier_rows * (deg if deg else 1.0)
         pairs = _two_hop(
             frontier,
@@ -329,16 +347,7 @@ def unipartite_bfs(
     ``BfsBudgetExceeded.estimated=True`` — the exact post-round check
     (``estimated=False``) remains authoritative."""
     spark = edges.sparkSession
-    stats_cache: list[float] = []
-
-    def _avg_degree() -> float:
-        if not stats_cache:
-            stats = edges.agg(
-                F.count(F.lit(1)).alias("n_edges"),
-                F.approx_count_distinct(src_col).alias("n_nodes"),
-            ).collect()[0]
-            stats_cache.append(stats["n_edges"] / max(1, stats["n_nodes"]))
-        return stats_cache[0]
+    deg_of = cache(lambda: avg_degree(edges, src_col))
 
     def expand(frontier: DataFrame, frontier_rows: int):
         f = frontier.select(F.col("node").alias("src"))
@@ -350,7 +359,7 @@ def unipartite_bfs(
             .filter(F.col("src") != F.col("dst"))
             .select("src", "dst")
         )
-        est = frontier_rows * _avg_degree() if max_vertices else None
+        est = frontier_rows * deg_of() if max_vertices else None
         return pairs, est
 
     return _bfs_rounds(
@@ -373,29 +382,29 @@ def costar_bfs(
     checkpoint: bool = True,
     max_broadcast_rows: int = 1_000_000,
     max_vertices: int | None = None,
+    degree: float | None = None,
 ) -> BfsResult:
     """k-level co-star / shared-cast-movie graph — the reference's flagship
     query (``master.erl:251-288``). ``cast_edges`` is the silver
     ``(tconst, title, actor)`` table; both query directions run against it —
-    no inverted copy needed.
+    no inverted copy needed. ``degree``: a kept :func:`avg_degree`.
     """
     if not name:
         # API-level input validation (F8, /root/reference/src/client/client.erl:139-140)
         raise ValueError("search name must be non-empty")
-    if node_type not in (MOVIE, ACTOR):
+    if node_type not in COSTAR_COLS:
         raise ValueError(f"node_type must be '{MOVIE}' or '{ACTOR}'")
     if not 1 <= level <= 10:
         raise ValueError("level must be in 1..10 (reference GUI offers 1..4)")
 
-    node_col, via_col = ("actor", "title") if node_type == ACTOR else ("title", "actor")
     res = bipartite_bfs(
         cast_edges,
-        node_col,
-        via_col,
+        *COSTAR_COLS[node_type],
         name,
         level,
         checkpoint,
         max_broadcast_rows,
         max_vertices=max_vertices,
+        degree=degree,
     )
-    return BfsResult(root=name, node_type=node_type, edges=res.edges, vertices=res.vertices)
+    return replace(res, node_type=node_type)

@@ -19,8 +19,6 @@ from __future__ import annotations
 import re
 from collections import defaultdict
 
-from pyspark.sql import functions as F
-
 from imdb_mapreduce_spark.operators.graph import ACTOR, BfsResult
 
 _SANITIZE = re.compile(r"[^A-Za-z0-9]")
@@ -31,32 +29,34 @@ def sanitize_id(name: str) -> str:
     return _SANITIZE.sub("_", name)
 
 
-def _surname_key(name: str) -> str:
-    """Sort key = last space-separated token (X6, ``graph.erl:95-97``)."""
-    return name.rsplit(" ", 1)[-1]
+def _display_key(node_type: str):
+    """Display order: movies lexicographic (O1), actors by surname = last
+    space-separated token (O2, X6, ``graph.erl:93-98``), then full name.
+    Python's code-point ``str`` order is Spark's binary UTF-8 sort order."""
+    return (lambda n: (n.rsplit(" ", 1)[-1], n)) if node_type == ACTOR else None
 
 
-def sorted_vertices(result: BfsResult) -> list[str]:
-    """Display order: movies lexicographic (O1), actors by surname (O2).
+def collect_edges(result: BfsResult) -> list[tuple]:
+    """``(src, dst, level)`` edges in one collect, by (level, src, dst)."""
+    edges = [(r["src"], r["dst"], r["level"]) for r in result.edges.collect()]
+    return sorted(edges, key=lambda e: (e[2], e[0], e[1]))
 
-    Distributed sort with an expression key, then bounded collect — the
-    result graph is small by construction (bounded depth).
-    """
-    if result.node_type == ACTOR:
-        key = F.element_at(F.split(F.col("name"), " "), -1)
-    else:
-        key = F.col("name")
-    return [r[0] for r in result.vertices.orderBy(key, F.col("name")).collect()]
+
+def sorted_vertices(result: BfsResult, edges: list[tuple]) -> list[str]:
+    """Root and edge ends of ``edges`` in display order (no Spark job)."""
+    names = {result.root}
+    for src, dst, _level in edges:
+        names.update((src, dst))
+    return sorted(names, key=_display_key(result.node_type))
 
 
 def to_dot(result: BfsResult) -> str:
     """Assemble DOT text (G4) via DFS from the root (G3)."""
-    edges = result.edges.orderBy("level", "src", "dst").collect()
     children: dict[str, list[str]] = defaultdict(list)
-    for row in edges:
-        children[row["src"]].append(row["dst"])
+    for src, dst, _level in collect_edges(result):
+        children[src].append(dst)
     for v in children.values():
-        v.sort(key=_surname_key if result.node_type == ACTOR else str)
+        v.sort(key=_display_key(result.node_type))
 
     lines = ["digraph G {", f'  label="{result.root} (level graph)";']
     emitted: set[str] = set()
@@ -71,11 +71,8 @@ def to_dot(result: BfsResult) -> str:
             lines.append(f"  {nid} -> {sanitize_id(child)};")
             dfs(child)
 
+    # the edges are a tree under the root: DFS declares every vertex
     dfs(result.root)
-    # Isolated vertices (root with no expansion) are still declared.
-    for name in sorted_vertices(result):
-        if name not in emitted:
-            lines.append(f'  {sanitize_id(name)} [label="{name}"];')
     lines.append("}")
     return "\n".join(lines)
 

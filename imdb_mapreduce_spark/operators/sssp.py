@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imdb_mapreduce_spark.operators.graph import one_row
+
 
 def bounded_sssp(
     edges: DataFrame,
@@ -39,8 +41,8 @@ def bounded_sssp(
     aggregation, one improvement anti-check against the running distance
     table, and a ``localCheckpoint`` to keep lineage flat. Early exit
     when a round improves nothing (the frontier drains)."""
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(int(source), 0)], "node bigint, dist bigint")
+    node, zero = F.lit(int(source)).cast("bigint"), F.lit(0).cast("bigint")
+    dist = one_row(edges.sparkSession, node.alias("node"), zero.alias("dist"))
     frontier = dist
     frontier_rows = 1
     dist_rows_bound = 1  # running upper bound: grows by ≤ frontier_rows/round

@@ -55,7 +55,6 @@ METHODS = {"collect", "crossJoin", "toPandas", "toLocalIterator"}
 
 # (relpath, enclosing function, method) → (expected site count, class)
 INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
-    ("api.py", "request", "collect"): (1, "bounded-export"),
     ("plans/analytics.py", "zone_map_prune_audit", "crossJoin"):
         (3, "bounded-dims"),
     ("plans/events.py", "events_gapfill_zero", "crossJoin"):
@@ -73,10 +72,12 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("operators/components.py", "_driver_union_find", "collect"):
         (1, "thresholded"),
     ("operators/components.py", "_checksum", "collect"): (1, "scalar-agg"),
-    ("operators/graph.py", "_avg_degree", "collect"): (2, "scalar-agg"),
-    ("operators/graph_export.py", "sorted_vertices", "collect"):
-        (1, "bounded-export"),
-    ("operators/graph_export.py", "to_dot", "collect"):
+    # one degree aggregate shared by both BFS forms and ImdbEngine, which
+    # runs it once per query direction
+    ("operators/graph.py", "avg_degree", "collect"): (1, "scalar-agg"),
+    # the one fetch of a BFS reply's edges (ImdbEngine.request, to_dot);
+    # vertex order is then worked out on the driver, with no job
+    ("operators/graph_export.py", "collect_edges", "collect"):
         (1, "bounded-export"),
     ("pipeline/curation.py", "split_leakage_audit", "crossJoin"):
         (1, "one-row-attach"),

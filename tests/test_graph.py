@@ -231,3 +231,119 @@ def test_bfs_budget_pre_join_estimate_fails_fast(spark):
     # either guard may fire first depending on degree stats, but the
     # estimated pre-join path must be reachable on this dense graph
     assert ei.value.budget == 2
+
+
+def _leaf_names(df) -> list[str]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_seeds_are_jvm_relations(spark, cast_edges):
+    """The relations the graph operators seed (root frontier, root vertex
+    row, empty result, SSSP source) are JVM ``range`` leaves: a
+    ``createDataFrame`` seed is a Python RDD (``LogicalRDD``), and every
+    scan of it starts Python-worker tasks. ``checkpoint=False`` keeps each
+    round a logical plan — a ``localCheckpoint`` is itself an RDD leaf."""
+    from imdb_mapreduce_spark.operators.graph import unipartite_bfs
+    from imdb_mapreduce_spark.operators.sssp import bounded_sssp
+
+    ring = spark.range(20).selectExpr("id AS src", "(id + 1) % 20 AS dst", "1L AS w")
+    costar = costar_bfs(cast_edges, "Jane Doe", "actor", level=3, checkpoint=False)
+    root_only = costar_bfs(cast_edges, "Jane Doe", "actor", level=1)
+    plans = {
+        "costar.edges": costar.edges,
+        "costar.vertices": costar.vertices,
+        "level1.edges": root_only.edges,
+        "level1.vertices": root_only.vertices,
+        "unipartite": unipartite_bfs(ring, "src", "dst", 0, level=3, checkpoint=False).edges,
+        "sssp": bounded_sssp(ring, 0, rounds=3, checkpoint=False),
+    }
+    for what, df in plans.items():
+        leaves = _leaf_names(df)
+        assert leaves, what
+        assert not {"LogicalRDD", "ExistingRDD"} & set(leaves), (what, leaves)
+    assert _edges(costar) == {
+        ("Jane Doe", "John Q. Smith 0", 1),
+        ("Jane Doe", "Bob O'Hara", 1),
+    }
+
+
+def test_level1_request_runs_at_most_one_job(spark, cast_edges):
+    """A level-1 reply is the root alone: one bounded collect of an empty
+    edge relation, no sort job and no degree aggregate."""
+    from imdb_mapreduce_spark.api import ImdbEngine
+
+    sc = spark.sparkContext
+    engine = ImdbEngine(cast_edges)
+    sc.setJobGroup("test-level1-request", "level-1 request")
+    try:
+        reply = engine.request("Jane Doe", "actor", level=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert reply == (["Jane Doe"], [])
+    assert len(sc.statusTracker().getJobIdsForGroup("test-level1-request")) <= 1
+
+
+# Names whose display order is easy to get wrong: non-ASCII against ASCII
+# ('é' U+00E9 sorts after 'z'), a trailing space (surname ""), a shared
+# surname, punctuation and the digit 0, a one-word name.
+_ORDER_CAST = {
+    "Hub": ["Ann Root", "Léa Étoile", "Zoe Zulu", "Eve zed", "Eve élan",
+            "Kim Lee ", "Tom Hanks", "Colin Hanks", "Bob O'Hara",
+            "John Q. Smith 0", "Mononym"],
+    "Épée": ["Léa Étoile"],
+    "epee": ["Eve élan"],
+    "Zorro": ["Zoe Zulu"],
+    "Movie 0": ["John Q. Smith 0"],
+    "Trailing ": ["Kim Lee "],
+    "O'Brien's Day": ["Bob O'Hara"],
+    "Sequel": ["Tom Hanks", "Rita Ray"],
+    "Far": ["Rita Ray", "Al Far"],
+}
+
+
+def test_request_order_matches_spark_sort(spark):
+    """``ImdbEngine.request`` orders on the driver; the result must equal
+    the Spark sort it replaced — vertices by ``orderBy(element_at(split(
+    name, " "), -1), name)`` (actors) or by name (movies), edges by
+    (level, src, dst) — for both query directions, level 1, and a root
+    that is not in the graph."""
+    from imdb_mapreduce_spark.api import ImdbEngine
+
+    rows = [
+        (i, title, actor)
+        for i, (title, cast) in enumerate(_ORDER_CAST.items())
+        for actor in cast
+    ]
+    engine = ImdbEngine(spark.createDataFrame(rows, "tconst long, title string, actor string"))
+    surname = F.element_at(F.split(F.col("name"), " "), -1)
+    try:
+        for name, kind, level in [
+            ("Ann Root", "actor", 3),
+            ("Ann Root", "actor", 1),
+            ("Nobody Here", "actor", 2),
+            ("Hub", "movie", 3),
+            ("Hub", "movie", 1),
+            ("Nowhere", "movie", 2),
+        ]:
+            res = engine.request_df(name, kind, level)
+            key = surname if kind == "actor" else F.col("name")
+            spark_v = [r[0] for r in res.vertices.orderBy(key, F.col("name")).collect()]
+            spark_e = [
+                (r["src"], r["dst"], r["level"])
+                for r in res.edges.orderBy("level", "src", "dst").collect()
+            ]
+            got = engine.request(name, kind, level)
+            assert got == (spark_v, spark_e), (name, kind, level)
+            if level == 1 or name in ("Nobody Here", "Nowhere"):
+                assert got == ([name], [])
+
+        actors, _ = engine.request("Ann Root", "actor", 3)
+        assert len(actors) == 12 and actors[0] == "Kim Lee "
+        assert actors.index("Eve zed") < actors.index("Eve élan")
+        assert actors.index("Colin Hanks") + 1 == actors.index("Tom Hanks")
+        movies, _ = engine.request("Hub", "movie", 3)
+        assert set(movies) == set(_ORDER_CAST)
+    finally:
+        engine.unpersist()

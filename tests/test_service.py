@@ -1,0 +1,123 @@
+"""The request service over the local ``cast_edges`` fixture: concurrent
+clients, a budget refusal on a live connection, and the engine's
+once-per-direction degree aggregate."""
+
+from __future__ import annotations
+
+import json
+import socket
+import sys
+import threading
+import time
+
+from imdb_mapreduce_spark import api
+from imdb_mapreduce_spark.api import ImdbEngine
+from imdb_mapreduce_spark.service import serve_background
+
+# two clients, each repeating a query the other also sends
+CLIENT_REQUESTS = [
+    [("Jane Doe", "actor", 2), ("Alpha Zero 0", "movie", 2), ("Jane Doe", "actor", 1)],
+    [("Bob O'Hara", "actor", 3), ("Gamma", "movie", 2), ("Jane Doe", "actor", 2)],
+]
+
+
+def _ask(f, req: dict) -> dict:
+    f.write((json.dumps(req) + "\n").encode())
+    f.flush()
+    return json.loads(f.readline())
+
+
+def _counting_degree(monkeypatch, fn=None) -> list[str]:
+    calls: list[str] = []
+    real = fn or api.avg_degree
+
+    def counted(edges, node_col):
+        calls.append(node_col)
+        return real(edges, node_col)
+
+    monkeypatch.setattr(api, "avg_degree", counted)
+    return calls
+
+
+def test_service_round_trip_over_local_fixture(cast_edges, monkeypatch):
+    engine = ImdbEngine(cast_edges)
+    degree_calls = _counting_degree(monkeypatch)
+    replies: dict[int, list] = {}
+    errors: list = []
+    barrier = threading.Barrier(len(CLIENT_REQUESTS))
+
+    def client(i: int) -> None:
+        try:
+            with socket.create_connection(("127.0.0.1", port), timeout=120) as s:
+                f = s.makefile("rwb")
+                barrier.wait(timeout=60)  # both connected before either sends
+                replies[i] = [
+                    _ask(f, {"name": n, "type": t, "level": lvl})
+                    for n, t, lvl in CLIENT_REQUESTS[i]
+                ]
+        except Exception as e:  # noqa: BLE001 — surfaced on the main thread
+            errors.append((i, e))
+
+    srv, port = serve_background(engine)
+    try:
+        threads = [threading.Thread(target=client, args=(i,)) for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+
+        with socket.create_connection(("127.0.0.1", port), timeout=120) as s:
+            f = s.makefile("rwb")
+            over = _ask(f, {"name": "Jane Doe", "type": "actor", "level": 2, "max_vertices": 1})
+            assert over["error"].startswith("BfsBudgetExceeded: BFS budget exceeded: ")
+            assert "max_vertices=1" in over["error"]
+            # the connection keeps serving after the refusal
+            again = _ask(f, {"name": "Jane Doe", "type": "actor", "level": 2})
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    for i, reqs in enumerate(CLIENT_REQUESTS):
+        for (n, t, lvl), reply in zip(reqs, replies[i], strict=True):
+            want_v, want_e = engine.request(n, t, lvl)
+            assert reply == {"vertices": want_v, "edges": [list(e) for e in want_e]}
+    assert again["vertices"] == ["John Q. Smith 0", "Jane Doe", "Bob O'Hara"]  # by surname
+    # a dozen level >= 2 requests, yet one degree aggregate per direction
+    assert sorted(degree_calls) == ["actor", "title"]
+
+
+def test_degree_is_computed_once_under_contending_threads(monkeypatch):
+    """Many handler threads asking for a degree at once still run one
+    aggregate per direction."""
+
+    def slow_degree(edges, node_col):
+        time.sleep(0.02)  # a window for a second thread to slip in
+        return 2.0
+
+    calls = _counting_degree(monkeypatch, slow_degree)
+    engine = ImdbEngine(cast_edges=None, cache=False)
+    got: list[float] = []
+    start = threading.Barrier(16)
+
+    def ask(kind: str) -> None:
+        start.wait(timeout=30)
+        got.append(engine._degree(kind))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=ask, args=("actor" if i % 2 else "movie",))
+            for i in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [2.0] * 16
+    assert sorted(calls) == ["actor", "title"]

@@ -68,7 +68,9 @@ def test_bucketed_bfs_round_join_needs_no_edge_shuffle(spark):
     hop, on via_col for the return hop — the durable analog of the
     reference's forward/inverted adjacency copies) a BFS round never
     re-shuffles the big table, even with every broadcast disabled. Only
-    the tiny frontier-derived sides exchange."""
+    the tiny frontier-derived sides exchange. Level 3: the root frontier is
+    a literal, which Catalyst folds into a scan filter, so round 2 is the
+    first whose outbound hop joins on ``_n1``."""
     from imdb_mapreduce_spark.operators.graph import bipartite_bfs
 
     l = load_table(spark, "lineitem", SF)
@@ -91,7 +93,7 @@ def test_bucketed_bfs_round_join_needs_no_edge_shuffle(spark):
             node_col="part",
             via_col="order",
             root=root,
-            level=2,
+            level=3,
             checkpoint=False,
             max_broadcast_rows=0,
             edges_inverted=spark.table("bfs_edges_by_order"),
@@ -109,8 +111,9 @@ def test_bucketed_bfs_round_join_needs_no_edge_shuffle(spark):
     # hashpartitioning(_v2#…) exchanges — verified when writing the test)
     assert "hashpartitioning(_n1" not in plan
     assert "hashpartitioning(_v2" not in plan
-    # the frontier-derived sides still exchange — rows, not terabytes
-    assert "hashpartitioning(src" in plan
+    # the frontier-derived sides still exchange — rows, not terabytes: the
+    # hop-1 rows move to the return hop's via key
+    assert "hashpartitioning(_via" in plan
     assert n > 0
 
 
