@@ -1401,16 +1401,11 @@ def ivf_delete_in_place(
         int(r["cell"]) for r in repaired.select("cell").distinct().collect()
     }
     if present:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            repaired.write.mode("overwrite").partitionBy("cell").parquet(
-                cells_dir
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a write option, not the session conf: the probe leg of
+        # `ann_ivf_erasure_topk` runs on another thread meanwhile
+        repaired.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("cell").parquet(cells_dir)
     for cell in touched:
         if cell not in present:
             shutil.rmtree(
@@ -1460,7 +1455,7 @@ def ann_ivf_erasure_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # it runs on a driver thread CONCURRENTLY with the index
             # write + delete chain below (guide §2.6, the _coarse_tiers
             # overlap pattern; r16 opt: interleaved A/B ×0.83–0.88 on
-            # every pair, tools/ivf_overlap_ab.py).
+            # every pair).
             ranked = _ivf_det_ranked(pivots)
             probes = (
                 emb.filter(

@@ -1545,10 +1545,10 @@ def rollup_erasure_repair(
     # family): deriving day from the lazy repaired HOUR tier evaluated
     # the hour aggregates twice inside the single readout action.
     # Output-invariant (decimal sums associative, counts additive);
-    # A/B'd in tools/rollup_erasure_chain_ab.py together with the
-    # caller's prev-day un-chaining: interleaved min 2.44 → 2.17 s,
-    # med 2.74 → 2.47 s at sf0.1. Materializing callers (the erasure
-    # fold, the history purge) run the two independent builds 2-wide.
+    # with the caller's prev-day un-chaining: interleaved A/B min
+    # 2.44 → 2.17 s, med 2.74 → 2.47 s at sf0.1. Materializing callers
+    # (the erasure fold, the history purge) run the two independent
+    # builds 2-wide.
     tiers = {"minute": m2}
 
     def build_coarse(unit: str) -> DataFrame:
@@ -1666,7 +1666,7 @@ def events_rollup_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev["hour"] = _erasure_sum_merge(m, "hour")
     # day direct from the pinned minute state (not via the lazy hour
     # state, whose aggregate would otherwise evaluate twice in the one
-    # readout action — r15 opt session 3, tools/rollup_erasure_chain_ab)
+    # readout action — r15 opt session 3)
     prev["day"] = _erasure_sum_merge(m, "day")
     # the erased rows' negated minute partials (second raw pass — the
     # pass a user-keyed index serves at scale), bounded output
@@ -1894,10 +1894,10 @@ def sketch_erasure_repair(
     # merge_up(merge_up(prev_m)). Output-invariant by the associative
     # KMV merge law (any hash in a day's K-set is top-K in its own
     # child, so day-from-minute ≡ day-from-hour — the same argument
-    # `_coarse_tiers` uses, A/B'd in tools/erasure_coarse_ab.py:
-    # interleaved min 2.21→2.06 s, med 2.64→2.36 s at sf0.1). The two
-    # builds are now independent, so a materializing caller (the
-    # incremental erasure fold) runs them 2-wide (guide §2.6).
+    # `_coarse_tiers` uses; interleaved A/B min 2.21→2.06 s, med
+    # 2.64→2.36 s at sf0.1). The two builds are independent, so a
+    # materializing caller (the incremental erasure fold) runs them
+    # 2-wide (guide §2.6).
     tiers = {"minute": m2}
 
     def build_coarse(unit: str) -> DataFrame:
@@ -2372,9 +2372,9 @@ def sample_erasure_repair(
     # hour subtree's double evaluation in the one-action readout,
     # output-invariant by the bottom-K multiset merge law (a row in a
     # day's bottom-K ranks ≤ K in its own child, multiplicity kept;
-    # A/B'd in tools/erasure_coarse_ab.py: interleaved min 2.58→2.30 s,
-    # med 3.01→2.56 s at sf0.1); materializing callers run the two
-    # independent builds 2-wide (guide §2.6).
+    # interleaved A/B min 2.58→2.30 s, med 3.01→2.56 s at sf0.1);
+    # materializing callers run the two independent builds 2-wide
+    # (guide §2.6).
     tiers = {"minute": m2}
 
     def build_coarse(unit: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""bench.py contract guards (no Spark session needed).
+"""bench.py and registry contract guards (no Spark session needed).
 
 A stale HEADLINE name silently records an {"err": KeyError} row per
 round; a canary outside the headline set silently nulls drift_factor.
@@ -7,8 +7,10 @@ Both become test failures here instead.
 
 from __future__ import annotations
 
+import __spark_entry__
 import bench
 
+from imdb_mapreduce_spark.plans import registry
 from imdb_mapreduce_spark.plans.registry import all_queries
 
 
@@ -29,3 +31,15 @@ def test_drift_canaries_are_headline_members():
 
 def test_warmup_query_is_registered():
     assert "priority_segment_union" in all_queries()
+
+
+def test_registry_iterates_in_registration_order():
+    """`all_queries()` and the driver contract list every query once, in
+    registration order, each with a DuckDB oracle."""
+    names = list(all_queries())
+    assert names == list(registry._REGISTRY)
+    # a second call neither re-registers nor reorders
+    assert list(all_queries()) == names
+    assert list(__spark_entry__.queries()) == names
+    assert list(__spark_entry__.oracle_sql()) == names
+    assert all(q.oracle is not None for q in all_queries().values())

@@ -170,14 +170,22 @@ def test_registered_ivf_query_reads_persisted_index(spark):
         assert json.load(f)["k"] == 8
 
 
-def test_ivf_delete_in_place_touches_only_erased_cells(spark, tmp_path):
+def test_ivf_delete_in_place_touches_only_erased_cells(
+    spark, tmp_path, monkeypatch
+):
     """The r15 index-erasure claim (`ivf_delete_in_place`): deleting
     erased vectors rewrites ONLY the cell directories that held them —
     untouched cells' files are byte-level undisturbed (same names,
     sizes, mtimes: never opened for write, moved, or rewritten) — and
     the repaired index content equals the original minus the erased
-    rows exactly."""
+    rows exactly.
+
+    The session stays at `static` partition overwrite and may not be
+    mutated: the dynamic overwrite is an option of the write itself, so
+    a query thread running beside the delete never sees it."""
     import os
+
+    from pyspark.sql.conf import RuntimeConfig
 
     from imdb_mapreduce_spark.pipeline.similarity import (
         _assigned_cells,
@@ -225,13 +233,21 @@ def test_ivf_delete_in_place_touches_only_erased_cells(spark, tmp_path):
     erased = emb.filter(F.col("vec_id").isin(erased_ids)).select(
         "vec_id", "embedding"
     )
+    # `static` is Spark's default, so this leaves the shared session as
+    # it found it; a static overwrite would wipe every untouched cell
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+
+    def no_conf_set(self, key, value):
+        raise AssertionError(f"session conf mutated: {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", no_conf_set)
     touched = ivf_delete_in_place(spark, cells_dir, erased, pivots)
     assert touched == [0]
     after_files = listing()
-    # untouched cells: byte-level undisturbed
+    # untouched cells: still there, byte-level undisturbed
     for entry, files in before_files.items():
         if entry != "cell=0":
-            assert after_files[entry] == files, entry
+            assert after_files.get(entry) == files, entry
     # touched cell: rewritten (different file set) and erased rows gone
     assert after_files["cell=0"] != before_files["cell=0"]
     after_rows = {
