@@ -16,7 +16,6 @@ source (``readStream`` vs ``read``) and sink differ — the core Spark
 
 from __future__ import annotations
 
-import contextlib
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -76,52 +75,6 @@ def _events_schema(ts_type: DataType) -> StructType:
             StructField("props", StringType()),
         ]
     )
-
-
-_STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextlib.contextmanager
-def rocksdb_state_store(spark: SparkSession):
-    """Run the enclosed streaming query under the RocksDB state store.
-
-    ``transformWithStateInPandas`` REQUIRES it — its named state
-    variables map to state-store column families, and the default
-    ``HDFSBackedStateStoreProvider`` rejects multiple column families
-    (``STATE_STORE_MULTIPLE_COLUMN_FAMILIES``, measured r12). The
-    provider is read once at query start and pinned into the checkpoint
-    (``test_state_store_provider_is_checkpoint_pinned``), so a
-    set-around-the-drain is exactly query-scoped; the session default is
-    restored for subsequent apply*-based queries, whose recorded plans
-    and decade numbers used the default provider."""
-    default = spark.conf.get(_STATE_PROVIDER_KEY)
-    spark.conf.set(_STATE_PROVIDER_KEY, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        spark.conf.set(_STATE_PROVIDER_KEY, default)
-
-
-def require_tws(spark: SparkSession) -> None:
-    """Gate a TWS entry point: activate (or verify) a ``google.protobuf``
-    runtime for driver + workers, failing with an actionable message on
-    hosts with none. See ``streaming/protobuf_compat.py`` for what
-    activation does; callers then run the query under
-    :func:`rocksdb_state_store`."""
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime "
-            "(state-client protocol); none is installed and no host "
-            "runtime was discovered (protobuf_compat.py lists the probed "
-            "locations). Install protobuf on driver+executors, or use "
-            "the applyInPandasWithState tiers which have no such "
-            "dependency."
-        )
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -338,33 +291,6 @@ def streaming_dedup_10min_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
     return run_stream_to_memory(agg, "complete")
-
-
-def streaming_user_lifetime_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user lifetime totals through ``transformWithStateInPandas``
-    (Spark 4's typed-state API: named ValueState per key, explicit
-    processor lifecycle) — the arbitrary-state twin of the
-    ``applyInPandasWithState`` operator in ``streaming/stateful.py``.
-
-    State carries integer cents, so the cross-batch accumulation is exact
-    and the final emission equals the batch DECIMAL aggregate bit-for-bit.
-
-    NOT registered as a driver query (the registered TWS representative
-    is ``streaming_kmv_distinct_tws``, which shares the salted tier's
-    merge core and oracle): the TWS state server needs a working
-    ``google.protobuf`` — since r12 the ``protobuf_compat`` shim
-    activates a host runtime where none is installed, and
-    :func:`require_tws` fails actionably where even that is absent
-    (``tests/test_stateful_streaming.py::test_twsip_totals_equal_batch``).
-    """
-    from imdb_mapreduce_spark.streaming.stateful import user_totals_twsip
-
-    require_tws(spark)
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    with rocksdb_state_store(spark):
-        return run_stream_to_memory(
-            user_totals_twsip(stream), output_mode="update"
-        )
 
 
 def run_stream_to_parquet(
@@ -651,45 +577,6 @@ def streaming_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select("event_type", "rows_seen", "m", "p50", "p90", "p99")
-    )
-
-
-@register(
-    "streaming_kmv_distinct_tws",
-    oracle=_kmv_stream_oracle(),
-    tags=("streaming", "north-star", "sketch", "stateful"),
-)
-def streaming_kmv_distinct_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KMV sketch through ``transformWithStateInPandas`` (Spark 4's
-    typed-state API) — the third API surface over the SAME
-    ``_merge_kmv_state`` core as the apply* and salted tiers, landing on
-    the same batch oracle bit-for-bit. Registered in r12 once the
-    ``protobuf_compat`` host-runtime discovery un-blocked the TWS state
-    client (protobuf protocol) in this container; the drain runs under
-    the RocksDB state store because TWS's named state variables need
-    column families the default provider rejects (see
-    :func:`rocksdb_state_store`).
-
-    Why TWS earns a registered tier (SCALING.md r11→r12): its runner
-    delivers input in BOUNDED Arrow batches (one batch per channel call),
-    dodging the apply* whole-group-per-call write granularity that walls
-    at hot keys — confirmed at runtime in r12, completing the r11
-    prediction. Parallelism is still key-bounded (SKEW WARNING on
-    :func:`~imdb_mapreduce_spark.streaming.stateful.running_kmv_by_type_tws`),
-    so the salted tier remains the production default under skew."""
-    from pyspark.sql.window import Window
-
-    from imdb_mapreduce_spark.streaming.stateful import running_kmv_by_type_tws
-
-    require_tws(spark)
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    with rocksdb_state_store(spark):
-        log = run_stream_to_memory(running_kmv_by_type_tws(stream), "update")
-    w = Window.partitionBy("event_type").orderBy(F.col("rows_seen").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "rows_seen", "kth_hash", "m")
     )
 
 
@@ -2786,12 +2673,12 @@ def events_quantile_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TWS timers: session-timeout emission (r13, VERDICT r12 item 5)
+# Event-time timeouts: session-timeout emission (r13, VERDICT r12 item 5)
 # ---------------------------------------------------------------------------
 
 # Synthetic key whose single far-future event advances the stream's
 # WATERMARK past every real user's open-session close instant, firing
-# their timers — how a bounded drain exercises the event-time timer
+# their timeouts — how a bounded drain exercises the event-time timeout
 # path end to end (in production the stream simply keeps running and
 # watermark progress does this continuously).
 SESSION_SENTINEL_UID = -1
@@ -2800,15 +2687,13 @@ SESSION_SENTINEL_UID = -1
 def session_sentinel_df(
     spark: SparkSession, events: DataFrame, gap_us: int | None = None
 ) -> DataFrame | None:
-    """The watermark-advancing sentinel for a bounded TWS-session drain:
+    """The watermark-advancing sentinel for a bounded session drain:
     one event for :data:`SESSION_SENTINEL_UID` placed 10 gaps past the
-    corpus maximum, so every real user's open-session close timer sits
+    corpus maximum, so every real user's open-session timeout sits
     strictly before the advanced watermark. ``None`` on an empty corpus.
-    Shared by the registered query and ``tools/tws_session_drain_probe``
-    so the probe measures the registered shape by construction. The max
-    probe is one column-pruned aggregate — bounded, driver-side.
+    The max probe is one column-pruned aggregate — bounded, driver-side.
 
-    ``gap_us`` MUST match the ``sessions_by_timeout_tws`` gap the drain
+    ``gap_us`` MUST match the ``sessions_by_timeout`` gap the drain
     uses (default :data:`~imdb_mapreduce_spark.streaming.stateful.SESSION_GAP_US`)
     — the offset derives from it, so a caller-supplied gap keeps the
     sentinel and processor in lockstep; hardcoding the default here
@@ -2834,7 +2719,7 @@ def session_sentinel_df(
 
 
 @register(
-    "streaming_sessions_tws",
+    "streaming_sessions_timeout",
     oracle="""
     WITH gaps AS (
       SELECT user_id, event_id, ts,
@@ -2852,39 +2737,32 @@ def session_sentinel_df(
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM sess GROUP BY user_id, session_no
     """,
-    tags=("streaming", "stateful", "tws", "timers", "session",
-          "north-star"),
+    tags=("streaming", "stateful", "timers", "session", "north-star"),
 )
-def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-timeout emission via TWS event-time TIMERS — the
-    capability register (VERDICT r12 item 5): r12 measured WHAT the TWS
-    runtime costs (the 4-5×/row protocol tax, SCALING.md r12); this
-    operator registers what the tax BUYS — ``registerTimer`` /
-    ``handleExpiredTimer``, which no apply* tier can express
-    (:func:`~imdb_mapreduce_spark.streaming.stateful.sessions_by_timeout_tws`
-    states the exact contrast with the hand-rolled TTL tier). Every
-    closed session is emitted exactly once, through one of two
-    race-free paths: gap-logic when the user's next event arrives, or
-    the per-key timer when the WATERMARK passes the session's close
-    instant — so users who go quiet still emit, with no polling sweep.
+def streaming_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-timeout emission via ``applyInPandasWithState`` event-time
+    timeouts (VERDICT r12 item 5): every closed session is emitted
+    exactly once, through one of two paths — gap logic when the user's
+    next event arrives, or the key's timeout when the WATERMARK passes
+    the session's close instant
+    (:func:`~imdb_mapreduce_spark.streaming.stateful.sessions_by_timeout`)
+    — so users who go quiet still emit, with no polling sweep.
 
     Harness: events stream as four time-range micro-batches (per-user
     time-ordered by construction — the operator's input contract), then
     one far-future sentinel event advances the watermark so the tail
-    sessions' timers fire in a second drain from the SAME checkpoint
-    (which doubles as a restart drill on the timer+state recovery
+    sessions' timeouts fire in a second drain from the SAME checkpoint
+    (which doubles as a restart drill on the timeout+state recovery
     path). The oracle is the batch sessionization the `user_sessions`
-    family pins — a hash-green row proves the timer path and the
+    family pins — a hash-green row proves the timeout path and the
     gap path TOGETHER partition the session set exactly: any double
-    emission, lost timer, or stale-timer misfire breaks the count.
-    RocksDB provider required as for all TWS (column families)."""
+    emission or lost timeout breaks the count."""
     import glob as _glob
     import os
 
     from imdb_mapreduce_spark.sources.star import load_table
-    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout_tws
+    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout
 
-    require_tws(spark)
     events = load_table(spark, "events", sf_dir).select("user_id", "ts")
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
@@ -2909,7 +2787,7 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 df.write.mode("append").parquet(out)
 
             q = (
-                sessions_by_timeout_tws(stream)
+                sessions_by_timeout(stream)
                 .writeStream.foreachBatch(sink)
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
@@ -2918,14 +2796,13 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             q.awaitTermination()
 
-        with rocksdb_state_store(spark):
+        drain()
+        sent = session_sentinel_df(spark, events)
+        if sent is not None:
+            # appended part file gets a fresh (newest) mtime — the
+            # already-processed originals are checkpoint-remembered
+            sent.coalesce(1).write.mode("append").parquet(src)
             drain()
-            sent = session_sentinel_df(spark, events)
-            if sent is not None:
-                # appended part file gets a fresh (newest) mtime — the
-                # already-processed originals are checkpoint-remembered
-                sent.coalesce(1).write.mode("append").parquet(src)
-                drain()
         if not _glob.glob(os.path.join(out, "*.parquet")):
             return spark.createDataFrame(
                 [],

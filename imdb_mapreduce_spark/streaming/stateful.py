@@ -187,204 +187,20 @@ def running_user_stats_ttl(events: DataFrame, ttl_minutes: int = 60) -> DataFram
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state API) — r04
-# ---------------------------------------------------------------------------
-
-TWSIP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ]
-)
-
-
-def _twsip_processor():
-    """Build the StatefulProcessor lazily (the class only exists on Spark
-    4+; keeping the import inside the factory keeps module import cheap).
-
-    Money stays in integer cents inside the state, so cross-batch
-    accumulation is exact and the final answer matches the batch DECIMAL
-    oracle bit-for-bit — the same parity discipline as the batch plans.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType(
-                [StructField("n", LongType()), StructField("cents", LongType())]
-            )
-            self._state = handle.getValueState("totals", schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, cents = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(
-                    (pdf["value"] * 100).round().astype("int64").sum()
-                )
-            if self._state.exists():
-                prev_n, prev_cents = self._state.get()
-                n += prev_n
-                cents += prev_cents
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_cents": [cents],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserTotals()
-
-
-def user_totals_twsip(events: DataFrame) -> DataFrame:
-    """Per-user lifetime totals via ``transformWithStateInPandas`` — the
-    typed-state successor to ``applyInPandasWithState``: named state
-    variables owned by the state store (here one ValueState per user),
-    explicit processor lifecycle, optional timers/TTL. Emits the updated
-    running totals once per micro-batch in which the key appears."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_twsip_processor(),
-        outputStructType=TWSIP_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# --- TWS KMV: the ready-to-run Arrow-wall A/B (r11) ------------------------
-#
-# SCALING.md r11 pins the per-group Arrow-bridge wall to
-# applyInPandasWithState's one-GROUP-per-channel-call write granularity
-# and predicts (from the 4.1.2 bytecode + a measured batch-applyInPandas
-# control) that transformWithStateInPandas dodges it — its runner writes
-# one BOUNDED batch per call. The runtime confirmation needed
-# google.protobuf; in r12 the protobuf_compat host-runtime discovery
-# un-blocked it and the A/B ran (tools/tws_ab_drain.py, numbers in
-# SCALING.md r12): `running_kmv_by_type_tws` — the same KMV sketch on
-# the same shared merge core behind Spark 4's TWS API — drains the
-# skewed corpora that killed apply* (>92 min at a 60M-row hot key).
-
-
-class _TwsStateView:
-    """Adapter presenting a TWS ValueState (method surface: exists()/
-    get()/update()) to the shared :func:`_merge_kmv_state` core, which
-    speaks GroupState's property surface. One merge implementation,
-    three API surfaces (plain, salted, TWS)."""
-
-    def __init__(self, value_state) -> None:
-        self._vs = value_state
-
-    @property
-    def exists(self) -> bool:
-        return self._vs.exists()
-
-    @property
-    def get(self):
-        return self._vs.get()
-
-    def update(self, t) -> None:
-        self._vs.update(t)
-
-
-def _kmv_tws_processor():
-    """Build the TWS StatefulProcessor lazily (the protobuf-backed state
-    client only exists on hosts with google.protobuf; keeping every TWS
-    import inside the factory keeps module import cheap and gated)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class KmvByType(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType(
-                [
-                    StructField("v", LongType()),
-                    StructField("hashes", ArrayType(LongType())),
-                    StructField("users", ArrayType(LongType())),
-                    StructField("rows_seen", LongType()),
-                ]
-            )
-            self._state = handle.getValueState("kmv", schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            keep, rows_seen = _merge_kmv_state(_TwsStateView(self._state), rows)
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]],
-                    "rows_seen": [rows_seen],
-                    "kth_hash": [int(keep[-1, 0])],
-                    "m": [len(keep)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return KmvByType()
-
-
-def running_kmv_by_type_tws(events: DataFrame) -> DataFrame:
-    """Streaming KMV sketch per event type via ``transformWithStateInPandas``
-    — the typed-state twin of :func:`running_kmv_by_type`, same JVM-side
-    md5-fragment hash, same shared merge core, same output schema.
-
-    Registered as ``streaming_kmv_distinct_tws`` since r12: the TWS
-    state server's ``google.protobuf`` dependency — absent as an
-    installed distribution — is satisfied by the ``protobuf_compat``
-    host-runtime discovery, and the drain runs under the RocksDB state
-    store (TWS needs column families; see
-    ``jobs.rocksdb_state_store``). The SCALING.md r11 Arrow-wall
-    prediction this operator was built to falsify is now runtime-tested
-    (SCALING.md r12).
-
-    SKEW WARNING: parallelism is still key-bounded — one state task per
-    event type. Even if TWS removes the per-group buffer cliff (the r11
-    prediction), a hot key still serializes through ONE task's
-    throughput; :func:`running_kmv_by_type_salted` remains the
-    production tier wherever key skew is possible."""
-    from pyspark.sql import functions as F
-
-    with_hash = events.select(
-        "event_type",
-        "user_id",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("h"),
-    )
-    return with_hash.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=_kmv_tws_processor(),
-        outputStructType=KMV_STATE_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# --- TWS-native timers: session-timeout emission (r13) ---------------------
+# --- event-time timeouts: session-timeout emission (r13) -------------------
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
 class SessionOrderViolation(RuntimeError):
     """A batch carried an event OLDER than a previous batch's for the
-    same user — the input contract `sessions_by_timeout_tws` documents
+    same user — the input contract `sessions_by_timeout` documents
     (per-user monotone across batches; time-range-partitioned sources
-    satisfy it by construction). Raised from the processor so a caller
-    wiring a genuinely out-of-order source fails loud instead of
+    satisfy it by construction). Raised from the update function so a
+    caller wiring a genuinely out-of-order source fails loud instead of
     silently mis-sessionizing (VERDICT r13 item 5)."""
 
-TWS_SESSION_OUTPUT_SCHEMA = StructType(
+SESSION_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
         StructField("session_no", LongType()),
@@ -394,170 +210,141 @@ TWS_SESSION_OUTPUT_SCHEMA = StructType(
     ]
 )
 
+_SESSION_STATE = "session_no LONG, start_us LONG, end_us LONG, n_events LONG"
 
-def _session_tws_processor(gap_us: int):
-    """Build the session-timeout StatefulProcessor lazily (same gating
-    as the other TWS factories: the protobuf-backed state client only
-    exists where ``require_tws`` passes)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
+def _make_session_update(gap_us: int):
     cols = ["user_id", "session_no", "start_us", "end_us", "n_events"]
 
-    class SessionTimeout(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType(
-                [
-                    StructField("session_no", LongType()),
-                    StructField("start_us", LongType()),
-                    StructField("end_us", LongType()),
-                    StructField("n_events", LongType()),
-                ]
-            )
-            self._state = handle.getValueState("session", schema)
-            self._handle = handle
+    def close_ms(end_us: int) -> int:
+        # first millisecond STRICTLY past end + gap: the closed-gap
+        # rule is `next - end <= gap keeps the session`, so the
+        # timeout must not fire until the gap is truly exceeded
+        # (integer ceil to ms of end+gap, then +1 ms)
+        return (int(end_us) + gap_us + 999) // 1000 + 1
 
-        def _close_time_ms(self, end_us: int) -> int:
-            # first millisecond STRICTLY past end + gap: the closed-gap
-            # rule is `next - end <= gap keeps the session`, so the
-            # timer must not fire until the gap is truly exceeded
-            # (integer ceil to ms of end+gap, then +1 ms)
-            return (int(end_us) + gap_us + 999) // 1000 + 1
+    def update(
+        key: tuple[Any, ...],
+        batches: Iterator["pd.DataFrame"],
+        state: GroupState,
+    ) -> Iterator["pd.DataFrame"]:
+        import numpy as np
+        import pandas as pd
 
-        def handleInputRows(self, key, rows, timer_values):
-            ts = np.sort(
-                np.concatenate(
-                    [pdf["ts_us"].to_numpy(dtype=np.int64) for pdf in rows]
-                )
-            )
-            if self._state.exists():
-                # start_us is NULL when the last session was closed by a
-                # TIMER: the counter must survive that closure — wiping
-                # the whole tuple would restart a returning user's
-                # session_no at 1 and break the oracle's cumulative
-                # numbering (caught in the r13 review before it shipped;
-                # the 3-SF gates missed it because a return usually lands
-                # in the SAME batch as the firing timer, where input rows
-                # run first and the gap path renumbers correctly)
-                sno_, s_, e_, n_ = self._state.get()
-                sno = int(sno_)
-                s = None if s_ is None else int(s_)
-                e = None if e_ is None else int(e_)
-                n = int(n_)
-                # e doubles as per-key max-seen-ts (it survives timer
-                # closure — see handleExpiredTimer): an event strictly
-                # older than it violates the operator's input contract
-                # and would silently mis-sessionize — fail loud instead
-                if e is not None and len(ts) and int(ts[0]) < e:
-                    raise SessionOrderViolation(
-                        f"user {int(key[0])}: batch event at {int(ts[0])}"
-                        f" us is older than the max previously-seen"
-                        f" {e} us — input must be per-user monotone"
-                        f" across batches"
-                    )
-            else:
-                sno, s, e, n = 0, None, None, 0
-            # vectorized in-batch sessionization: break where the gap is
-            # exceeded; each segment then merges into the carried open
-            # session or closes it and starts a new one
-            brk = np.flatnonzero(np.diff(ts) > gap_us) + 1
-            closed: list[tuple[int, int, int, int, int]] = []
-            uid = int(key[0])
-            for a, b in zip(
-                np.concatenate(([0], brk)), np.concatenate((brk, [len(ts)]))
-            ):
-                seg_s, seg_e, seg_n = int(ts[a]), int(ts[b - 1]), int(b - a)
-                if s is not None and seg_s - e <= gap_us:
-                    e, n = max(e, seg_e), n + seg_n
-                else:
-                    if s is not None:
-                        closed.append((uid, sno, s, e, n))
-                    sno, s, e, n = sno + 1, seg_s, seg_e, seg_n
-            self._state.update((sno, s, e, n))
-            # one live timer per key: re-arm at the open session's close
-            # time (stale timers are also guard-checked on expiry, so
-            # this delete is hygiene, not correctness)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(self._close_time_ms(e))
-            if closed:
-                yield pd.DataFrame(closed, columns=cols)
-
-        # parameter names must match the base-class signature exactly —
-        # the TWS runtime invokes this hook with KEYWORD arguments
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._state.exists():
-                return
-            sno_, s_, e_, n_ = self._state.get()
-            if s_ is None:  # already timer-closed; stale second timer
-                return
-            sno, s, e, n = int(sno_), int(s_), int(e_), int(n_)
-            # the guard that makes stale timers harmless: only a timer at
-            # or past the CURRENT open session's close time closes it —
-            # a timer armed for a session that was since extended (or
-            # superseded) sits before the new close time and no-ops
-            if expiredTimerInfo.getExpiryTimeInMs() >= self._close_time_ms(e):
+        uid = int(key[0])
+        if state.hasTimedOut:
+            sno_, s_, e_, n_ = state.get
+            if s_ is not None:
                 # keep the session counter AND the end timestamp, drop
-                # the open session: a NULL start marks "closed by timer"
-                # so a returning user continues numbering at sno+1
-                # (never restarts at 1 — r13 review catch), while the
-                # kept end keeps the max-seen-ts contract guard armed
-                # across the closure (r14, VERDICT r13 item 5)
-                self._state.update((sno, None, e, 0))
+                # the open session: a NULL start marks "closed by
+                # timeout" so a returning user continues numbering at
+                # sno+1 (never restarts at 1 — r13 review catch), while
+                # the kept end keeps the max-seen-ts contract guard
+                # armed across the closure (r14, VERDICT r13 item 5)
+                state.update((int(sno_), None, int(e_), 0))
                 yield pd.DataFrame(
-                    [(int(key[0]), sno, s, e, n)], columns=cols
+                    [(uid, int(sno_), int(s_), int(e_), int(n_))],
+                    columns=cols,
                 )
+            return
+        ts = np.sort(
+            np.concatenate(
+                [pdf["ts_us"].to_numpy(dtype=np.int64) for pdf in batches]
+            )
+        )
+        if state.exists:
+            # start_us is NULL when the last session was closed by a
+            # TIMEOUT: the counter must survive that closure — wiping
+            # the whole tuple would restart a returning user's
+            # session_no at 1 and break the oracle's cumulative
+            # numbering (caught in the r13 review before it shipped;
+            # the 3-SF gates missed it because a return usually lands
+            # in the SAME batch the timeout would fire in, where the
+            # data call runs instead and the gap path renumbers
+            # correctly)
+            sno_, s_, e_, n_ = state.get
+            sno = int(sno_)
+            s = None if s_ is None else int(s_)
+            e = None if e_ is None else int(e_)
+            n = int(n_)
+            # e doubles as per-key max-seen-ts (it survives timeout
+            # closure): an event strictly older than it violates the
+            # operator's input contract and would silently
+            # mis-sessionize — fail loud instead
+            if e is not None and len(ts) and int(ts[0]) < e:
+                raise SessionOrderViolation(
+                    f"user {uid}: batch event at {int(ts[0])}"
+                    f" us is older than the max previously-seen"
+                    f" {e} us — input must be per-user monotone"
+                    f" across batches"
+                )
+        else:
+            sno, s, e, n = 0, None, None, 0
+        # vectorized in-batch sessionization: break where the gap is
+        # exceeded; each segment then merges into the carried open
+        # session or closes it and starts a new one
+        brk = np.flatnonzero(np.diff(ts) > gap_us) + 1
+        closed: list[tuple[int, int, int, int, int]] = []
+        for a, b in zip(
+            np.concatenate(([0], brk)), np.concatenate((brk, [len(ts)]))
+        ):
+            seg_s, seg_e, seg_n = int(ts[a]), int(ts[b - 1]), int(b - a)
+            if s is not None and seg_s - e <= gap_us:
+                e, n = max(e, seg_e), n + seg_n
+            else:
+                if s is not None:
+                    closed.append((uid, sno, s, e, n))
+                sno, s, e, n = sno + 1, seg_s, seg_e, seg_n
+        state.update((sno, s, e, n))
+        # the key's one timeout, re-armed at the open session's close
+        # time; e >= every admitted row's ts >= the watermark, so the
+        # timestamp is always ahead of it
+        state.setTimeoutTimestamp(close_ms(e))
+        if closed:
+            yield pd.DataFrame(closed, columns=cols)
 
-        def close(self) -> None:
-            pass
-
-    return SessionTimeout()
+    return update
 
 
-def sessions_by_timeout_tws(
+def sessions_by_timeout(
     events: DataFrame, gap_us: int = SESSION_GAP_US
 ) -> DataFrame:
-    """Gap-based sessionization with TIMER-driven closure — the TWS
-    capability the apply* tiers cannot express (VERDICT r12 item 5):
-    ``applyInPandasWithState``'s hand-rolled TTL (``running_user_stats_ttl``)
-    can only act on a key WHEN THAT KEY RECEIVES ROWS (or at the coarse
-    whole-operator timeout sweep); an event-time timer registered per
-    key fires on WATERMARK progress alone, so a session whose user went
-    quiet is emitted the moment the stream's event time passes its
-    close instant — no poll, no per-batch sweep, no waiting for the
-    key's next row that may never come.
+    """Gap-based sessionization with TIMEOUT-driven closure: a session
+    closes through gap logic when the user's next event arrives, or
+    through the key's event-time timeout (``EventTimeTimeout``) once the
+    WATERMARK passes end+gap — so a user who went quiet is emitted the
+    moment the stream's event time passes the close instant, with no
+    poll and no wait for a next row that may never come.
 
     Contract: input must be a per-user time-ordered stream (batches
-    need not be sorted internally — each batch is sorted in the
-    processor — but a batch must not contain events older than a
+    need not be sorted internally — each key's rows are sorted in the
+    update function — but a batch must not contain events older than a
     previous batch's for the same user; time-range-partitioned sources
     satisfy this by construction). The contract is ENFORCED, not just
     documented (r14), in two layers: rows behind the global watermark
     are dropped by the ENGINE's standard late-record policy before the
-    processor sees them (a timer-closed session can never be corrupted
-    by a very-late event), and rows inside the watermark's one-batch
-    lag window — the only band where an out-of-order row reaches the
-    processor at all — hit the per-key max-seen-ts guard (the state's
-    end timestamp, kept across timer closure) and raise
-    :class:`SessionOrderViolation` naming the key and both timestamps.
-    Either way, never silently mis-sessionized (the same fail-loud
-    posture as ``overlap_join_binned``'s plan-time validation). Emits
-    each closed session EXACTLY
-    once in append mode: via gap-logic when the user's next event
-    arrives, or via the expiry timer when the watermark passes
-    end+gap; the guard in ``handleExpiredTimer`` makes the two paths
-    race-free. State per user is one open session + one timer —
-    |users|-bounded, RocksDB-backed (TWS column-family requirement,
-    see ``jobs.rocksdb_state_store``). Both sides are auditable OFFLINE
-    from the checkpoint alone: the state source reads the named state
-    variable (``option("stateVarName", "session")``) and the armed
-    timers (``option("readRegisteredTimers", "true")``), and the drill
-    ``test_tws_session_state_and_timers_introspectable_offline`` pins
-    the invariant joining them (one timer per open session, at exactly
+    update function sees them (a timeout-closed session can never be
+    corrupted by a very-late event), and rows inside the watermark's
+    one-batch lag window — the only band where an out-of-order row
+    reaches the update function at all — hit the per-key max-seen-ts
+    guard (the state's end timestamp, kept across timeout closure) and
+    raise :class:`SessionOrderViolation` naming the key and both
+    timestamps. Either way, never silently mis-sessionized (the same
+    fail-loud posture as ``overlap_join_binned``'s plan-time
+    validation).
+
+    Emits each closed session EXACTLY once in append mode: a key with
+    rows in a batch is not timed out in that batch, and every data call
+    re-arms the key's single timeout at the open session's new close
+    time, so the gap path and the timeout path never both close one
+    session. State per user is one open session plus one timeout
+    timestamp — |users|-bounded, on the default state store. Both are
+    auditable OFFLINE from the checkpoint alone: the state source
+    (``format("statestore")``) reads the session as
+    ``value.groupState`` and the armed timeout as
+    ``value.timeoutTimestamp``, and the drill
+    ``test_session_state_and_timers_introspectable_offline`` pins the
+    invariant joining them (one timeout per open session, at exactly
     the close-time function of that session's end)."""
     from pyspark.sql import functions as F
 
@@ -566,11 +353,12 @@ def sessions_by_timeout_tws(
     with_us = events.withWatermark("ts", "0 seconds").select(
         "ts", "user_id", epoch_us(F.col("ts")).alias("ts_us")
     )
-    return with_us.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_session_tws_processor(int(gap_us)),
-        outputStructType=TWS_SESSION_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
+    return with_us.groupBy("user_id").applyInPandasWithState(
+        _make_session_update(int(gap_us)),
+        outputStructType=SESSION_OUTPUT_SCHEMA,
+        stateStructType=_SESSION_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -640,10 +428,9 @@ def _merge_kmv_state(
     from imdb_mapreduce_spark.plans.quality import KMV_K
 
     if state.exists:
-        # Read the state tuple ONCE (ADVICE r11): through _TwsStateView
-        # every `state.get` is a separate call into the TWS state client,
-        # and through _SaltedStateView a repeated unpack+validation —
-        # four reads per merge is avoidable hot-path overhead.
+        # Read the state tuple ONCE (ADVICE r11): through _SaltedStateView
+        # every `state.get` is a repeated unpack+validation — four reads
+        # per merge is avoidable hot-path overhead.
         t = state.get
         ver = t[0]
         if ver != KMV_STATE_VERSION:

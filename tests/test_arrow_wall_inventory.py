@@ -50,8 +50,6 @@ INVENTORY: dict[tuple[str, str, tuple[str, ...]], str] = {
         "high-cardinality",
     ("streaming/stateful.py", "running_user_stats_ttl", ("user_id",)):
         "high-cardinality",
-    ("streaming/stateful.py", "user_totals_twsip", ("user_id",)):
-        "high-cardinality",
     # The unsalted KMV: |event_types| keys own the whole stream. Kept as
     # the documented simple sibling; running_kmv_by_type_salted is the
     # skew-safe tier (docstring contract checked below).
@@ -60,17 +58,10 @@ INVENTORY: dict[tuple[str, str, tuple[str, ...]], str] = {
     ("streaming/stateful.py", "running_kmv_by_type_salted",
      ("event_type", "salt")):
         "salt-sized",
-    # TWS twin of the unsalted KMV (r11): per SCALING.md r11 the TWS
-    # runner writes one BOUNDED batch per channel call, so it is
-    # predicted OUTSIDE the per-group wall's blast radius — but the key
-    # is still low-cardinality (throughput bound), so it carries the
-    # same waiver + skew warning as its apply* sibling.
-    ("streaming/stateful.py", "running_kmv_by_type_tws", ("event_type",)):
-        "key-bounded-waiver",
-    # TWS timer sessionization (r13): one open session + one timer per
+    # Timeout sessionization (r13): one open session + one timeout per
     # user — per-group rows per batch are that user's batch events,
     # high-cardinality keyed so no group can own the stream.
-    ("streaming/stateful.py", "sessions_by_timeout_tws", ("user_id",)):
+    ("streaming/stateful.py", "sessions_by_timeout", ("user_id",)):
         "high-cardinality",
     # Streaming quantile tier (r15): bottom-K row-sample state per event
     # type — same low-cardinality key as the unsalted KMV, kept as its

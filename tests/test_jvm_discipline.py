@@ -4,12 +4,12 @@ row-at-a-time Python UDFs and zero RDD drops in the engine package.
 The engine's 100 TB posture keeps all per-row work JVM-side (built-in
 ``pyspark.sql.functions`` inside whole-stage codegen); Python appears
 only behind Arrow batches (``mapInPandas`` / ``applyInPandas`` /
-``applyInPandasWithState`` / ``transformWithStateInPandas`` — all
-inventoried by test_arrow_wall_inventory.py where stateful). A
-row-at-a-time ``F.udf`` is 10-100× slower than a Pandas UDF and
-unboundedly slower than a built-in; an ``.rdd`` drop discards Catalyst,
-Tungsten, and AQE. Neither exists in the package today — this test
-fails the FIRST one someone adds, with the alternatives named.
+``applyInPandasWithState`` — inventoried by test_arrow_wall_inventory.py
+where stateful). A row-at-a-time ``F.udf`` is 10-100× slower than a
+Pandas UDF and unboundedly slower than a built-in; an ``.rdd`` drop
+discards Catalyst, Tungsten, and AQE. Neither exists in the package
+today — this test fails the FIRST one someone adds, with the
+alternatives named.
 """
 
 from __future__ import annotations
@@ -70,16 +70,12 @@ def test_no_row_at_a_time_python_udfs_and_no_rdd_drops():
 
 
 # (relpath, enclosing function) → expected count of bare `pass` bodies.
-# Each is a PROTOCOL no-op, verified in place: StatefulProcessor.close()
-# has nothing to release for ValueState-only processors (×3: the TWS
-# user-totals, the TWS KMV twin, and the r13 TWS session-timeout
-# processor); compaction_plan's
+# Each is a PROTOCOL no-op, verified in place: compaction_plan's
 # `with pq.ParquetFile(f): pass` exists only to close footer handles
 # promptly (ADVICE r06 — unclosed handles piled up fds); the Python
 # DataSource reader's commit() is the no-op half of its exactly-once
 # contract (the source is deterministic, nothing to acknowledge).
 PASS_INVENTORY: dict[tuple[str, str], int] = {
-    ("streaming/stateful.py", "close"): 3,
     ("sources/storage.py", "compaction_plan"): 1,
     ("sources/synthdocs.py", "commit"): 1,
 }
@@ -118,4 +114,54 @@ def test_every_bare_pass_is_a_documented_protocol_noop():
         f"bare `pass` inventory drifted: found {sites}, expected "
         f"{PASS_INVENTORY} — implement the new stub or document the "
         "protocol no-op in PASS_INVENTORY"
+    )
+
+
+def _is_env_mapping(node: ast.AST) -> bool:
+    """``os.environ`` / a bare ``environ`` / ``<sc>.environment``."""
+    if isinstance(node, ast.Attribute):
+        return node.attr in ("environ", "environment")
+    return isinstance(node, ast.Name) and node.id == "environ"
+
+
+def test_no_process_wide_environment_mutation():
+    """The package never rewrites the interpreter's or the workers'
+    environment: no ``os.environ[...] =``, no ``sys.path.insert`` /
+    ``append``, no ``<sc>.environment[...] =``. Such a write outlives
+    the call that made it and changes every later Python worker in the
+    process — a dependency the package needs is declared, not discovered
+    on disk and spliced into the path."""
+    sites: list[str] = []
+    for dirpath, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            tree = ast.parse(open(path).read(), filename=rel)
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+                    targets = (
+                        node.targets if isinstance(node, ast.Assign)
+                        else [node.target]
+                    )
+                    if any(
+                        isinstance(t, ast.Subscript) and _is_env_mapping(t.value)
+                        for t in targets
+                    ):
+                        sites.append(f"{rel}:{node.lineno}")
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("insert", "append")
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "path"
+                    and isinstance(node.func.value.value, ast.Name)
+                    and node.func.value.value.id == "sys"
+                ):
+                    sites.append(f"{rel}:{node.lineno}")
+    assert not sites, (
+        f"process-wide environment mutation at {sites} — declare the "
+        "dependency instead of splicing it into sys.path / PYTHONPATH / "
+        "the workers' environment"
     )

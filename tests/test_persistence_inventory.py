@@ -124,7 +124,7 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # the additive tier above).
     ("streaming/jobs.py", "events_multires_distinct_incremental",
      "localCheckpoint"): (1, "bounded-relation"),
-    ("streaming/jobs.py", "streaming_sessions_tws",
+    ("streaming/jobs.py", "streaming_sessions_timeout",
      "localCheckpoint"): (1, "bounded-relation"),
     ("streaming/jobs.py", "events_multires_rollup_realtime",
      "localCheckpoint"): (2, "bounded-relation"),

@@ -118,46 +118,6 @@ def test_state_ttl_evicts_idle_keys_and_restarts(spark, tmp_path):
     assert a_rows.loc[2, "total_value"] == 60.0
 
 
-def test_twsip_totals_equal_batch(spark):
-    """transformWithStateInPandas (Spark 4 typed-state API): final per-user
-    totals must equal the batch DECIMAL aggregate exactly. Skips only
-    where no protobuf runtime exists at all — on this container the
-    host-discovery shim (protobuf_compat, r12) activates the cloud-sdk's
-    pure-Python runtime mid-session, un-skipping the TWS path."""
-    import pytest
-
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
-
-    from pyspark.sql import functions as F
-
-    from imdb_mapreduce_spark.sources.star import load_table
-    from imdb_mapreduce_spark.streaming.jobs import (
-        streaming_user_lifetime_totals,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in streaming_user_lifetime_totals(spark, sf).collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in load_table(spark, "events", sf)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)") * 100)
-            .cast("bigint")
-            .alias("total_cents"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_salted_kmv_equals_unsalted_and_breaks_key_bound(spark):
     """The salted sub-key sketch must (a) land on the IDENTICAL result as
     the unsalted operator (the KMV merge law: union of per-salt keeps ⊇
@@ -453,93 +413,6 @@ def test_kmv_salted_checkpoint_resume_green(spark, tmp_path):
         want[etype] = (len(grp), keep[-1][0], len(keep))
 
     assert got == want  # bit-identical; rows_seen exact ⇒ no re-read/reset
-
-
-def test_tws_state_view_drives_shared_merge_core():
-    """The TWS ValueState adapter (method surface exists()/get()/update())
-    must drive the SAME _merge_kmv_state core the GroupState path uses —
-    runs without protobuf/Spark, so the adapter is pinned even where the
-    TWS state server cannot start."""
-    import numpy as np
-    import pandas as pd
-
-    from imdb_mapreduce_spark.plans.quality import KMV_K
-    from imdb_mapreduce_spark.streaming.stateful import (
-        KMV_STATE_VERSION,
-        _merge_kmv_state,
-        _TwsStateView,
-    )
-
-    class FakeValueState:  # TWS method surface
-        def __init__(self):
-            self._t = None
-
-        def exists(self):
-            return self._t is not None
-
-        def get(self):
-            return self._t
-
-        def update(self, t):
-            self._t = t
-
-    vs = FakeValueState()
-    b1 = pd.DataFrame({"h": [5, 3, 9], "user_id": [50, 30, 90]})
-    b2 = pd.DataFrame({"h": [1, 3], "user_id": [10, 30]})
-    keep, rows_seen = _merge_kmv_state(_TwsStateView(vs), iter([b1]))
-    assert rows_seen == 3 and keep[:, 0].tolist() == [3, 5, 9]
-    keep, rows_seen = _merge_kmv_state(_TwsStateView(vs), iter([b2]))
-    # cross-"batch" state carried: union of distinct pairs, k-smallest
-    assert rows_seen == 5 and keep[:, 0].tolist() == [1, 3, 5, 9]
-    assert vs.get()[0] == KMV_STATE_VERSION
-
-
-def test_tws_kmv_converges_to_batch_oracle(spark):
-    """The ready-to-run Arrow-wall A/B twin (SCALING.md r11): the TWS KMV
-    must land on the identical sketch as the apply* operator / the batch
-    oracle. Skips only where no protobuf runtime exists at all (the
-    protobuf_compat shim activates a host runtime here, r12)."""
-    import pytest
-
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
-
-    import hashlib
-
-    from imdb_mapreduce_spark.plans.quality import KMV_K
-    from imdb_mapreduce_spark.streaming.jobs import (
-        rocksdb_state_store,
-        run_stream_to_memory,
-    )
-    from imdb_mapreduce_spark.streaming.stateful import running_kmv_by_type_tws
-
-    stream = read_events_stream(spark, f"{SF}/events.parquet")
-    with rocksdb_state_store(spark):  # TWS needs column families
-        log = run_stream_to_memory(running_kmv_by_type_tws(stream), "update")
-    final = (
-        log.toPandas()
-        .sort_values("rows_seen")
-        .groupby("event_type")
-        .last()
-    )
-    pdf = (
-        load_table(spark, "events", SF)
-        .select("event_type", "user_id")
-        .toPandas()
-    )
-    for etype, grp in pdf.groupby("event_type"):
-        hs = sorted(
-            int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
-            for u in grp["user_id"].unique()
-        )[:KMV_K]
-        got = final.loc[etype]
-        assert (got["rows_seen"], got["kth_hash"], got["m"]) == (
-            len(grp),
-            hs[-1],
-            len(hs),
-        )
 
 
 def test_ttl_pending_timeout_survives_checkpoint_restart(spark, tmp_path):
@@ -1767,45 +1640,39 @@ def test_state_as_of_rejects_uncommitted_version(spark, tmp_path):
     )
 
 
-# --- TWS timers: session-timeout emission (r13) ----------------------------
+# --- event-time timeouts: session-timeout emission (r13) -------------------
 
 
-def test_tws_session_timers_fire_across_restart(spark, tmp_path):
-    """Restart-matrix drill for the TWS timer path: drain two batches,
-    stop, deliver more files + the watermark-advancing sentinel,
-    restart from the SAME checkpoint. Pins the three claims the
-    registered query's hash match cannot isolate:
+def test_session_timers_fire_across_restart(spark, tmp_path):
+    """Restart-matrix drill for the event-time timeout path: drain two
+    batches, stop, deliver more files + the watermark-advancing
+    sentinel, restart from the SAME checkpoint. Pins the three claims
+    the registered query's hash match cannot isolate:
 
     1. A user who goes QUIET (events only in batch 0, nothing after) is
-       emitted by the TIMER path alone — the gap path never sees a next
-       event for that key, so this session appearing at all proves
-       ``handleExpiredTimer`` fired off watermark progress, with the
-       registered timer having SURVIVED the checkpoint restart.
+       emitted by the TIMEOUT path alone — the gap path never sees a
+       next event for that key, so this session appearing at all proves
+       the ``hasTimedOut`` call fired off watermark progress, with the
+       armed timeout having SURVIVED the checkpoint restart.
     2. A session extended across the restart boundary emits ONCE with
-       the merged count (state recovery + stale-timer guard: the timer
-       armed pre-restart for the shorter session must no-op).
+       the merged count (state recovery + re-arm: the timeout set
+       pre-restart for the shorter session is replaced, not fired).
     3. No session is emitted twice (exactly-once across both paths).
     """
     import os
 
     import pandas as pd
-    import pytest
 
-    from imdb_mapreduce_spark.streaming.jobs import rocksdb_state_store
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
     from imdb_mapreduce_spark.streaming.stateful import (
         SESSION_GAP_US,
-        sessions_by_timeout_tws,
+        sessions_by_timeout,
     )
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
 
     t0 = pd.Timestamp("2026-05-01 00:00:00")
     m = pd.Timedelta(minutes=1)
     g = pd.Timedelta(microseconds=SESSION_GAP_US)
     batches = {
-        # user 1: QUIET after batch 0 — closeable only by timer
+        # user 1: QUIET after batch 0 — closeable only by timeout
         # user 2: session A starts here...
         0: [(1, t0), (1, t0 + m), (2, t0 + 2 * m)],
         # ...extends ACROSS the restart boundary (gap not exceeded)
@@ -1813,7 +1680,7 @@ def test_tws_session_timers_fire_across_restart(spark, tmp_path):
         # user 2's next event exceeds the gap → session A closes via
         # gap path; session B opens
         2: [(2, t0 + 10 * m + g + 2 * m)],
-        # sentinel: far-future watermark advance fires remaining timers
+        # sentinel: far-future watermark advance fires remaining timeouts
         3: [(99, t0 + pd.Timedelta(days=30))],
     }
     src = str(tmp_path / "src")
@@ -1841,7 +1708,7 @@ def test_tws_session_timers_fire_across_restart(spark, tmp_path):
             df.write.mode("append").parquet(out)
 
         q = (
-            sessions_by_timeout_tws(stream)
+            sessions_by_timeout(stream)
             .writeStream.foreachBatch(sink)
             .outputMode("append")
             .option("checkpointLocation", ckpt)
@@ -1852,11 +1719,10 @@ def test_tws_session_timers_fire_across_restart(spark, tmp_path):
 
     put_file(0)
     put_file(1)
-    with rocksdb_state_store(spark):
-        drain()
-        put_file(2)
-        put_file(3)
-        drain()  # restart: state + timers recovered from the checkpoint
+    drain()
+    put_file(2)
+    put_file(3)
+    drain()  # restart: state + timeouts recovered from the checkpoint
 
     got = {
         (r["user_id"], r["session_no"]): (
@@ -1869,41 +1735,33 @@ def test_tws_session_timers_fire_across_restart(spark, tmp_path):
     rows = spark.read.parquet(out).filter("user_id < 99").count()
     assert rows == len(got), "a session was emitted more than once"
     us = lambda t: int(t.value // 1_000)
-    assert got[(1, 1)] == (us(t0), us(t0 + m), 2)  # timer-only closure
+    assert got[(1, 1)] == (us(t0), us(t0 + m), 2)  # timeout-only closure
     # cross-restart extension: ONE session, merged count 2
     assert got[(2, 1)] == (us(t0 + 2 * m), us(t0 + 10 * m), 2)
-    # session B: closed by the sentinel-driven timer in the second drain
+    # session B: closed by the sentinel-driven timeout in the second drain
     b_start = t0 + 10 * m + g + 2 * m
     assert got[(2, 2)] == (us(b_start), us(b_start), 1)
     assert set(got) == {(1, 1), (2, 1), (2, 2)}
 
 
-def test_tws_session_state_and_timers_introspectable_offline(spark, tmp_path):
-    """Ops observability for the TWS timer operator — parity with the
-    apply* state-source drill above: Spark 4's state data source reads a
-    TWS checkpoint's named state variable (``stateVarName``) AND its
-    registered timers (``readRegisteredTimers``) as batch DataFrames.
+def test_session_state_and_timers_introspectable_offline(spark, tmp_path):
+    """Ops observability for the session-timeout operator — parity with
+    the apply* state-source drill above: Spark 4's state data source
+    reads the checkpoint's session state (``value.groupState``) AND its
+    armed timeout (``value.timeoutTimestamp``) as a batch DataFrame.
     Pins the runbook invariant connecting them: every open session on
-    disk has exactly one armed timer, at precisely the processor's
-    close-time function of that session's own end
+    disk has exactly one armed timeout, at precisely the update
+    function's close-time of that session's own end
     ((end_us + gap + 999) // 1000 + 1) — so "which keys fire when" is
     auditable offline, without draining or replaying the stream."""
     import os
 
     import pandas as pd
-    import pytest
 
-    from pyspark.sql import functions as F
-
-    from imdb_mapreduce_spark.streaming.jobs import rocksdb_state_store
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
     from imdb_mapreduce_spark.streaming.stateful import (
         SESSION_GAP_US,
-        sessions_by_timeout_tws,
+        sessions_by_timeout,
     )
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
 
     t0 = pd.Timestamp("2026-05-01 00:00:00")
     m = pd.Timedelta(minutes=1)
@@ -1923,69 +1781,57 @@ def test_tws_session_state_and_timers_introspectable_offline(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with rocksdb_state_store(spark):
-        q = (
-            sessions_by_timeout_tws(stream)
-            .writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        sessions_by_timeout(stream)
+        .writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
+    rows = (
+        spark.read.format("statestore")
+        .load(ckpt)
+        .select("key.user_id", "value.groupState.*", "value.timeoutTimestamp")
+        .collect()
+    )
     state = {
         r["user_id"]: (r["session_no"], r["start_us"], r["end_us"], r["n_events"])
-        for r in spark.read.format("statestore")
-        .option("stateVarName", "session")
-        .load(ckpt)
-        .select("key.user_id", "value.*")
-        .collect()
+        for r in rows
     }
     us = lambda t: int(t.value // 1_000)
     assert state == {
         1: (1, us(t0), us(t0 + m), 2),
         2: (1, us(t0 + 2 * m), us(t0 + 2 * m), 1),
     }
-    timers = {
-        r["user_id"]: r["expiration_timestamp_ms"]
-        for r in spark.read.format("statestore")
-        .option("readRegisteredTimers", "true")
-        .load(ckpt)
-        .select("key.user_id", "expiration_timestamp_ms")
-        .collect()
-    }
+    timers = {r["user_id"]: r["timeoutTimestamp"] for r in rows}
     close_ms = lambda end_us: (end_us + SESSION_GAP_US + 999) // 1000 + 1
     assert timers == {
         uid: close_ms(end) for uid, (_sno, _s, end, _n) in state.items()
     }
 
 
-def test_tws_session_numbering_survives_timer_closure(spark, tmp_path):
-    """r13 review catch: a user whose session is closed BY TIMER and who
-    then RETURNS must continue session numbering (1, then 2) — state
-    wiped wholesale on timer expiry would restart the counter at 1 and
-    break the oracle's cumulative numbering. The geometry the 3-SF gates
+def test_session_numbering_survives_timer_closure(spark, tmp_path):
+    """r13 review catch: a user whose session is closed BY TIMEOUT and
+    who then RETURNS must continue session numbering (1, then 2) — state
+    wiped wholesale on timeout would restart the counter at 1 and break
+    the oracle's cumulative numbering. The geometry the 3-SF gates
     rarely produce: the return lands two batches after the closing
-    watermark advance, so the gap path cannot renumber for the timer."""
+    watermark advance, so the gap path cannot renumber for the timeout."""
     import os
 
     import pandas as pd
-    import pytest
 
-    from imdb_mapreduce_spark.streaming.jobs import rocksdb_state_store
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout_tws
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
+    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout
 
     t0 = pd.Timestamp("2026-06-01 00:00:00")
     h = pd.Timedelta(hours=1)
     batches = {
         0: [(7, t0)],                 # user 7's first session
         1: [(8, t0 + 5 * h)],         # other user: watermark passes 7's
-                                      # close time -> timer fires, closes
+                                      # close time -> timeout closes it
         2: [(8, t0 + 10 * h)],        # watermark moves again; 7 still out
         3: [(7, t0 + 20 * h)],        # 7 RETURNS: must be session_no 2
         4: [(9, t0 + 60 * h)],        # flush: closes the open tails
@@ -2009,16 +1855,15 @@ def test_tws_session_numbering_survives_timer_closure(spark, tmp_path):
     def sink(df, _id):
         df.write.mode("append").parquet(out)
 
-    with rocksdb_state_store(spark):
-        q = (
-            sessions_by_timeout_tws(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        sessions_by_timeout(stream)
+        .writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = sorted(
         (r["user_id"], r["session_no"])
         for r in spark.read.parquet(out).filter("user_id = 7").collect()
@@ -2174,24 +2019,19 @@ def test_session_sentinel_tracks_caller_gap(spark):
         assert delta_us == 10 * eff, (gap, delta_us)
 
 
-def test_tws_session_rejects_out_of_order_batches(spark, tmp_path):
+def test_session_rejects_out_of_order_batches(spark, tmp_path):
     """VERDICT r13 item 5: the input contract ("a batch must not contain
     events older than a previous batch's for the same user") is enforced
     at the API boundary — a caller wiring a genuinely out-of-order
     source gets a named SessionOrderViolation, not silently wrong
-    sessions. Also pins that the guard stays armed ACROSS a timer
+    sessions. Also pins that the guard stays armed ACROSS a timeout
     closure (the end timestamp survives as max-seen-ts)."""
     import os
 
     import pandas as pd
     import pytest
 
-    from imdb_mapreduce_spark.streaming.jobs import rocksdb_state_store
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout_tws
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
+    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout
 
     t0 = pd.Timestamp("2026-07-01 12:00:00")
     h = pd.Timedelta(hours=1)
@@ -2211,20 +2051,19 @@ def test_tws_session_rejects_out_of_order_batches(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        with rocksdb_state_store(spark):
-            q = (
-                sessions_by_timeout_tws(stream)
-                .writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            sessions_by_timeout(stream)
+            .writeStream.format("noop")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     # direct violation: batch 1 carries an event OLDER than batch 0's,
     # inside the engine's one-batch watermark lag window — the exact
-    # band where a violating row reaches the processor at all
+    # band where a violating row reaches the update function at all
     with pytest.raises(Exception, match="SessionOrderViolation|monotone"):
         run({0: [(7, t0)], 1: [(7, t0 - h)]}, "direct")
 
@@ -2232,11 +2071,11 @@ def test_tws_session_rejects_out_of_order_batches(spark, tmp_path):
     run({0: [(7, t0)], 1: [(7, t0)]}, "dup")
 
 
-def test_tws_session_watermark_drops_rows_behind_it(spark, tmp_path):
+def test_session_watermark_drops_rows_behind_it(spark, tmp_path):
     """The OTHER half of the input boundary (r14): once the global
     watermark has passed a timestamp, the ENGINE's standard late-record
-    policy drops such rows before the processor sees them — so a
-    timer-closed session cannot be corrupted by a very-late event; it
+    policy drops such rows before the update function sees them — so
+    a timeout-closed session cannot be corrupted by a very-late event; it
     was emitted exactly once and the state stays closed. Together with
     the guard above, every out-of-order input is either engine-dropped
     (behind the watermark) or fails loud (inside the watermark lag) —
@@ -2244,14 +2083,8 @@ def test_tws_session_watermark_drops_rows_behind_it(spark, tmp_path):
     import os
 
     import pandas as pd
-    import pytest
 
-    from imdb_mapreduce_spark.streaming.jobs import rocksdb_state_store
-    from imdb_mapreduce_spark.streaming.protobuf_compat import ensure_protobuf
-    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout_tws
-
-    if not ensure_protobuf(spark):
-        pytest.skip("no google.protobuf runtime — TWS state server needs it")
+    from imdb_mapreduce_spark.streaming.stateful import sessions_by_timeout
 
     t0 = pd.Timestamp("2026-07-02 12:00:00")
     h = pd.Timedelta(hours=1)
@@ -2259,7 +2092,7 @@ def test_tws_session_watermark_drops_rows_behind_it(spark, tmp_path):
     os.makedirs(src)
     batches = {
         0: [(7, t0)],
-        1: [(8, t0 + 5 * h)],  # watermark passes 7's close -> timer fires
+        1: [(8, t0 + 5 * h)],  # watermark passes 7's close -> timeout
         2: [(7, t0 - 2 * h)],  # behind the watermark: engine-dropped
     }
     for i, rows in batches.items():
@@ -2280,28 +2113,26 @@ def test_tws_session_watermark_drops_rows_behind_it(spark, tmp_path):
         df.write.mode("append").parquet(out)
 
     ckpt = str(tmp_path / "ckpt")
-    with rocksdb_state_store(spark):
-        q = (
-            sessions_by_timeout_tws(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        sessions_by_timeout(stream)
+        .writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = sorted(
         (r["user_id"], r["session_no"], r["n_events"])
         for r in spark.read.parquet(out).filter("user_id = 7").collect()
     )
-    # exactly the timer-closed session 1; the dropped row opened nothing
+    # exactly the timeout-closed session 1; the dropped row opened nothing
     assert got == [(7, 1, 1)], got
     state = {
         r["user_id"]: (r["session_no"], r["start_us"], r["n_events"])
         for r in spark.read.format("statestore")
-        .option("stateVarName", "session")
         .load(ckpt)
-        .select("key.user_id", "value.*")
+        .select("key.user_id", "value.groupState.*")
         .collect()
     }
     # closed marker (NULL start) with the counter AND max-seen kept
