@@ -110,30 +110,37 @@ class ImdbEngine:
     ) -> tuple[list[str], list[tuple[str, str, int]]]:
         """The flagship query, reference reply shape ``{Vertices, Edges}``
         (``master.erl:263``): display-sorted vertices + (src, dst, level)
-        edges. One collect, bounded by the ``max_vertices`` budget (pass
-        ``None`` for an explicitly unbounded batch use); sorted on the driver."""
-        res = self.request_df(name, node_type, level, max_vertices)
-        edges = graph_export.collect_edges(res)
-        return graph_export.sorted_vertices(res, edges), edges
+        edges. The rounds are driver-side point lookups on the cached edge
+        table, at most two bounded collects per round, bounded by the
+        ``max_vertices`` budget (``None`` is an explicitly unbounded batch
+        use; :meth:`request_df` is the distributed form)."""
+        res = costar_bfs(
+            self.cast_edges,
+            name,
+            node_type,
+            level,
+            max_vertices=max_vertices,
+            degree=self._degree(node_type, level),
+            driver_rounds=True,
+        )
+        return graph_export.sorted_vertices(res, res.edges), res.edges
 
     def request_df(
-        self,
-        name: str,
-        node_type: str = "actor",
-        level: int = 2,
-        max_vertices: int | None = None,
+        self, name: str, node_type: str = "actor", level: int = 2
     ) -> BfsResult:
-        """Same query, distributed result (no collect) for composition —
-        unbudgeted by default (a DataFrame consumer composes further
+        """Same query, distributed rounds and result (no collect) for
+        composition — unbudgeted (a DataFrame consumer composes further
         instead of collecting)."""
-        # level 1 runs no round; an unknown node_type is costar_bfs's to reject
-        degree = self._degree(node_type) if level > 1 and node_type in COSTAR_COLS else None
         return costar_bfs(
-            self.cast_edges, name, node_type, level, max_vertices=max_vertices, degree=degree
+            self.cast_edges, name, node_type, level, degree=self._degree(node_type, level)
         )
 
-    def _degree(self, node_type: str) -> float:
-        """:func:`avg_degree` of a query direction, computed once per engine."""
+    def _degree(self, node_type: str, level: int = 2) -> float | None:
+        """:func:`avg_degree` of a query direction, computed once per engine.
+        None when no round runs (level 1) or the direction is unknown
+        (``costar_bfs`` rejects it)."""
+        if level < 2 or node_type not in COSTAR_COLS:
+            return None
         with self._degrees_lock:
             if node_type not in self._degrees:
                 node_col = COSTAR_COLS[node_type][0]

@@ -34,10 +34,28 @@ Seeds are JVM ``range`` leaves (:func:`one_row`): a local-rows
 ``createDataFrame`` is a Python RDD whose every scan starts Python-worker
 tasks (~250 ms each on 4 cores). A round runs its ``count`` and broadcast
 jobs (5 on an 18.6k-edge cast graph), plus one degree job if not passed in.
+
+Budgeted point lookups (``costar_bfs(..., driver_rounds=True)``, the reply
+path of ``ImdbEngine.request``): a reply the budget bounds needs no
+distributed round. As the reference answers from its two in-RAM inverted
+indexes (``server.erl:111-152``), :func:`_lookup_rounds` runs each round
+as two filtered collects on the cached edge table — frontier → vias, then
+vias → co-entities — and does min-parent attachment, the visited set and
+both budget checks on the driver, over sets the budget bounds. A round is
+at most two jobs with no join, shuffle, broadcast, ``count`` or
+checkpoint; a round refused on the work estimate runs none. Each key set
+enters the plan as ONE literal: a JSON array that ``from_json`` parses and
+Catalyst folds into an array constant, tested with ``array_contains``. It
+costs a few ms to build at any size. ``Column.isin(keys)`` turns every key
+into its own py4j literal, 0.6–1.4 ms per name on a 4-core host (0.3–0.8 s
+for 500 names), so the large frontiers of refused requests would pay more
+for the literal than for the round. JSON escapes every character,
+so no name (commas, quotes, backslashes, NUL, non-BMP) can split a key.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, replace
 from functools import cache, reduce
 
@@ -57,8 +75,9 @@ class BfsBudgetExceeded(RuntimeError):
     with a bounded error instead of materializing an unbounded graph.
 
     Raised BETWEEN rounds (each round's frontier count is already
-    materialized by the checkpoint, so the check is free) — the traversal
-    aborts before the next expansion join is even planned."""
+    materialized by the checkpoint, or held on the driver by the point-
+    lookup rounds, so the check is free) — the traversal aborts before the
+    next expansion is even planned."""
 
     def __init__(
         self, visited: int, budget: int, level: int, estimated: bool = False
@@ -179,12 +198,70 @@ def _bfs_rounds(
 @dataclass
 class BfsResult:
     """Mirror of the reference's reply ``{Vertices, Edges}``
-    (``master.erl:261-263``)."""
+    (``master.erl:261-263``). Driver rounds (:func:`_lookup_rounds`)
+    carry the (level, src, dst)-sorted edge list and no vertex relation."""
 
     root: str
     node_type: str
-    edges: DataFrame  # (src, dst, level)
-    vertices: DataFrame  # (name,)
+    edges: DataFrame | list[tuple]  # (src, dst, level)
+    vertices: DataFrame | None  # (name,)
+
+
+def _lookup(edges: DataFrame, key_col: str, keys, val_col: str) -> list:
+    """``(key, val)`` rows of ``edges`` whose ``key_col`` is in ``keys``:
+    one filtered scan, one job. The key set is one JSON-array literal."""
+    key_set = F.from_json(F.lit(json.dumps(list(keys))), "array<string>")
+    hits = edges.filter(F.array_contains(key_set, F.col(key_col)))
+    return hits.select(key_col, val_col).collect()
+
+
+def _lookup_rounds(
+    edges: DataFrame,
+    root: str,
+    node_col: str,
+    via_col: str,
+    level: int,
+    max_vertices: int | None,
+    degree: float | None,
+) -> list[tuple]:
+    """:func:`bipartite_bfs`'s rounds and budget rules as driver-side point
+    lookups; returns the (level, src, dst)-sorted edges. Each collect is
+    bounded by the previous round's budget checks: hop 1 returns the edges
+    of ≤ ``max_vertices`` frontier keys, hop 2 one round's candidate edges
+    (~frontier × degree², which the work estimate caps at
+    ``BFS_WORK_SLACK`` × budget on average)."""
+    deg_of = cache(lambda: avg_degree(edges, node_col) if degree is None else degree)
+    visited = {root}
+    frontier = [root]
+    out: list[tuple] = []
+    for lvl in range(1, level):
+        if max_vertices is not None:
+            deg = deg_of()
+            # bipartite_bfs's pre-join estimate, the same float expression
+            est = len(frontier) * deg * deg
+            if est > max_vertices * BFS_WORK_SLACK:
+                raise BfsBudgetExceeded(int(est), max_vertices, lvl, estimated=True)
+        # hop 1: each via's minimum frontier parent
+        parent: dict[str, str] = {}
+        for node, via in _lookup(edges, node_col, frontier, via_col):
+            if via not in parent or node < parent[via]:
+                parent[via] = node
+        if not parent:
+            break
+        # hop 2: each unvisited co-entity's minimum parent (a frontier node
+        # is visited, so no node becomes its own child)
+        children: dict[str, str] = {}
+        for via, node in _lookup(edges, via_col, parent, node_col):
+            if node not in visited and (node not in children or parent[via] < children[node]):
+                children[node] = parent[via]
+        if not children:
+            break
+        visited.update(children)
+        out.extend((src, dst, lvl) for dst, src in children.items())
+        if max_vertices is not None and len(visited) > max_vertices:
+            raise BfsBudgetExceeded(len(visited), max_vertices, lvl)
+        frontier = list(children)
+    return sorted(out, key=lambda e: (e[2], e[0], e[1]))
 
 
 def _two_hop(
@@ -383,11 +460,15 @@ def costar_bfs(
     max_broadcast_rows: int = 1_000_000,
     max_vertices: int | None = None,
     degree: float | None = None,
+    driver_rounds: bool = False,
 ) -> BfsResult:
     """k-level co-star / shared-cast-movie graph — the reference's flagship
     query (``master.erl:251-288``). ``cast_edges`` is the silver
     ``(tconst, title, actor)`` table; both query directions run against it —
     no inverted copy needed. ``degree``: a kept :func:`avg_degree`.
+    ``driver_rounds``: run the rounds as point lookups
+    (:func:`_lookup_rounds`) and return the edges as a sorted list — for a
+    reply the ``max_vertices`` budget bounds.
     """
     if not name:
         # API-level input validation (F8, /root/reference/src/client/client.erl:139-140)
@@ -397,9 +478,16 @@ def costar_bfs(
     if not 1 <= level <= 10:
         raise ValueError("level must be in 1..10 (reference GUI offers 1..4)")
 
+    node_col, via_col = COSTAR_COLS[node_type]
+    if driver_rounds:
+        edges = _lookup_rounds(
+            cast_edges, name, node_col, via_col, level, max_vertices, degree
+        )
+        return BfsResult(root=name, node_type=node_type, edges=edges, vertices=None)
     res = bipartite_bfs(
         cast_edges,
-        *COSTAR_COLS[node_type],
+        node_col,
+        via_col,
         name,
         level,
         checkpoint,

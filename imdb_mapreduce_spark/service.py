@@ -16,22 +16,32 @@ connection instead of killing it, matching a long-running service's
 contract.
 
 Scale posture: the service is a thin driver-side frontend — each request
-runs the fully distributed BFS (``operators/graph.py``) and collects only
-the bounded result graph, exactly like the reference master collecting
-worker replies. Threaded handlers are safe because SparkSession actions
-are thread-safe; concurrent requests simply become concurrent Spark jobs
-sharing the cached edge table. Per request: the BFS rounds' jobs plus one
-collect (1 job at level 1, 6 at level 2 on an 18.6k-edge graph), none over
-a Python RDD (see ``operators/graph.py``).
+runs its BFS rounds as point lookups on the cached edge table
+(``operators/graph.py``), like the reference master gathering worker
+lookups, and holds only sets the request budget bounds. Threaded handlers
+are safe because SparkSession actions are thread-safe; concurrent requests
+simply become concurrent Spark jobs sharing the cached edge table. Per
+request: no job at level 1 and at most two filtered collects per round
+after it; on an 18k-edge cast graph a served request averages ~2.1 jobs
+(~1.2 rounds), none over a Python RDD.
+
+Each request logs one INFO line on this module's logger (name, type,
+level, latency, vertices and edges returned, outcome); it is silent unless
+the caller configures logging.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import socketserver
 import threading
+import time
 
 from imdb_mapreduce_spark.api import ImdbEngine
+from imdb_mapreduce_spark.operators.graph import BfsBudgetExceeded
+
+log = logging.getLogger(__name__)
 
 
 class _RequestHandler(socketserver.StreamRequestHandler):
@@ -40,6 +50,8 @@ class _RequestHandler(socketserver.StreamRequestHandler):
             line = raw.strip()
             if not line:
                 continue
+            t0 = time.perf_counter()
+            req, vertices, edges, outcome = {}, [], [], "answered"
             try:
                 req = json.loads(line)
                 # Per-request budget (VERDICT r05 item 8): clients may only
@@ -61,8 +73,25 @@ class _RequestHandler(socketserver.StreamRequestHandler):
                     "edges": [list(e) for e in edges],
                 }
             except Exception as e:  # noqa: BLE001 — every error becomes a reply
+                outcome = "error"
+                if isinstance(e, BfsBudgetExceeded):
+                    outcome = "estimated_refusal" if e.estimated else "exact_refusal"
                 reply = {"error": f"{type(e).__name__}: {e}"}
-            self.wfile.write((json.dumps(reply) + "\n").encode())
+            out = (json.dumps(reply) + "\n").encode()
+            # logged before the reply goes out: a client holding its reply
+            # can rely on the line being there
+            fields = req if isinstance(req, dict) else {}
+            log.info(
+                "request name=%s type=%s level=%s ms=%.1f vertices=%d edges=%d outcome=%s",
+                json.dumps(fields.get("name")),
+                json.dumps(fields.get("type", "actor")),
+                json.dumps(fields.get("level", 2)),
+                1000 * (time.perf_counter() - t0),
+                len(vertices),
+                len(edges),
+                outcome,
+            )
+            self.wfile.write(out)
             self.wfile.flush()
 
 

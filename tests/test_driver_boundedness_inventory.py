@@ -75,8 +75,16 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # one degree aggregate shared by both BFS forms and ImdbEngine, which
     # runs it once per query direction
     ("operators/graph.py", "avg_degree", "collect"): (1, "scalar-agg"),
-    # the one fetch of a BFS reply's edges (ImdbEngine.request, to_dot);
-    # vertex order is then worked out on the driver, with no job
+    # the point lookup of a budgeted request's rounds (_lookup_rounds,
+    # ImdbEngine.request), one per hop. Hop 1 returns the edges of the
+    # frontier: ≤ max_vertices keys after the previous round's exact
+    # check, ~frontier × degree rows. Hop 2 returns one round's candidate
+    # edges, ~frontier × degree², which the pre-join estimate caps at
+    # BFS_WORK_SLACK (16) × budget on AVERAGE degree; a frontier of hubs
+    # can exceed it by its excess degree.
+    ("operators/graph.py", "_lookup", "collect"): (1, "bounded-export"),
+    # the one fetch of a distributed BFS result's edges (to_dot, over
+    # ImdbEngine.request_df); DFS order is then worked out on the driver
     ("operators/graph_export.py", "collect_edges", "collect"):
         (1, "bounded-export"),
     ("pipeline/curation.py", "split_leakage_audit", "crossJoin"):

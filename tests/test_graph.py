@@ -268,9 +268,9 @@ def test_seeds_are_jvm_relations(spark, cast_edges):
     }
 
 
-def test_level1_request_runs_at_most_one_job(spark, cast_edges):
-    """A level-1 reply is the root alone: one bounded collect of an empty
-    edge relation, no sort job and no degree aggregate."""
+def test_level1_request_runs_no_job(spark, cast_edges):
+    """A level-1 reply is the root alone: no lookup, no sort job and no
+    degree aggregate."""
     from imdb_mapreduce_spark.api import ImdbEngine
 
     sc = spark.sparkContext
@@ -282,7 +282,120 @@ def test_level1_request_runs_at_most_one_job(spark, cast_edges):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert reply == (["Jane Doe"], [])
-    assert len(sc.statusTracker().getJobIdsForGroup("test-level1-request")) <= 1
+    assert len(sc.statusTracker().getJobIdsForGroup("test-level1-request")) == 0
+
+
+# Names a key literal can mangle: a comma, quotes, a backslash, NUL, a
+# non-BMP character, a trailing space; and one BMP character above the
+# surrogate range, which UTF-16 order would put after the non-BMP one.
+_HAZARD_ACTORS = ["Ann, Jr.", "Bob O'Hara", "Cy \\ Slash", 'Dee "Q" Ray',
+                  "Eve\x00Nul", "Fay \U0001F600 Grin", "Gus Trail ", "Hal \uFF21"]
+_HAZARD_TITLES = ["Now, Then", "It's", "Back\\slash", '"Quoted"', "Nul\x00l",
+                  "Smile \U0001F600", "Trailing ", "Wide \uFF21"]
+
+
+@pytest.fixture(scope="module")
+def hazard_graph(spark):
+    """A seeded random (tconst, title, actor) graph with one hub actor,
+    namesake titles (one title name on several tconsts) and the hazard
+    names above, in shuffled row order, so a first-seen parent is rarely
+    the minimum one."""
+    import random
+
+    rng = random.Random(20261017)
+    actors = _HAZARD_ACTORS + [f"Actor {i:02d}" for i in range(40)]
+    titles = _HAZARD_TITLES + [f"Title {i:02d}" for i in range(22)]
+    rows = set()
+    for tconst, title in enumerate(titles + ["Title 03", "Title 07", "Now, Then"]):
+        for actor in rng.sample(actors, rng.randint(2, 6)):
+            rows.add((tconst, title, actor))
+    for tconst in rng.sample(range(len(titles)), 14):  # the hub actor
+        rows.add((tconst, titles[tconst], "Zed Hub"))
+    rows = sorted(rows)
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "tconst long, title string, actor string")
+    return df.cache()
+
+
+def test_driver_rounds_match_distributed_rounds(hazard_graph):
+    """The point-lookup rounds of ``ImdbEngine.request`` give the same
+    edges, and the same refusals (kind, count and level), as the
+    distributed ``bipartite_bfs`` rounds, in both directions, at levels
+    1-4, under budgets that answer, trip the exact post-round check and
+    trip the pre-join work estimate."""
+    from imdb_mapreduce_spark.operators.graph import (
+        COSTAR_COLS,
+        BfsBudgetExceeded,
+        avg_degree,
+    )
+
+    def run(**kw):
+        try:
+            res = costar_bfs(hazard_graph, **kw)
+        except BfsBudgetExceeded as e:
+            return ("refused", e.estimated, str(e))
+        if isinstance(res.edges, list):
+            return ("answer", res.edges)
+        return ("answer", sorted(_edges(res), key=lambda e: (e[2], e[0], e[1])))
+
+    roots = {
+        "actor": ["Zed Hub", "Ann, Jr.", "Eve\x00Nul", "Fay \U0001F600 Grin"],
+        "movie": ["Now, Then", "Smile \U0001F600", "Back\\slash", "Title 03"],
+    }
+    outcomes = set()
+    for node_type, names in roots.items():
+        degree = avg_degree(hazard_graph, COSTAR_COLS[node_type][0])
+        for i, name in enumerate(names):
+            cases = [(lvl, 10_000) for lvl in (1, 2, 3, 4)] if i < 2 else []
+            cases += [(4, budget) for budget in (3, 20, 30)]
+            for level, budget in cases:
+                kw = dict(name=name, node_type=node_type, level=level,
+                          max_vertices=budget, degree=degree)
+                driver = run(driver_rounds=True, **kw)
+                assert driver == run(**kw), kw
+                outcomes.add(driver[:2] if driver[0] == "refused" else "answer")
+                if driver[0] == "answer" and level > 1:
+                    assert driver[1], kw  # every root here has co-entities
+    assert outcomes == {"answer", ("refused", False), ("refused", True)}
+
+
+def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
+    """A level-k request runs at most two jobs per round it runs (its two
+    lookups), and the round an estimated refusal stops at runs none. The
+    degree aggregate runs once per engine, first, and is not counted."""
+    from imdb_mapreduce_spark.api import ImdbEngine
+    from imdb_mapreduce_spark.operators.graph import BfsBudgetExceeded
+
+    sc = spark.sparkContext
+    engine = ImdbEngine(hazard_graph, cache=False)
+    for node_type in ("actor", "movie"):
+        engine._degree(node_type)
+    cases = [
+        ("Zed Hub", "actor", 4, 10_000, "answer"),
+        ("Ann, Jr.", "actor", 3, 10_000, "answer"),
+        ("Nobody", "actor", 3, 10_000, "answer"),
+        ("Now, Then", "movie", 4, 10_000, "answer"),
+        ("Zed Hub", "actor", 4, 12, "exact"),
+        ("Now, Then", "movie", 2, 1, "estimated"),  # in round 1: no job
+        ("Now, Then", "movie", 4, 20, "estimated"),  # in round 2
+    ]
+    for i, (name, node_type, level, budget, want) in enumerate(cases):
+        group = f"test-request-jobs-{i}"
+        sc.setJobGroup(group, "budgeted request")
+        try:
+            _, edges = engine.request(name, node_type, level, max_vertices=budget)
+            rounds = min(level - 1, max((e[2] for e in edges), default=0) + 1)
+            kind = "answer"
+        except BfsBudgetExceeded as e:
+            # the refused round ran its lookups only if the refusal is exact
+            rounds = e.level - e.estimated
+            kind = "estimated" if e.estimated else "exact"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert kind == want, (name, node_type, level, budget, kind)
+        assert jobs <= 2 * rounds, (name, node_type, level, budget, jobs, rounds)
 
 
 # Names whose display order is easy to get wrong: non-ASCII against ASCII

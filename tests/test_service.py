@@ -5,6 +5,7 @@ once-per-direction degree aggregate."""
 from __future__ import annotations
 
 import json
+import logging
 import socket
 import sys
 import threading
@@ -86,6 +87,35 @@ def test_service_round_trip_over_local_fixture(cast_edges, monkeypatch):
     assert again["vertices"] == ["John Q. Smith 0", "Jane Doe", "Bob O'Hara"]  # by surname
     # a dozen level >= 2 requests, yet one degree aggregate per direction
     assert sorted(degree_calls) == ["actor", "title"]
+
+
+def test_service_logs_one_line_per_request(cast_edges, caplog):
+    """One INFO line per request on the service's logger: name, type,
+    level, latency, vertices and edges returned, and the outcome."""
+    caplog.set_level(logging.INFO, logger="imdb_mapreduce_spark.service")
+    srv, port = serve_background(ImdbEngine(cast_edges))
+    try:
+        with socket.create_connection(("127.0.0.1", port), timeout=120) as s:
+            f = s.makefile("rwb")
+            answer = _ask(f, {"name": "Jane Doe", "type": "actor", "level": 2})
+            refusal = _ask(
+                f, {"name": "Jane Doe", "type": "actor", "level": 2, "max_vertices": 1}
+            )
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert len(answer["vertices"]) == 3 and len(answer["edges"]) == 2
+    assert refusal["error"].startswith("BfsBudgetExceeded: ")
+    lines = [
+        r.getMessage() for r in caplog.records if r.name == "imdb_mapreduce_spark.service"
+    ]
+    assert len(lines) == 2, lines
+    for line, tail in zip(
+        lines, ("vertices=3 edges=2 outcome=answered", "vertices=0 edges=0 outcome=exact_refusal")
+    ):
+        assert line.startswith('request name="Jane Doe" type="actor" level=2 ms='), line
+        assert float(line.split(" ms=")[1].split()[0]) > 0
+        assert line.endswith(tail), line
 
 
 def test_degree_is_computed_once_under_contending_threads(monkeypatch):
