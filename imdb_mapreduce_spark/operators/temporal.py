@@ -140,12 +140,12 @@ def overlap_join_binned(
     named knob, not OOM an executor.
 
     Hot bins: AQE's skew-join split CANNOT rescue a hot bin, and this
-    was measured, not assumed (`tools/overlap_skew_probe.py`, SCALING.md
-    r12) — AQE detects skew by shuffle-partition BYTES
-    (``skewedPartitionThresholdInBytes``, 256 MB default), while a hot
-    bin is tiny on input (30k rows ≈ 1 MB) and quadratic only in probe
-    WORK, so the engine sees nothing to split and one task eats
-    |hot|² probes. ``hot_bin_threshold`` turns on the targeted fix: a
+    was measured, not assumed (SCALING.md r12) — AQE detects skew by
+    shuffle-partition BYTES (``skewedPartitionThresholdInBytes``,
+    256 MB default), while a hot bin is tiny on input (30k rows ≈ 1 MB)
+    and quadratic only in probe WORK, so the engine sees nothing to
+    split and one task eats |hot|² probes. ``hot_bin_threshold`` turns
+    on the targeted fix: a
     cheap pre-pass counts exploded bin populations, bins
     above the threshold get ``hot_bin_salts``-way parallelism — each
     LEFT row lands in one salt slice, the RIGHT rows in hot bins
@@ -300,14 +300,13 @@ class OverlapPlan(NamedTuple):
 #   - the FLOOR is work-based: below ~10k rows a bin's |pop|² probe work
 #     is ≤1e8 comparisons — roughly one task-second of codegen probes —
 #     so salting it buys nothing and the replication tax is pure loss
-#     (tools/overlap_skew_probe.py used the same 10k cut when it
-#     measured the 80k-bin drain at 13.0 s under 32 salts vs 81-91 s
-#     with AQE's skew join, on or off);
+#     (the same 10k cut measured the 80k-bin drain at 13.0 s under 32
+#     salts vs 81-91 s with AQE's skew join, on or off — SCALING.md r12);
 #   - the MULTIPLIER keeps dense-but-uniform corpora unsalted: at the
 #     cost-model optimum W* every bin carries ~expected rows by
 #     construction, so only a bin 8× over its uniform share — a genuine
 #     population spike, not model noise — pays the ×salts replication.
-# Salt count 32 is the measured plateau of the probe's salts sweep.
+# Salt count 32 is the measured plateau of the r12 salts sweep.
 _HOT_BIN_MIN_POP = 10_000
 _HOT_BIN_EXPECTED_MULT = 8
 _HOT_BIN_SALTS = 32

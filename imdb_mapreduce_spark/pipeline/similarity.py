@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imdb_mapreduce_spark.concurrency import overlap
 from imdb_mapreduce_spark.plans.registry import register
 from imdb_mapreduce_spark.sources.star import load_table
 
@@ -1436,10 +1437,10 @@ def ann_ivf_erasure_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The untouched-cells-never-rewritten claim is pinned byte-level by
     ``test_ivf_delete_in_place_touches_only_erased_cells``; the
-    delete-vs-rebuild cost asymmetry is measured at the decades in
-    ``tools/ivf_erasure_probe.py`` (SCALING.md r15). The reference has
-    no similarity or deletion surface; this is the engine's
-    [NORTH-STAR] extension mandate meeting its GDPR story."""
+    delete-vs-rebuild cost asymmetry is measured at the decades
+    (SCALING.md r15). The reference has no similarity or deletion
+    surface; this is the engine's [NORTH-STAR] extension mandate
+    meeting its GDPR story."""
     import os
     import tempfile
 
@@ -1452,9 +1453,8 @@ def ann_ivf_erasure_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the QUERY side of the served read: quantize the queries and
             # pin their probe lists. Reads only the embeddings table and
             # the stateless quantizer — never the index directories — so
-            # it runs on a driver thread CONCURRENTLY with the index
-            # write + delete chain below (guide §2.6, the _coarse_tiers
-            # overlap pattern; r16 opt: interleaved A/B ×0.83–0.88 on
+            # it runs CONCURRENTLY with the index write + delete chain
+            # below (guide §2.6; r16 opt: interleaved A/B ×0.83–0.88 on
             # every pair).
             ranked = _ivf_det_ranked(pivots)
             probes = (
@@ -1481,11 +1481,9 @@ def ann_ivf_erasure_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return probes, cells
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            probe_fut = pool.submit(_probe_leg)
-            # the one-time index WRITE (exists already in production)
+        def _index_leg() -> None:
+            # the one-time index WRITE (exists already in production),
+            # then the delete the served read runs off
             _assigned_cells(emb, pivots).write.partitionBy("cell").parquet(
                 cells_dir
             )
@@ -1493,8 +1491,8 @@ def ann_ivf_erasure_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id", "embedding"
             )
             ivf_delete_in_place(spark, cells_dir, erased, pivots)
-            # the served READ off the repaired index
-            probes, probe_cells = probe_fut.result()
+
+        (probes, probe_cells), _ = overlap(spark, _probe_leg, _index_leg)
         if not probe_cells:  # degenerate corpus: nothing left to query
             return spark.createDataFrame(
                 [], "query_id long, neighbor_id long, cosine double, rnk long"

@@ -11,10 +11,14 @@ DECIMAL (parity.py); durations are integer epoch-microsecond diffs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imdb_mapreduce_spark.concurrency import overlap
 from imdb_mapreduce_spark.functions.columns import epoch_us
 from imdb_mapreduce_spark.operators.temporal import (
     overlap_join_binned,
@@ -120,29 +124,79 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"),
     ).agg(F.sum("n_events").alias("n_events"), F.sum("s").alias("s"))
 
-    return multires_tiered_union(m, h, d)
+    return ROLLUP.readout({"minute": m, "hour": h, "day": d})
 
 
-def multires_tiered_union(m: DataFrame, h: DataFrame, d: DataFrame) -> DataFrame:
-    """Final presentation of the three rollup tiers — shared by the batch
-    cascade above and the incremental maintenance tier
-    (``streaming/jobs.events_multires_rollup_incremental``) so both land
-    on :data:`MULTIRES_ROLLUP_ORACLE` with identical column shape: exact
-    DECIMAL sums get their ONE cast to double here."""
+# ---------------------------------------------------------------------------
+# Per-class primitives of the minute/hour/day hypertable. Three mergeable
+# aggregate classes ride it: the additive sum (here), the KMV distinct
+# sketch and the bottom-K quantile sample (below); `AggSpec` binds each
+# class's primitives so every hypertable verb is written once.
+# ---------------------------------------------------------------------------
 
-    def tiered(df: DataFrame, tier: str) -> DataFrame:
-        return df.select(
-            F.lit(tier).alias("tier"),
-            "bucket",
+# Cross-tier / cross-batch accumulator decimal: wide enough that re-summing
+# partial sums never overflows or re-escalates precision between tiers or
+# versions (sum(decimal(38,2)) stays decimal(38,2)), exact over
+# decimal(12,2) inputs — what makes incremental ≡ direct bit-true.
+_SUM_DEC = "decimal(38,2)"
+
+
+def _sum_merge(df: DataFrame, unit: str) -> DataFrame:
+    """Aggregate (bucket, event_type, n_events, s) rows to ``unit``
+    granularity by additive merge — the monoid step every tier shares."""
+    return df.groupBy(
+        F.date_trunc(unit, F.col("bucket")).alias("bucket"),
+        "event_type",
+    ).agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.sum("s").cast(_SUM_DEC).alias("s"),
+    )
+
+
+def _sum_partials(rows: DataFrame, coalesce: bool) -> DataFrame:
+    """Raw rows → minute-grain additive partials. ``coalesce`` is the
+    COALESCED-total convention: a NULL value contributes 0, so ``s`` is
+    the sum of non-null values with 0 when none. Unlike plain SUM (NULL
+    for an all-NULL group) that total forms a GROUP — it has inverses
+    and no NULL absorbing state — which is what makes the subtract
+    repair exact under every null geometry; the erasure oracles carry
+    the same ``COALESCE(SUM(...), 0)``."""
+    s = F.col("value").cast("decimal(12,2)").cast(_SUM_DEC)
+    if coalesce:
+        s = F.coalesce(s, F.lit(0).cast(_SUM_DEC))
+    return _sum_merge(
+        rows.select(
+            F.date_trunc("minute", F.col("ts")).alias("bucket"),
             "event_type",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("s").cast("double").alias("total_value"),
-        )
+            F.lit(1).cast("long").alias("n_events"),
+            s.alias("s"),
+        ),
+        "minute",
+    )
 
-    return (
-        tiered(m, "minute")
-        .unionByName(tiered(h, "hour"))
-        .unionByName(tiered(d, "day"))
+
+def sum_inverse(partials: DataFrame) -> DataFrame:
+    """The additive inverse of sum-class rows (counts and totals
+    negated): merged into the touched buckets, it subtracts exactly."""
+    return partials.select(
+        "bucket",
+        "event_type",
+        (-F.col("n_events")).cast("long").alias("n_events"),
+        (-F.col("s")).cast(_SUM_DEC).alias("s"),
+    )
+
+
+def sum_bucket_stats(df: DataFrame, tier: str) -> DataFrame:
+    """One additive tier → the registered readout: exact DECIMAL sums get
+    their ONE cast to double here, so the cascade, the incremental fold
+    and the realtime read all land on :data:`MULTIRES_ROLLUP_ORACLE`'s
+    column shape."""
+    return df.select(
+        F.lit(tier).alias("tier"),
+        "bucket",
+        "event_type",
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("s").cast("double").alias("total_value"),
     )
 
 
@@ -1239,17 +1293,17 @@ def events_multires_distinct_rollup(
     m = kmv_k_smallest(kmv_minute_pairs(e)).localCheckpoint(eager=True)
     h = kmv_merge_up(m, "hour")
     d = kmv_merge_up(h, "day")
-    return (
-        kmv_bucket_stats(m, "minute")
-        .unionByName(kmv_bucket_stats(h, "hour"))
-        .unionByName(kmv_bucket_stats(d, "day"))
-    )
+    return DISTINCT.readout({"minute": m, "hour": h, "day": d})
 
 
-# Module-level so the flash-crowd probe (`tools/kmv_rank_probe.py`) and
-# the incremental sketch drain (`streaming/jobs.py`) measure/maintain the
-# registered shape BY CONSTRUCTION — the same sharing discipline as
-# `session_sentinel_df` / `multires_merge_batch`.
+def _h60(name: str) -> "F.Column":
+    """The repo's deterministic cross-engine hash of a column: the md5
+    15-hex-char prefix as a bigint, uniform on [0, 2^60); the oracles
+    spell it
+    ``('0x' || substring(md5(CAST(x AS VARCHAR)), 1, 15))::BIGINT``."""
+    return F.conv(
+        F.substring(F.md5(F.col(name).cast("string")), 1, 15), 16, 10
+    ).cast("bigint")
 
 
 def kmv_minute_pairs(e: DataFrame) -> DataFrame:
@@ -1265,9 +1319,7 @@ def kmv_minute_pairs(e: DataFrame) -> DataFrame:
     shuffle of its largest relation."""
     return e.filter(F.col("user_id").isNotNull()).select(
         F.date_trunc("minute", F.col("ts")).alias("bucket"),
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("h"),
+        _h60("user_id").alias("h"),
     )
 
 
@@ -1470,118 +1522,10 @@ def _note_state_sec(name: str, sec: float) -> None:
 # remaining-side predicate).
 _ERASED_SQL = "user_id IS NOT NULL AND user_id % 7 = 3"
 _REMAINING_SQL = "(user_id IS NULL OR user_id % 7 <> 3)"
-_ERASURE_DEC = "decimal(38,2)"
 
 
 def _erased_col() -> "F.Column":
     return F.col("user_id").isNotNull() & (F.col("user_id") % 7 == 3)
-
-
-def _erasure_sum_merge(df: DataFrame, unit: str) -> DataFrame:
-    """The additive monoid step with the COALESCED-total convention:
-    ``s`` is the sum of NON-NULL values with 0 when none — unlike plain
-    SUM (NULL for an all-NULL group), this total forms a GROUP (has
-    inverses and no NULL absorbing state), which is what makes the
-    subtract-repair below exact under EVERY null geometry, not just
-    corpora without NULL values."""
-    return df.groupBy(
-        F.date_trunc(unit, F.col("bucket")).alias("bucket"),
-        "event_type",
-    ).agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.coalesce(F.sum("s"), F.lit(0).cast(_ERASURE_DEC))
-        .cast(_ERASURE_DEC)
-        .alias("s"),
-    )
-
-
-def rollup_erasure_repair(
-    prev: dict[str, DataFrame],
-    neg: DataFrame,
-    materialize: "object | None" = None,
-) -> dict[str, DataFrame]:
-    """Repair the three-tier additive rollup after erasing a user set,
-    via the ADDITIVE INVERSE: ``neg`` holds the erased rows' per-minute
-    partials NEGATED, so merging them into the touched minute buckets
-    subtracts exactly (counts and coalesced totals form a group); rows
-    whose count reaches zero are dropped (the group no longer exists);
-    touched hour/day buckets RE-DERIVE from the repaired minute tier —
-    the standard hypertable refresh contract. Untouched rows carry.
-    All touched-set joins NULL-SAFE (NULL ts → NULL bucket is an
-    ordinary group).
-
-    At 100 TB this is the cheap path GDPR deletion wants: compute cost
-    is O(erased rows + touched buckets) — the erased rows come from a
-    user-keyed index/pruned scan, raw is never re-read. Contrast the
-    SKETCH twin (`events_distinct_user_erasure`): KMV has no inverse
-    (erasing a hash cannot resurrect the ones it evicted), so its
-    touched minutes must re-derive from remaining RAW in those buckets
-    — the mergeability asymmetry, measured in SCALING.md r14."""
-    # the touched .distinct() exchanges LOOK removable (the semi/anti
-    # probes are duplicate-tolerant) but are load-bearing for the
-    # single-final-action batch caller: the inner distinct is the
-    # ReusedExchange point all three tiers' broadcasts share — dropping
-    # it made each broadcast re-run the neg aggregation (r15 opt A/B:
-    # +0.3 s at sf0.1), so it stays
-    touched = neg.select("bucket").distinct()
-    t = F.broadcast(touched.select(F.col("bucket").alias("_tb")))
-    hot = prev["minute"].join(
-        t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
-    )
-    cold = prev["minute"].join(
-        t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-    )
-    repaired = _erasure_sum_merge(hot.unionByName(neg), "minute").filter(
-        F.col("n_events") > 0
-    )
-    parallel_coarse = materialize is not None
-    mat = materialize or (lambda _name, df: df)
-    # the repaired minute fans out (its own readout + hour + day) —
-    # the broadcast-fan-out reuse gap again; callers pass a bounded
-    # materializer (one row per (bucket, type))
-    m2 = mat("minute", cold.unionByName(repaired))
-    # Coarse tiers BOTH derive from the repaired minute tier (r15 opt
-    # session 3, the sketch twins' un-chaining applied to the additive
-    # family): deriving day from the lazy repaired HOUR tier evaluated
-    # the hour aggregates twice inside the single readout action.
-    # Output-invariant (decimal sums associative, counts additive);
-    # with the caller's prev-day un-chaining: interleaved A/B min
-    # 2.44 → 2.17 s, med 2.74 → 2.47 s at sf0.1. Materializing callers
-    # (the erasure fold, the history purge) run the two independent
-    # builds 2-wide.
-    tiers = {"minute": m2}
-
-    def build_coarse(unit: str) -> DataFrame:
-        tc = F.broadcast(
-            touched.select(
-                F.date_trunc(unit, F.col("bucket")).alias("_tb")
-            ).distinct()
-        )
-        derived = _erasure_sum_merge(
-            m2.join(
-                tc,
-                F.date_trunc(unit, F.col("bucket")).eqNullSafe(F.col("_tb")),
-                "left_semi",
-            ),
-            unit,
-        )
-        carried = prev[unit].join(
-            tc, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-        )
-        return mat(unit, carried.unionByName(derived))
-
-    if parallel_coarse:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fh = pool.submit(build_coarse, "hour")
-            fd = pool.submit(build_coarse, "day")
-            tiers["hour"] = fh.result()
-            tiers["day"] = fd.result()
-    else:
-        tiers["hour"] = build_coarse("hour")
-        tiers["day"] = build_coarse("day")
-    return tiers
 
 
 # Shared by `events_rollup_user_erasure` (batch repair) and the r15
@@ -1636,92 +1580,37 @@ def events_rollup_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The value total uses the COALESCED convention (sum of non-null
     values, 0 when none): unlike plain SUM, that total has an inverse
-    for every geometry — see `_erasure_sum_merge`. The harness builds
+    for every geometry — see `_sum_partials`. The harness builds
     the pre-erasure state in-query (one raw pass); in production the
     state already exists and only the erased rows (user-indexed) are
     read. Erasure-set choice: ~1/7 of users, so the driver-SF gate
-    exercises dense touching; the decade probe erases a handful of
-    users to demonstrate the state-proportional repair cost."""
+    exercises dense touching; erasing a handful of users at the decade
+    shows the state-proportional repair cost (SCALING.md r14)."""
     e = _events(spark, sf_dir).select("ts", "event_type", "value", "user_id")
-    rows = e.select(
-        F.date_trunc("minute", F.col("ts")).alias("bucket"),
-        "event_type",
-        F.lit(1).cast("long").alias("n_events"),
-        F.coalesce(
-            F.col("value").cast("decimal(12,2)").cast(_ERASURE_DEC),
-            F.lit(0).cast(_ERASURE_DEC),
-        ).alias("s"),
-        _erased_col().alias("_erased"),
-    )
     # pre-erasure state: minute from raw (the fan-out relation —
     # bounded, one row per (bucket, type)), hour/day derived from it
     import time as _time
 
     _t0 = _time.monotonic()
-    m = _erasure_sum_merge(rows.drop("_erased"), "minute").localCheckpoint(
-        eager=True
-    )
+    m = ROLLUP_ERASABLE.partials(e).localCheckpoint(eager=True)
     _note_state_sec("events_rollup_user_erasure", _time.monotonic() - _t0)
-    prev = {"minute": m}
-    prev["hour"] = _erasure_sum_merge(m, "hour")
     # day direct from the pinned minute state (not via the lazy hour
     # state, whose aggregate would otherwise evaluate twice in the one
     # readout action — r15 opt session 3)
-    prev["day"] = _erasure_sum_merge(m, "day")
+    prev = {
+        "minute": m, "hour": _sum_merge(m, "hour"), "day": _sum_merge(m, "day")
+    }
     # the erased rows' negated minute partials (second raw pass — the
-    # pass a user-keyed index serves at scale), bounded output
-    neg = _erasure_sum_merge(rows.filter(F.col("_erased")), "minute").select(
-        "bucket",
-        "event_type",
-        (-F.col("n_events")).cast("long").alias("n_events"),
-        (-F.col("s")).cast(_ERASURE_DEC).alias("s"),
-        # NOT pinned here: the coarse tiers evaluate inside ONE final
-        # action (the default materializer pins only minute), where
-        # ReuseExchange dedupes the neg agg subtree — an eager pin
-        # measured +0.3 s (r15 opt A/B); the multi-action incremental
-        # fold (rollup_erasure_fold_merge) pins instead
-    )
-    tiers = rollup_erasure_repair(
-        prev,
-        neg,
-        materialize=lambda name, df: (
-            df.localCheckpoint(eager=True) if name == "minute" else df
-        ),
-    )
-    return multires_tiered_union(
-        tiers["minute"], tiers["hour"], tiers["day"]
-    )
-
-
-def erasure_minute_partials(e: DataFrame, negate: bool = False) -> DataFrame:
-    """Per-minute coalesced-total partials of ``e`` — the erased-rows
-    relation a user-keyed index serves at scale. ``negate=True`` yields
-    the ADDITIVE INVERSE rows `rollup_erasure_repair` consumes; the
-    construction mirrors `events_rollup_user_erasure`'s inline rows
-    projection exactly (per-row coalesce, so totals form a group) and
-    is shared with the r15 incremental-erasure fold
-    (`streaming/jobs.events_rollup_erasure_incremental`) so both
-    harnesses repair with the identical relation shape."""
-    agg = _erasure_sum_merge(
-        e.select(
-            F.date_trunc("minute", F.col("ts")).alias("bucket"),
-            "event_type",
-            F.lit(1).cast("long").alias("n_events"),
-            F.coalesce(
-                F.col("value").cast("decimal(12,2)").cast(_ERASURE_DEC),
-                F.lit(0).cast(_ERASURE_DEC),
-            ).alias("s"),
-        ),
-        "minute",
-    )
-    if not negate:
-        return agg
-    return agg.select(
-        "bucket",
-        "event_type",
-        (-F.col("n_events")).cast("long").alias("n_events"),
-        (-F.col("s")).cast(_ERASURE_DEC).alias("s"),
-    )
+    # pass a user-keyed index serves at scale), bounded output. NOT
+    # pinned here: the coarse tiers evaluate inside ONE final action,
+    # where ReuseExchange dedupes the neg agg subtree — an eager pin
+    # measured +0.3 s (r15 opt A/B); the multi-action incremental fold
+    # pins instead
+    neg = sum_inverse(ROLLUP_ERASABLE.partials(e.filter(_erased_col())))
+    # passed explicitly (not the default): the two lazy coarse tiers are
+    # built 2-wide, the materializing callers' shape
+    tiers = rollup_erasure_repair(prev, neg, materialize=_pin_minute)
+    return ROLLUP_ERASABLE.readout(tiers)
 
 
 # Shared by `events_distinct_user_erasure` (batch repair) and the r15
@@ -1799,146 +1688,11 @@ def events_distinct_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     _t0 = _time.monotonic()
-    prev_m = kmv_k_smallest(kmv_minute_pairs(e)).localCheckpoint(eager=True)
+    prev_m = DISTINCT.partials(e).localCheckpoint(eager=True)
     _note_state_sec("events_distinct_user_erasure", _time.monotonic() - _t0)
-    tiers = sketch_erasure_repair(e, prev_m, _erased_col())
-    return (
-        kmv_bucket_stats(tiers["minute"], "minute")
-        .unionByName(kmv_bucket_stats(tiers["hour"], "hour"))
-        .unionByName(kmv_bucket_stats(tiers["day"], "day"))
+    return DISTINCT.readout(
+        rederive_erasure_repair(DISTINCT, e, prev_m, _erased_col())
     )
-
-
-def sketch_erasure_repair(
-    e: DataFrame,
-    prev_m: DataFrame,
-    erased: "F.Column",
-    erased_rows: DataFrame | None = None,
-    prev_coarse: "dict[str, DataFrame] | None" = None,
-    materialize: "object | None" = None,
-) -> dict[str, DataFrame]:
-    """The sketch-family erasure repair (shared with
-    ``tools/erasure_probe.py`` so the probe measures the registered
-    shape by construction): re-derive the erased users' touched minutes
-    from REMAINING raw in those buckets, carry the rest, merge touched
-    hours/days up from the repaired minute arrays. ``prev_m`` is the
-    pre-erasure minute sketch (callers materialize it — it is the
-    carried relation AND, unless ``prev_coarse`` supplies maintained
-    hour/day state (the r15 incremental fold), the source of the
-    carried coarse tiers).
-
-    The repair trigger is EXACT sketch membership, not mere activity:
-    a minute's K-array changes only if an erased user's hash IS one of
-    its members — a non-member sits below the kth cut, so removing it
-    cannot alter the K smallest (and under fill, the array holds ALL
-    distinct hashes, so membership is still the exact test; a colliding
-    surviving user makes the re-derivation a no-op, which is correct,
-    never wrong). At 2.5k distinct users per minute that prunes the
-    re-derive set ~40x below the raw activity footprint (P(hash in
-    top-64) ~= 64/2500), and with it the touched-partition scan a
-    time-partitioned layout would pay."""
-    # the erased users' hashes per active minute — served from a
-    # user-keyed index when the caller has one (``erased_rows``; the
-    # probe stages it, a deployment keeps it), else a filtered scan —
-    # kept only where they are sketch MEMBERS
-    erased_pairs = kmv_minute_pairs(
-        erased_rows if erased_rows is not None else e.filter(erased)
-    )
-    touched = (
-        erased_pairs.alias("p")
-        .join(
-            prev_m.alias("s"),
-            F.col("p.bucket").eqNullSafe(F.col("s.bucket")),
-            "inner",
-        )
-        .filter(F.array_contains(F.col("s.hashes"), F.col("p.h")))
-        .select(F.col("p.bucket").alias("bucket"))
-        .distinct()
-        # r15 opt: pinned — the touched set (bounded: one row per fired
-        # minute) otherwise re-runs its membership join (erased-rows
-        # scan ⋈ prev_m) under EVERY tier action's broadcast branch
-        # (minute, hour, day are separate actions whenever the caller
-        # materializes; broadcast subtrees defeat cross-action reuse)
-        .localCheckpoint(eager=True)
-    )
-    t = F.broadcast(touched.select(F.col("bucket").alias("_tb")))
-    # re-derive touched minutes from REMAINING rows in those buckets
-    remaining_touched = e.filter(~erased).join(
-        t,
-        F.date_trunc("minute", F.col("ts")).eqNullSafe(F.col("_tb")),
-        "left_semi",
-    )
-    rederived = kmv_k_smallest(kmv_minute_pairs(remaining_touched))
-    carried_m = prev_m.join(
-        t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-    )
-    # Each tier is pinned THROUGH the caller's materializer so every
-    # relation is computed by exactly one action (the fold's versioned
-    # write is the materializer — the multires_fold_version contract;
-    # without this the hour plan re-executed under the day write, r15
-    # review catch). Default: pin only the fan-out minute tier, coarse
-    # tiers stay lazy — the one-action shape the batch query and probe
-    # always had.
-    parallel_coarse = materialize is not None
-    if materialize is None:
-        materialize = lambda name, df: (  # noqa: E731
-            df.localCheckpoint(eager=True) if name == "minute" else df
-        )
-    m2 = materialize("minute", carried_m.unionByName(rederived))
-    # Coarse tiers: carry untouched, merge touched up from repaired m2 —
-    # BOTH direct from the minute tier (r15 opt session 3): deriving day
-    # from the HOUR tier chained the subtrees, so the hour merge-up was
-    # evaluated twice inside the single readout action (once for its own
-    # branch, once under day — the broadcast semi/anti probes between
-    # them defeat ReuseExchange), and the carried day side re-ran
-    # merge_up(merge_up(prev_m)). Output-invariant by the associative
-    # KMV merge law (any hash in a day's K-set is top-K in its own
-    # child, so day-from-minute ≡ day-from-hour — the same argument
-    # `_coarse_tiers` uses; interleaved A/B min 2.21→2.06 s, med
-    # 2.64→2.36 s at sf0.1). The two builds are independent, so a
-    # materializing caller (the incremental erasure fold) runs them
-    # 2-wide (guide §2.6).
-    tiers = {"minute": m2}
-
-    def build_coarse(unit: str) -> DataFrame:
-        # coarsen the pinned minute-grain touched set directly — no
-        # .distinct(): it is tiny and the probes are duplicate-tolerant
-        tc = F.broadcast(
-            touched.select(F.date_trunc(unit, F.col("bucket")).alias("_tb"))
-        )
-        derived = kmv_merge_up(
-            m2.join(
-                tc,
-                F.date_trunc(unit, F.col("bucket")).eqNullSafe(F.col("_tb")),
-                "left_semi",
-            ),
-            unit,
-        )
-        # the carried coarse tier: when the caller maintains versioned
-        # coarse state (the r15 incremental fold), use it directly —
-        # identical to re-merging prev_m up by the law the oracle
-        # certifies, minus the recompute
-        prev_c = (
-            prev_coarse[unit] if prev_coarse is not None
-            else kmv_merge_up(prev_m, unit)
-        )
-        carried = prev_c.join(
-            tc, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-        )
-        return materialize(unit, carried.unionByName(derived))
-
-    if parallel_coarse:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fh = pool.submit(build_coarse, "hour")
-            fd = pool.submit(build_coarse, "day")
-            tiers["hour"] = fh.result()
-            tiers["day"] = fd.result()
-    else:
-        tiers["hour"] = build_coarse("hour")
-        tiers["day"] = build_coarse("day")
-    return tiers
 
 
 # ---------------------------------------------------------------------------
@@ -1987,17 +1741,9 @@ def qtl_minute_pairs(e: DataFrame) -> DataFrame:
         F.col("value").isNotNull() & F.col("event_id").isNotNull()
     ).select(
         F.date_trunc("minute", F.col("ts")).alias("bucket"),
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
-        )
-        .cast("bigint")
-        .alias("h"),
+        _h60("event_id").alias("h"),
         F.col("value").alias("v"),
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-        )
-        .cast("bigint")
-        .alias("uh"),
+        _h60("user_id").alias("uh"),
     )
 
 
@@ -2111,6 +1857,111 @@ def qtl_bucket_stats(df: DataFrame, tier: str) -> DataFrame:
     )
 
 
+def qtl_erased_users(e: DataFrame) -> DataFrame:
+    """Erased rows → their distinct (minute bucket, user hash ``uh``)
+    keys — what the quantile erasure trigger tests against the ``uh``
+    each stored sample element carries."""
+    return (
+        e.filter(F.col("user_id").isNotNull())
+        .select(
+            F.date_trunc("minute", F.col("ts")).alias("bucket"),
+            _h60("user_id").alias("uh"),
+        )
+        .distinct()
+    )
+
+
+# ``materialize(name, df) -> df``: pins or writes one relation of a fold
+# or repair ("partials", "minute", "hour", "day") and returns the handle
+# later steps read.
+Materializer = Callable[[str, DataFrame], DataFrame]
+
+
+@dataclass(frozen=True)
+class AggSpec:
+    """One mergeable aggregate class of the minute/hour/day hypertable —
+    only what differs between classes. Every hypertable verb is written
+    once over a spec: the fold (`streaming/jobs.merge_batch`), the two
+    erasure repairs below, and the incremental, erasure and realtime
+    harnesses (SAMUEL, EDBT 2018: one body shared by many queries).
+
+    - ``partials(rows)``: raw rows → minute-grain state rows (lazy) —
+      the only pass over raw;
+    - ``merge(rows)``: several minute rows per bucket (stored state ∪ a
+      batch's partials) → one, by the class's merge law;
+    - ``merge_up(fine, unit)``: coarsen a tier to ``unit`` by that law;
+    - ``stats(df, tier)``: one tier's registered readout, and
+      ``empty_schema`` the readout's schema when no state exists;
+    - ``erased_pairs(rows)`` / ``member()``: set only for a class with
+      NO inverse — the erased rows' per-minute keys (alias ``p``) and
+      the predicate that one is a member of a stored minute row (alias
+      ``s``), the exact trigger of the re-derive repair. The additive
+      class leaves both ``None``: it is repaired by subtraction.
+    """
+
+    name: str
+    partials: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
+    merge_up: Callable[[DataFrame, str], DataFrame]
+    stats: Callable[[DataFrame, str], DataFrame]
+    empty_schema: str
+    erased_pairs: Callable[[DataFrame], DataFrame] | None = None
+    member: Callable[[], Column] | None = None
+
+    @property
+    def has_inverse(self) -> bool:
+        return self.erased_pairs is None
+
+    def readout(self, tiers: dict[str, DataFrame]) -> DataFrame:
+        return (
+            self.stats(tiers["minute"], "minute")
+            .unionByName(self.stats(tiers["hour"], "hour"))
+            .unionByName(self.stats(tiers["day"], "day"))
+        )
+
+
+ROLLUP = AggSpec(
+    "rollup",
+    partials=lambda rows: _sum_partials(rows, coalesce=False),
+    merge=lambda rows: _sum_merge(rows, "minute"),
+    merge_up=_sum_merge,
+    stats=sum_bucket_stats,
+    empty_schema="tier string, bucket timestamp, event_type string,"
+    " n_events bigint, total_value double",
+)
+# The additive state a later erasure repairs: coalesced totals (see
+# `_sum_partials`), matching the erasure oracles' COALESCE(SUM(...), 0).
+ROLLUP_ERASABLE = replace(
+    ROLLUP,
+    name="rollup_erasable",
+    partials=lambda rows: _sum_partials(rows, coalesce=True),
+)
+DISTINCT = AggSpec(
+    "distinct",
+    partials=lambda rows: kmv_k_smallest(kmv_minute_pairs(rows)),
+    merge=kmv_merge_arrays,
+    merge_up=kmv_merge_up,
+    stats=kmv_bucket_stats,
+    empty_schema="tier string, bucket timestamp, kth_hash bigint,"
+    " m bigint, est_distinct double",
+    erased_pairs=kmv_minute_pairs,
+    member=lambda: F.array_contains(F.col("s.hashes"), F.col("p.h")),
+)
+QUANTILE = AggSpec(
+    "quantile",
+    partials=lambda rows: bottomk_sample(qtl_minute_pairs(rows)),
+    merge=bottomk_merge_arrays,
+    merge_up=bottomk_merge_up,
+    stats=qtl_bucket_stats,
+    empty_schema="tier string, bucket timestamp, m bigint,"
+    " p50 double, p90 double, p99 double",
+    erased_pairs=qtl_erased_users,
+    member=lambda: F.exists(
+        F.col("s.sample"), lambda x: x["uh"] == F.col("p.uh")
+    ),
+)
+
+
 # Shared by `events_multires_quantile_rollup` (batch cascade) and the
 # r15 `events_multires_quantile_incremental` (foreachBatch sample
 # maintenance, streaming/jobs.py): every tier's bottom-K sample computed
@@ -2204,11 +2055,7 @@ def events_multires_quantile_rollup(
     m = bottomk_sample(qtl_minute_pairs(e)).localCheckpoint(eager=True)
     h = bottomk_merge_up(m, "hour")
     d = bottomk_merge_up(h, "day")
-    return (
-        qtl_bucket_stats(m, "minute")
-        .unionByName(qtl_bucket_stats(h, "hour"))
-        .unionByName(qtl_bucket_stats(d, "day"))
-    )
+    return QUANTILE.readout({"minute": m, "hour": h, "day": d})
 
 
 # Shared by `events_quantile_user_erasure` (batch repair); the oracle
@@ -2289,124 +2136,218 @@ def events_quantile_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     _t0 = _time.monotonic()
-    prev_m = bottomk_sample(qtl_minute_pairs(e)).localCheckpoint(eager=True)
+    prev_m = QUANTILE.partials(e).localCheckpoint(eager=True)
     _note_state_sec("events_quantile_user_erasure", _time.monotonic() - _t0)
-    tiers = sample_erasure_repair(e, prev_m, _erased_col())
-    return (
-        qtl_bucket_stats(tiers["minute"], "minute")
-        .unionByName(qtl_bucket_stats(tiers["hour"], "hour"))
-        .unionByName(qtl_bucket_stats(tiers["day"], "day"))
+    return QUANTILE.readout(
+        rederive_erasure_repair(QUANTILE, e, prev_m, _erased_col())
     )
 
 
-def sample_erasure_repair(
+# ---------------------------------------------------------------------------
+# Erasure repair, written once over the spec. A class with an inverse is
+# repaired by subtraction; a class without one re-derives the touched
+# minutes from remaining raw. Both rebuild the coarse tiers the same way.
+# ---------------------------------------------------------------------------
+
+
+def _pin_minute(name: str, df: DataFrame) -> DataFrame:
+    """The repairs' default materializer: pin only the repaired minute
+    tier — the fan-out relation (its own readout + hour + day), bounded
+    at one row per (bucket[, type]); the coarse tiers stay lazy, so a
+    single readout action computes them."""
+    return df.localCheckpoint(eager=True) if name == "minute" else df
+
+
+def rederive_tier(
+    spec: AggSpec,
+    unit: str,
+    src: DataFrame,
+    touched: DataFrame,
+    carried: "dict[str, DataFrame] | None",
+    mat: Materializer,
+) -> DataFrame:
+    """One coarse tier of the hypertable refresh contract: every
+    ``unit`` bucket holding a ``touched`` minute RE-DERIVES from the
+    minute-grain ``src`` by ``spec.merge_up`` (never raw); every other
+    row of ``carried[unit]`` carries as-is (``carried`` is ``None`` when
+    there is no prior state). ``touched`` is at minute grain and may
+    hold duplicates — it only feeds broadcast semi/anti probes, which
+    tolerate them, so no ``.distinct()`` exchange. Every join is
+    NULL-SAFE: date_trunc of a NULL ts is a NULL bucket, an ordinary
+    group to the oracles' GROUP BY — plain equality would drop it from
+    the re-derived tier (r13 review catch)."""
+    tc = F.broadcast(
+        touched.select(F.date_trunc(unit, F.col("bucket")).alias("_tb"))
+    )
+    out = spec.merge_up(
+        src.join(
+            tc,
+            F.date_trunc(unit, F.col("bucket")).eqNullSafe(F.col("_tb")),
+            "left_semi",
+        ),
+        unit,
+    )
+    if carried is not None:
+        out = (
+            carried[unit]
+            .join(tc, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti")
+            .unionByName(out)
+        )
+    return mat(unit, out)
+
+
+def _repair_coarse(
+    spec: AggSpec,
+    m2: DataFrame,
+    touched: DataFrame,
+    carried: "dict[str, DataFrame]",
+    mat: Materializer,
+    parallel: bool,
+) -> dict[str, DataFrame]:
+    """The repaired tiers: hour and day BOTH re-derive from the repaired
+    minute tier ``m2`` (r15 opt session 3). Deriving day from the HOUR
+    tier chained the subtrees, so the lazy hour merge-up evaluated twice
+    inside the single readout action (the broadcast semi/anti probes
+    between them defeat ReuseExchange). Output-invariant by each class's
+    associative merge law — decimal sums are associative, any hash in a
+    day's K-set is top-K in its own child, a row in a day's bottom-K
+    ranks ≤ K in its own child with multiplicity kept; interleaved A/B
+    at sf0.1: min 2.44 → 2.17 s (additive), 2.21 → 2.06 s (KMV),
+    2.58 → 2.30 s (bottom-K). The two builds are independent, so a
+    materializing caller (the erasure fold, the history purge) runs
+    them 2-wide (guide §2.6)."""
+
+    def build(unit: str) -> "Callable[[], DataFrame]":
+        return lambda: rederive_tier(spec, unit, m2, touched, carried, mat)
+
+    if parallel:
+        hour, day = overlap(m2.sparkSession, build("hour"), build("day"))
+    else:
+        hour, day = build("hour")(), build("day")()
+    return {"minute": m2, "hour": hour, "day": day}
+
+
+def rollup_erasure_repair(
+    prev: dict[str, DataFrame],
+    neg: DataFrame,
+    materialize: "Materializer | None" = None,
+) -> dict[str, DataFrame]:
+    """Repair the three-tier additive rollup after erasing a user set,
+    via the ADDITIVE INVERSE: ``neg`` holds the erased rows' per-minute
+    partials NEGATED (`sum_inverse`), so merging them into the touched
+    minute buckets subtracts exactly (counts and coalesced totals form a
+    group); rows whose count reaches zero are dropped (the group no
+    longer exists); touched hour/day buckets RE-DERIVE from the repaired
+    minute tier. Untouched rows carry.
+
+    At 100 TB this is the cheap path GDPR deletion wants: compute cost
+    is O(erased rows + touched buckets) — the erased rows come from a
+    user-keyed index/pruned scan, raw is never re-read. Contrast
+    :func:`rederive_erasure_repair`: KMV and bottom-K have no inverse,
+    so their touched minutes re-derive from remaining RAW — the
+    mergeability asymmetry, measured in SCALING.md r14.
+
+    ``materialize(name, df)`` pins each tier (default `_pin_minute`); a
+    caller that passes one gets the coarse builds 2-wide."""
+    # the touched .distinct() exchange LOOKS removable (the semi/anti
+    # probes are duplicate-tolerant) but is load-bearing for the
+    # single-final-action batch caller: it is the ReusedExchange point
+    # all three tiers' broadcasts share — dropping it made each
+    # broadcast re-run the neg aggregation (r15 opt A/B: +0.3 s at
+    # sf0.1), so it stays
+    touched = neg.select("bucket").distinct()
+    t = F.broadcast(touched.select(F.col("bucket").alias("_tb")))
+    hot = prev["minute"].join(
+        t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
+    )
+    cold = prev["minute"].join(
+        t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
+    )
+    repaired = ROLLUP_ERASABLE.merge(hot.unionByName(neg)).filter(
+        F.col("n_events") > 0
+    )
+    mat = materialize or _pin_minute
+    return _repair_coarse(
+        ROLLUP_ERASABLE,
+        mat("minute", cold.unionByName(repaired)),
+        touched,
+        prev,
+        mat,
+        parallel=materialize is not None,
+    )
+
+
+def rederive_erasure_repair(
+    spec: AggSpec,
     e: DataFrame,
     prev_m: DataFrame,
     erased: "F.Column",
-    erased_rows: DataFrame | None = None,
     prev_coarse: "dict[str, DataFrame] | None" = None,
-    materialize: "object | None" = None,
+    materialize: "Materializer | None" = None,
 ) -> dict[str, DataFrame]:
-    """The sample-family erasure repair — `sketch_erasure_repair`'s
-    twin over bottom-K row samples, same contract (callers materialize
-    ``prev_m``; ``prev_coarse`` lets a versioned fold carry maintained
-    hour/day state; ``materialize`` threads the caller's
-    one-action-per-relation pin). The repair trigger is exact USER
-    membership in the stored sample: the erased users' per-minute user
-    hashes join the minute arrays and fire only where some sample
-    element's ``uh`` matches (see `events_quantile_user_erasure`'s doc
-    for the exactness argument)."""
-    erased_src = erased_rows if erased_rows is not None else e.filter(erased)
-    erased_uh = (
-        erased_src.filter(F.col("user_id").isNotNull())
-        .select(
-            F.date_trunc("minute", F.col("ts")).alias("bucket"),
-            F.conv(
-                F.substring(
-                    F.md5(F.col("user_id").cast("string")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("uh"),
-        )
-        .distinct()
-    )
+    """Erasure repair for a class with NO inverse (KMV, bottom-K):
+    re-derive the touched minutes from the REMAINING raw rows of ``e``
+    in those buckets, carry the rest, re-derive touched hours/days from
+    the repaired minute tier. ``prev_m`` is the pre-erasure minute state
+    (callers materialize it — it is the carried relation and, unless
+    ``prev_coarse`` supplies maintained hour/day state, the source of
+    the carried coarse tiers).
+
+    The repair trigger is EXACT membership, not mere activity: a
+    minute's K-array or K-sample changes only if one of its members
+    belongs to an erased user (``spec.member`` over
+    ``spec.erased_pairs``: the user's hash in the KMV array, the user
+    hash ``uh`` carried inside each sample element). A non-member ranks
+    below the kth cut, so removing it cannot alter the K smallest; under
+    fill the state holds every key, so membership is still exact; a
+    colliding surviving user only fires the trigger spuriously, and the
+    re-derivation then lands on the same state — correct, never wrong.
+    At 2.5k distinct users per minute that prunes the re-derive set ~40×
+    below the raw activity footprint (P(hash in top-64) ≈ 64/2500), and
+    with it the touched-partition scan a time-partitioned layout pays.
+
+    ``materialize(name, df)`` pins each tier (default `_pin_minute`) so
+    every relation is computed by exactly one action; a caller that
+    passes one gets the coarse builds 2-wide."""
     touched = (
-        erased_uh.alias("p")
+        spec.erased_pairs(e.filter(erased))
+        .alias("p")
         .join(
             prev_m.alias("s"),
             F.col("p.bucket").eqNullSafe(F.col("s.bucket")),
             "inner",
         )
-        .filter(
-            F.exists(F.col("s.sample"), lambda x: x["uh"] == F.col("p.uh"))
-        )
+        .filter(spec.member())
         .select(F.col("p.bucket").alias("bucket"))
         .distinct()
-        # r15 opt: pinned for the same reason as the sketch twin — the
-        # bounded touched set otherwise re-runs its membership join
-        # under every tier action's broadcast branch
+        # r15 opt: pinned — the touched set (bounded: one row per fired
+        # minute) otherwise re-runs its membership join (erased-rows
+        # scan ⋈ prev_m) under EVERY tier action's broadcast branch
+        # (minute, hour, day are separate actions whenever the caller
+        # materializes; broadcast subtrees defeat cross-action reuse)
         .localCheckpoint(eager=True)
     )
     t = F.broadcast(touched.select(F.col("bucket").alias("_tb")))
-    # re-derive touched minutes from REMAINING rows in those buckets
     remaining_touched = e.filter(~erased).join(
         t,
         F.date_trunc("minute", F.col("ts")).eqNullSafe(F.col("_tb")),
         "left_semi",
     )
-    rederived = bottomk_sample(qtl_minute_pairs(remaining_touched))
     carried_m = prev_m.join(
         t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
     )
-    parallel_coarse = materialize is not None
-    if materialize is None:
-        materialize = lambda name, df: (  # noqa: E731
-            df.localCheckpoint(eager=True) if name == "minute" else df
-        )
-    m2 = materialize("minute", carried_m.unionByName(rederived))
-    # Coarse tiers BOTH direct from the minute tier — the sketch twin's
-    # r15-session-3 shape (see `sketch_erasure_repair`): un-chains the
-    # hour subtree's double evaluation in the one-action readout,
-    # output-invariant by the bottom-K multiset merge law (a row in a
-    # day's bottom-K ranks ≤ K in its own child, multiplicity kept;
-    # interleaved A/B min 2.58→2.30 s, med 3.01→2.56 s at sf0.1);
-    # materializing callers run the two independent builds 2-wide
-    # (guide §2.6).
-    tiers = {"minute": m2}
-
-    def build_coarse(unit: str) -> DataFrame:
-        tc = F.broadcast(
-            touched.select(F.date_trunc(unit, F.col("bucket")).alias("_tb"))
-        )
-        derived = bottomk_merge_up(
-            m2.join(
-                tc,
-                F.date_trunc(unit, F.col("bucket")).eqNullSafe(F.col("_tb")),
-                "left_semi",
-            ),
-            unit,
-        )
-        prev_c = (
-            prev_coarse[unit] if prev_coarse is not None
-            else bottomk_merge_up(prev_m, unit)
-        )
-        carried = prev_c.join(
-            tc, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-        )
-        return materialize(unit, carried.unionByName(derived))
-
-    if parallel_coarse:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fh = pool.submit(build_coarse, "hour")
-            fd = pool.submit(build_coarse, "day")
-            tiers["hour"] = fh.result()
-            tiers["day"] = fd.result()
-    else:
-        tiers["hour"] = build_coarse("hour")
-        tiers["day"] = build_coarse("day")
-    return tiers
+    mat = materialize or _pin_minute
+    # maintained coarse state (the incremental fold, the history purge)
+    # is used directly — identical to re-merging prev_m up by the law
+    # the oracle certifies, minus the recompute
+    carried = prev_coarse or {
+        unit: spec.merge_up(prev_m, unit) for unit in ("hour", "day")
+    }
+    return _repair_coarse(
+        spec,
+        mat("minute", carried_m.unionByName(spec.partials(remaining_touched))),
+        touched,
+        carried,
+        mat,
+        parallel=materialize is not None,
+    )

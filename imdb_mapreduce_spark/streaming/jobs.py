@@ -16,6 +16,7 @@ source (``readStream`` vs ``read``) and sink differ — the core Spark
 
 from __future__ import annotations
 
+import functools
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -34,29 +35,26 @@ from pyspark.sql.types import (
 )
 
 from imdb_mapreduce_spark.functions.columns import epoch_us
+from imdb_mapreduce_spark.concurrency import overlap
 from imdb_mapreduce_spark.plans.events import (
+    DISTINCT,
     DISTINCT_ERASURE_ORACLE,
     MULTIRES_DISTINCT_ORACLE,
     MULTIRES_QUANTILE_ORACLE,
     MULTIRES_ROLLUP_ORACLE,
     QTL_K,
+    QUANTILE,
     QUANTILE_ERASURE_ORACLE,
+    ROLLUP,
+    ROLLUP_ERASABLE,
     ROLLUP_ERASURE_ORACLE,
+    AggSpec,
+    Materializer,
     _erased_col,
-    bottomk_merge_arrays,
-    bottomk_merge_up,
-    bottomk_sample,
-    erasure_minute_partials,
-    kmv_bucket_stats,
-    kmv_k_smallest,
-    kmv_merge_arrays,
-    kmv_merge_up,
-    kmv_minute_pairs,
-    qtl_bucket_stats,
-    qtl_minute_pairs,
+    rederive_erasure_repair,
+    rederive_tier,
     rollup_erasure_repair,
-    sample_erasure_repair,
-    sketch_erasure_repair,
+    sum_inverse,
 )
 from imdb_mapreduce_spark.plans.registry import register
 from imdb_mapreduce_spark.sources.star import ensure_nanos_as_long
@@ -794,414 +792,143 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 # incremental multi-resolution rollup maintenance (r13, VERDICT r12 item 2)
 # ---------------------------------------------------------------------------
 
-# Cross-batch accumulator decimal: wide enough that re-summing partial
-# sums can never overflow or re-escalate precision between versions
-# (sum(decimal(38,2)) stays decimal(38,2)), exact over decimal(12,2)
-# inputs at any realistic corpus — the same exact-DECIMAL discipline as
-# the batch cascade, which is what makes incremental ≡ direct bit-true.
-_MULTIRES_DEC = "decimal(38,2)"
 
-
-def _multires_sum_merge(df: DataFrame, unit: str) -> DataFrame:
-    """Aggregate (bucket, event_type, n_events, s) rows to ``unit``
-    granularity by additive merge — the monoid step every tier shares."""
-    return (
-        df.groupBy(
-            F.date_trunc(unit, F.col("bucket")).alias("bucket"),
-            "event_type",
-        )
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("s").cast(_MULTIRES_DEC).alias("s"),
-        )
-    )
-
-
-def multires_batch_partials(
-    batch_df: DataFrame, coalesce_values: bool = False
-) -> DataFrame:
-    """The batch's minute-grain additive partials (LAZY plan) — the
-    single raw pass :func:`multires_merge_batch` pre-aggregates before
-    merging. Exposed so a pipelined caller can compute (and pin) batch
-    i+1's partials WHILE batch i's tier writes run (guide §2.6), then
-    hand the pinned relation back via the merge fn's ``partials``
-    parameter."""
-    sval = F.col("value").cast("decimal(12,2)").cast(_MULTIRES_DEC)
-    if coalesce_values:
-        sval = F.coalesce(sval, F.lit(0).cast(_MULTIRES_DEC))
-    return _multires_sum_merge(
-        batch_df.select(
-            F.date_trunc("minute", F.col("ts")).alias("bucket"),
-            "event_type",
-            F.lit(1).cast("long").alias("n_events"),
-            sval.alias("s"),
-        ),
-        "minute",
-    )
-
-
-def multires_merge_batch(
+def merge_batch(
+    spec: AggSpec,
     batch_df: DataFrame,
     prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
-    coalesce_values: bool = False,
+    materialize: "Materializer | None" = None,
     partials: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """One incremental-refresh step of the hypertable-style cascade
-    (`plans/events.events_multires_rollup` is the batch rebuild whose
-    docstring promises exactly this): fold a micro-batch of raw events
-    into the three-tier (minute/hour/day) aggregate state, touching raw
-    ONLY for the batch and recomputing coarse tiers ONLY for the buckets
-    the batch touched.
+    """One incremental-refresh step of the hypertable cascade for the
+    aggregate class ``spec`` (`plans/events.AggSpec`): fold a
+    micro-batch of raw events into the three-tier (minute/hour/day)
+    state, touching raw ONLY for the batch and recomputing coarse tiers
+    ONLY for the buckets the batch touched. The batch cascades
+    (`events_multires_rollup`, `_distinct_rollup`, `_quantile_rollup`)
+    are the rebuilds whose docstrings promise exactly this; their
+    direct-from-raw oracles certify this fold too.
 
-    - MINUTE: the batch pre-aggregates to minute partials (map-side
-      combining, batch-sized); rows for touched minute buckets are
-      additively merged (prev ⊎ delta — count/sum monoid), untouched
-      rows are carried as-is.
-    - HOUR/DAY: the touched bucket set coarsens (minute→hour→day, each a
-      DISTINCT over an already-small set, broadcast into the joins); a
-      touched hour is RE-DERIVED from the new minute tier (the
-      hypertable refresh contract — re-derivation, unlike delta-add,
-      also stays correct for non-additive refinements and self-heals a
-      corrected finer tier), untouched hours carry. Day from hour, same
-      shape.
+    - MINUTE: the batch pre-aggregates to minute partials
+      (``spec.partials`` — batch-sized); rows for touched minute buckets
+      merge by the class's law (``spec.merge``: count/sum monoid, KMV
+      union + re-take K, bottom-K multiset union), untouched rows carry
+      as-is.
+    - HOUR/DAY: a touched coarse bucket RE-DERIVES from minute data by
+      ``spec.merge_up`` (the hypertable refresh contract —
+      re-derivation, unlike delta-add, stays correct for non-additive
+      classes and self-heals a corrected finer tier), untouched carry
+      (`plans/events.rederive_tier`).
 
     Per-batch COMPUTE is O(batch + touched buckets): a batch spanning
     one day touches ≤1,440 minute rows, ≤24 hour rows, ≤1 day row per
-    event type — never the full history. The carried rows pass through
-    as IO only (no shuffle: union of an anti-join with the merged
-    slice); at 100 TB the state table would be day-partitioned with
-    dynamic partition overwrite (or a Delta/Iceberg MERGE) so carried
-    partitions are not even rewritten — the versioned-directory harness
-    below is the test-scale idempotence scaffold, not the storage
-    layout.
+    key — never the full history. The carried rows pass through as IO
+    only (no shuffle: union of an anti-join with the merged slice); at
+    100 TB the state table would be day-partitioned with dynamic
+    partition overwrite (or a Delta/Iceberg MERGE) so carried partitions
+    are not even rewritten — the versioned-directory harness below is
+    the test-scale idempotence scaffold, not the storage layout.
 
     ``prev`` is ``None`` for the first batch (empty state); returns the
     new {tier: DataFrame} dict. ``partials`` optionally supplies the
-    batch's minute partials ALREADY PINNED (a
-    :func:`multires_batch_partials` plan the caller localCheckpointed,
-    e.g. prefetched concurrently with the previous fold's tier writes);
-    when given, the batch pre-aggregation step is skipped — the caller
-    owns the pin, exactly as ``mat("partials", ...)`` would.
+    batch's minute partials ALREADY PINNED (prefetched concurrently with
+    the previous fold's tier writes); the caller then owns the pin,
+    exactly as ``mat("partials", ...)`` would.
 
     ``materialize(name, df) -> df`` pins each computed relation (the
-    batch partials, then each tier) before the next one builds on it —
-    the drain passes its versioned-state writer so every relation is
-    written ONCE and coarser tiers read the written parquet. Without it
-    the tiers are pure lazy plans, fine for single-action consumers
-    (Spark's ReuseExchange dedupes the shared batch-aggregate shuffle
-    WITHIN one action) but 3-5× redundant when each tier is written by
-    its own action — the 1000×-corpus refresh probe measured per-batch
-    cost ≈ a full rebuild before this hook existed
-    (tools/multires_refresh_probe.py, SCALING.md r13).
-    """
+    batch partials, then each tier) so every relation is computed by ONE
+    action — the drain passes its versioned-state writer, the realtime
+    read a localCheckpoint. Without it the tiers are pure lazy plans,
+    fine for single-action consumers (ReuseExchange dedupes the shared
+    batch-aggregate shuffle WITHIN one action) but 3-5× redundant when
+    each tier is written by its own action: at the 1000×-corpus decade
+    per-batch cost ≈ a full rebuild before this hook existed (SCALING.md
+    r13).
+
+    On the MATERIALIZED path (r15 opt round 2, guide §2.6) the coarse
+    tiers derive from ``prev_minute ∪ partials`` instead of the NEW
+    minute tier: every class's law gives merge_up(cold ∪ merge(hot ∪
+    mb)) == merge_up(cold ∪ hot ∪ mb) (decimal sums are associative; any
+    hash in a KMV union's top-K is top-K in its own child; a row in a
+    bottom-K multiset union's bottom-K ranks ≤ K in its own child), so
+    once the partials are pinned all three tier relations are
+    independent and the three writes run 3-wide — the fold's critical
+    path drops from partials→minute→(hour ∥ day) to partials→(minute ∥
+    hour ∥ day). Lazy callers keep coarse tiers deriving from the lazy
+    minute plan, the reuse-friendly shape inside one action."""
     mat = materialize or (lambda _name, df: df)
-    # coalesce_values = the COALESCED-total convention (a NULL value
-    # contributes 0, so totals form a GROUP — have additive inverses):
-    # required when this state will later be REPAIRED by
-    # `rollup_erasure_repair` (the r15 incremental-erasure fold);
-    # matches the erasure oracle's COALESCE(SUM(...), 0)
     mb = (
         partials
         if partials is not None
-        else mat("partials", multires_batch_partials(batch_df, coalesce_values))
+        else mat("partials", spec.partials(batch_df))
     )
     # touched-set relations feed ONLY broadcast semi/anti joins (both
-    # duplicate-tolerant set-membership probes), and mb is already
-    # aggregated to one row per (bucket, type) — so no .distinct() and
-    # no exchange: the broadcast builds straight off the pinned partials
-    # (r15 opt, guide §2.4 — one fewer shuffle per tier action; dup
-    # factor is bounded by the type count, so the broadcast stays
-    # touched-bucket-proportional)
+    # duplicate-tolerant set-membership probes), and mb is already one
+    # row per (bucket[, type]) — so no .distinct() and no exchange: the
+    # broadcast builds straight off the pinned partials (r15 opt, guide
+    # §2.4 — one fewer shuffle per tier action)
     touched = mb.select("bucket")
-    parallel_coarse = materialize is not None
-
     if prev is None:
         minute_plan = mb
     else:
-        # every touched-set join is NULL-SAFE (<=>): date_trunc of a
-        # NULL ts is a NULL bucket, which the oracle's GROUP BY keeps as
-        # an ordinary group — plain equality would never match it, so a
-        # NULL-bucket row would duplicate in the minute tier (anti-join
-        # keeps prev's copy AND the batch partial merges separately) and
-        # vanish from the re-derived coarse tiers (r13 review catch)
-        t = touched.select(F.col("bucket").alias("_tb"))
+        # NULL-SAFE (<=>), like every touched-set join: a NULL-ts row's
+        # NULL bucket is an ordinary group — plain equality would keep
+        # prev's copy in the anti-join AND merge the batch's separately
+        t = F.broadcast(touched.select(F.col("bucket").alias("_tb")))
         hot = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
+            t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
         )
         cold = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
+            t, F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
         )
-        minute_plan = cold.unionByName(
-            _multires_sum_merge(hot.unionByName(mb), "minute")
-        )
-
-    return _coarse_tiers(
-        minute_plan, mb, touched, prev, mat, _multires_sum_merge,
-        parallel_coarse,
+        minute_plan = cold.unionByName(spec.merge(hot.unionByName(mb)))
+    if materialize is None:
+        m = mat("minute", minute_plan)
+        return {
+            "minute": m,
+            "hour": rederive_tier(spec, "hour", m, touched, prev, mat),
+            "day": rederive_tier(spec, "day", m, touched, prev, mat),
+        }
+    # hot rows live in touched minutes, so their coarse buckets are
+    # touched too: prev ∪ mb restricted to touched coarse buckets is
+    # exactly cold ∪ hot ∪ mb — the merge-law twin of the new tier
+    src = mb if prev is None else prev["minute"].unionByName(mb)
+    m, h, d = overlap(
+        mb.sparkSession,
+        lambda: mat("minute", minute_plan),
+        lambda: rederive_tier(spec, "hour", src, touched, prev, mat),
+        lambda: rederive_tier(spec, "day", src, touched, prev, mat),
     )
-
-
-def _coarse_tiers(
-    minute_plan: DataFrame,
-    mb: DataFrame,
-    touched: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    mat: "Callable[[str, DataFrame], DataFrame]",
-    merge_up_fn: "Callable[[DataFrame, str], DataFrame]",
-    parallel: bool,
-) -> dict[str, DataFrame]:
-    """Materialize the minute tier and derive + materialize the hour and
-    day tiers, shared by the three fold merge fns.
-
-    r15 opt round 2 (guide §2.6 — overlap independent jobs): on the
-    MATERIALIZED path the coarse tiers derive from ``prev_minute ∪ mb``
-    (the committed predecessor minute tier unioned with the pinned batch
-    partials) instead of from the NEW minute tier. The outputs are
-    identical by the associative merge laws the pytests prove: the new
-    minute tier over a touched coarse bucket IS merge(hot ∪ mb) plus the
-    carried cold rows, and every monoid here satisfies
-    merge_up(cold ∪ merge(hot ∪ mb)) == merge_up(cold ∪ hot ∪ mb)
-    (decimal sums are associative; any hash in a KMV union's global
-    top-K is top-K in its own child; a row in a bottom-K multiset
-    union's bottom-K ranks ≤ K in its own child — multiplicity kept).
-    What it buys: ALL THREE tier relations become independent once the
-    batch partials are pinned, so the minute write and both coarse
-    writes run CONCURRENTLY from a 3-thread pool — the fold's critical
-    path drops from partials→minute→(hour ∥ day) (3 serial action
-    walls, r15 opt 1) to partials→(minute ∥ hour ∥ day) (2), and on a
-    real cluster the three writes' tasks back-fill each other's tails.
-
-    Lazy callers (materialize=None, single-action consumers) keep the
-    r15-opt-1 shape — coarse tiers derive from the lazy MINUTE plan so
-    ReuseExchange dedupes the shared minute aggregate inside the one
-    action (threads buy nothing when nothing is materialized, and the
-    derive-from-minute plan is the reuse-friendly one there).
-
-    ``touched`` arrives at minute grain; each tier coarsens it directly
-    (date_trunc is idempotent across grains, NULL-safe joins as before).
-    """
-
-    def build(unit: str, src: DataFrame) -> DataFrame:
-        t = touched.select(
-            F.date_trunc(unit, F.col("bucket")).alias("_tb")
-        )
-        derived = merge_up_fn(
-            src.join(
-                F.broadcast(t),
-                F.date_trunc(unit, F.col("bucket")).eqNullSafe(F.col("_tb")),
-                "left_semi",
-            ),
-            unit,
-        )
-        if prev is None:
-            out = derived
-        else:
-            carried = prev[unit].join(
-                F.broadcast(t),
-                F.col("bucket").eqNullSafe(F.col("_tb")),
-                "left_anti",
-            )
-            out = carried.unionByName(derived)
-        return mat(unit, out)
-
-    tiers: dict[str, DataFrame] = {}
-    if parallel:
-        # hot rows live in touched minutes, so their coarse buckets are
-        # touched too: prev ∪ mb restricted to touched coarse buckets is
-        # exactly cold ∪ hot ∪ mb — the merge-law twin of the new tier
-        src = mb if prev is None else prev["minute"].unionByName(mb)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fm = pool.submit(mat, "minute", minute_plan)
-            fh = pool.submit(build, "hour", src)
-            fd = pool.submit(build, "day", src)
-            tiers["minute"] = fm.result()
-            tiers["hour"] = fh.result()
-            tiers["day"] = fd.result()
-    else:
-        tiers["minute"] = mat("minute", minute_plan)
-        tiers["hour"] = build("hour", tiers["minute"])
-        tiers["day"] = build("day", tiers["minute"])
-    return tiers
-
-
-def kmv_batch_partials(batch_df: DataFrame) -> DataFrame:
-    """The batch's per-minute KMV k-smallest arrays (LAZY plan) — the
-    raw pass :func:`multires_kmv_merge_batch` pre-aggregates; exposed
-    for pipelined prefetch exactly like
-    :func:`multires_batch_partials`."""
-    return kmv_k_smallest(kmv_minute_pairs(batch_df))
-
-
-def multires_kmv_merge_batch(
-    batch_df: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
-    partials: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """One incremental-refresh step for the NON-ADDITIVE rollup — the
-    sketch-valued twin of :func:`multires_merge_batch`, proving the
-    distinct-rollup docstring's promise ("sketches slot into the same
-    versioned state because KMV-merge is associative and commutative",
-    `plans/events.py`). Same refresh contract, different monoid:
-
-    - MINUTE: the batch pre-aggregates to per-minute KMV k-smallest
-      arrays (``kmv_k_smallest`` over the batch's distinct (bucket,
-      user-hash) pairs — batch-sized); touched minute buckets merge by
-      the KMV law (union prev's and the batch's hashes, dedupe,
-      re-take the K smallest — exact by the law the merge-law pytests
-      prove), untouched rows carry as-is.
-    - HOUR/DAY: touched coarse buckets RE-DERIVE from the new minute
-      tier's arrays via ``kmv_merge_up`` (never raw), untouched carry
-      — identical cascade shape to the batch query, so the oracle that
-      certifies merge-cascade ≡ direct certifies this fold too.
-
-    Every touched-set join is NULL-SAFE for the same reason as the
-    additive merge (NULL ts → NULL bucket is an ordinary group).
-    Per-batch COMPUTE is O(batch + touched buckets · K): state rows are
-    (bucket, ≤K-array) — time-horizon-, not corpus-, proportional."""
-    mat = materialize or (lambda _name, df: df)
-    mb = (
-        partials
-        if partials is not None
-        else mat("partials", kmv_batch_partials(batch_df))
-    )
-    # one row per bucket already; consumers are duplicate-tolerant
-    # broadcast semi/anti probes — no .distinct() exchange (r15 opt)
-    touched = mb.select("bucket")
-    parallel_coarse = materialize is not None
-
-    if prev is None:
-        minute_plan = mb
-    else:
-        t = touched.select(F.col("bucket").alias("_tb"))
-        hot = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
-        )
-        cold = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-        )
-        # array-level merge (r15 opt session 3): hot and the batch
-        # partials are both K-bounded arrays per bucket (≤ 2 per
-        # bucket), so the direct one-exchange flatten/sort/dedup/slice
-        # replaces the exploded salted rank — same output by the law
-        merged = kmv_merge_arrays(
-            hot.select("bucket", "hashes")
-            .unionByName(mb.select("bucket", "hashes"))
-        )
-        minute_plan = cold.unionByName(merged)
-
-    return _coarse_tiers(
-        minute_plan, mb, touched, prev, mat, kmv_merge_up, parallel_coarse
-    )
-
-
-def qtl_batch_partials(batch_df: DataFrame) -> DataFrame:
-    """The batch's per-minute bottom-K sample arrays (LAZY plan) — the
-    raw pass :func:`multires_qtl_merge_batch` pre-aggregates; exposed
-    for pipelined prefetch exactly like
-    :func:`multires_batch_partials`."""
-    return bottomk_sample(qtl_minute_pairs(batch_df))
-
-
-def multires_qtl_merge_batch(
-    batch_df: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
-    partials: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """One incremental-refresh step for the QUANTILE rollup — the
-    bottom-K-sample twin of :func:`multires_kmv_merge_batch`, proving
-    the quantile cascade's claim that row samples slot into the
-    versioned exactly-once scaffold exactly as KMV hash sets did
-    (bottom-K-merge over row multisets is associative and commutative,
-    `plans/events.bottomk_sample`). Same refresh contract, third
-    monoid:
-
-    - MINUTE: the batch pre-aggregates to per-minute bottom-K sample
-      arrays (``bottomk_sample`` over the batch's (bucket, h, v, uh)
-      rows — batch-sized); touched minute buckets merge by the
-      multiset law (union prev's and the batch's sample rows, re-take
-      the K smallest — multiplicity preserved), untouched carry as-is.
-    - HOUR/DAY: touched coarse buckets RE-DERIVE from the new minute
-      tier's arrays via ``bottomk_merge_up`` (never raw), untouched
-      carry — identical cascade shape to the batch query, so the
-      oracle that certifies merge-cascade ≡ direct certifies this fold
-      too.
-
-    Every touched-set join is NULL-SAFE for the same reason as the
-    additive merge (NULL ts → NULL bucket is an ordinary group).
-    Per-batch COMPUTE is O(batch + touched buckets · K): state rows
-    are (bucket, ≤K struct array) — time-horizon-, not corpus-,
-    proportional."""
-    mat = materialize or (lambda _name, df: df)
-    mb = (
-        partials
-        if partials is not None
-        else mat("partials", qtl_batch_partials(batch_df))
-    )
-    # one row per bucket already; consumers are duplicate-tolerant
-    # broadcast semi/anti probes — no .distinct() exchange (r15 opt)
-    touched = mb.select("bucket")
-    parallel_coarse = materialize is not None
-
-    if prev is None:
-        minute_plan = mb
-    else:
-        t = touched.select(F.col("bucket").alias("_tb"))
-        hot = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_semi"
-        )
-        cold = prev["minute"].join(
-            F.broadcast(t), F.col("bucket").eqNullSafe(F.col("_tb")), "left_anti"
-        )
-        # array-level merge (r15 opt session 3): both sides are
-        # K-bounded sample arrays per bucket, so the direct one-exchange
-        # flatten/sort/slice replaces the exploded salted rank — same
-        # output by the bottom-K multiset law
-        merged = bottomk_merge_arrays(
-            hot.select("bucket", "sample")
-            .unionByName(mb.select("bucket", "sample"))
-        )
-        minute_plan = cold.unionByName(merged)
-
-    return _coarse_tiers(
-        minute_plan, mb, touched, prev, mat, bottomk_merge_up,
-        parallel_coarse,
-    )
+    return {"minute": m, "hour": h, "day": d}
 
 
 _MULTIRES_TIERS = ("minute", "hour", "day")
+
+
+def _commit(vdir: str) -> None:
+    import os
+
+    with open(os.path.join(vdir, "_COMMIT"), "w") as f:
+        f.write("ok\n")
 
 
 def multires_fold_version(
     spark: SparkSession,
     state_root: str,
     version: int,
-    batch_df: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    merge_fn: "Callable[..., dict[str, DataFrame]] | None" = None,
-    partials: DataFrame | None = None,
+    fold: "Callable[[Materializer], dict[str, DataFrame]]",
 ) -> dict[str, DataFrame]:
-    """Fold one batch into versioned state ``v{version}`` — the drain's
-    per-batch body, shared with ``tools/multires_refresh_probe.py`` so
-    the probe measures the registered shape BY CONSTRUCTION. The version
-    write doubles as the merge's materializer: each relation (batch
-    partials, then each tier) is computed by exactly ONE action and
-    coarser tiers read the written parquet — without this, per-batch
-    cost ≈ a full rebuild at the 1000×-corpus decade (see
-    :func:`multires_merge_batch`'s doc). Writes the ``_COMMIT`` marker
-    last; returns read handles onto the committed tiers.
-
-    ``merge_fn(batch_df, prev, materialize=...)`` defaults to the
-    additive :func:`multires_merge_batch`; the r14 sketch tier passes
-    :func:`multires_kmv_merge_batch` — the versioned exactly-once
-    scaffold is aggregate-agnostic (any mergeable state slots in)."""
+    """Write state version ``v{version}``: ``fold(materialize)`` builds
+    the tiers through the version's writer — a :func:`merge_batch` for
+    an ordinary batch, :func:`erasure_fold_merge` for an erasure step,
+    a repair for a history purge — so each relation is computed by
+    exactly ONE action and coarser tiers read the written parquet.
+    Writes the ``_COMMIT`` marker last; returns read handles onto the
+    committed tiers. The versioned exactly-once scaffold is
+    aggregate-agnostic: any mergeable state slots in."""
     import os
 
-    cur_dir = os.path.join(state_root, f"v{version}")
+    vdir = os.path.join(state_root, f"v{version}")
 
     def mat(name: str, df: DataFrame) -> DataFrame:
         # "partials" is a pure within-fold materializer (the batch's
@@ -1215,21 +942,12 @@ def multires_fold_version(
         # file-listing/commit per batch on a real drain).
         if name == "partials":
             return df.localCheckpoint(eager=True)
-        path = os.path.join(cur_dir, name)
+        path = os.path.join(vdir, name)
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    kwargs: dict = {"materialize": mat}
-    if partials is not None:
-        # pipelined callers prefetch the batch's pinned partials while
-        # the PREVIOUS fold's tier writes run (guide §2.6); only the
-        # three standard merge fns accept the kwarg, so it is threaded
-        # conditionally to keep the merge_fn contract unchanged for the
-        # erasure folds
-        kwargs["partials"] = partials
-    tiers = (merge_fn or multires_merge_batch)(batch_df, prev, **kwargs)
-    with open(os.path.join(cur_dir, "_COMMIT"), "w") as f:
-        f.write("ok\n")
+    tiers = fold(mat)
+    _commit(vdir)
     return tiers
 
 
@@ -1237,44 +955,45 @@ def fold_slices_pipelined(
     spark: SparkSession,
     state_root: str,
     paths: "list[str]",
-    partials_builder: "Callable[[DataFrame], DataFrame]",
-    merge_fn: "Callable[..., dict[str, DataFrame]] | None" = None,
+    spec: AggSpec,
 ) -> dict[str, DataFrame] | None:
     """Fold the ordered slice files into versioned state (v0..vN-1),
     PREFETCHING each next slice's pinned partials concurrently with the
     current fold's tier writes (guide §2.6 — overlap independent jobs):
     batch i+1's partials depend only on slice i+1, never on fold i's
-    tiers, so a 1-worker pool computes + localCheckpoints them while
-    fold i's three tier writes run. Combined with the 3-wide tier
-    materialization in ``_coarse_tiers``, a 3-fold chain's critical
-    path drops from 9 serial action walls to 1 + 3 (first partials,
-    then one 3-wide tier wall per fold). Used by the realtime fixtures;
-    the streaming drain cannot prefetch (foreachBatch reveals batches
-    one at a time). Results are identical to the sequential loop — the
-    prefetched relation IS the partials the merge fn would have built,
-    pinned the same way (``mat("partials", ...)`` localCheckpoints
-    too)."""
-    from concurrent.futures import ThreadPoolExecutor
+    tiers, so they are computed + localCheckpointed while fold i's three
+    tier writes run. With the 3-wide tier materialization in
+    :func:`merge_batch`, a 3-fold chain's critical path drops from 9
+    serial action walls to 1 + 3. Used by the realtime fixtures; the
+    streaming drain cannot prefetch (foreachBatch reveals batches one at
+    a time). Results are identical to the sequential loop — the
+    prefetched relation IS the partials the fold would have built,
+    pinned the same way."""
 
     def prep(path: str) -> DataFrame:
-        return partials_builder(
-            spark.read.parquet(path)
-        ).localCheckpoint(eager=True)
+        return spec.partials(spark.read.parquet(path)).localCheckpoint(
+            eager=True
+        )
 
-    state: dict[str, DataFrame] | None = None
+    def fold(i: int, prev: "dict[str, DataFrame] | None", mb: DataFrame):
+        return multires_fold_version(
+            spark, state_root, i,
+            lambda mat: merge_batch(
+                spec, spark.read.parquet(paths[i]), prev, mat, partials=mb
+            ),
+        )
+
     if not paths:
-        return state
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(prep, paths[0])
-        for i, p in enumerate(paths):
-            mb = fut.result()
-            if i + 1 < len(paths):
-                fut = pool.submit(prep, paths[i + 1])
-            state = multires_fold_version(
-                spark, state_root, i, spark.read.parquet(p), state,
-                merge_fn=merge_fn, partials=mb,
-            )
-    return state
+        return None
+    state: dict[str, DataFrame] | None = None
+    mb = prep(paths[0])
+    for i in range(len(paths) - 1):
+        state, mb = overlap(
+            spark,
+            functools.partial(fold, i, state, mb),
+            functools.partial(prep, paths[i + 1]),
+        )
+    return fold(len(paths) - 1, state, mb)
 
 
 def latest_committed_state(
@@ -1462,29 +1181,51 @@ def compact_state_version(
     return stats
 
 
+def _erasure_repair(
+    spec: AggSpec,
+    rows: DataFrame,
+    prev: dict[str, DataFrame],
+    erased: "F.Column",
+    mat: Materializer,
+) -> dict[str, DataFrame]:
+    """Repair the state ``prev`` without the erased rows, through
+    ``mat``. ``rows`` are the erased rows' negated partials (pinned)
+    when the class has an inverse, else the raw rows its touched
+    minutes re-derive from."""
+    if spec.has_inverse:
+        return rollup_erasure_repair(prev, rows, mat)
+    return rederive_erasure_repair(
+        spec, rows, prev["minute"], erased, prev_coarse=prev, materialize=mat
+    )
+
+
 def erase_versioned_history(
     spark: SparkSession,
     state_root: str,
     purged_root: str,
     batches: "list[DataFrame]",
     erased: "F.Column",
+    spec: AggSpec,
 ) -> "list[int]":
     """Right-to-be-forgotten for HISTORY: the erasure-as-a-version fold
-    (`events_rollup_erasure_incremental`) repairs the LATEST state, but
-    a ``VERSION AS OF`` read (`state_as_of`) of any version committed
+    (`events_*_erasure_incremental`) repairs the LATEST state, but a
+    ``VERSION AS OF`` read (`state_as_of`) of any version committed
     BEFORE the erasure still serves the erased rows — time travel and
     deletion compose only if history itself is purged. This rewrites
-    every committed version's additive state with the erased rows'
-    contribution SUBTRACTED (the additive-inverse repair, per version),
-    under a NEW root:
+    every committed version of ``spec``'s state without the erased
+    rows, under a NEW root:
 
-    - version k saw only batches ≤ k, so the subtrahend is the RUNNING
-      negated partials of the erased rows in ``batches[0..k]`` — never
-      the full erased set (subtracting rows a version never contained
-      would corrupt it);
-    - versions before the first erased row are carried byte-unrepaired
-      (running neg empty → nothing to subtract — cheap hardlink-less
-      copy of the tier dirs);
+    - version k saw only batches ≤ k, so it is repaired against ITS OWN
+      batch prefix, never the full erased set. A class with an inverse
+      subtracts the RUNNING negated partials of the erased rows in
+      ``batches[0..k]`` (subtracting rows a version never contained
+      would corrupt it); a class without one (KMV, bottom-K) re-derives
+      its touched minutes from the remaining raw of the prefix under the
+      exact membership trigger, carrying maintained hour/day state — so
+      its per-version cost is PREFIX-shaped where the additive purge is
+      state-shaped and corpus-flat;
+    - versions before the first erased row are carried byte-equal
+      (copies of the tier dirs);
     - the rewrite lands under ``purged_root`` with fresh ``_COMMIT``
       markers, NEVER in place: an in-place purge would double-subtract
       on replay, while rewrite-to-new-root is idempotent (always
@@ -1492,41 +1233,35 @@ def erase_versioned_history(
       incomplete purged root is simply discarded) — the same move a
       table format's file-rewrite + snapshot-pointer-swap makes.
 
-    Requires the coalesced-total state convention
-    (``multires_merge_batch(coalesce_values=True)``) — the group
-    property the subtraction needs. The SKETCH family has no inverse;
-    its history purge is per-version re-derivation from remaining raw
-    (the r14 asymmetry), deliberately not implemented here.
-
-    Returns the rewritten version numbers. Cost: versions × (erased
-    batch partials + touched buckets) — never versions × corpus."""
+    The additive purge requires the coalesced-total state
+    (`ROLLUP_ERASABLE`) — the group property the subtraction needs.
+    ``batches`` are the drain's batches in its order. Returns the
+    rewritten version numbers."""
     import os
     import shutil
 
-    from imdb_mapreduce_spark.plans.events import (
-        _erasure_sum_merge,
-        erasure_minute_partials,
-        rollup_erasure_repair,
-    )
-
-    running: DataFrame | None = None
+    acc: DataFrame | None = None  # running negated partials, or prefix raw
+    dirty = False
     purged: list[int] = []
     for k, batch in enumerate(batches):
         src_dir = os.path.join(state_root, f"v{k}")
         if not os.path.exists(os.path.join(src_dir, "_COMMIT")):
             break
-        nk = erasure_minute_partials(batch.filter(erased), negate=True)
-        # pinned per step: the running subtrahend is consumed twice per
-        # version (emptiness probe + repair) and would otherwise deepen
-        # into a V-long union chain re-scanning every erased batch;
-        # bounded at one row per erased (bucket, type)
-        running = (
-            nk
-            if running is None
-            else _erasure_sum_merge(running.unionByName(nk), "minute")
-        ).localCheckpoint(eager=True)
+        if spec.has_inverse:
+            nk = sum_inverse(spec.partials(batch.filter(erased)))
+            # pinned per step: the running subtrahend is consumed twice
+            # per version (emptiness probe + repair) and would otherwise
+            # deepen into a V-long union chain re-scanning every erased
+            # batch; bounded at one row per erased (bucket, type)
+            acc = (
+                nk if acc is None else spec.merge(acc.unionByName(nk))
+            ).localCheckpoint(eager=True)
+            dirty = not acc.isEmpty()
+        else:
+            acc = batch if acc is None else acc.unionByName(batch)
+            dirty = dirty or not batch.filter(erased).isEmpty()
         dst_dir = os.path.join(purged_root, f"v{k}")
-        if running.isEmpty():
+        if not dirty:
             # no erased contribution reached this version yet — history
             # is already clean; carry the tier dirs as-is
             os.makedirs(dst_dir, exist_ok=True)
@@ -1534,123 +1269,13 @@ def erase_versioned_history(
                 shutil.copytree(
                     os.path.join(src_dir, tier), os.path.join(dst_dir, tier)
                 )
+            _commit(dst_dir)
         else:
             prev = state_as_of(spark, state_root, k)
-
-            def mat(name: str, df: DataFrame) -> DataFrame:
-                path = os.path.join(dst_dir, name)
-                df.write.mode("overwrite").parquet(path)
-                return spark.read.parquet(path)
-
-            # every tier rides the materializer, so all three land as
-            # parquet under dst_dir before the commit marker below
-            rollup_erasure_repair(prev, running, mat)
-        with open(os.path.join(dst_dir, "_COMMIT"), "w") as f:
-            f.write("ok\n")
-        purged.append(k)
-    return purged
-
-
-def erase_versioned_history_sketch(
-    spark: SparkSession,
-    state_root: str,
-    purged_root: str,
-    batches: "list[DataFrame]",
-    erased: "F.Column",
-) -> "list[int]":
-    """The SKETCH family's history purge — the r14 mergeability
-    asymmetry extended to time travel: KMV has no inverse, so each
-    committed version's touched minutes must RE-DERIVE from the
-    remaining RAW of ITS OWN batch prefix (the exact membership trigger
-    inside `sketch_erasure_repair` prunes the re-derive set; maintained
-    hour/day state carries via ``prev_coarse``). Per-version cost is
-    therefore PREFIX-shaped — version k re-reads up to k batches'
-    remaining rows for its touched minutes — where the additive twin
-    (`erase_versioned_history`) is state-shaped and corpus-flat; the
-    history-purge probe measures exactly this gap. Same
-    rewrite-to-new-root discipline (idempotent, crash-safe), same
-    byte-equal carry for versions before the first erased row.
-
-    Requires ``batches`` columns (ts, user_id) in the drain's order —
-    one file per batch with strictly increasing mtimes at staging."""
-    return _erase_history_rederive(
-        spark, state_root, purged_root, batches, erased,
-        sketch_erasure_repair,
-    )
-
-
-def erase_versioned_history_sample(
-    spark: SparkSession,
-    state_root: str,
-    purged_root: str,
-    batches: "list[DataFrame]",
-    erased: "F.Column",
-) -> "list[int]":
-    """The QUANTILE family's history purge — same no-inverse geometry
-    as the sketch twin (each version's touched minutes re-derive from
-    the remaining raw of ITS OWN batch prefix), but the trigger is the
-    sample's exact USER membership via the in-element ``uh`` field
-    (`sample_erasure_repair`), tested against each version's stored
-    arrays. Per-version cost is prefix-shaped; versions before the
-    first erased row carry byte-equal; rewrite-to-new-root keeps
-    replay idempotent and crash-safe.
-
-    Requires ``batches`` columns (ts, event_id, user_id, value) in the
-    drain's order."""
-    return _erase_history_rederive(
-        spark, state_root, purged_root, batches, erased,
-        sample_erasure_repair,
-    )
-
-
-def _erase_history_rederive(
-    spark: SparkSession,
-    state_root: str,
-    purged_root: str,
-    batches: "list[DataFrame]",
-    erased: "F.Column",
-    repair: "Callable[..., dict[str, DataFrame]]",
-) -> "list[int]":
-    """Shared loop of the two NO-INVERSE history purges (sketch KMV,
-    quantile sample): accumulate the batch prefix, carry versions
-    byte-equal until the first erased row arrives, then per version run
-    ``repair(prefix, prev_minute, erased, prev_coarse=prev,
-    materialize=version-writer)`` — both repairs share that signature
-    by construction. Fresh ``_COMMIT`` markers land last, so a crashed
-    purge is an unservable root, never a torn one."""
-    import os
-    import shutil
-
-    prefix: DataFrame | None = None
-    any_erased = False
-    purged: list[int] = []
-    for k, batch in enumerate(batches):
-        src_dir = os.path.join(state_root, f"v{k}")
-        if not os.path.exists(os.path.join(src_dir, "_COMMIT")):
-            break
-        prefix = batch if prefix is None else prefix.unionByName(batch)
-        any_erased = any_erased or not batch.filter(erased).isEmpty()
-        dst_dir = os.path.join(purged_root, f"v{k}")
-        if not any_erased:
-            os.makedirs(dst_dir, exist_ok=True)
-            for tier in _MULTIRES_TIERS:
-                shutil.copytree(
-                    os.path.join(src_dir, tier), os.path.join(dst_dir, tier)
-                )
-        else:
-            prev = state_as_of(spark, state_root, k)
-
-            def mat(name: str, df: DataFrame) -> DataFrame:
-                path = os.path.join(dst_dir, name)
-                df.write.mode("overwrite").parquet(path)
-                return spark.read.parquet(path)
-
-            repair(
-                prefix, prev["minute"], erased,
-                prev_coarse=prev, materialize=mat,
+            multires_fold_version(
+                spark, purged_root, k,
+                lambda mat: _erasure_repair(spec, acc, prev, erased, mat),
             )
-        with open(os.path.join(dst_dir, "_COMMIT"), "w") as f:
-            f.write("ok\n")
         purged.append(k)
     return purged
 
@@ -1677,12 +1302,15 @@ def incremental_multires_drain(
     schema: StructType,
     state_root: str,
     ckpt: str,
-    merge_fn: "Callable[..., dict[str, DataFrame]] | None" = None,
+    spec: AggSpec = ROLLUP,
+    suppress: "F.Column | None" = None,
     version_offset: int = 0,
     compact_every: int | None = STATE_COMPACT_EVERY,
 ) -> dict[str, DataFrame] | None:
     """Drain every unprocessed file under ``src`` (one micro-batch per
-    file, availableNow) through :func:`multires_merge_batch`, maintaining
+    file, availableNow) through :func:`merge_batch` over ``spec``
+    (rows matching ``suppress`` are dropped at ingest — the suppression
+    list a deletion pipeline keeps), maintaining
     versioned three-tier state under ``state_root`` with the engine's
     exactly-once ``foreachBatch`` contract (the
     ``streaming_foreachbatch_upsert`` pattern): batch ``n`` reads state
@@ -1730,8 +1358,11 @@ def incremental_multires_drain(
                 f" out of sync with checkpoint {ckpt!r}: batch {batch_id}"
                 f" found no committed predecessor at {prev_dir!r}"
             )
+        if suppress is not None:
+            batch_df = batch_df.filter(~suppress)
         multires_fold_version(
-            spark, state_root, v, batch_df, prev, merge_fn=merge_fn
+            spark, state_root, v,
+            lambda mat: merge_batch(spec, batch_df, prev, mat),
         )
         if compact_every and v > 0 and v % compact_every == 0:
             # content-identical layout rewrite of the just-committed
@@ -1756,6 +1387,37 @@ def incremental_multires_drain(
     return None if latest is None else latest[1]
 
 
+def _incremental(
+    spark: SparkSession, sf_dir: str, spec: AggSpec, cols: "tuple[str, ...]"
+) -> DataFrame:
+    """The incremental-maintenance harness of one aggregate class: the
+    events table streams in as four time-range micro-batches (each a
+    contiguous time slice — the realistic arrival order for a rollup
+    feed), each folded into versioned minute/hour/day state by
+    :func:`merge_batch` under the drain's exactly-once contract."""
+    import os
+
+    from imdb_mapreduce_spark.sources.star import load_table
+
+    events = load_table(spark, "events", sf_dir).select(*cols)
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "src")
+        events.repartitionByRange(4, "ts").write.parquet(src)
+        state = incremental_multires_drain(
+            spark,
+            src,
+            events.schema,
+            os.path.join(d, "state"),
+            os.path.join(d, "ckpt"),
+            spec,
+        )
+        if state is None:  # empty source → no batches → empty rollup
+            return spark.createDataFrame([], spec.empty_schema)
+        # Materialize before the tempdir vanishes (bounded: one row per
+        # (bucket[, type]) — time-horizon-, not corpus-, proportional).
+        return spec.readout(state).localCheckpoint(eager=True)
+
+
 @register(
     "events_multires_rollup_incremental",
     oracle=MULTIRES_ROLLUP_ORACLE,
@@ -1770,7 +1432,7 @@ def events_multires_rollup_incremental(
     100 TB ("maintained incrementally ... touching a day's raw partition
     and 1,440 pre-aggregated rows", `plans/events.py`): the events table
     streams in as four time-range micro-batches, each folded into
-    versioned minute/hour/day state by :func:`multires_merge_batch`
+    versioned minute/hour/day state by :func:`merge_batch`
     (additive minute upsert; hour/day RE-DERIVED only for touched
     buckets), under the exactly-once versioned-state ``foreachBatch``
     contract. The oracle computes every tier DIRECTLY from raw in DuckDB
@@ -1783,38 +1445,7 @@ def events_multires_rollup_incremental(
     The reference has no streaming or time-rollup surface at all (its
     pipeline is one-shot batch MapReduce over IMDb TSVs); this family is
     the engine's [NORTH-STAR] extension mandate."""
-    import os
-
-    from imdb_mapreduce_spark.plans.events import multires_tiered_union
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_type", "value"
-    )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        # four ts-range files → four micro-batches, each a contiguous
-        # time slice (the realistic arrival order for a rollup feed)
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        state = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            os.path.join(d, "state"),
-            os.path.join(d, "ckpt"),
-        )
-        if state is None:  # empty source → no batches → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, event_type string,"
-                " n_events bigint, total_value double",
-            )
-        out = multires_tiered_union(
-            state["minute"], state["hour"], state["day"]
-        )
-        # Materialize before the tempdir vanishes (bounded: buckets×types
-        # rows — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
+    return _incremental(spark, sf_dir, ROLLUP, ("ts", "event_type", "value"))
 
 
 @register(
@@ -1829,10 +1460,9 @@ def events_multires_distinct_incremental(
     """Incremental maintenance for the NON-ADDITIVE rollup (VERDICT r13
     item 4): the events table streams in as four time-range
     micro-batches, each folded into versioned minute/hour/day KMV
-    sketch state by :func:`multires_kmv_merge_batch` — the SAME
-    versioned exactly-once ``foreachBatch`` scaffold as the count/sum
-    tier (:func:`incremental_multires_drain` with a different
-    ``merge_fn``), demonstrating the distinct-rollup docstring's claim
+    sketch state by :func:`merge_batch` over the ``DISTINCT`` spec — the
+    SAME versioned exactly-once ``foreachBatch`` scaffold as the
+    count/sum tier, demonstrating the distinct-rollup docstring's claim
     that mergeable sketches slot straight into it. The oracle is the
     same direct-from-raw sketch SQL
     (:data:`~imdb_mapreduce_spark.plans.events.MULTIRES_DISTINCT_ORACLE`)
@@ -1844,38 +1474,7 @@ def events_multires_distinct_incremental(
 
     The reference has no streaming or sketch surface at all; this
     family is the engine's [NORTH-STAR] extension mandate."""
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select("ts", "user_id")
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        # four ts-range files → four micro-batches, each a contiguous
-        # time slice (the realistic arrival order for a rollup feed)
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        state = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            os.path.join(d, "state"),
-            os.path.join(d, "ckpt"),
-            merge_fn=multires_kmv_merge_batch,
-        )
-        if state is None:  # empty source → no batches → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, kth_hash bigint,"
-                " m bigint, est_distinct double",
-            )
-        out = (
-            kmv_bucket_stats(state["minute"], "minute")
-            .unionByName(kmv_bucket_stats(state["hour"], "hour"))
-            .unionByName(kmv_bucket_stats(state["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
+    return _incremental(spark, sf_dir, DISTINCT, ("ts", "user_id"))
 
 
 @register(
@@ -1889,12 +1488,11 @@ def events_multires_quantile_incremental(
 ) -> DataFrame:
     """Incremental maintenance for the QUANTILE rollup — the third
     aggregate class through the SAME versioned exactly-once
-    ``foreachBatch`` scaffold (:func:`incremental_multires_drain` with
-    :func:`multires_qtl_merge_batch` as the ``merge_fn``; additive
-    count/sum and KMV distinct are the first two): the events table
-    streams in as four time-range micro-batches, each folded into
-    versioned minute/hour/day bottom-K sample state. The oracle is the
-    same direct-from-raw sample SQL
+    ``foreachBatch`` scaffold (:func:`merge_batch` over the ``QUANTILE``
+    spec; additive count/sum and KMV distinct are the first two): the
+    events table streams in as four time-range micro-batches, each
+    folded into versioned minute/hour/day bottom-K sample state. The
+    oracle is the same direct-from-raw sample SQL
     (:data:`~imdb_mapreduce_spark.plans.events.MULTIRES_QUANTILE_ORACLE`)
     the batch cascade certifies against, so a hash-green row proves
     **incremental-sample ≡ merge-cascade ≡ direct-sample** at all three
@@ -1903,40 +1501,9 @@ def events_multires_quantile_incremental(
 
     The reference has no streaming, sketch, or quantile surface at all;
     this family is the engine's [NORTH-STAR] extension mandate."""
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_id", "user_id", "value"
+    return _incremental(
+        spark, sf_dir, QUANTILE, ("ts", "event_id", "user_id", "value")
     )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        # four ts-range files → four micro-batches, each a contiguous
-        # time slice (the realistic arrival order for a rollup feed)
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        state = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            os.path.join(d, "state"),
-            os.path.join(d, "ckpt"),
-            merge_fn=multires_qtl_merge_batch,
-        )
-        if state is None:  # empty source → no batches → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, m bigint,"
-                " p50 double, p90 double, p99 double",
-            )
-        out = (
-            qtl_bucket_stats(state["minute"], "minute")
-            .unionByName(qtl_bucket_stats(state["hour"], "hour"))
-            .unionByName(qtl_bucket_stats(state["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1947,55 +1514,37 @@ def events_multires_quantile_incremental(
 # ---------------------------------------------------------------------------
 
 
-def rollup_erasure_fold_merge(
-    neg: DataFrame,
+def erasure_fold_merge(
+    spec: AggSpec,
+    raw: DataFrame,
     prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
+    materialize: Materializer,
 ) -> dict[str, DataFrame]:
-    """`rollup_erasure_repair` shaped to the versioned fold's merge_fn
-    contract (`multires_fold_version`): the "batch" is the erased rows'
-    NEGATED minute partials (`erasure_minute_partials(..., negate=True)`)
-    — state math, raw never read. An erasure with no prior state is a
-    caller bug, not an empty-state bootstrap."""
+    """The erasure as a fold of the versioned lineage
+    (:func:`multires_fold_version`): repair ``prev`` without the rows of
+    the erased users among ``raw``, the rows received so far. A class
+    with an inverse reads only the erased rows (a user-keyed index at
+    scale) and subtracts their negated partials — state math; a class
+    without one re-derives its touched minutes from the remaining raw
+    (a time-partitioned scan at 100 TB — the mergeability asymmetry,
+    SCALING.md r14), carrying the maintained hour/day state. The fold's
+    versioned write is the materializer, so each tier is computed by
+    exactly one action. An erasure with no prior state is a caller bug,
+    not an empty-state bootstrap."""
     if prev is None:
         raise ValueError(
             "erasure fold requires a committed predecessor version"
         )
-    # r15 opt: pin the negated partials (bounded: one row per erased
-    # (bucket, type)) — otherwise their raw-scan aggregation re-runs
-    # under the minute merge and every coarse tier's touched broadcast
-    # across the fold's separate write actions
-    return rollup_erasure_repair(
-        prev, neg.localCheckpoint(eager=True), materialize
-    )
-
-
-def sketch_erasure_fold_merge(
-    raw_so_far: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
-) -> dict[str, DataFrame]:
-    """`sketch_erasure_repair` shaped to the versioned fold's merge_fn
-    contract: KMV has no inverse, so the "batch" is the RAW rows
-    received so far (a time-partitioned scan at 100 TB — the
-    mergeability asymmetry, SCALING.md r14); touched minutes re-derive
-    from its remaining rows under the exact membership trigger, and the
-    maintained hour/day state carries via ``prev_coarse`` instead of
-    being re-merged from the minute tier."""
-    if prev is None:
-        raise ValueError(
-            "erasure fold requires a committed predecessor version"
-        )
-    # the fold's versioned write IS the materializer — threaded through
-    # so each tier is computed by exactly one action (the
-    # multires_fold_version contract)
-    return sketch_erasure_repair(
-        raw_so_far,
-        prev["minute"],
-        _erased_col(),
-        prev_coarse=prev,
-        materialize=materialize or (lambda _name, df: df),
-    )
+    rows = raw
+    if spec.has_inverse:
+        # r15 opt: pin the negated partials (bounded: one row per erased
+        # (bucket, type)) — otherwise their raw-scan aggregation re-runs
+        # under the minute merge and every coarse tier's touched
+        # broadcast across the fold's separate write actions
+        rows = sum_inverse(
+            spec.partials(raw.filter(_erased_col()))
+        ).localCheckpoint(eager=True)
+    return _erasure_repair(spec, rows, prev, _erased_col(), materialize)
 
 
 def _stage_ts_slices(events: DataFrame, d: str) -> "tuple[str, list[str]]":
@@ -2023,6 +1572,59 @@ def _deliver(src: str, files: "list[str]", start: int) -> None:
         dst = os.path.join(src, os.path.basename(f))
         shutil.copy(f, dst)
         os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+
+def _erasure_incremental(
+    spark: SparkSession, sf_dir: str, spec: AggSpec, cols: "tuple[str, ...]"
+) -> DataFrame:
+    """The erase-then-resume harness of one aggregate class: two ts-range
+    micro-batches fold (v0, v1), the erasure lands as its own version
+    (v2, :func:`erasure_fold_merge` over the rows received so far), then
+    two more batches fold on top with the erased users suppressed at
+    ingest (v3, v4 — the SAME checkpoint resumes batch numbering,
+    shifted one version slot)."""
+    import os
+
+    from imdb_mapreduce_spark.sources.star import load_table
+
+    events = load_table(spark, "events", sf_dir).select(*cols)
+    with tempfile.TemporaryDirectory() as d:
+        src, files = _stage_ts_slices(events, d)
+        state_root = os.path.join(d, "state")
+        ckpt = os.path.join(d, "ckpt")
+        _deliver(src, files[:2], start=0)
+        incremental_multires_drain(
+            spark, src, events.schema, state_root, ckpt, spec
+        )
+        # one listing serves both the empty-source check and the
+        # erasure version number (the drain's return would duplicate it)
+        latest = latest_committed_state(spark, state_root)
+        if latest is None:  # empty source → no state → empty rollup
+            return spark.createDataFrame([], spec.empty_schema)
+        raw = spark.read.parquet(src)
+        multires_fold_version(
+            spark,
+            state_root,
+            latest[0] + 1,
+            lambda mat: erasure_fold_merge(spec, raw, latest[1], mat),
+        )
+        # resume the SAME checkpoint over the remaining slices, erased
+        # users suppressed at ingest; the erasure shifted versions by 1
+        _deliver(src, files[2:], start=2)
+        post = incremental_multires_drain(
+            spark,
+            src,
+            events.schema,
+            state_root,
+            ckpt,
+            spec,
+            suppress=_erased_col(),
+            version_offset=1,
+        )
+        assert post is not None
+        # Materialize before the tempdir vanishes (bounded: one row per
+        # (bucket[, type]) — time-horizon-, not corpus-, proportional).
+        return spec.readout(post).localCheckpoint(eager=True)
 
 
 @register(
@@ -2057,65 +1659,9 @@ def events_rollup_erasure_incremental(
     The reference has no streaming, rollup, or deletion surface (one-
     shot batch MapReduce over IMDb TSVs); this family is the engine's
     [NORTH-STAR] extension mandate."""
-    import functools
-    import os
-
-    from imdb_mapreduce_spark.plans.events import multires_tiered_union
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_type", "value", "user_id"
+    return _erasure_incremental(
+        spark, sf_dir, ROLLUP_ERASABLE, ("ts", "event_type", "value", "user_id")
     )
-    merge = functools.partial(multires_merge_batch, coalesce_values=True)
-    with tempfile.TemporaryDirectory() as d:
-        src, files = _stage_ts_slices(events, d)
-        state_root = os.path.join(d, "state")
-        ckpt = os.path.join(d, "ckpt")
-        _deliver(src, files[:2], start=0)
-        incremental_multires_drain(
-            spark, src, events.schema, state_root, ckpt, merge_fn=merge
-        )
-        # one listing serves both the empty-source check and the
-        # erasure version number (the drain's return would duplicate it)
-        latest = latest_committed_state(spark, state_root)
-        if latest is None:  # empty source → no state → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, event_type string,"
-                " n_events bigint, total_value double",
-            )
-        # the erasure version: negated minute partials of the erased
-        # rows RECEIVED SO FAR (served by a user-keyed index at scale)
-        neg = erasure_minute_partials(
-            spark.read.parquet(src).filter(_erased_col()), negate=True
-        )
-        multires_fold_version(
-            spark,
-            state_root,
-            latest[0] + 1,
-            neg,
-            latest[1],
-            merge_fn=rollup_erasure_fold_merge,
-        )
-        # resume the SAME checkpoint over the remaining slices, erased
-        # users suppressed at ingest; the erasure shifted versions by 1
-        _deliver(src, files[2:], start=2)
-        post = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            state_root,
-            ckpt,
-            merge_fn=lambda b, prev, materialize=None: merge(
-                b.filter(~_erased_col()), prev, materialize=materialize
-            ),
-            version_offset=1,
-        )
-        assert post is not None
-        out = multires_tiered_union(post["minute"], post["hour"], post["day"])
-        # Materialize before the tempdir vanishes (bounded: buckets×types
-        # rows — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -2129,14 +1675,13 @@ def events_distinct_erasure_incremental(
 ) -> DataFrame:
     """The sketch twin of `events_rollup_erasure_incremental`: erasure
     as a version step in the KMV sketch state's exactly-once lineage.
-    Two micro-batches fold per-minute K-smallest arrays (v0, v1 —
-    `multires_kmv_merge_batch`), the erasure lands as v2
-    (`sketch_erasure_fold_merge`: KMV has no inverse, so touched
-    minutes RE-DERIVE from the remaining raw received so far under the
-    exact membership trigger, while maintained hour/day state carries
-    via ``prev_coarse``), then two more SUPPRESSED batches fold on top
-    (v3, v4). The oracle builds each tier's sketch directly from the
-    remaining rows of the whole corpus
+    Two micro-batches fold per-minute K-smallest arrays (v0, v1), the
+    erasure lands as v2 (`erasure_fold_merge`: KMV has no inverse, so
+    touched minutes RE-DERIVE from the remaining raw received so far
+    under the exact membership trigger, while maintained hour/day state
+    carries), then two more SUPPRESSED batches fold on top (v3, v4). The
+    oracle builds each tier's sketch directly from the remaining rows of
+    the whole corpus
     (:data:`~imdb_mapreduce_spark.plans.events.DISTINCT_ERASURE_ORACLE`,
     shared with the batch twin `events_distinct_user_erasure`), so
     hash-green proves the KMV merge law composes with erasure across
@@ -2146,87 +1691,7 @@ def events_distinct_erasure_incremental(
 
     The reference has no streaming or sketch surface at all; this
     family is the engine's [NORTH-STAR] extension mandate."""
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select("ts", "user_id")
-    with tempfile.TemporaryDirectory() as d:
-        src, files = _stage_ts_slices(events, d)
-        state_root = os.path.join(d, "state")
-        ckpt = os.path.join(d, "ckpt")
-        _deliver(src, files[:2], start=0)
-        incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            state_root,
-            ckpt,
-            merge_fn=multires_kmv_merge_batch,
-        )
-        # one listing serves both the empty-source check and the
-        # erasure version number (the drain's return would duplicate it)
-        latest = latest_committed_state(spark, state_root)
-        if latest is None:  # empty source → no state → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, kth_hash bigint,"
-                " m bigint, est_distinct double",
-            )
-        multires_fold_version(
-            spark,
-            state_root,
-            latest[0] + 1,
-            spark.read.parquet(src),  # raw so far — no inverse to apply
-            latest[1],
-            merge_fn=sketch_erasure_fold_merge,
-        )
-        _deliver(src, files[2:], start=2)
-        post = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            state_root,
-            ckpt,
-            merge_fn=lambda b, prev, materialize=None: multires_kmv_merge_batch(
-                b.filter(~_erased_col()), prev, materialize=materialize
-            ),
-            version_offset=1,
-        )
-        assert post is not None
-        out = (
-            kmv_bucket_stats(post["minute"], "minute")
-            .unionByName(kmv_bucket_stats(post["hour"], "hour"))
-            .unionByName(kmv_bucket_stats(post["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
-
-
-def sample_erasure_fold_merge(
-    raw_so_far: DataFrame,
-    prev: dict[str, DataFrame] | None,
-    materialize: "Callable[[str, DataFrame], DataFrame] | None" = None,
-) -> dict[str, DataFrame]:
-    """`sample_erasure_repair` shaped to the versioned fold's merge_fn
-    contract — the quantile family's erasure-as-a-version step. Like
-    KMV, the bottom-K sample has no inverse, so the "batch" is the RAW
-    rows received so far; touched minutes re-derive from its remaining
-    rows under the exact USER-membership trigger (the ``uh`` field the
-    sample carries for exactly this), and maintained hour/day state
-    carries via ``prev_coarse``."""
-    if prev is None:
-        raise ValueError(
-            "erasure fold requires a committed predecessor version"
-        )
-    return sample_erasure_repair(
-        raw_so_far,
-        prev["minute"],
-        _erased_col(),
-        prev_coarse=prev,
-        materialize=materialize or (lambda _name, df: df),
-    )
+    return _erasure_incremental(spark, sf_dir, DISTINCT, ("ts", "user_id"))
 
 
 @register(
@@ -2243,76 +1708,21 @@ def events_quantile_erasure_incremental(
     exactly-once lineage — the third family through the same
     choreography as `events_rollup_erasure_incremental` (additive) and
     `events_distinct_erasure_incremental` (KMV): two micro-batches fold
-    per-minute bottom-K samples (v0, v1 — `multires_qtl_merge_batch`),
-    the erasure lands as v2 (`sample_erasure_fold_merge`: touched
-    minutes re-derive from the remaining raw received so far under the
-    exact user-membership trigger, maintained hour/day carried via
-    ``prev_coarse``), then two more SUPPRESSED batches fold on top
-    (v3, v4 — the production suppression-list move). The oracle builds
-    each tier's sample directly from the remaining rows of the whole
-    corpus (:data:`~imdb_mapreduce_spark.plans.events.QUANTILE_ERASURE_ORACLE`,
+    per-minute bottom-K samples (v0, v1), the erasure lands as v2
+    (`erasure_fold_merge`: touched minutes re-derive from the remaining
+    raw received so far under the exact user-membership trigger,
+    maintained hour/day carried), then two more SUPPRESSED batches fold
+    on top (v3, v4 — the production suppression-list move). The oracle
+    builds each tier's sample directly from the remaining rows of the
+    whole corpus
+    (:data:`~imdb_mapreduce_spark.plans.events.QUANTILE_ERASURE_ORACLE`,
     shared with the batch twin `events_quantile_user_erasure`), so
     hash-green proves the bottom-K multiset law composes with erasure
     across the version boundary: deletion neither forces a rebuild nor
     stops the feed, now for order statistics too."""
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_id", "user_id", "value"
+    return _erasure_incremental(
+        spark, sf_dir, QUANTILE, ("ts", "event_id", "user_id", "value")
     )
-    with tempfile.TemporaryDirectory() as d:
-        src, files = _stage_ts_slices(events, d)
-        state_root = os.path.join(d, "state")
-        ckpt = os.path.join(d, "ckpt")
-        _deliver(src, files[:2], start=0)
-        incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            state_root,
-            ckpt,
-            merge_fn=multires_qtl_merge_batch,
-        )
-        # one listing serves both the empty-source check and the
-        # erasure version number (the drain's return would duplicate it)
-        latest = latest_committed_state(spark, state_root)
-        if latest is None:  # empty source → no state → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, m bigint,"
-                " p50 double, p90 double, p99 double",
-            )
-        multires_fold_version(
-            spark,
-            state_root,
-            latest[0] + 1,
-            spark.read.parquet(src),  # raw so far — no inverse to apply
-            latest[1],
-            merge_fn=sample_erasure_fold_merge,
-        )
-        _deliver(src, files[2:], start=2)
-        post = incremental_multires_drain(
-            spark,
-            src,
-            events.schema,
-            state_root,
-            ckpt,
-            merge_fn=lambda b, prev, materialize=None: multires_qtl_merge_batch(
-                b.filter(~_erased_col()), prev, materialize=materialize
-            ),
-            version_offset=1,
-        )
-        assert post is not None
-        out = (
-            qtl_bucket_stats(post["minute"], "minute")
-            .unionByName(qtl_bucket_stats(post["hour"], "hour"))
-            .unionByName(qtl_bucket_stats(post["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -2375,7 +1785,6 @@ def events_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from imdb_mapreduce_spark.plans.events import multires_tiered_union
     from imdb_mapreduce_spark.sources.star import load_table
 
     events = load_table(spark, "events", sf_dir).select(
@@ -2411,13 +1820,8 @@ def events_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, schema, os.path.join(d, "state"), os.path.join(d, "ckpt")
         )
         if state is None:  # empty source → no versions → empty rollup
-            return spark.createDataFrame(
-                [],
-                "tier string, bucket timestamp, event_type string,"
-                " n_events bigint, total_value double",
-            )
-        asof = state_as_of(spark, os.path.join(d, "state"), 1)
-        out = multires_tiered_union(asof["minute"], asof["hour"], asof["day"])
+            return spark.createDataFrame([], ROLLUP.empty_schema)
+        out = ROLLUP.readout(state_as_of(spark, os.path.join(d, "state"), 1))
         # Materialize before the tempdir vanishes (bounded: buckets×types
         # rows — time-horizon-, not corpus-, proportional).
         return out.localCheckpoint(eager=True)
@@ -2479,15 +1883,10 @@ def events_rollup_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no streaming, versioning, deletion, or
     time-travel surface; this family is the engine's [NORTH-STAR]
     extension mandate."""
-    import functools
     import glob as _glob
     import os
     import shutil
 
-    from imdb_mapreduce_spark.plans.events import (
-        _erased_col,
-        multires_tiered_union,
-    )
     from imdb_mapreduce_spark.sources.star import load_table
 
     events = load_table(spark, "events", sf_dir).select(
@@ -2524,17 +1923,10 @@ def events_rollup_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_root = os.path.join(d, "state")
         incremental_multires_drain(
             spark, src, schema, state_root, os.path.join(d, "ckpt"),
-            merge_fn=functools.partial(
-                multires_merge_batch, coalesce_values=True
-            ),
-        )
-        empty = spark.createDataFrame(
-            [],
-            "tier string, bucket timestamp, event_type string,"
-            " n_events bigint, total_value double",
+            ROLLUP_ERASABLE,
         )
         if len(staged) < 2:  # degenerate: v1 never exists
-            return empty
+            return spark.createDataFrame([], ROLLUP_ERASABLE.empty_schema)
         purged_root = os.path.join(d, "purged")
         erase_versioned_history(
             spark,
@@ -2542,9 +1934,9 @@ def events_rollup_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             purged_root,
             [spark.read.parquet(p) for p in staged],
             _erased_col(),
+            ROLLUP_ERASABLE,
         )
-        asof = state_as_of(spark, purged_root, 1)
-        out = multires_tiered_union(asof["minute"], asof["hour"], asof["day"])
+        out = ROLLUP_ERASABLE.readout(state_as_of(spark, purged_root, 1))
         # Materialize before the tempdir vanishes (bounded: buckets×types
         # rows — time-horizon-, not corpus-, proportional).
         return out.localCheckpoint(eager=True)
@@ -2596,7 +1988,7 @@ def events_quantile_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel × right-to-be-forgotten for the QUANTILE family,
     under the HASH GATE: fold four md5-slice batches into versioned
     bottom-K sample state, purge the erased users from EVERY committed
-    version (`erase_versioned_history_sample` — per-version prefix
+    version (`erase_versioned_history` — per-version prefix
     re-derivation under the exact user-membership trigger, rewritten to
     a new root), and serve ``VERSION AS OF v1`` off the purged lineage.
     The oracle computes the sample cascade directly over the REMAINING
@@ -2644,29 +2036,20 @@ def events_quantile_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_root = os.path.join(d, "state")
         incremental_multires_drain(
             spark, src, events.schema, state_root, os.path.join(d, "ckpt"),
-            merge_fn=multires_qtl_merge_batch,
-        )
-        empty = spark.createDataFrame(
-            [],
-            "tier string, bucket timestamp, m bigint,"
-            " p50 double, p90 double, p99 double",
+            QUANTILE,
         )
         if len(staged) < 2:  # degenerate: v1 never exists
-            return empty
+            return spark.createDataFrame([], QUANTILE.empty_schema)
         purged_root = os.path.join(d, "purged")
-        erase_versioned_history_sample(
+        erase_versioned_history(
             spark,
             state_root,
             purged_root,
             [spark.read.parquet(p) for p in staged],
             _erased_col(),
+            QUANTILE,
         )
-        asof = state_as_of(spark, purged_root, 1)
-        out = (
-            qtl_bucket_stats(asof["minute"], "minute")
-            .unionByName(qtl_bucket_stats(asof["hour"], "hour"))
-            .unionByName(qtl_bucket_stats(asof["day"], "day"))
-        )
+        out = QUANTILE.readout(state_as_of(spark, purged_root, 1))
         # Materialize before the tempdir vanishes (bounded: one row per
         # bucket — time-horizon-, not corpus-, proportional).
         return out.localCheckpoint(eager=True)
@@ -2817,8 +2200,8 @@ def streaming_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         return res.localCheckpoint(eager=True)
 
 
-# Read-vs-harness split for the two realtime reads (VERDICT r14 item 3):
-# the registered queries stage their own fixture INSIDE the timed body —
+# Read-vs-harness split for the realtime reads (VERDICT r14 item 3): the
+# registered queries stage their own fixture INSIDE the timed body —
 # write 4 ts-range slices, fold 3 state versions — before the read they
 # exist to measure, so the bench's end-to-end number is dominated by the
 # state-IO floor, not the read plan. Each query appends the wall seconds
@@ -2831,6 +2214,59 @@ REALTIME_READ_SEC: "dict[str, list[float]]" = {}
 
 def _note_read_sec(name: str, sec: float) -> None:
     REALTIME_READ_SEC.setdefault(name, []).append(round(sec, 3))
+
+
+def _realtime(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: AggSpec,
+    cols: "tuple[str, ...]",
+    name: str,
+) -> DataFrame:
+    """The realtime-read harness of one aggregate class: the first 3 of
+    4 ts-range slices are FOLDED into versioned state (the incremental
+    path), the 4th is left raw as the tail and merged AT READ TIME by
+    :func:`merge_batch` with a localCheckpoint materializer — one pass
+    over tail raw plus the touched-bucket merges, nothing written. The
+    read leg's seconds go to ``REALTIME_READ_SEC[name]``."""
+    import glob as _glob
+    import os
+    import time as _time
+
+    from imdb_mapreduce_spark.sources.star import load_table
+
+    events = load_table(spark, "events", sf_dir).select(*cols)
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "src")
+        events.repartitionByRange(4, "ts").write.parquet(src)
+        parts = sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
+        # fold all but the tail, prefetching each next slice's partials
+        # concurrently with the current fold's tier writes (guide §2.6)
+        state = fold_slices_pipelined(
+            spark, os.path.join(d, "state"), parts[:-1], spec
+        )
+        t_read = _time.monotonic()
+        tail = spark.read.parquet(parts[-1]) if parts else events.limit(0)
+        # Read-time materializer: localCheckpoint each relation (batch
+        # partials, then each tier) instead of writing a state version —
+        # the read is served once, nothing durable. Without it the union
+        # action embeds the tail aggregate under every tier branch AND
+        # every touched-set broadcast (the broadcast chains defeat
+        # exchange reuse, measured ~3-4× the single-tier cost at the
+        # 1000× decade; the pure m→h→d cascade DOES reuse — see
+        # SCALING.md r13). Retention: four one-row-per-(bucket[, type])
+        # relations, released when the driver GCs the refs and the
+        # ContextCleaner runs — the same bounded-relation contract as
+        # the final checkpoint below.
+        merged = merge_batch(
+            spec, tail, state,
+            materialize=lambda _n, df: df.localCheckpoint(eager=True),
+        )
+        # Materialize before the tempdir vanishes (bounded: one row per
+        # (bucket[, type])).
+        out = spec.readout(merged).localCheckpoint(eager=True)
+        _note_read_sec(name, _time.monotonic() - t_read)
+        return out
 
 
 @register(
@@ -2847,67 +2283,23 @@ def events_multires_rollup_realtime(
     (`events_multires_rollup_incremental`), and this — serving a query
     that must include data NEWER than the last refresh. The folded
     state answers for history; the unfolded TAIL (raw events that
-    arrived since batch N) is aggregated and merged AT READ TIME,
-    lazily: :func:`multires_merge_batch` with ``materialize=None`` IS
-    the read-time union plan — one pass over tail raw plus the
-    touched-bucket merges, nothing written, ReuseExchange deduping the
-    shared tail aggregate inside the single read action. At 100 TB the
-    tail is minutes of ingest while the state covers years — the read
-    costs O(tail + touched buckets) on top of the state scan, which is
-    why the pattern serves fresh dashboards without waiting for (or
-    paying) a refresh.
+    arrived since batch N) is aggregated and merged AT READ TIME:
+    :func:`merge_batch` with a read-time materializer IS the read-time
+    union plan — one pass over tail raw plus the touched-bucket merges,
+    nothing written. At 100 TB the tail is minutes of ingest while the
+    state covers years — the read costs O(tail + touched buckets) on
+    top of the state scan, which is why the pattern serves fresh
+    dashboards without waiting for (or paying) a refresh.
 
     Harness: the first 3 of 4 ts-range slices are FOLDED into versioned
     state (the incremental path, batch-per-file), the 4th is left raw
     as the tail. The oracle computes every tier directly from ALL raw
     in DuckDB — the hash match proves state ⊎ tail ≡ direct, i.e. the
     read-time union is exact, not eventually-consistent."""
-    import glob as _glob
-    import os
-
-    from imdb_mapreduce_spark.plans.events import multires_tiered_union
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_type", "value"
+    return _realtime(
+        spark, sf_dir, ROLLUP, ("ts", "event_type", "value"),
+        "events_multires_rollup_realtime",
     )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        parts = sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        state_root = os.path.join(d, "state")
-        # fold all but the tail, prefetching each next slice's partials
-        # concurrently with the current fold's tier writes (guide §2.6)
-        state = fold_slices_pipelined(
-            spark, state_root, parts[:-1], multires_batch_partials
-        )
-        import time as _time
-
-        t_read = _time.monotonic()
-        tail = spark.read.parquet(parts[-1]) if parts else events.limit(0)
-        # Read-time materializer: localCheckpoint each relation (batch
-        # partials, then each tier) instead of writing a state version —
-        # the read is served once, nothing durable. Without it the union
-        # action embeds the tail aggregate under every tier branch AND
-        # every touched-set broadcast (the broadcast chains defeat
-        # exchange reuse, measured ~3-4× the single-tier cost at the
-        # 1000× decade; the pure m→h→d cascade DOES reuse — see
-        # SCALING.md r13). Retention: four buckets×types-bounded
-        # relations, released when the driver GCs the refs and the
-        # ContextCleaner runs — the same bounded-relation contract as
-        # the final checkpoint below.
-        merged = multires_merge_batch(
-            tail, state,
-            materialize=lambda _n, df: df.localCheckpoint(eager=True),
-        )
-        out = multires_tiered_union(
-            merged["minute"], merged["hour"], merged["day"]
-        )
-        # Materialize before the tempdir vanishes (bounded: buckets×types).
-        out = out.localCheckpoint(eager=True)
-        _note_read_sec("events_multires_rollup_realtime",
-                       _time.monotonic() - t_read)
-        return out
 
 
 @register(
@@ -2926,57 +2318,21 @@ def events_multires_distinct_realtime(
     this — serving per-bucket distinct-user estimates that must include
     data NEWER than the last refresh. The folded sketch state answers
     for history; the unfolded TAIL's (bucket, user-hash) pairs are
-    sketched and merged AT READ TIME: :func:`multires_kmv_merge_batch`
-    with a localCheckpoint materializer IS the read-time union plan —
-    exact by the KMV merge law, one pass over tail raw plus
-    touched-bucket array merges, nothing written. At 100 TB the tail is
-    minutes of ingest while the state covers years — the read costs
-    O(tail + touched buckets · K) on top of the state scan.
+    sketched and merged AT READ TIME — exact by the KMV merge law, one
+    pass over tail raw plus touched-bucket array merges, nothing
+    written. At 100 TB the read costs O(tail + touched buckets · K) on
+    top of the state scan.
 
     Harness: the first 3 of 4 ts-range slices are FOLDED into versioned
     sketch state (the incremental path), the 4th is left raw as the
     tail. The oracle computes every tier's sketch directly from ALL raw
     in DuckDB (:data:`~imdb_mapreduce_spark.plans.events.MULTIRES_DISTINCT_ORACLE`)
     — the hash match proves state ⊎ tail ≡ direct-sketch, i.e. the
-    read-time union is exact, not eventually-consistent. The read-time
-    materializer carries the same bounded-relation contract as the
-    additive realtime read above (four one-row-per-bucket relations)."""
-    import glob as _glob
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select("ts", "user_id")
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        parts = sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        state_root = os.path.join(d, "state")
-        # fold all but the tail, prefetching each next slice's partials
-        # concurrently with the current fold's tier writes (guide §2.6)
-        state = fold_slices_pipelined(
-            spark, state_root, parts[:-1], kmv_batch_partials,
-            merge_fn=multires_kmv_merge_batch,
-        )
-        import time as _time
-
-        t_read = _time.monotonic()
-        tail = spark.read.parquet(parts[-1]) if parts else events.limit(0)
-        merged = multires_kmv_merge_batch(
-            tail, state,
-            materialize=lambda _n, df: df.localCheckpoint(eager=True),
-        )
-        out = (
-            kmv_bucket_stats(merged["minute"], "minute")
-            .unionByName(kmv_bucket_stats(merged["hour"], "hour"))
-            .unionByName(kmv_bucket_stats(merged["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket).
-        out = out.localCheckpoint(eager=True)
-        _note_read_sec("events_multires_distinct_realtime",
-                       _time.monotonic() - t_read)
-        return out
+    read-time union is exact, not eventually-consistent."""
+    return _realtime(
+        spark, sf_dir, DISTINCT, ("ts", "user_id"),
+        "events_multires_distinct_realtime",
+    )
 
 
 @register(
@@ -2995,12 +2351,9 @@ def events_multires_quantile_realtime(
     per-bucket p50/p90/p99 that must include data NEWER than the last
     refresh. The folded sample state answers for history; the unfolded
     TAIL's (bucket, h, v, uh) rows are sampled and merged AT READ TIME
-    — :func:`multires_qtl_merge_batch` with a localCheckpoint
-    materializer IS the read-time union plan, exact by the bottom-K
-    multiset law, one pass over tail raw plus touched-bucket array
-    merges, nothing written. At 100 TB the tail is minutes of ingest
-    while the state covers years — the read costs
-    O(tail + touched buckets · K) on top of the state scan.
+    — exact by the bottom-K multiset law, one pass over tail raw plus
+    touched-bucket array merges, nothing written. At 100 TB the read
+    costs O(tail + touched buckets · K) on top of the state scan.
 
     Harness: the first 3 of 4 ts-range slices are FOLDED into versioned
     sample state (the incremental path), the 4th is left raw as the
@@ -3011,41 +2364,7 @@ def events_multires_quantile_realtime(
     seconds are tracked separately (``REALTIME_READ_SEC``) so the bench
     row's state-IO fixture cost never masks the read plan (VERDICT r14
     item 3's split, carried over)."""
-    import glob as _glob
-    import os
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_id", "user_id", "value"
+    return _realtime(
+        spark, sf_dir, QUANTILE, ("ts", "event_id", "user_id", "value"),
+        "events_multires_quantile_realtime",
     )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        parts = sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        state_root = os.path.join(d, "state")
-        # fold all but the tail, prefetching each next slice's partials
-        # concurrently with the current fold's tier writes (guide §2.6)
-        state = fold_slices_pipelined(
-            spark, state_root, parts[:-1], qtl_batch_partials,
-            merge_fn=multires_qtl_merge_batch,
-        )
-        import time as _time
-
-        t_read = _time.monotonic()
-        tail = spark.read.parquet(parts[-1]) if parts else events.limit(0)
-        merged = multires_qtl_merge_batch(
-            tail, state,
-            materialize=lambda _n, df: df.localCheckpoint(eager=True),
-        )
-        out = (
-            qtl_bucket_stats(merged["minute"], "minute")
-            .unionByName(qtl_bucket_stats(merged["hour"], "hour"))
-            .unionByName(qtl_bucket_stats(merged["day"], "day"))
-        )
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket).
-        out = out.localCheckpoint(eager=True)
-        _note_read_sec("events_multires_quantile_realtime",
-                       _time.monotonic() - t_read)
-        return out

@@ -234,10 +234,11 @@ def test_sample_erasure_membership_trigger(spark):
     import pyspark.sql.functions as F
 
     from imdb_mapreduce_spark.plans.events import (
+        QUANTILE,
         bottomk_merge_up,
         bottomk_sample,
         qtl_minute_pairs,
-        sample_erasure_repair,
+        rederive_erasure_repair,
     )
 
     def h(x: int) -> int:
@@ -274,7 +275,7 @@ def test_sample_erasure_membership_trigger(spark):
 
     for uid, changes in ((unsampled_user, False), (sampled_user, True)):
         pred = F.col("user_id") == uid
-        rep = snap(sample_erasure_repair(e, prev_m, pred))
+        rep = snap(rederive_erasure_repair(QUANTILE, e, prev_m, pred))
         assert rep == snap(rebuild(pred)), uid
         prev_snap = sorted(
             (
@@ -290,25 +291,25 @@ def test_erase_versioned_history_sample_purges_every_as_of_read(
     spark, tmp_path
 ):
     """The quantile family's history purge: after
-    `erase_versioned_history_sample`, every as-of read under the purged
-    root must equal the DIRECT sample cascade over the remaining rows
-    of that version's batch prefix (no inverse — touched minutes
-    re-derive from prefix raw under the user-membership trigger);
+    `erase_versioned_history` over the quantile spec, every as-of read
+    under the purged root must equal the DIRECT sample cascade over the
+    remaining rows of that version's batch prefix (no inverse — touched
+    minutes re-derive from prefix raw under the user-membership trigger);
     versions before the first erased row carry byte-equal."""
     import os
 
     import pandas as pd
 
     from imdb_mapreduce_spark.plans.events import (
+        QUANTILE,
         _erased_col,
         bottomk_merge_up,
         bottomk_sample,
         qtl_minute_pairs,
     )
     from imdb_mapreduce_spark.streaming.jobs import (
-        erase_versioned_history_sample,
+        erase_versioned_history,
         incremental_multires_drain,
-        multires_qtl_merge_batch,
         state_as_of,
     )
 
@@ -343,16 +344,15 @@ def test_erase_versioned_history_sample_purges_every_as_of_read(
     )
     state_root = str(tmp_path / "state")
     incremental_multires_drain(
-        spark, src, st, state_root, str(tmp_path / "ckpt"),
-        merge_fn=multires_qtl_merge_batch,
+        spark, src, st, state_root, str(tmp_path / "ckpt"), QUANTILE
     )
     bdfs = [
         spark.createDataFrame(pd.DataFrame(batches[i], columns=cols))
         for i in range(4)
     ]
     purged_root = str(tmp_path / "purged")
-    assert erase_versioned_history_sample(
-        spark, state_root, purged_root, bdfs, _erased_col()
+    assert erase_versioned_history(
+        spark, state_root, purged_root, bdfs, _erased_col(), QUANTILE
     ) == [0, 1, 2, 3]
 
     def snap(state):

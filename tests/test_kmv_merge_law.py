@@ -315,9 +315,10 @@ def test_sketch_erasure_membership_trigger(spark):
     from pyspark.sql import functions as F
 
     from imdb_mapreduce_spark.plans.events import (
+        DISTINCT,
         kmv_k_smallest,
         kmv_minute_pairs,
-        sketch_erasure_repair,
+        rederive_erasure_repair,
     )
 
     def h(uid: int) -> int:
@@ -348,7 +349,7 @@ def test_sketch_erasure_membership_trigger(spark):
 
     for uid, changes in ((largest, False), (smallest, True)):
         pred = F.col("user_id") == uid
-        rep = snap(sketch_erasure_repair(e, prev_m, pred))
+        rep = snap(rederive_erasure_repair(DISTINCT, e, prev_m, pred))
         assert rep == snap(rebuild(pred)), uid
         prev_snap = sorted(
             (r["bucket"], tuple(r["hashes"])) for r in prev_m.collect()
@@ -411,7 +412,7 @@ def test_kmv_merge_arrays_equals_direct_both_grains(spark):
 
 def test_fold_merge_legs_stay_on_bounded_array_merge(spark):
     """r16 (VERDICT r15 item 6): the drain's fold merge legs share
-    `_coarse_tiers`, whose K-capped inputs must route through the
+    `merge_batch`, whose K-capped inputs must route through the
     ONE-exchange array merges (`kmv_merge_arrays` /
     `bottomk_merge_arrays`), never the salted rank — the salted window
     pass exists for UNBOUNDED raw only. Pins the plan shape of every
@@ -429,12 +430,8 @@ def test_fold_merge_legs_stay_on_bounded_array_merge(spark):
 
     from pyspark.sql import functions as F  # noqa: F811
 
-    from imdb_mapreduce_spark.streaming.jobs import (
-        kmv_batch_partials,
-        multires_kmv_merge_batch,
-        multires_qtl_merge_batch,
-        qtl_batch_partials,
-    )
+    from imdb_mapreduce_spark.plans.events import DISTINCT, QUANTILE
+    from imdb_mapreduce_spark.streaming.jobs import merge_batch
 
     ts = datetime.datetime(2026, 9, 1, 10, 0, 30)
     mk = lambda off: spark.createDataFrame(  # noqa: E731
@@ -451,18 +448,15 @@ def test_fold_merge_legs_stay_on_bounded_array_merge(spark):
             df.explain("formatted")
         return buf.getvalue()
 
-    for merge_fn, partials_fn in (
-        (multires_kmv_merge_batch, kmv_batch_partials),
-        (multires_qtl_merge_batch, qtl_batch_partials),
-    ):
+    for spec in (DISTINCT, QUANTILE):
         # prev state from batch 0 (pinned like the drain's committed
         # tiers), then fold batch 1 against it — the drain's hot path
         prev = {
             t: df.localCheckpoint(eager=True)
-            for t, df in merge_fn(mk(0), None).items()
+            for t, df in merge_batch(spec, mk(0), None).items()
         }
-        mb = partials_fn(mk(50)).localCheckpoint(eager=True)
-        tiers = merge_fn(mk(50), prev, partials=mb)
+        mb = spec.partials(mk(50)).localCheckpoint(eager=True)
+        tiers = merge_batch(spec, mk(50), prev, partials=mb)
         for unit in ("minute", "hour", "day"):
             p = plan(tiers[unit])
-            assert "Window" not in p, (merge_fn.__name__, unit, p)
+            assert "Window" not in p, (spec.name, unit, p)

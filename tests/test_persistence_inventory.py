@@ -73,11 +73,11 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # corpus-, proportional).
     ("plans/events.py", "events_multires_distinct_rollup",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r14: erasure repair — pre-erasure minute state + the repaired
-    # minute (via the repair's materializer lambda); both one row per
-    # (bucket[, type]), time-horizon-proportional.
+    # r14: erasure repair — the pre-erasure minute state, one row per
+    # (bucket, type), time-horizon-proportional (the repaired minute is
+    # pinned by `_pin_minute` below).
     ("plans/events.py", "events_rollup_user_erasure",
-     "localCheckpoint"): (2, "bounded-relation"),
+     "localCheckpoint"): (1, "bounded-relation"),
     ("plans/events.py", "events_distinct_user_erasure",
      "localCheckpoint"): (1, "bounded-relation"),
     # r15 opt: the KMV sketch relation (≤ k rows per event type) feeds
@@ -91,18 +91,24 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # Arrow histogram kernel (4 → 2 kernel runs in the one action).
     ("pipeline/multimodal.py", "media_phash_dedup",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r15 opt adds the pinned touched set (second site): bounded at one
-    # row per fired minute, saves the membership join re-run under every
-    # tier action's broadcast branch.
-    ("plans/events.py", "sketch_erasure_repair",
-     "localCheckpoint"): (2, "bounded-relation"),
+    # the re-derive repair's pinned touched set (r15 opt): bounded at
+    # one row per fired minute, saves the membership join re-run under
+    # every tier action's broadcast branch — one site for both classes
+    # without an inverse (KMV, bottom-K).
+    ("plans/events.py", "rederive_erasure_repair",
+     "localCheckpoint"): (1, "bounded-relation"),
+    # both repairs' default materializer: pins the repaired minute tier
+    # only (the fan-out relation; coarse tiers stay lazy) — one row per
+    # (bucket[, type]), time-horizon-proportional.
+    ("plans/events.py", "_pin_minute",
+     "localCheckpoint"): (1, "bounded-relation"),
     ("pipeline/similarity.py", "semdedup_clusters", "localCheckpoint"):
         (1, "contract-documented"),
     ("pipeline/similarity.py", "semdedup_eval_metrics", "localCheckpoint"):
         (1, "bounded-relation"),
     ("streaming/jobs.py", "streaming_foreachbatch_upsert",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r15 opt: multires_fold_version's materializer pins the batch's
+    # r15 opt: the version writer's materializer pins the batch's
     # pre-aggregated minute partials (one row per touched (bucket[,
     # type]) — batch-, not corpus-, proportional) via localCheckpoint
     # instead of a parquet write+read: no reader ever consults
@@ -117,30 +123,25 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # blocks are released with the fold chain's refs at the end of the
     # query body, exactly like the materializer pin it replaces.
     ("streaming/jobs.py", "prep", "localCheckpoint"): (1, "bounded-relation"),
-    ("streaming/jobs.py", "events_multires_rollup_incremental",
-     "localCheckpoint"): (1, "bounded-relation"),
-    # r14: the sketch incremental tier's readout — one row per bucket,
-    # materialized before its tempdir state vanishes (same contract as
-    # the additive tier above).
-    ("streaming/jobs.py", "events_multires_distinct_incremental",
+    # the incremental harness's readout (all three classes) — one row
+    # per (bucket[, type]), materialized before its tempdir state
+    # vanishes.
+    ("streaming/jobs.py", "_incremental",
      "localCheckpoint"): (1, "bounded-relation"),
     ("streaming/jobs.py", "streaming_sessions_timeout",
      "localCheckpoint"): (1, "bounded-relation"),
-    ("streaming/jobs.py", "events_multires_rollup_realtime",
-     "localCheckpoint"): (2, "bounded-relation"),
-    # r14: the sketch realtime read — same two sites as the additive
-    # twin (read-time materializer + final readout), same bounds.
-    ("streaming/jobs.py", "events_multires_distinct_realtime",
+    # the realtime harness (all three classes): read-time materializer
+    # + final readout, one row per (bucket[, type]) each.
+    ("streaming/jobs.py", "_realtime",
      "localCheckpoint"): (2, "bounded-relation"),
     ("streaming/jobs.py", "streaming_kmv_distinct_salted",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r15: the incremental-erasure pair's final readout — one row per
-    # (bucket[, type]) across three tiers, time-horizon-proportional;
-    # materialized because the backing versioned state lives in a
-    # tempdir that vanishes when the query body returns.
-    ("streaming/jobs.py", "events_rollup_erasure_incremental",
-     "localCheckpoint"): (1, "bounded-relation"),
-    ("streaming/jobs.py", "events_distinct_erasure_incremental",
+    # r15: the erasure-incremental harness's final readout (all three
+    # classes) — one row per (bucket[, type]) across three tiers,
+    # time-horizon-proportional; materialized because the backing
+    # versioned state lives in a tempdir that vanishes when the query
+    # body returns.
+    ("streaming/jobs.py", "_erasure_incremental",
      "localCheckpoint"): (1, "bounded-relation"),
     # r15: the as-of-version readout — one row per (bucket, type) across
     # three tiers, materialized before the tempdir state vanishes.
@@ -163,29 +164,15 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
      "localCheckpoint"): (1, "bounded-relation"),
     ("plans/events.py", "events_quantile_user_erasure",
      "localCheckpoint"): (1, "bounded-relation"),
-    # the repaired minute tier under the default materializer (fan-out
-    # pin only; coarse tiers stay lazy — the sketch repair's shape);
-    # r15 opt adds the pinned touched set (same bound/rationale as the
-    # sketch twin).
-    ("plans/events.py", "sample_erasure_repair",
-     "localCheckpoint"): (2, "bounded-relation"),
-    # r15 opt: the incremental erasure fold pins the negated partials
-    # before handing them to the repair — one row per erased (bucket,
-    # type), same rationale as the batch query's pin.
-    ("streaming/jobs.py", "rollup_erasure_fold_merge",
+    # r15 opt: the erasure fold of a class with an inverse pins the
+    # negated partials before handing them to the repair — one row per
+    # erased (bucket, type), same rationale as the batch query's pin.
+    ("streaming/jobs.py", "erasure_fold_merge",
      "localCheckpoint"): (1, "bounded-relation"),
-    # final readouts materialized before their tempdir state vanishes —
+    # final readout materialized before its tempdir state vanishes —
     # one row per bucket across three tiers.
-    ("streaming/jobs.py", "events_multires_quantile_incremental",
-     "localCheckpoint"): (1, "bounded-relation"),
-    ("streaming/jobs.py", "events_quantile_erasure_incremental",
-     "localCheckpoint"): (1, "bounded-relation"),
     ("streaming/jobs.py", "events_quantile_erasure_asof",
      "localCheckpoint"): (1, "bounded-relation"),
-    # the quantile realtime read: read-time materializer + final
-    # readout, same two sites and bounds as its additive/sketch twins.
-    ("streaming/jobs.py", "events_multires_quantile_realtime",
-     "localCheckpoint"): (2, "bounded-relation"),
     # r15: the IVF delete-in-place writes OVER the very cell directories
     # its lineage reads — the checkpoint truncates that read-overwrite
     # cycle; the slice is erasure-footprint-proportional (touched cells'

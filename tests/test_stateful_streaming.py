@@ -6,8 +6,15 @@ from __future__ import annotations
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from imdb_mapreduce_spark.plans.events import (
+    DISTINCT,
+    QUANTILE,
+    ROLLUP,
+    ROLLUP_ERASABLE,
+)
 from imdb_mapreduce_spark.sources.star import load_table
 from imdb_mapreduce_spark.streaming.jobs import read_events_stream
 from imdb_mapreduce_spark.streaming.stateful import running_user_stats
@@ -921,7 +928,7 @@ def test_multires_merge_recomputes_touched_buckets_only(spark):
 
     import pandas as pd
 
-    from imdb_mapreduce_spark.streaming.jobs import multires_merge_batch
+    from imdb_mapreduce_spark.streaming.jobs import merge_batch
 
     h1 = pd.Timestamp("2026-01-01 10:00:00")
     h2 = pd.Timestamp("2026-01-01 11:00:00")
@@ -955,7 +962,7 @@ def test_multires_merge_recomputes_touched_buckets_only(spark):
             }
         )
     )
-    new = multires_merge_batch(batch, prev)
+    new = merge_batch(ROLLUP, batch, prev)
     hour = {
         (r["bucket"], r["event_type"]): (r["n_events"], float(r["s"]))
         for r in new["hour"].collect()
@@ -973,7 +980,7 @@ def test_multires_merge_recomputes_touched_buckets_only(spark):
     assert minute[h2 + pd.Timedelta(minutes=5)] == (3, 30.0)  # carried
     # day: 2026-01-01 is touched → re-derived from the new MINUTE tier
     # (r15 opt: both coarse tiers derive from minute so their
-    # materializer actions are independent — _coarse_tiers). The
+    # materializer actions are independent — merge_batch). The
     # poisoned hour row therefore does NOT propagate: the re-derived
     # day sums the day's minute rows (3 + 3 events). On CONSISTENT
     # state the two derivations are identical by the associative merge
@@ -983,7 +990,84 @@ def test_multires_merge_recomputes_touched_buckets_only(spark):
     assert day[pd.Timestamp("2026-01-01")] == 3 + 3
 
 
-def test_multires_materialized_fold_matches_lazy(spark):
+def _poisoned_fold_case(spark, spec):
+    """(prev, batch) for the planted-inconsistency fold drills: prev
+    holds a minute row in hours h1 and h2 and a POISONED h2 hour row
+    that disagrees with its own minute tier; the batch touches h1 only.
+    The additive case is written out; a sketch class folds the same
+    geometry from raw rows and plants an h2 hour row built from
+    unrelated users."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from imdb_mapreduce_spark.streaming.jobs import merge_batch
+
+    h1 = pd.Timestamp("2026-01-01 10:00:00")
+    h2 = pd.Timestamp("2026-01-01 11:00:00")
+    if spec is ROLLUP:
+        mk = lambda rows: spark.createDataFrame(
+            [(b.to_pydatetime(), *rest) for b, *rest in rows],
+            _multires_state_schema(),
+        )
+        prev = {
+            "minute": mk(
+                [
+                    (h1 + pd.Timedelta(minutes=1), "click", 2, Decimal("10.00")),
+                    (h2 + pd.Timedelta(minutes=5), "click", 3, Decimal("30.00")),
+                ]
+            ),
+            "hour": mk(
+                [
+                    (h1, "click", 2, Decimal("10.00")),
+                    (h2, "click", 999, Decimal("999.99")),  # poisoned
+                ]
+            ),
+            "day": mk(
+                [(pd.Timestamp("2026-01-01"), "click", 1001, Decimal("1009.99"))]
+            ),
+        }
+        batch = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "ts": [h1 + pd.Timedelta(minutes=1, seconds=30)],
+                    "event_type": ["click"],
+                    "value": [5.0],
+                }
+            )
+        )
+        return prev, batch
+    cols = ["ts", "event_id", "user_id", "value"]
+
+    def raw(rows):
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+
+    m1, m5 = pd.Timedelta(minutes=1), pd.Timedelta(minutes=5)
+    prev = {
+        t: df.localCheckpoint(eager=True)
+        for t, df in merge_batch(
+            spec,
+            raw([(h1 + m1, 1, 1, 2.0), (h1 + m1, 2, 2, 8.0),
+                 (h2 + m5, 3, 3, 30.0)]),
+            None,
+        ).items()
+    }
+    poison = merge_batch(
+        spec, raw([(h2 + m5, 90, 90, 999.0), (h2 + m5, 91, 91, 1.0)]), None
+    )["hour"]
+    prev["hour"] = (
+        prev["hour"].filter(F.col("bucket") != F.lit(h2.to_pydatetime()))
+        .unionByName(poison)
+        .localCheckpoint(eager=True)
+    )
+    batch = raw([(h1 + pd.Timedelta(minutes=1, seconds=30), 4, 4, 5.0)])
+    return prev, batch
+
+
+@pytest.mark.parametrize(
+    "spec", [ROLLUP, DISTINCT, QUANTILE], ids=lambda spec: spec.name
+)
+def test_multires_materialized_fold_matches_lazy(spark, spec):
     """r15 opt round 2: on the MATERIALIZED path the coarse tiers derive
     from prev_minute ∪ batch partials (so the three tier writes run
     concurrently) instead of from the new minute tier; by the
@@ -993,47 +1077,14 @@ def test_multires_materialized_fold_matches_lazy(spark):
     minute data and the poisoned hour row disagree. Pin it: the
     materialized fold must match the lazy merge tier for tier, row for
     row (and both must still derive coarse tiers from MINUTE data, i.e.
-    ignore the poisoned hour row)."""
-    from decimal import Decimal
+    ignore the poisoned hour row) — for each of the three aggregate
+    classes."""
+    from imdb_mapreduce_spark.streaming.jobs import merge_batch
 
-    import pandas as pd
-
-    from imdb_mapreduce_spark.streaming.jobs import multires_merge_batch
-
-    h1 = pd.Timestamp("2026-01-01 10:00:00")
-    h2 = pd.Timestamp("2026-01-01 11:00:00")
-    mk = lambda rows: spark.createDataFrame(
-        [(b.to_pydatetime(), *rest) for b, *rest in rows],
-        _multires_state_schema(),
-    )
-    prev = {
-        "minute": mk(
-            [
-                (h1 + pd.Timedelta(minutes=1), "click", 2, Decimal("10.00")),
-                (h2 + pd.Timedelta(minutes=5), "click", 3, Decimal("30.00")),
-            ]
-        ),
-        "hour": mk(
-            [
-                (h1, "click", 2, Decimal("10.00")),
-                (h2, "click", 999, Decimal("999.99")),  # poisoned
-            ]
-        ),
-        "day": mk(
-            [(pd.Timestamp("2026-01-01"), "click", 1001, Decimal("1009.99"))]
-        ),
-    }
-    batch = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "ts": [h1 + pd.Timedelta(minutes=1, seconds=30)],
-                "event_type": ["click"],
-                "value": [5.0],
-            }
-        )
-    )
-    lazy = multires_merge_batch(batch, prev)
-    mat = multires_merge_batch(
+    prev, batch = _poisoned_fold_case(spark, spec)
+    lazy = merge_batch(spec, batch, prev)
+    mat = merge_batch(
+        spec,
         batch,
         prev,
         materialize=lambda _n, df: df.localCheckpoint(eager=True),
@@ -1057,7 +1108,7 @@ def test_multires_incremental_restart_drill(spark, tmp_path):
 
     from imdb_mapreduce_spark.streaming.jobs import (
         incremental_multires_drain,
-        multires_merge_batch,
+        merge_batch,
     )
 
     t0 = pd.Timestamp("2026-03-01 00:00:00")
@@ -1108,7 +1159,8 @@ def test_multires_incremental_restart_drill(spark, tmp_path):
     # direct single-pass derivation over ALL rows (prev=None merge IS the
     # batch cascade) — incremental-across-restart must land exactly on it
     all_rows = [r for b in batches.values() for r in b]
-    direct = multires_merge_batch(
+    direct = merge_batch(
+        ROLLUP,
         spark.createDataFrame(
             pd.DataFrame(all_rows, columns=["ts", "event_type", "value"])
         ),
@@ -1138,7 +1190,7 @@ def test_multires_drain_auto_compaction_restart_drill(spark, tmp_path):
 
     from imdb_mapreduce_spark.streaming.jobs import (
         incremental_multires_drain,
-        multires_merge_batch,
+        merge_batch,
     )
 
     t0 = pd.Timestamp("2026-03-01 00:00:00")
@@ -1209,7 +1261,8 @@ def test_multires_drain_auto_compaction_restart_drill(spark, tmp_path):
     # batch 4 crossed the cadence again mid-phase-2 (v4 % 2 == 0)
     assert os.path.exists(os.path.join(state_root, "v4", "_COMMIT"))
     all_rows = [r for b in batches.values() for r in b]
-    direct = multires_merge_batch(
+    direct = merge_batch(
+        ROLLUP,
         spark.createDataFrame(
             pd.DataFrame(all_rows, columns=["ts", "event_type", "value"])
         ),
@@ -1231,21 +1284,17 @@ def test_erasure_fold_restart_drill(spark, tmp_path):
        unchanged v1 must be byte-idempotent.
     2. REDUNDANT RESUME (restart with nothing new): state unchanged.
     """
-    import functools
     import os
 
     import pandas as pd
 
-    from imdb_mapreduce_spark.plans.events import (
-        _erased_col,
-        erasure_minute_partials,
-    )
+    from imdb_mapreduce_spark.plans.events import _erased_col
     from imdb_mapreduce_spark.streaming.jobs import (
+        erasure_fold_merge,
         incremental_multires_drain,
         latest_committed_state,
+        merge_batch,
         multires_fold_version,
-        multires_merge_batch,
-        rollup_erasure_fold_merge,
     )
 
     t0 = pd.Timestamp("2026-03-01 00:00:00")
@@ -1277,7 +1326,6 @@ def test_erasure_fold_restart_drill(spark, tmp_path):
     )
     state_root = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    merge = functools.partial(multires_merge_batch, coalesce_values=True)
 
     def snap(state):
         return {
@@ -1290,32 +1338,28 @@ def test_erasure_fold_restart_drill(spark, tmp_path):
 
     put_file(0)
     put_file(1)
-    incremental_multires_drain(spark, src, st, state_root, ckpt, merge_fn=merge)
+    incremental_multires_drain(
+        spark, src, st, state_root, ckpt, ROLLUP_ERASABLE
+    )
     latest = latest_committed_state(spark, state_root)
     assert latest is not None and latest[0] == 1  # v0, v1 committed
     seen = spark.read.parquet(src)
-    neg = erasure_minute_partials(seen.filter(_erased_col()), negate=True)
-    erased_state = multires_fold_version(
-        spark, state_root, 2, neg, latest[1],
-        merge_fn=rollup_erasure_fold_merge,
-    )
+
+    def erase(mat):
+        return erasure_fold_merge(ROLLUP_ERASABLE, seen, latest[1], mat)
+
+    erased_state = multires_fold_version(spark, state_root, 2, erase)
     erased_snap = snap(erased_state)
     # replay leg 1: the erasure version re-runs from its unchanged
     # predecessor — must be byte-idempotent
-    replayed = multires_fold_version(
-        spark, state_root, 2, neg, latest[1],
-        merge_fn=rollup_erasure_fold_merge,
-    )
+    replayed = multires_fold_version(spark, state_root, 2, erase)
     assert snap(replayed) == erased_snap
     # resume: two more files, same checkpoint, versions shifted by 1
     put_file(2)
     put_file(3)
     final = incremental_multires_drain(
-        spark, src, st, state_root, ckpt,
-        merge_fn=lambda b, prev, materialize=None: merge(
-            b.filter(~_erased_col()), prev, materialize=materialize
-        ),
-        version_offset=1,
+        spark, src, st, state_root, ckpt, ROLLUP_ERASABLE,
+        suppress=_erased_col(), version_offset=1,
     )
     assert os.path.exists(os.path.join(state_root, "v4", "_COMMIT"))
     got = snap(final)
@@ -1324,15 +1368,11 @@ def test_erasure_fold_restart_drill(spark, tmp_path):
     remaining = spark.createDataFrame(
         pd.DataFrame(all_rows, columns=cols)
     ).filter(~_erased_col())
-    assert got == snap(multires_merge_batch(remaining, None,
-                                            coalesce_values=True))
+    assert got == snap(merge_batch(ROLLUP_ERASABLE, remaining, None))
     # replay leg 2: redundant resume with nothing new → unchanged
     again = incremental_multires_drain(
-        spark, src, st, state_root, ckpt,
-        merge_fn=lambda b, prev, materialize=None: merge(
-            b.filter(~_erased_col()), prev, materialize=materialize
-        ),
-        version_offset=1,
+        spark, src, st, state_root, ckpt, ROLLUP_ERASABLE,
+        suppress=_erased_col(), version_offset=1,
     )
     assert snap(again) == got
 
@@ -1347,7 +1387,6 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
     idempotent (a second run to a fresh root lands on identical
     snapshots — the rewrite always derives from the unchanged source
     root, never in place)."""
-    import functools
     import os
 
     import pandas as pd
@@ -1356,7 +1395,7 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
     from imdb_mapreduce_spark.streaming.jobs import (
         erase_versioned_history,
         incremental_multires_drain,
-        multires_merge_batch,
+        merge_batch,
         state_as_of,
     )
 
@@ -1388,7 +1427,7 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
     state_root = str(tmp_path / "state")
     incremental_multires_drain(
         spark, src, st, state_root, str(tmp_path / "ckpt"),
-        merge_fn=functools.partial(multires_merge_batch, coalesce_values=True),
+        ROLLUP_ERASABLE,
     )
     bdfs = [
         spark.createDataFrame(pd.DataFrame(batches[i], columns=cols))
@@ -1396,7 +1435,7 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
     ]
     purged_root = str(tmp_path / "purged")
     assert erase_versioned_history(
-        spark, state_root, purged_root, bdfs, _erased_col()
+        spark, state_root, purged_root, bdfs, _erased_col(), ROLLUP_ERASABLE
     ) == [0, 1, 2, 3]
 
     def snap(state):
@@ -1410,12 +1449,12 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
 
     for k in range(4):
         prefix = [r for i in range(k + 1) for r in batches[i]]
-        direct = multires_merge_batch(
+        direct = merge_batch(
+            ROLLUP_ERASABLE,
             spark.createDataFrame(pd.DataFrame(prefix, columns=cols)).filter(
                 ~_erased_col()
             ),
             None,
-            coalesce_values=True,
         )
         assert snap(state_as_of(spark, purged_root, k)) == snap(direct), k
     # v0 saw no erased rows → byte-equal carry of the source tier files
@@ -1432,7 +1471,9 @@ def test_erase_versioned_history_purges_every_as_of_read(spark, tmp_path):
     # idempotent: a second purge from the unchanged source root lands
     # on identical snapshots
     again_root = str(tmp_path / "purged2")
-    erase_versioned_history(spark, state_root, again_root, bdfs, _erased_col())
+    erase_versioned_history(
+        spark, state_root, again_root, bdfs, _erased_col(), ROLLUP_ERASABLE
+    )
     for k in range(4):
         assert snap(state_as_of(spark, again_root, k)) == snap(
             state_as_of(spark, purged_root, k)
@@ -1443,10 +1484,11 @@ def test_erase_versioned_history_sketch_purges_every_as_of_read(
     spark, tmp_path
 ):
     """The sketch family's history purge: after
-    `erase_versioned_history_sketch`, every as-of read under the purged
-    root must equal the DIRECT sketch cascade over the remaining rows
-    of that version's batch prefix (KMV has no inverse — touched
-    minutes re-derive from prefix raw under the membership trigger);
+    `erase_versioned_history` over the KMV spec, every as-of read under
+    the purged root must equal the DIRECT sketch cascade over the
+    remaining rows of that version's batch prefix (KMV has no inverse —
+    touched minutes re-derive from prefix raw under the membership
+    trigger);
     versions before the first erased row carry byte-equal."""
     import os
 
@@ -1459,9 +1501,8 @@ def test_erase_versioned_history_sketch_purges_every_as_of_read(
         kmv_minute_pairs,
     )
     from imdb_mapreduce_spark.streaming.jobs import (
-        erase_versioned_history_sketch,
+        erase_versioned_history,
         incremental_multires_drain,
-        multires_kmv_merge_batch,
         state_as_of,
     )
 
@@ -1490,16 +1531,15 @@ def test_erase_versioned_history_sketch_purges_every_as_of_read(
     st = _parse_datatype_string("ts timestamp, user_id bigint")
     state_root = str(tmp_path / "state")
     incremental_multires_drain(
-        spark, src, st, state_root, str(tmp_path / "ckpt"),
-        merge_fn=multires_kmv_merge_batch,
+        spark, src, st, state_root, str(tmp_path / "ckpt"), DISTINCT
     )
     bdfs = [
         spark.createDataFrame(pd.DataFrame(batches[i], columns=cols))
         for i in range(4)
     ]
     purged_root = str(tmp_path / "purged")
-    assert erase_versioned_history_sketch(
-        spark, state_root, purged_root, bdfs, _erased_col()
+    assert erase_versioned_history(
+        spark, state_root, purged_root, bdfs, _erased_col(), DISTINCT
     ) == [0, 1, 2, 3]
 
     def snap(state):
@@ -1607,6 +1647,7 @@ def test_state_as_of_rejects_uncommitted_version(spark, tmp_path):
     import pytest
 
     from imdb_mapreduce_spark.streaming.jobs import (
+        merge_batch,
         multires_fold_version,
         state_as_of,
     )
@@ -1618,7 +1659,9 @@ def test_state_as_of_rejects_uncommitted_version(spark, tmp_path):
             columns=["ts", "event_type", "value"],
         )
     )
-    multires_fold_version(spark, root, 0, batch, None)
+    multires_fold_version(
+        spark, root, 0, lambda mat: merge_batch(ROLLUP, batch, None, mat)
+    )
     snap0 = sorted(
         (r["bucket"], r["event_type"], r["n_events"])
         for r in state_as_of(spark, root, 0)["minute"].collect()
@@ -1631,8 +1674,9 @@ def test_state_as_of_rejects_uncommitted_version(spark, tmp_path):
     with pytest.raises(ValueError, match="never committed"):
         state_as_of(spark, root, 1)
     # folding a later batch never mutates committed history
+    v0 = state_as_of(spark, root, 0)
     multires_fold_version(
-        spark, root, 1, batch, state_as_of(spark, root, 0)
+        spark, root, 1, lambda mat: merge_batch(ROLLUP, batch, v0, mat)
     )
     assert snap0 == sorted(
         (r["bucket"], r["event_type"], r["n_events"])
@@ -1871,39 +1915,94 @@ def test_session_numbering_survives_timer_closure(spark, tmp_path):
     assert got == [(7, 1), (7, 2)], got
 
 
-def test_multires_merge_null_ts_is_an_ordinary_group(spark):
+# (column names, batch 1 rows, batch 2 rows) per aggregate class for the
+# NULL-bucket drill: a real bucket beside NULL-ts rows in both batches.
+_NULL_TS_BATCHES = {
+    "rollup": (
+        ["ts", "event_type", "value"],
+        [("t0", "click", 1.0), (None, "click", 2.0)],
+        [(None, "click", 3.0)],
+    ),
+    "distinct": (
+        ["ts", "user_id"],
+        [("t0", 1), (None, 2)],
+        [(None, 3), (None, 2)],  # 2 again: dedup across batches
+    ),
+    "quantile": (
+        ["ts", "event_id", "user_id", "value"],
+        [("t0", 1, 1, 1.0), (None, 2, 2, 2.0)],
+        [(None, 3, 3, 3.0), (None, 4, 2, 4.0)],
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "spec", [ROLLUP, DISTINCT, QUANTILE], ids=lambda spec: spec.name
+)
+def test_multires_merge_null_ts_is_an_ordinary_group(spark, spec):
     """r13 review catch: date_trunc of a NULL ts is a NULL bucket, which
     the oracle's GROUP BY keeps as an ordinary group — the touched-set
     joins must therefore be NULL-SAFE. Plain equality would duplicate
     the NULL row in the minute tier (anti-join keeps prev's copy while
     the batch partial merges separately) and drop it from the re-derived
-    hour/day tiers."""
+    hour/day tiers. Drilled for each aggregate class (testdata carries
+    no NULL ts, so only this drill exercises the geometry)."""
     import pandas as pd
 
-    from imdb_mapreduce_spark.streaming.jobs import multires_merge_batch
+    from imdb_mapreduce_spark.streaming.jobs import merge_batch
+
+    t0 = pd.Timestamp("2026-01-01 10:00:30")
+    cols, rows1, rows2 = _NULL_TS_BATCHES[spec.name]
 
     def batch(rows):
         return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["ts", "event_type", "value"])
+            pd.DataFrame(
+                [(t0 if ts == "t0" else pd.NaT, *rest) for ts, *rest in rows],
+                columns=cols,
+            )
         )
 
-    t0 = pd.Timestamp("2026-01-01 10:00:30")
-    b1 = batch([(t0, "click", 1.0), (pd.NaT, "click", 2.0)])
-    v1 = multires_merge_batch(b1, None)
-    b2 = batch([(pd.NaT, "click", 3.0)])
-    v2 = multires_merge_batch(b2, v1)
+    v1 = merge_batch(spec, batch(rows1), None)
+    v2 = merge_batch(spec, batch(rows2), v1)
 
     for tier in ("minute", "hour", "day"):
-        rows = {
-            (r["bucket"], r["event_type"]): (r["n_events"], float(r["s"]))
-            for r in v2[tier].collect()
-        }
-        null_rows = [k for k in rows if k[0] is None]
-        assert len(null_rows) == 1, (tier, rows)
-        # both NULL-ts events merged into the single NULL group
-        assert rows[(None, "click")] == (2, 5.0), (tier, rows)
-        # the real bucket survived alongside
-        assert any(k[0] is not None for k in rows), (tier, rows)
+        # one NULL-bucket ROW: the per-class dicts below key by bucket,
+        # which would hide a duplicated NULL row
+        n_null = sum(r["bucket"] is None for r in v2[tier].collect())
+        assert n_null == 1, (tier, n_null)
+        if spec is ROLLUP:
+            rows = {
+                (r["bucket"], r["event_type"]): (r["n_events"], float(r["s"]))
+                for r in v2[tier].collect()
+            }
+            null_rows = [k for k in rows if k[0] is None]
+            assert len(null_rows) == 1, (tier, rows)
+            # both NULL-ts events merged into the single NULL group
+            assert rows[(None, "click")] == (2, 5.0), (tier, rows)
+            # the real bucket survived alongside
+            assert any(k[0] is not None for k in rows), (tier, rows)
+        elif spec is DISTINCT:
+            rows = {r["bucket"]: list(r["hashes"]) for r in v2[tier].collect()}
+            null_keys = [k for k in rows if k is None]
+            assert len(null_keys) == 1, (tier, rows)
+            # users {2, 3} merged into the single NULL group, exactly once each
+            assert len(rows[None]) == 2, (tier, rows)
+            # the real bucket survived alongside with user 1
+            real = [v for k, v in rows.items() if k is not None]
+            assert len(real) == 1 and len(real[0]) == 1, (tier, rows)
+        else:
+            rows = {
+                r["bucket"]: sorted(x["v"] for x in r["sample"])
+                for r in v2[tier].collect()
+            }
+            null_keys = [k for k in rows if k is None]
+            assert len(null_keys) == 1, (tier, rows)
+            # the three NULL-ts rows (user 2 twice: a sample keeps
+            # multiplicity) merged into the single NULL group
+            assert rows[None] == [2.0, 3.0, 4.0], (tier, rows)
+            # the real bucket survived alongside with its one row
+            real = [v for k, v in rows.items() if k is not None]
+            assert real == [[1.0]], (tier, rows)
 
 
 def test_multires_drain_fails_loud_on_desynced_state_root(spark, tmp_path):
@@ -2153,7 +2252,7 @@ def test_multires_kmv_incremental_restart_drill(spark, tmp_path):
 
     from imdb_mapreduce_spark.streaming.jobs import (
         incremental_multires_drain,
-        multires_kmv_merge_batch,
+        merge_batch,
     )
 
     t0 = pd.Timestamp("2026-03-01 00:00:00")
@@ -2193,18 +2292,19 @@ def test_multires_kmv_incremental_restart_drill(spark, tmp_path):
         }
 
     phase1 = incremental_multires_drain(
-        spark, src, st, state_root, ckpt, merge_fn=multires_kmv_merge_batch
+        spark, src, st, state_root, ckpt, DISTINCT
     )
     assert phase1 is not None
     put_file(2)
     put_file(3)
     phase2 = incremental_multires_drain(
-        spark, src, st, state_root, ckpt, merge_fn=multires_kmv_merge_batch
+        spark, src, st, state_root, ckpt, DISTINCT
     )
     got = snap(phase2)
     assert os.path.exists(os.path.join(state_root, "v3", "_COMMIT"))
     all_rows = [r for b in batches.values() for r in b]
-    direct = multires_kmv_merge_batch(
+    direct = merge_batch(
+        DISTINCT,
         spark.createDataFrame(
             pd.DataFrame(all_rows, columns=["ts", "user_id"])
         ),
@@ -2217,39 +2317,6 @@ def test_multires_kmv_incremental_restart_drill(spark, tmp_path):
     assert len(hour0) == 1 and len(hour0[0]) == 4, got["hour"]
     # redundant restart: nothing new -> state unchanged
     phase3 = incremental_multires_drain(
-        spark, src, st, state_root, ckpt, merge_fn=multires_kmv_merge_batch
+        spark, src, st, state_root, ckpt, DISTINCT
     )
     assert snap(phase3) == got
-
-
-def test_multires_kmv_merge_null_ts_is_an_ordinary_group(spark):
-    """The sketch twin of the additive NULL-bucket drill above (r14):
-    NULL ts → NULL minute bucket, an ordinary group to the oracle's
-    GROUP BY, so the sketch merge's touched-set joins must be NULL-SAFE
-    too — plain equality would duplicate the NULL row in the minute tier
-    and drop it from the re-derived hour/day tiers. (Testdata carries no
-    NULL ts, so only this drill exercises the geometry.)"""
-    import pandas as pd
-
-    from imdb_mapreduce_spark.streaming.jobs import multires_kmv_merge_batch
-
-    def batch(rows):
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["ts", "user_id"])
-        )
-
-    t0 = pd.Timestamp("2026-01-01 10:00:30")
-    b1 = batch([(t0, 1), (pd.NaT, 2)])
-    v1 = multires_kmv_merge_batch(b1, None)
-    b2 = batch([(pd.NaT, 3), (pd.NaT, 2)])  # 2 again: dedup across batches
-    v2 = multires_kmv_merge_batch(b2, v1)
-
-    for tier in ("minute", "hour", "day"):
-        rows = {r["bucket"]: list(r["hashes"]) for r in v2[tier].collect()}
-        null_keys = [k for k in rows if k is None]
-        assert len(null_keys) == 1, (tier, rows)
-        # users {2, 3} merged into the single NULL group, exactly once each
-        assert len(rows[None]) == 2, (tier, rows)
-        # the real bucket survived alongside with user 1
-        real = [v for k, v in rows.items() if k is not None]
-        assert len(real) == 1 and len(real[0]) == 1, (tier, rows)
