@@ -28,7 +28,12 @@ from imdb_mapreduce_spark.ingest import (
     movie_to_cast,
 )
 from imdb_mapreduce_spark.operators import graph_export
-from imdb_mapreduce_spark.operators.graph import COSTAR_COLS, BfsResult, avg_degree
+from imdb_mapreduce_spark.operators.graph import (
+    COSTAR_COLS,
+    Adjacency,
+    BfsResult,
+    avg_degree,
+)
 from imdb_mapreduce_spark.operators.graph import costar_bfs
 from imdb_mapreduce_spark.operators.lookup import cast_of, movies_of
 from imdb_mapreduce_spark.sources.imdb import (
@@ -47,6 +52,8 @@ class ImdbEngine:
 
     def __init__(self, cast_edges: DataFrame, cache: bool = True):
         self.cast_edges = cast_edges.cache() if cache else cast_edges
+        # the two inverted indexes request() reads, filled on first use
+        self.adjacency = Adjacency(self.cast_edges)
         self._degrees: dict[str, float] = {}  # per query direction, on first use
         self._degrees_lock = threading.Lock()  # the service's handler threads
 
@@ -110,10 +117,12 @@ class ImdbEngine:
     ) -> tuple[list[str], list[tuple[str, str, int]]]:
         """The flagship query, reference reply shape ``{Vertices, Edges}``
         (``master.erl:263``): display-sorted vertices + (src, dst, level)
-        edges. The rounds are driver-side point lookups on the cached edge
-        table, at most two bounded collects per round, bounded by the
-        ``max_vertices`` budget (``None`` is an explicitly unbounded batch
-        use; :meth:`request_df` is the distributed form)."""
+        edges. The rounds are driver-side point lookups on the engine's
+        :class:`Adjacency`: keys an earlier request fetched cost no job,
+        the rest at most two bounded collects per round on the cached edge
+        table, bounded by the ``max_vertices`` budget (``None`` is an
+        explicitly unbounded batch use; :meth:`request_df` is the
+        distributed form)."""
         res = costar_bfs(
             self.cast_edges,
             name,
@@ -121,7 +130,7 @@ class ImdbEngine:
             level,
             max_vertices=max_vertices,
             degree=self._degree(node_type, level),
-            driver_rounds=True,
+            adjacency=self.adjacency,
         )
         return graph_export.sorted_vertices(res, res.edges), res.edges
 
@@ -168,3 +177,4 @@ class ImdbEngine:
 
     def unpersist(self) -> None:
         self.cast_edges.unpersist()
+        self.adjacency.clear()

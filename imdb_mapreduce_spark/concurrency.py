@@ -5,7 +5,9 @@ is wrapped in :func:`pyspark.inheritable_thread_target`, so its thread
 starts with the caller's local properties: the jobs it submits land in the
 caller's job group (and are cancelled with it), and under PySpark's
 pinned-thread mode its JVM thread is tied to the Python thread's life.
-A bare ``ThreadPoolExecutor`` thread inherits neither.
+A bare ``ThreadPoolExecutor`` thread inherits neither. With pinned threads
+off (``PYSPARK_PIN_THREAD=false``) PySpark has no properties to copy and
+hands the session back instead of a wrapper; the leg then runs as is.
 """
 
 from __future__ import annotations
@@ -26,7 +28,10 @@ def overlap(spark: SparkSession, *legs: Callable[[], Any]) -> list[Any]:
     one copy would overwrite each other's. The first exception a leg
     raises propagates once every leg has finished."""
     with ThreadPoolExecutor(max_workers=len(legs)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(leg)) for leg in legs
-        ]
+        futures = [pool.submit(_inheriting(spark, leg)) for leg in legs]
         return [f.result() for f in futures]
+
+
+def _inheriting(spark: SparkSession, leg: Callable[[], Any]) -> Callable[[], Any]:
+    wrap = inheritable_thread_target(spark)
+    return leg if wrap is spark else wrap(leg)

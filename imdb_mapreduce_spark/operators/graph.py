@@ -35,14 +35,25 @@ Seeds are JVM ``range`` leaves (:func:`one_row`): a local-rows
 tasks (~250 ms each on 4 cores). A round runs its ``count`` and broadcast
 jobs (5 on an 18.6k-edge cast graph), plus one degree job if not passed in.
 
-Budgeted point lookups (``costar_bfs(..., driver_rounds=True)``, the reply
-path of ``ImdbEngine.request``): a reply the budget bounds needs no
-distributed round. As the reference answers from its two in-RAM inverted
-indexes (``server.erl:111-152``), :func:`_lookup_rounds` runs each round
-as two filtered collects on the cached edge table — frontier → vias, then
-vias → co-entities — and does min-parent attachment, the visited set and
-both budget checks on the driver, over sets the budget bounds. A round is
-at most two jobs with no join, shuffle, broadcast, ``count`` or
+Budgeted point lookups (``costar_bfs(..., adjacency=Adjacency(edges))``,
+the reply path of ``ImdbEngine.request``): a reply the budget bounds needs
+no distributed round. As the reference answers from its two in-RAM
+inverted indexes (``server.erl:111-152``), :func:`_lookup_rounds` runs
+each round as two lookups — frontier → vias, then vias → co-entities —
+and does min-parent attachment, the visited set and both budget checks
+on the driver, over sets the budget bounds. The lookups read an
+:class:`Adjacency`: a bounded read-through cache of the two inverted
+indexes (actor → titles, title → actors; the reference's ``actors_db``
+and ``titles_db``), shared by both query directions. Keys it holds are
+answered from memory; the missing ones go to Spark as one filtered
+collect on the cached edge table, and each fetched key is kept with its
+distinct values, a key without rows as empty. It holds at most
+:data:`ADJACENCY_MAX_VALUES` values, evicting least-recently-used keys,
+and it stays exact because the edge table is never changed after the
+engine is built (``ImdbEngine.unpersist`` clears it). So a repeated
+request, or one whose root an earlier round already expanded, runs no
+job, and a cached reply or refusal equals a cold one. A round is at
+most two jobs with no join, shuffle, broadcast, ``count`` or
 checkpoint; a round refused on the work estimate runs none. Each key set
 enters the plan as ONE literal: a JSON array that ``from_json`` parses and
 Catalyst folds into an array constant, tested with ``array_contains``. It
@@ -56,6 +67,8 @@ so no name (commas, quotes, backslashes, NUL, non-BMP) can split a key.
 from __future__ import annotations
 
 import json
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, replace
 from functools import cache, reduce
 
@@ -215,8 +228,69 @@ def _lookup(edges: DataFrame, key_col: str, keys, val_col: str) -> list:
     return hits.select(key_col, val_col).collect()
 
 
+# The most values an Adjacency holds (an empty key counts as one):
+# ImdbEngine.REQUEST_MAX_VERTICES × BFS_WORK_SLACK, what one budgeted
+# hop-2 collect may already hold on the driver.
+ADJACENCY_MAX_VALUES = 100_000 * BFS_WORK_SLACK
+
+
+class Adjacency:
+    """A bounded read-through cache of ``edges``' adjacency lists, keyed
+    by (key column, value column, key); see the module docstring. One lock
+    guards the dict operations only: it is never held across a Spark job,
+    so a miss does not block hits, and two threads missing the same key
+    may both fetch it."""
+
+    def __init__(self, edges: DataFrame) -> None:
+        self.edges = edges
+        self._lists: OrderedDict[tuple, tuple] = OrderedDict()
+        self._size = 0
+        self._lock = threading.Lock()
+
+    def lookup(self, key_col: str, keys, val_col: str) -> list[tuple]:
+        """``(key, val)`` pairs of ``keys``, each val once per key. Only
+        the keys not held run a job: one :func:`_lookup` for all of them."""
+        keys = list(keys)
+        lists: dict = {}
+        with self._lock:
+            for k in keys:
+                vals = self._lists.get((key_col, val_col, k))
+                if vals is not None:
+                    self._lists.move_to_end((key_col, val_col, k))
+                    lists[k] = vals
+        missing = [k for k in keys if k not in lists]
+        if missing:
+            fetched: dict = {k: {} for k in missing}
+            for k, v in _lookup(self.edges, key_col, missing, val_col):
+                fetched[k][v] = None
+            with self._lock:
+                for k, vals in fetched.items():
+                    lists[k] = self._put((key_col, val_col, k), tuple(vals))
+                while self._size > ADJACENCY_MAX_VALUES:
+                    self._size -= max(1, len(self._lists.popitem(last=False)[1]))
+        return [(k, v) for k in keys for v in lists[k]]
+
+    def _put(self, key: tuple, vals: tuple) -> tuple:
+        old = self._lists.pop(key, None)
+        if old is not None:  # another thread fetched it meanwhile
+            self._size -= max(1, len(old))
+        self._lists[key] = vals
+        self._size += max(1, len(vals))
+        return vals
+
+    @property
+    def size(self) -> int:
+        """The values held, an empty key counting as one."""
+        return self._size
+
+    def clear(self) -> None:
+        with self._lock:
+            self._lists.clear()
+            self._size = 0
+
+
 def _lookup_rounds(
-    edges: DataFrame,
+    adjacency: Adjacency,
     root: str,
     node_col: str,
     via_col: str,
@@ -225,12 +299,14 @@ def _lookup_rounds(
     degree: float | None,
 ) -> list[tuple]:
     """:func:`bipartite_bfs`'s rounds and budget rules as driver-side point
-    lookups; returns the (level, src, dst)-sorted edges. Each collect is
-    bounded by the previous round's budget checks: hop 1 returns the edges
-    of ≤ ``max_vertices`` frontier keys, hop 2 one round's candidate edges
-    (~frontier × degree², which the work estimate caps at
-    ``BFS_WORK_SLACK`` × budget on average)."""
-    deg_of = cache(lambda: avg_degree(edges, node_col) if degree is None else degree)
+    lookups on ``adjacency``; returns the (level, src, dst)-sorted edges.
+    Each lookup is bounded by the previous round's budget checks: hop 1
+    returns the edges of ≤ ``max_vertices`` frontier keys, hop 2 one
+    round's candidate edges (~frontier × degree², which the work estimate
+    caps at ``BFS_WORK_SLACK`` × budget on average)."""
+    deg_of = cache(
+        lambda: avg_degree(adjacency.edges, node_col) if degree is None else degree
+    )
     visited = {root}
     frontier = [root]
     out: list[tuple] = []
@@ -243,7 +319,7 @@ def _lookup_rounds(
                 raise BfsBudgetExceeded(int(est), max_vertices, lvl, estimated=True)
         # hop 1: each via's minimum frontier parent
         parent: dict[str, str] = {}
-        for node, via in _lookup(edges, node_col, frontier, via_col):
+        for node, via in adjacency.lookup(node_col, frontier, via_col):
             if via not in parent or node < parent[via]:
                 parent[via] = node
         if not parent:
@@ -251,7 +327,7 @@ def _lookup_rounds(
         # hop 2: each unvisited co-entity's minimum parent (a frontier node
         # is visited, so no node becomes its own child)
         children: dict[str, str] = {}
-        for via, node in _lookup(edges, via_col, parent, node_col):
+        for via, node in adjacency.lookup(via_col, parent, node_col):
             if node not in visited and (node not in children or parent[via] < children[node]):
                 children[node] = parent[via]
         if not children:
@@ -460,15 +536,16 @@ def costar_bfs(
     max_broadcast_rows: int = 1_000_000,
     max_vertices: int | None = None,
     degree: float | None = None,
-    driver_rounds: bool = False,
+    adjacency: Adjacency | None = None,
 ) -> BfsResult:
     """k-level co-star / shared-cast-movie graph — the reference's flagship
     query (``master.erl:251-288``). ``cast_edges`` is the silver
     ``(tconst, title, actor)`` table; both query directions run against it —
     no inverted copy needed. ``degree``: a kept :func:`avg_degree`.
-    ``driver_rounds``: run the rounds as point lookups
-    (:func:`_lookup_rounds`) and return the edges as a sorted list — for a
-    reply the ``max_vertices`` budget bounds.
+    ``adjacency``: an :class:`Adjacency` of ``cast_edges``; when given, the
+    rounds run as point lookups on it (:func:`_lookup_rounds`) and the
+    edges come back as a sorted list — for a reply the ``max_vertices``
+    budget bounds.
     """
     if not name:
         # API-level input validation (F8, /root/reference/src/client/client.erl:139-140)
@@ -479,9 +556,11 @@ def costar_bfs(
         raise ValueError("level must be in 1..10 (reference GUI offers 1..4)")
 
     node_col, via_col = COSTAR_COLS[node_type]
-    if driver_rounds:
+    if adjacency is not None:
+        if adjacency.edges is not cast_edges:
+            raise ValueError("adjacency must index cast_edges")
         edges = _lookup_rounds(
-            cast_edges, name, node_col, via_col, level, max_vertices, degree
+            adjacency, name, node_col, via_col, level, max_vertices, degree
         )
         return BfsResult(root=name, node_type=node_type, edges=edges, vertices=None)
     res = bipartite_bfs(

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -29,17 +30,28 @@ N_QUERIES = 10  # vec_id < 10 serve as the query set
 TOP_K = 5
 
 
-@lru_cache(maxsize=None)
+# Distinct fold strings the memo keeps: a registry pass builds a few
+# dozen (dot/norm folds, the 16 projection rows, each quantizer's pivots);
+# the pivot folds embed corpus vectors, so a driver serving many corpora
+# would otherwise grow it without bound.
+EXPR_MEMO_SIZE = 1024
+
+
 def _expr_memo(sql: str) -> Column:
     """``F.expr`` memoized on the SQL text (r16 opt, guide §1.2 driver
     work): the dot/norm/projection builders re-parse the same multi-KB
     constant fold strings on EVERY query build — pure driver-side
-    construction cost, no data involved (a Column is an immutable
-    expression tree, reusable across plans; the codegen cache plays the
-    same role one layer down). Keyed by the exact SQL text, so two
-    different expressions can never collide. Per-process, like every
-    py4j handle — a Column survives SparkSession restarts because the
-    JVM gateway does."""
+    construction cost (a Column is an immutable expression tree, reusable
+    across plans; the codegen cache plays the same role one layer down).
+    Keyed by the exact SQL text, so two different expressions can never
+    collide, and by the live py4j gateway, whose JVM the Column handle
+    lives in: a session restart on the same gateway keeps its entries, a
+    restarted backend gets fresh ones."""
+    return _expr_on(SparkContext._gateway, sql)
+
+
+@lru_cache(maxsize=EXPR_MEMO_SIZE)
+def _expr_on(gateway, sql: str) -> Column:
     return F.expr(sql)
 
 # Sequential double fold — matches the oracle's list_reduce fold bit-exactly.
@@ -1122,8 +1134,8 @@ def _d2_lit_fold(col: str, vec: "list[float]") -> Column:
     repr() exactly (same trick as :func:`_bucket_col`)."""
     arr = ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec)
     # memoized parse (r16 opt): k of these multi-KB folds build per
-    # quantizer call across the IVF/semdedup queries — same rationale
-    # as _expr_memo's docstring (code cache, not data)
+    # quantizer call across the IVF/semdedup queries; the pivots are
+    # data, which is why the memo is bounded (EXPR_MEMO_SIZE)
     return _expr_memo(
         f"aggregate(zip_with({col}, array({arr}),"
         " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
@@ -1548,8 +1560,12 @@ def _proj_planes():
 _PROJ_SCALE = "0.25"  # 1/sqrt(PROJ_DIM), exact in binary for PROJ_DIM=16
 
 
-@lru_cache(maxsize=None)
 def _proj_cols() -> "list[Column]":
+    return _proj_cols_on(SparkContext._gateway)
+
+
+@lru_cache(maxsize=1)  # one live gateway at a time
+def _proj_cols_on(gateway) -> "list[Column]":
     """The PROJ_DIM projection components of ``embedding`` as expression
     folds against literal rows of the seeded matrix, scaled by
     1/√PROJ_DIM (norm-preserving in expectation). Same literal-repr

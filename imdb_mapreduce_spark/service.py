@@ -16,14 +16,17 @@ connection instead of killing it, matching a long-running service's
 contract.
 
 Scale posture: the service is a thin driver-side frontend — each request
-runs its BFS rounds as point lookups on the cached edge table
-(``operators/graph.py``), like the reference master gathering worker
-lookups, and holds only sets the request budget bounds. Threaded handlers
-are safe because SparkSession actions are thread-safe; concurrent requests
-simply become concurrent Spark jobs sharing the cached edge table. Per
-request: no job at level 1 and at most two filtered collects per round
-after it; on an 18k-edge cast graph a served request averages ~2.1 jobs
-(~1.2 rounds), none over a Python RDD.
+runs its BFS rounds as point lookups on the engine's bounded cache of the
+two inverted indexes (``operators/graph.Adjacency``), like the reference
+master answering from its ETS tables, and holds only sets the request
+budget bounds. Threaded handlers are safe because SparkSession actions
+are thread-safe and the cache's lock is never held across a job;
+concurrent misses simply become concurrent Spark jobs sharing the cached
+edge table. Per request: no job at level 1, for a repeat, or for any
+round whose keys an earlier request already fetched; otherwise at most
+two filtered collects per round, for the missing keys only. On an
+18k-edge cast graph a served request averages ~0.9 jobs (~1.2 rounds),
+none over a Python RDD.
 
 Each request logs one INFO line on this module's logger (name, type,
 level, latency, vertices and edges returned, outcome); it is silent unless

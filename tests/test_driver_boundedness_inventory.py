@@ -75,13 +75,17 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # one degree aggregate shared by both BFS forms and ImdbEngine, which
     # runs it once per query direction
     ("operators/graph.py", "avg_degree", "collect"): (1, "scalar-agg"),
-    # the point lookup of a budgeted request's rounds (_lookup_rounds,
-    # ImdbEngine.request), one per hop. Hop 1 returns the edges of the
-    # frontier: ≤ max_vertices keys after the previous round's exact
-    # check, ~frontier × degree rows. Hop 2 returns one round's candidate
-    # edges, ~frontier × degree², which the pre-join estimate caps at
-    # BFS_WORK_SLACK (16) × budget on AVERAGE degree; a frontier of hubs
-    # can exceed it by its excess degree.
+    # the miss path of a budgeted request's point lookups
+    # (Adjacency.lookup under _lookup_rounds, ImdbEngine.request), one per
+    # hop, fetching only the keys the engine's Adjacency does not hold.
+    # Hop 1 returns the edges of the frontier: ≤ max_vertices keys after
+    # the previous round's exact check, ~frontier × degree rows. Hop 2
+    # returns one round's candidate edges, ~frontier × degree², which the
+    # pre-join estimate caps at BFS_WORK_SLACK (16) × budget on AVERAGE
+    # degree; a frontier of hubs can exceed it by its excess degree. The
+    # Adjacency keeps at most ADJACENCY_MAX_VALUES (REQUEST_MAX_VERTICES ×
+    # BFS_WORK_SLACK = 1.6 M) fetched values, evicting least-recently-used
+    # keys.
     ("operators/graph.py", "_lookup", "collect"): (1, "bounded-export"),
     # the one fetch of a distributed BFS result's edges (to_dot, over
     # ImdbEngine.request_df); DFS order is then worked out on the driver

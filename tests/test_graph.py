@@ -322,9 +322,14 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
     edges, and the same refusals (kind, count and level), as the
     distributed ``bipartite_bfs`` rounds, in both directions, at levels
     1-4, under budgets that answer, trip the exact post-round check and
-    trip the pre-join work estimate."""
+    trip the pre-join work estimate: each on a cold :class:`Adjacency`,
+    and every case again, in a shuffled order and twice over, on ONE
+    shared one that earlier cases have filled."""
+    import random
+
     from imdb_mapreduce_spark.operators.graph import (
         COSTAR_COLS,
+        Adjacency,
         BfsBudgetExceeded,
         avg_degree,
     )
@@ -343,6 +348,7 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
         "movie": ["Now, Then", "Smile \U0001F600", "Back\\slash", "Title 03"],
     }
     outcomes = set()
+    distributed = []
     for node_type, names in roots.items():
         degree = avg_degree(hazard_graph, COSTAR_COLS[node_type][0])
         for i, name in enumerate(names):
@@ -351,18 +357,41 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
             for level, budget in cases:
                 kw = dict(name=name, node_type=node_type, level=level,
                           max_vertices=budget, degree=degree)
-                driver = run(driver_rounds=True, **kw)
-                assert driver == run(**kw), kw
+                want = run(**kw)
+                distributed.append((kw, want))
+                driver = run(adjacency=Adjacency(hazard_graph), **kw)
+                assert driver == want, kw
                 outcomes.add(driver[:2] if driver[0] == "refused" else "answer")
                 if driver[0] == "answer" and level > 1:
                     assert driver[1], kw  # every root here has co-entities
     assert outcomes == {"answer", ("refused", False), ("refused", True)}
+    shared = Adjacency(hazard_graph)
+    random.Random(7).shuffle(distributed)
+    for kw, want in distributed + distributed:
+        assert run(adjacency=shared, **kw) == want, kw
+
+
+def _jobs_of(sc, group: str, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)``'s result, or the exception it raised, and
+    the Spark jobs it ran under the job group ``group``."""
+    sc.setJobGroup(group, "budgeted request")
+    try:
+        out = fn(*args, **kwargs)
+    except Exception as e:  # noqa: BLE001 — returned to the caller
+        out = e
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
     """A level-k request runs at most two jobs per round it runs (its two
     lookups), and the round an estimated refusal stops at runs none. The
-    degree aggregate runs once per engine, first, and is not counted."""
+    degree aggregate runs once per engine, first, and is not counted.
+    Replayed on the same engine, every request, refusals included, runs
+    no job and gets the same reply; so does a fresh request whose root an
+    earlier round expanded."""
     from imdb_mapreduce_spark.api import ImdbEngine
     from imdb_mapreduce_spark.operators.graph import BfsBudgetExceeded
 
@@ -379,23 +408,90 @@ def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
         ("Now, Then", "movie", 2, 1, "estimated"),  # in round 1: no job
         ("Now, Then", "movie", 4, 20, "estimated"),  # in round 2
     ]
+    replies = []
     for i, (name, node_type, level, budget, want) in enumerate(cases):
-        group = f"test-request-jobs-{i}"
-        sc.setJobGroup(group, "budgeted request")
-        try:
-            _, edges = engine.request(name, node_type, level, max_vertices=budget)
+        reply, jobs = _jobs_of(
+            sc, f"test-request-jobs-{i}", engine.request,
+            name, node_type, level, max_vertices=budget,
+        )
+        if isinstance(reply, BfsBudgetExceeded):
+            # the refused round ran its lookups only if the refusal is exact
+            rounds = reply.level - reply.estimated
+            kind = "estimated" if reply.estimated else "exact"
+            reply = str(reply)
+        else:
+            edges = reply[1]
             rounds = min(level - 1, max((e[2] for e in edges), default=0) + 1)
             kind = "answer"
-        except BfsBudgetExceeded as e:
-            # the refused round ran its lookups only if the refusal is exact
-            rounds = e.level - e.estimated
-            kind = "estimated" if e.estimated else "exact"
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        replies.append(reply)
         assert kind == want, (name, node_type, level, budget, kind)
         assert jobs <= 2 * rounds, (name, node_type, level, budget, jobs, rounds)
+
+    for i, (name, node_type, level, budget, _) in enumerate(cases):
+        reply, jobs = _jobs_of(
+            sc, f"test-request-repeat-{i}", engine.request,
+            name, node_type, level, max_vertices=budget,
+        )
+        if isinstance(reply, BfsBudgetExceeded):
+            reply = str(reply)
+        assert (reply, jobs) == (replies[i], 0), (name, node_type, level, budget)
+    # a co-star of the hub was in the hub request's round-2 frontier
+    costar = replies[0][1][0][1]
+    reply, jobs = _jobs_of(
+        sc, "test-request-expanded-root", engine.request, costar, "actor", 2
+    )
+    assert jobs == 0, costar
+    assert reply == ImdbEngine(hazard_graph, cache=False).request(costar, "actor", 2)
+
+
+def test_adjacency_stays_within_capacity_and_unpersist_empties_it(
+    hazard_graph, monkeypatch
+):
+    """With the capacity cut to a few dozen values, a session of requests
+    keeps the cache within it, evicting as it goes, and every reply and
+    refusal still equals a cold one; ``unpersist`` empties the cache."""
+    from imdb_mapreduce_spark.api import ImdbEngine
+    from imdb_mapreduce_spark.operators import graph
+
+    def outcome(engine, req):
+        try:
+            return engine.request(*req)
+        except graph.BfsBudgetExceeded as e:
+            return str(e)
+
+    session = [
+        ("Zed Hub", "actor", 3, 10_000),
+        ("Now, Then", "movie", 3, 10_000),
+        ("Ann, Jr.", "actor", 4, 10_000),
+        ("Zed Hub", "actor", 4, 12),
+        ("Smile \U0001F600", "movie", 2, 10_000),
+        ("Title 03", "movie", 4, 30),
+    ]
+    session += session[::-1]
+    cold = [outcome(ImdbEngine(hazard_graph, cache=False), req) for req in session]
+
+    # what one budgeted hop-2 collect may already hold on the driver
+    assert graph.ADJACENCY_MAX_VALUES == (
+        ImdbEngine.REQUEST_MAX_VERTICES * graph.BFS_WORK_SLACK
+    )
+    cap = 40
+    monkeypatch.setattr(graph, "ADJACENCY_MAX_VALUES", cap)
+    fetched = []
+    real_lookup = graph._lookup
+
+    def counted(edges, key_col, keys, val_col):
+        rows = real_lookup(edges, key_col, keys, val_col)
+        fetched.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(graph, "_lookup", counted)
+    engine = ImdbEngine(hazard_graph, cache=False)
+    for req, want in zip(session, cold, strict=True):
+        assert outcome(engine, req) == want, req
+        assert engine.adjacency.size <= cap, req
+    assert sum(fetched) > 2 * cap  # held at most cap of them: it evicted
+    engine.unpersist()
+    assert engine.adjacency.size == 0 and not engine.adjacency._lists
 
 
 # Names whose display order is easy to get wrong: non-ASCII against ASCII

@@ -165,3 +165,74 @@ def test_no_process_wide_environment_mutation():
         "dependency instead of splicing it into sys.path / PYTHONPATH / "
         "the workers' environment"
     )
+
+
+# Module-level caches allowed without a finite maxsize: name → reason.
+UNBOUNDED_CACHES: dict[str, str] = {}
+
+
+def _cache_bound(deco: ast.expr, consts: dict) -> int | None:
+    """The maxsize a ``cache`` / ``lru_cache`` decorator gives, None when
+    unbounded or not provably finite; -1 when ``deco`` is no cache."""
+
+    def name(f: ast.expr) -> str:
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+    if name(deco) == "cache":
+        return None
+    if name(deco) == "lru_cache":
+        return 128  # the bare decorator's default
+    if not isinstance(deco, ast.Call):
+        return -1
+    if name(deco.func) == "cache":
+        return None
+    if name(deco.func) != "lru_cache":
+        return -1
+    args = deco.args[:1] + [k.value for k in deco.keywords if k.arg == "maxsize"]
+    if not args:
+        return 128
+    arg = args[0]
+    if isinstance(arg, ast.Name):
+        arg = consts.get(arg.id)
+    value = arg.value if isinstance(arg, ast.Constant) else None
+    return value if isinstance(value, int) else None
+
+
+def test_every_module_level_cache_is_bounded():
+    """A module-level ``functools.cache`` / ``lru_cache`` lives as long as
+    the process; one keyed by data (a corpus-derived SQL string, a request)
+    grows with every new key, and one holding py4j handles also pins their
+    JVM objects. Each needs a finite ``maxsize`` or an entry in
+    ``UNBOUNDED_CACHES`` saying why its key set is closed."""
+    unbounded: list[str] = []
+    for dirpath, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            tree = ast.parse(open(path).read(), filename=rel)
+            consts = {
+                t.id: node.value
+                for node in tree.body
+                if isinstance(node, ast.Assign)
+                for t in node.targets
+                if isinstance(t, ast.Name)
+            }
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    site, decos = node.name, node.decorator_list
+                elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Call):
+                    site = ast.unparse(node.targets[0])
+                    decos = [node.value.func, node.value]
+                else:
+                    continue
+                if site not in UNBOUNDED_CACHES and any(
+                    _cache_bound(d, consts) is None for d in decos
+                ):
+                    unbounded.append(f"{rel}:{node.lineno} {site}")
+    assert not unbounded, (
+        f"module-level cache without a finite maxsize at {unbounded} — give "
+        "it one, or list it in UNBOUNDED_CACHES with the reason its key set "
+        "is closed"
+    )

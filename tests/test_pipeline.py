@@ -610,7 +610,7 @@ def test_verify_pairs_jaccard_branch_plans(spark, monkeypatch):
     assert "ShuffledHashJoin" in p_fallback
 
 
-def test_dot_unrolled_parse_matches_column_loop(spark):
+def test_dot_unrolled_parse_matches_column_loop(spark, monkeypatch):
     """Bit-parity pin for the r16 construction change: `_dot_unrolled`
     now renders its left-associated sum as ONE parsed (and memoized)
     SQL string instead of a ~4·dim py4j Column-arithmetic loop. The
@@ -643,7 +643,14 @@ def test_dot_unrolled_parse_matches_column_loop(spark):
     for r in rows:
         assert r["new"] == r["old"], r["vec_id"]  # bitwise, not approx
 
-    # the memo returns the SAME Column object for the same SQL text
+    # the memo returns the SAME Column object for the same SQL text, and
+    # a fresh one once the py4j gateway its handle lives in is replaced
+    from pyspark import SparkContext
+
     c1 = _expr_memo("CAST(0 AS DOUBLE) + 1.0")
     c2 = _expr_memo("CAST(0 AS DOUBLE) + 1.0")
     assert c1 is c2
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert _expr_memo("CAST(0 AS DOUBLE) + 1.0") is not c1
+    monkeypatch.undo()
+    assert _expr_memo("CAST(0 AS DOUBLE) + 1.0") is c1

@@ -118,29 +118,22 @@ def test_service_logs_one_line_per_request(cast_edges, caplog):
         assert line.endswith(tail), line
 
 
-def test_degree_is_computed_once_under_contending_threads(monkeypatch):
-    """Many handler threads asking for a degree at once still run one
-    aggregate per direction."""
+def _contend(ask, n: int = 16) -> list:
+    """``ask(kind)`` on ``n`` threads released at once, ``kind``
+    alternating "movie" / "actor"; returns each thread's result."""
+    got: list = []
+    start = threading.Barrier(n)
 
-    def slow_degree(edges, node_col):
-        time.sleep(0.02)  # a window for a second thread to slip in
-        return 2.0
-
-    calls = _counting_degree(monkeypatch, slow_degree)
-    engine = ImdbEngine(cast_edges=None, cache=False)
-    got: list[float] = []
-    start = threading.Barrier(16)
-
-    def ask(kind: str) -> None:
+    def run(kind: str) -> None:
         start.wait(timeout=30)
-        got.append(engine._degree(kind))
+        got.append((kind, ask(kind)))
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
         threads = [
-            threading.Thread(target=ask, args=("actor" if i % 2 else "movie",))
-            for i in range(16)
+            threading.Thread(target=run, args=("actor" if i % 2 else "movie",))
+            for i in range(n)
         ]
         for t in threads:
             t.start()
@@ -149,5 +142,51 @@ def test_degree_is_computed_once_under_contending_threads(monkeypatch):
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
-    assert got == [2.0] * 16
+    return got
+
+
+def test_degree_is_computed_once_under_contending_threads(monkeypatch):
+    """Many handler threads asking for a degree at once still run one
+    aggregate per direction. Many asking the engine's adjacency for the
+    same keys at once get equal replies; each thread fetches a key it
+    missed once, and once the race is over no key is fetched again."""
+    from imdb_mapreduce_spark.operators import graph
+
+    def slow_degree(edges, node_col):
+        time.sleep(0.02)  # a window for a second thread to slip in
+        return 2.0
+
+    calls = _counting_degree(monkeypatch, slow_degree)
+    engine = ImdbEngine(cast_edges=None, cache=False)
+    assert [v for _, v in _contend(engine._degree)] == [2.0] * 16
     assert sorted(calls) == ["actor", "title"]
+
+    fetches: list[tuple[str, list]] = []
+
+    def slow_lookup(edges, key_col, keys, val_col):
+        fetches.append((key_col, list(keys)))
+        time.sleep(0.02)
+        return [(k, f"{k}/{i}") for k in keys if k != "dead end" for i in (1, 0, 1)]
+
+    monkeypatch.setattr(graph, "_lookup", slow_lookup)
+    keys = {"actor": ["b", "a", "dead end"], "movie": ["T", "a", "dead end"]}
+
+    def ask(kind: str) -> list:
+        key_col, val_col = graph.COSTAR_COLS[kind]
+        return engine.adjacency.lookup(key_col, keys[kind], val_col)
+
+    want = {
+        "actor": [("b", "b/1"), ("b", "b/0"), ("a", "a/1"), ("a", "a/0")],
+        "movie": [("T", "T/1"), ("T", "T/0"), ("a", "a/1"), ("a", "a/0")],
+    }
+    assert all(got == want[kind] for kind, got in _contend(ask))
+    for key_col, fetched in fetches:
+        assert len(set(fetched)) == len(fetched)
+    per_key: dict[tuple, int] = {}
+    for key_col, fetched in fetches:
+        for k in fetched:
+            per_key[key_col, k] = per_key.get((key_col, k), 0) + 1
+    assert len(per_key) == 6 and max(per_key.values()) <= 8, per_key
+    fetches.clear()
+    assert all(got == want[kind] for kind, got in _contend(ask))
+    assert fetches == []
