@@ -24,7 +24,8 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -84,11 +85,24 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         r = find(n)
         if r not in roots or n < roots[r]:
             roots[r] = n
-    rows = [(n, roots[find(n)]) for n in parent]
-    schema = edges.schema[0].dataType
-    return edges.sparkSession.createDataFrame(
-        rows, schema=f"node {schema.simpleString()}, component {schema.simpleString()}"
+    t = edges.schema[0].dataType.simpleString()
+    frame = pd.DataFrame(
+        [(n, roots[find(n)]) for n in parent], columns=["node", "component"]
     )
+    return local_relation(
+        edges.sparkSession, frame, f"node {t}, component {t}"
+    )
+
+
+def local_relation(spark: SparkSession, frame: pd.DataFrame, schema: str) -> DataFrame:
+    """A driver-computed result as a relation: ``frame`` under ``schema``.
+
+    With Arrow on, a pandas frame becomes a JVM ``LocalRelation``, which
+    a later plan scans in place; a Python list of rows becomes a
+    ``LogicalRDD`` over a Python RDD, and every scan of it starts
+    Python-worker tasks. With Arrow off both are a ``LogicalRDD``, with
+    the same rows."""
+    return spark.createDataFrame(frame, schema)
 
 
 def _checksum(df: DataFrame, *cols: str) -> tuple[int, int | None]:

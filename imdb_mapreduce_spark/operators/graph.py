@@ -47,7 +47,8 @@ indexes (actor → titles, title → actors; the reference's ``actors_db``
 and ``titles_db``), shared by both query directions. Keys it holds are
 answered from memory; the missing ones go to Spark as one filtered
 collect on the cached edge table, and each fetched key is kept with its
-distinct values, a key without rows as empty. It holds at most
+distinct values, a key without rows as empty. A key another thread is
+fetching is waited for, not fetched twice. It holds at most
 :data:`ADJACENCY_MAX_VALUES` values, evicting least-recently-used keys,
 and it stays exact because the edge table is never changed after the
 engine is built (``ImdbEngine.unpersist`` clears it). So a repeated
@@ -68,6 +69,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from collections import OrderedDict
 from dataclasses import dataclass, replace
 from functools import cache, reduce
@@ -232,47 +234,87 @@ def _lookup(edges: DataFrame, key_col: str, keys, val_col: str) -> list:
 # ImdbEngine.REQUEST_MAX_VERTICES × BFS_WORK_SLACK, what one budgeted
 # hop-2 collect may already hold on the driver.
 ADJACENCY_MAX_VALUES = 100_000 * BFS_WORK_SLACK
+# The longest a lookup waits for another thread's fetch of a key it
+# misses before fetching the key itself; a lookup job takes well under a
+# second on a 4-core host.
+ADJACENCY_WAIT_S = 10.0
 
 
 class Adjacency:
     """A bounded read-through cache of ``edges``' adjacency lists, keyed
     by (key column, value column, key); see the module docstring. One lock
     guards the dict operations only: it is never held across a Spark job,
-    so a miss does not block hits, and two threads missing the same key
-    may both fetch it."""
+    so a miss does not block hits. A key being fetched carries an in-flight
+    marker, and a second thread that misses it waits for that fetch (at
+    most :data:`ADJACENCY_WAIT_S`) instead of running its own; if the
+    fetch raises or the wait runs out, the waiter fetches the key itself."""
 
     def __init__(self, edges: DataFrame) -> None:
         self.edges = edges
         self._lists: OrderedDict[tuple, tuple] = OrderedDict()
         self._size = 0
         self._lock = threading.Lock()
+        self._inflight: dict[tuple, threading.Event] = {}
 
     def lookup(self, key_col: str, keys, val_col: str) -> list[tuple]:
         """``(key, val)`` pairs of ``keys``, each val once per key. Only
-        the keys not held run a job: one :func:`_lookup` for all of them."""
+        the keys neither held nor in flight run a job: one :func:`_lookup`
+        for all of them."""
         keys = list(keys)
         lists: dict = {}
+        mine: list = []
+        theirs: dict = {}
         with self._lock:
-            for k in keys:
-                vals = self._lists.get((key_col, val_col, k))
+            for k in dict.fromkeys(keys):
+                ck = (key_col, val_col, k)
+                vals = self._lists.get(ck)
                 if vals is not None:
-                    self._lists.move_to_end((key_col, val_col, k))
+                    self._lists.move_to_end(ck)
                     lists[k] = vals
-        missing = [k for k in keys if k not in lists]
-        if missing:
-            fetched: dict = {k: {} for k in missing}
-            for k, v in _lookup(self.edges, key_col, missing, val_col):
+                elif ck in self._inflight:
+                    theirs[k] = self._inflight[ck]
+                else:
+                    self._inflight[ck] = threading.Event()
+                    mine.append(k)
+        if mine:
+            lists.update(self._fetch(key_col, mine, val_col, claimed=True))
+        deadline = time.monotonic() + ADJACENCY_WAIT_S
+        for k, fetched in theirs.items():
+            fetched.wait(max(0.0, deadline - time.monotonic()))
+            with self._lock:
+                vals = self._lists.get((key_col, val_col, k))
+            if vals is not None:
+                lists[k] = vals
+        rest = [k for k in theirs if k not in lists]
+        if rest:
+            lists.update(self._fetch(key_col, rest, val_col, claimed=False))
+        return [(k, v) for k in keys for v in lists[k]]
+
+    def _fetch(self, key_col: str, keys: list, val_col: str, claimed: bool) -> dict:
+        """One :func:`_lookup` for ``keys``, kept and returned as key →
+        vals. With ``claimed`` the keys' in-flight markers are this call's:
+        they are released once the values are kept, or when the job raises."""
+        try:
+            fetched: dict = {k: {} for k in keys}
+            for k, v in _lookup(self.edges, key_col, keys, val_col):
                 fetched[k][v] = None
             with self._lock:
-                for k, vals in fetched.items():
-                    lists[k] = self._put((key_col, val_col, k), tuple(vals))
+                out = {
+                    k: self._put((key_col, val_col, k), tuple(vals))
+                    for k, vals in fetched.items()
+                }
                 while self._size > ADJACENCY_MAX_VALUES:
                     self._size -= max(1, len(self._lists.popitem(last=False)[1]))
-        return [(k, v) for k in keys for v in lists[k]]
+            return out
+        finally:
+            if claimed:
+                with self._lock:
+                    for k in keys:
+                        self._inflight.pop((key_col, val_col, k)).set()
 
     def _put(self, key: tuple, vals: tuple) -> tuple:
         old = self._lists.pop(key, None)
-        if old is not None:  # another thread fetched it meanwhile
+        if old is not None:  # a waiter that gave up fetched it too
             self._size -= max(1, len(old))
         self._lists[key] = vals
         self._size += max(1, len(vals))

@@ -1,22 +1,37 @@
 """PageRank as iterative DataFrame joins — the second iterative algorithm
 in the engine (alongside ``operators/components.py``).
 
-Execution shape per iteration: one join (ranks onto the degree-annotated
-edge table) + one aggregation (contributions per destination), both
-shuffling on the node key — the minimal shuffle set for distributed
-PageRank. Lineage is truncated with ``localCheckpoint`` every few rounds
-(the same discipline as BFS/components: an unbounded iterative plan DAG is
-what kills iterative Spark jobs at scale, not the math). Cadence measured
-r06 over 10 iterations at sf0.1: ISOLATED min-of-3 ranks every-5 best
-(1/2/3/5/10 → 5.0/4.3/4.1/3.8/5.3 s), but inside the 59-query bench —
-where other queries' cached blocks pressure the storage memory —
-every-5 regressed to 5.4 s while every-3 held 4.0 s: longer segments
-keep more recomputable lineage alive exactly when eviction is likely.
-Default is 3, the pressured-context winner; the right cadence on a real
-cluster still trades block pressure against plan depth and belongs to
-the caller.
+Two execution paths in :func:`pagerank_exact`, chosen by one ``count()``
+of the edge relation:
 
-100 TB posture:
+- **Driver rounds**, at most :data:`DRIVER_MAX_EDGES` edges: one Arrow
+  collect of the edges, then the same scaled-integer rounds in numpy
+  int64, returned as a JVM ``LocalRelation``. Three Spark jobs (the
+  count, which adaptive execution runs as two, and the collect) instead
+  of four or more per round. This is the
+  reference's posture — the whole graph in RAM, answered from memory
+  (SURVEY §0) — and the point of McSherry et al., "Scalability! But at
+  what COST?" (HotOS 2015): a graph that fits one machine runs PageRank
+  faster in a plain loop than on a distributed engine.
+- **Distributed rounds**, past the bound. The rest of this docstring is
+  about them.
+
+Execution shape per distributed iteration: one join (ranks onto the
+degree-annotated edge table) + one aggregation (contributions per
+destination), both shuffling on the node key — the minimal shuffle set
+for distributed PageRank. Lineage is truncated with ``localCheckpoint``
+every few rounds (the same discipline as BFS/components: an unbounded
+iterative plan DAG is what kills iterative Spark jobs at scale, not the
+math). Cadence measured r06 over 10 iterations at sf0.1: ISOLATED
+min-of-3 ranks every-5 best (1/2/3/5/10 → 5.0/4.3/4.1/3.8/5.3 s), but
+inside the 59-query bench — where other queries' cached blocks pressure
+the storage memory — every-5 regressed to 5.4 s while every-3 held
+4.0 s: longer segments keep more recomputable lineage alive exactly when
+eviction is likely. Default is 3, the pressured-context winner; the right
+cadence on a real cluster still trades block pressure against plan depth
+and belongs to the caller.
+
+100 TB posture of the distributed rounds:
 - the edge table is degree-annotated ONCE and cached — per-iteration work
   touches only (node, rank) tuples beyond it;
 - no driver-side state but two scalar counts (N, and the convergence
@@ -28,8 +43,21 @@ the caller.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from imdb_mapreduce_spark.operators.components import local_relation
+
+# pagerank_exact runs a graph of at most this many edges on the driver.
+# sf0.1's co-purchase graph (2.39 M edges) fits. At the bound the
+# collected edges and the per-edge int64 arrays peaked at 455 MB Python
+# RSS (+320 MB over the session) on a 4 M-edge bigint graph. Kept like
+# graph_queries' PR_PERSIST_MAX_SRC_ROWS: a data-proportional decision,
+# not an option.
+DRIVER_MAX_EDGES = 4_000_000
+INT64_MAX = 2**63 - 1
 
 
 def pagerank(
@@ -121,10 +149,20 @@ def pagerank_exact(
     r04 item 4). Returns (node, rank_scaled) with rank ≈ rank_scaled /
     scale.
 
-    Identical shuffle shape to :func:`pagerank` (one join + one agg per
-    round, checkpointed lineage). Bound check at scale=10^15: total rank
-    mass ≤ 10^15, so per-node contributions sum < 10^15 and the damping
-    multiply peaks below 10^17 — five orders of magnitude inside int64.
+    A graph of at most :data:`DRIVER_MAX_EDGES` edges runs on the driver
+    (see the module docstring): one ``count()`` decides, one Arrow collect
+    fetches the edges, and numpy int64 runs the same rounds term for term,
+    so both paths return the same ranks bit for bit. Where Spark's ANSI
+    arithmetic would raise on a bigint overflow, the driver rounds raise
+    ``OverflowError`` instead of wrapping. ``persist_edges``,
+    ``checkpoint_every``, ``shuffle_gc``, ``final_checkpoint`` and
+    ``max_broadcast_rows`` apply only to the distributed rounds.
+
+    The distributed rounds have the shuffle shape of :func:`pagerank`
+    (one join + one agg per round, checkpointed lineage). Bound check at
+    scale=10^15: total rank mass ≤ 10^15, so per-node contributions sum
+    < 10^15 and the damping multiply peaks below 10^17 — five orders of
+    magnitude inside int64.
     The floor divisions leak ≤ deg ulps of mass per node per round:
     deterministic, engine-identical, and irrelevant at 10^-15 resolution.
 
@@ -138,6 +176,18 @@ def pagerank_exact(
     min-of-3 isolated): 4.67 s → 4.14 s (−11%), the whole
     degree-annotation stage gone; per-round plans are identical.
     """
+    # numpy's // floors and Spark's `div` truncates: they agree while every
+    # operand is non-negative, which these parameters guarantee.
+    if (
+        0 <= damping_num <= damping_den
+        and scale >= 0
+        and edges.count() <= DRIVER_MAX_EDGES
+    ):
+        ranks = _driver_rounds(
+            edges, src, dst, deg, iterations, damping_num, damping_den, scale
+        )
+        if ranks is not None:
+            return ranks
     # ``persist_edges`` exists because caching a CORPUS-SIZED relation
     # assumes cache capacity scales with the corpus (r09) — on a single
     # JVM it doesn't: at the 1000× corpus (2.4B edges ≈ tens of GB
@@ -266,3 +316,66 @@ def pagerank_exact(
         if ed_persisted is not None:
             ed_persisted.unpersist()
         nodes.unpersist()
+
+
+def _driver_rounds(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    deg: str | None,
+    iterations: int,
+    damping_num: int,
+    damping_den: int,
+    scale: int,
+) -> DataFrame | None:
+    """:func:`pagerank_exact`'s rounds on the driver, over one Arrow
+    collect of ``edges`` (the caller has bounded their count). None when
+    the endpoints' types differ (Spark widens them to one node type), or
+    when an edge has a null endpoint or degree, or a degree below 1
+    (Spark's joins drop such edges, or its `div` raises on them): the
+    distributed rounds keep those semantics."""
+    node_t = edges.schema[src].dataType
+    if edges.schema[dst].dataType != node_t:
+        return None
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    if deg is not None:
+        cols.append(F.col(deg).cast("bigint").alias("deg"))
+    frame = edges.select(*cols).toPandas()
+    if frame.isna().any(axis=None) or (deg is not None and (frame["deg"] < 1).any()):
+        return None
+    m = len(frame)
+    codes, nodes = pd.factorize(pd.concat([frame["src"], frame["dst"]], ignore_index=True))
+    n = len(nodes)
+    r = np.full(n, scale // n, dtype=np.int64)
+    base = (scale * (damping_den - damping_num) // damping_den) // n
+    src_i, dst_i = codes[:m], codes[m:]
+    if deg is None:  # each src's edge count, duplicates included
+        out_deg = np.bincount(src_i, minlength=n)[src_i]
+    else:
+        out_deg = frame["deg"].to_numpy(np.int64)
+    for _ in range(iterations):
+        c = r[src_i] // out_deg
+        contrib = np.zeros(n, dtype=np.int64)
+        np.add.at(contrib, dst_i, c)
+        # Every term is non-negative, so the int64 sums wrap only past
+        # 2^63: one in [2^63, 2^64) reads negative, and a float64 shadow
+        # sum (relative error < 1e-9 at this bound) shows one past 2^64.
+        # The largest sum then bounds the multiply and the add exactly.
+        shadow = np.bincount(dst_i, weights=c, minlength=n)
+        top = int(contrib.max(initial=0)) * damping_num
+        if (
+            (contrib < 0).any()
+            or shadow.max(initial=0) > 1.5 * 2.0**63
+            or top > INT64_MAX
+            or base + top // damping_den > INT64_MAX
+        ):
+            raise OverflowError(
+                "pagerank_exact: a scaled rank exceeds bigint; lower `scale`"
+            )
+        r = base + damping_num * contrib // damping_den
+    t = node_t.simpleString()
+    return local_relation(
+        edges.sparkSession,
+        pd.DataFrame({"node": np.asarray(nodes), "rank_scaled": r}),
+        f"node {t}, rank_scaled bigint",
+    )

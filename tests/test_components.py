@@ -73,6 +73,20 @@ def test_driver_union_find_matches_distributed(spark):
     assert fast == _cc_star(spark, pairs)
 
 
+def test_driver_union_find_returns_a_jvm_relation(spark):
+    """The small-graph shortcut hands its components back as a JVM
+    ``LocalRelation``: a ``createDataFrame`` of Python rows is a Python RDD
+    (``LogicalRDD``), and every scan of it starts Python-worker tasks."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src bigint, dst bigint")
+    got = connected_components(df, "src", "dst")
+    leaves = got._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+    assert names and not {"LogicalRDD", "ExistingRDD"} & names, names
+    assert {r["node"]: r["component"] for r in got.collect()} == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10
+    }
+
+
 def _nx_components(pairs):
     # pure-python reference: min-label components via repeated relaxation
     adj: dict = {}

@@ -27,7 +27,7 @@ Accepted classifications:
   operator's own budget guards (the reference's client-facing surface).
 - ``thresholded``: guarded by an explicit row-count threshold that
   raises/falls back before unbounded driver materialization
-  (``components.py`` union-find).
+  (``components.py`` union-find, ``pagerank.py`` driver rounds).
 - ``one-row-attach``: crossJoin against a 1-row broadcast aggregate
   (the scalar-attach idiom; Cartesian in name only).
 - ``bounded-dims``: crossJoin where both sides are bounded-small by
@@ -48,8 +48,7 @@ import imdb_mapreduce_spark
 PKG_ROOT = os.path.dirname(os.path.abspath(imdb_mapreduce_spark.__file__))
 
 # toPandas / toLocalIterator are the other spellings of driver
-# materialization; the engine package has ZERO sites today (verified at
-# r11) — scanning for them makes the first future one fail here until
+# materialization; scanning for them makes each new site fail here until
 # classified, instead of shipping an unbounded driver fetch.
 METHODS = {"collect", "crossJoin", "toPandas", "toLocalIterator"}
 
@@ -87,6 +86,11 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # BFS_WORK_SLACK = 1.6 M) fetched values, evicting least-recently-used
     # keys.
     ("operators/graph.py", "_lookup", "collect"): (1, "bounded-export"),
+    # PageRank's driver rounds: one Arrow collect of the edges, run only
+    # when a count() of them is at most pagerank.DRIVER_MAX_EDGES (4 M);
+    # at the bound, with the per-edge arrays, +320 MB of driver memory.
+    ("operators/pagerank.py", "_driver_rounds", "toPandas"):
+        (1, "thresholded"),
     # the one fetch of a distributed BFS result's edges (to_dot, over
     # ImdbEngine.request_df); DFS order is then worked out on the driver
     ("operators/graph_export.py", "collect_edges", "collect"):

@@ -32,7 +32,9 @@ names = ["events_hourly", "media_metadata_stats", "pricing_summary",
          # r04 config-sensitive paths: stream-schema sniff + chained
          # stateful dedup, silver-layer build/read, ts grid arithmetic
          "streaming_dedup_10min_counts", "dedup_survivors_by_quality",
-         "events_gapfill_zero"]
+         "events_gapfill_zero",
+         # PageRank's driver rounds: Arrow collect and return, Arrow off
+         "pagerank_coparts"]
 for name in names:
     n = qs[name](spark, sf).count()
     assert n > 0, name

@@ -148,8 +148,8 @@ def _contend(ask, n: int = 16) -> list:
 def test_degree_is_computed_once_under_contending_threads(monkeypatch):
     """Many handler threads asking for a degree at once still run one
     aggregate per direction. Many asking the engine's adjacency for the
-    same keys at once get equal replies; each thread fetches a key it
-    missed once, and once the race is over no key is fetched again."""
+    same keys at once get equal replies, and each key is fetched once: a
+    thread that misses a key another is fetching waits for that fetch."""
     from imdb_mapreduce_spark.operators import graph
 
     def slow_degree(edges, node_col):
@@ -186,7 +186,39 @@ def test_degree_is_computed_once_under_contending_threads(monkeypatch):
     for key_col, fetched in fetches:
         for k in fetched:
             per_key[key_col, k] = per_key.get((key_col, k), 0) + 1
-    assert len(per_key) == 6 and max(per_key.values()) <= 8, per_key
+    assert per_key == dict.fromkeys(per_key, 1) and len(per_key) == 6, per_key
     fetches.clear()
     assert all(got == want[kind] for kind, got in _contend(ask))
     assert fetches == []
+
+
+def test_adjacency_waiters_fetch_for_themselves_when_the_fetch_fails(monkeypatch):
+    """A fetch that raises releases the threads waiting on it, and each
+    fetches the key itself; none hangs (``_contend`` joins with a timeout)."""
+    from imdb_mapreduce_spark.operators import graph
+
+    calls: list[str] = []
+
+    def failing_once(edges, key_col, keys, val_col):
+        first = not calls
+        calls.append(key_col)
+        time.sleep(0.02)  # a window for the other threads to start waiting
+        if first:
+            raise RuntimeError("lookup job failed")
+        return [(k, f"{k}/0") for k in keys]
+
+    monkeypatch.setattr(graph, "_lookup", failing_once)
+    adjacency = graph.Adjacency(None)
+
+    def ask(kind: str):
+        try:
+            return adjacency.lookup("actor", ["a", "b"], "title")
+        except RuntimeError as e:
+            return e
+
+    got = [v for _, v in _contend(ask)]
+    assert sum(isinstance(v, RuntimeError) for v in got) == 1
+    assert [v for v in got if not isinstance(v, RuntimeError)] == [
+        [("a", "a/0"), ("b", "b/0")]
+    ] * 15
+    assert adjacency._inflight == {}
