@@ -12,8 +12,8 @@ Spark-first:
   shuffle; its N+1 name lookups (``server.erl:290-291``) become one broadcast
   hash join; its snapshot replication becomes lineage + parquet checkpoints;
 - its single interactive query — the k-level co-star BFS
-  (``master.erl:251-288``) — becomes a driver-side loop of DataFrame
-  self-joins (``operators/graph.py``).
+  (``master.erl:251-288``) — becomes driver-side rounds of bounded point
+  lookups on a cache of those two views (``operators/graph.py``).
 
 Beyond reference parity the package adds the LLM-data-pipeline operator
 surface (dedup, similarity search, text analysis, multimodal columns,

@@ -10,7 +10,11 @@ PNG. Here the same session is:
 
     eng = ImdbEngine.from_tsv(spark, basics, principals, names)   # "ingest"
     vertices, edges = eng.request("Name", "actor", level=3)        # query
-    eng.to_dot(...)                                                # render
+    eng.to_dot("Name", "actor", level=3)                           # render
+
+Both answer from the engine's :class:`Adjacency` (the reference's two
+in-RAM inverted indexes), so a ``to_dot`` after its ``request`` runs no
+Spark job.
 
 plus the persistence the reference got from snapshot replication:
 ``eng.save(path)`` / ``ImdbEngine.load(spark, path)``.
@@ -31,7 +35,6 @@ from imdb_mapreduce_spark.operators import graph_export
 from imdb_mapreduce_spark.operators.graph import (
     COSTAR_COLS,
     Adjacency,
-    BfsResult,
     avg_degree,
 )
 from imdb_mapreduce_spark.operators.graph import costar_bfs
@@ -121,28 +124,16 @@ class ImdbEngine:
         :class:`Adjacency`: keys an earlier request fetched cost no job,
         the rest at most two bounded collects per round on the cached edge
         table, bounded by the ``max_vertices`` budget (``None`` is an
-        explicitly unbounded batch use; :meth:`request_df` is the
-        distributed form)."""
-        res = costar_bfs(
-            self.cast_edges,
+        explicitly unbounded batch use)."""
+        edges = costar_bfs(
+            self.adjacency,
             name,
             node_type,
             level,
             max_vertices=max_vertices,
             degree=self._degree(node_type, level),
-            adjacency=self.adjacency,
         )
-        return graph_export.sorted_vertices(res, res.edges), res.edges
-
-    def request_df(
-        self, name: str, node_type: str = "actor", level: int = 2
-    ) -> BfsResult:
-        """Same query, distributed rounds and result (no collect) for
-        composition — unbudgeted (a DataFrame consumer composes further
-        instead of collecting)."""
-        return costar_bfs(
-            self.cast_edges, name, node_type, level, degree=self._degree(node_type, level)
-        )
+        return graph_export.sorted_vertices(name, node_type, edges), edges
 
     def _degree(self, node_type: str, level: int = 2) -> float | None:
         """:func:`avg_degree` of a query direction, computed once per engine.
@@ -171,9 +162,15 @@ class ImdbEngine:
         return actor_to_movies(self.cast_edges)
 
     def to_dot(self, name: str, node_type: str = "actor", level: int = 2) -> str:
-        """DOT text of the request graph (reference's PNG pipeline minus
-        the GraphViz shell-out, which stays outside the engine)."""
-        return graph_export.to_dot(self.request_df(name, node_type, level))
+        """DOT text of :meth:`request`'s reply, under the same
+        ``REQUEST_MAX_VERTICES`` budget: the reference renders the graph it
+        replies with (``master.erl:267-283``), minus the GraphViz
+        shell-out, which stays outside the engine. Over budget it raises
+        ``BfsBudgetExceeded`` as :meth:`request` does."""
+        _, edges = self.request(
+            name, node_type, level, max_vertices=self.REQUEST_MAX_VERTICES
+        )
+        return graph_export.to_dot(name, node_type, edges)
 
     def unpersist(self) -> None:
         self.cast_edges.unpersist()

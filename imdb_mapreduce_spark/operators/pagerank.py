@@ -80,7 +80,7 @@ def pagerank(
     pays ONE exchange (the contribution aggregation) instead of two
     (measured r05, sf0.1: 8.0 s vs 9.3 s for 10 rounds). Past the
     threshold the hints drop and AQE plans from runtime sizes — the same
-    guarded-broadcast discipline as ``operators/graph.bipartite_bfs``.
+    guarded-broadcast discipline as ``operators/graph.unipartite_bfs``.
 
     Dangling nodes (no out-edges) contribute nothing — the standard
     simplification; symmetrized graphs have none.

@@ -4,8 +4,9 @@ The reference's flagship k-level co-star BFS runs here against the
 order↔part bipartite relation (FIXTURES.md §B: "the orders↔customer /
 order↔part bipartite relation supports a BFS-shape query"): parts
 co-purchased in the same order play the role of actors co-starring in the
-same movie. The SAME generic operator (``operators/graph.bipartite_bfs``)
-serves the IMDb cast_edges table — see tests/test_graph.py.
+same movie. The IMDb ``cast_edges`` table is served by
+``operators/graph.costar_bfs``'s point lookups instead; the two BFS forms
+share one set of rules, pinned against each other in tests/test_graph.py.
 
 r06 (VERDICT r05 item 1): the whole family — BFS, pair top-k, PageRank,
 triangles, SSSP — now reads the SHARED silver co-purchase tables
@@ -74,8 +75,8 @@ def copurchase_bfs_l3(spark: SparkSession, sf_dir: str) -> DataFrame:
     r06: runs :func:`unipartite_bfs` over the silver projected edge table
     (bucketed on src), so each round is ONE broadcast-frontier hop against
     a materialized layout instead of the two-hop via-join re-deriving
-    co-occurrence from the fact table — the bipartite↔unipartite result
-    equivalence is pinned row-for-row in tests/test_silver.py. Node
+    co-occurrence from the fact table — its result equals a two-hop BFS
+    over (part, order), pinned row-for-row in tests/test_silver.py. Node
     domain is the NATIVE BIGINT partkey (r06 review: the earlier
     string-cast silently defeated the bucketed-on-src layout — a cast
     join key can never match the table's bigint hash buckets, so the big
@@ -94,8 +95,7 @@ def copurchase_bfs_l3(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("l_partkey"))
             .collect()[0][0]
         )
-    res = unipartite_bfs(edges, "src", "dst", int(root), level=3)
-    return res.edges.select("src", "dst", "level")
+    return unipartite_bfs(edges, "src", "dst", int(root), level=3)
 
 
 @register(

@@ -16,6 +16,43 @@ from imdb_mapreduce_spark.session import get_spark  # noqa: E402
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def two_hop_bfs(pairs, root, level, max_vertices=None, degree=None) -> list[tuple]:
+    """Pure-Python reference for the co-star BFS rules over ``(node, via)``
+    pairs: level k = k-1 two-hop rounds, one global visited set, each child
+    attached to its minimum discovering parent. With ``max_vertices`` a
+    round is refused before it runs when frontier x ``degree``² exceeds
+    ``max_vertices`` x ``BFS_WORK_SLACK``, and after it when the visited
+    set exceeds ``max_vertices``. Returns the (level, src, dst)-sorted
+    ``(src, dst, level)`` edges."""
+    from collections import defaultdict
+
+    from imdb_mapreduce_spark.operators.graph import BFS_WORK_SLACK, BfsBudgetExceeded
+
+    vias, nodes = defaultdict(set), defaultdict(set)
+    for node, via in pairs:
+        vias[node].add(via)
+        nodes[via].add(node)
+    visited, frontier, out = {root}, {root}, []
+    for lvl in range(1, level):
+        if max_vertices is not None:
+            est = len(frontier) * degree * degree
+            if est > max_vertices * BFS_WORK_SLACK:
+                raise BfsBudgetExceeded(int(est), max_vertices, lvl, estimated=True)
+        children: dict = {}
+        for parent in frontier:
+            for via in vias[parent]:
+                for child in nodes[via] - visited:
+                    children[child] = min(parent, children.get(child, parent))
+        if not children:
+            break
+        visited.update(children)
+        out += [(src, dst, lvl) for dst, src in children.items()]
+        if max_vertices is not None and len(visited) > max_vertices:
+            raise BfsBudgetExceeded(len(visited), max_vertices, lvl)
+        frontier = set(children)
+    return sorted(out, key=lambda e: (e[2], e[0], e[1]))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)

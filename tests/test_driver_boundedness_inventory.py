@@ -75,7 +75,7 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # runs it once per query direction
     ("operators/graph.py", "avg_degree", "collect"): (1, "scalar-agg"),
     # the miss path of a budgeted request's point lookups
-    # (Adjacency.lookup under _lookup_rounds, ImdbEngine.request), one per
+    # (Adjacency.lookup under costar_bfs, ImdbEngine.request), one per
     # hop, fetching only the keys the engine's Adjacency does not hold.
     # Hop 1 returns the edges of the frontier: ≤ max_vertices keys after
     # the previous round's exact check, ~frontier × degree rows. Hop 2
@@ -91,10 +91,6 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # at the bound, with the per-edge arrays, +320 MB of driver memory.
     ("operators/pagerank.py", "_driver_rounds", "toPandas"):
         (1, "thresholded"),
-    # the one fetch of a distributed BFS result's edges (to_dot, over
-    # ImdbEngine.request_df); DFS order is then worked out on the driver
-    ("operators/graph_export.py", "collect_edges", "collect"):
-        (1, "bounded-export"),
     ("pipeline/curation.py", "split_leakage_audit", "crossJoin"):
         (1, "one-row-attach"),
     ("pipeline/curation.py", "snapshot_diff", "collect"): (1, "scalar-agg"),

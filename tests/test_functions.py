@@ -166,20 +166,21 @@ def test_bfs_invariants(spark, raw_edges, level):
     """BFS invariants for arbitrary bipartite graphs: result is a tree
     (each vertex one incoming edge), root never a dst, no dst repeats,
     levels within bounds (SURVEY §5.3)."""
-    from imdb_mapreduce_spark.operators.graph import bipartite_bfs
+    from imdb_mapreduce_spark.operators.graph import Adjacency, costar_bfs
+    from imdb_mapreduce_spark.operators.graph_export import sorted_vertices
 
+    # string vias: a lookup's key set is an array<string> literal
     edges = spark.createDataFrame(
-        [(f"n{a}", b) for a, b in raw_edges], ["node", "via"]
+        [(f"n{a}", f"v{b}") for a, b in raw_edges], ["actor", "title"]
     )
     root = f"n{raw_edges[0][0]}"
-    res = bipartite_bfs(edges, "node", "via", root, level=level, checkpoint=False)
-    rows = res.edges.collect()
-    dsts = [r["dst"] for r in rows]
+    rows = costar_bfs(Adjacency(edges), root, "actor", level)
+    dsts = [dst for _, dst, _ in rows]
     assert len(dsts) == len(set(dsts))  # visited-set: unique vertices
     assert root not in dsts  # root never re-discovered
-    assert all(1 <= r["level"] <= level - 1 for r in rows)
-    # tree: every non-root vertex has exactly one edge; vertex count checks
-    assert {r["name"] for r in res.vertices.collect()} == set(dsts) | {root}
+    assert all(1 <= lvl <= level - 1 for _, _, lvl in rows)
+    # tree: every edge's parent is the root or an earlier child
+    assert set(sorted_vertices(root, "actor", rows)) == set(dsts) | {root}
 
 
 def test_salted_join_rejects_outer_joins(spark):

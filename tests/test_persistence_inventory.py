@@ -51,7 +51,7 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
         (3, "lineage-truncation"),
     ("operators/components.py", "_label_propagation", "localCheckpoint"):
         (3, "lineage-truncation"),
-    ("operators/graph.py", "_bfs_rounds", "localCheckpoint"):
+    ("operators/graph.py", "unipartite_bfs", "localCheckpoint"):
         (1, "lineage-truncation"),
     ("operators/pagerank.py", "pagerank", "localCheckpoint"):
         (2, "lineage-truncation"),

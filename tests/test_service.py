@@ -118,6 +118,35 @@ def test_service_logs_one_line_per_request(cast_edges, caplog):
         assert line.endswith(tail), line
 
 
+def test_service_rejects_a_non_positive_budget(cast_edges, caplog):
+    """A client's ``max_vertices`` of 0 or -1 is an invalid request at any
+    level: an error reply on the live connection, logged as an error, not
+    a budget refusal."""
+    caplog.set_level(logging.INFO, logger="imdb_mapreduce_spark.service")
+    srv, port = serve_background(ImdbEngine(cast_edges))
+    cases = [(budget, level) for budget in (0, -1) for level in (1, 2)]
+    try:
+        with socket.create_connection(("127.0.0.1", port), timeout=120) as s:
+            f = s.makefile("rwb")
+            replies = [
+                _ask(f, {"name": "Jane Doe", "level": level, "max_vertices": budget})
+                for budget, level in cases
+            ]
+            answer = _ask(f, {"name": "Jane Doe", "level": 2, "max_vertices": 3})
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    for reply in replies:
+        assert reply == {"error": "ValueError: max_vertices must be positive"}
+    assert len(answer["vertices"]) == 3
+    lines = [
+        r.getMessage() for r in caplog.records if r.name == "imdb_mapreduce_spark.service"
+    ]
+    assert [line.rsplit(" ", 1)[1] for line in lines] == (
+        ["outcome=error"] * len(cases) + ["outcome=answered"]
+    )
+
+
 def _contend(ask, n: int = 16) -> list:
     """``ask(kind)`` on ``n`` threads released at once, ``kind``
     alternating "movie" / "actor"; returns each thread's result."""

@@ -136,28 +136,26 @@ def test_copurchase_pair_cap_is_inert_below_cap_and_drops_hot_baskets(spark):
 
 def test_unipartite_bfs_matches_bipartite_on_projected_graph(spark):
     """The silver BFS read path (unipartite over the projected co-purchase
-    edges) must reproduce the two-hop bipartite operator row-for-row —
-    same levels, same min-parent attachment, same visited semantics."""
-    from imdb_mapreduce_spark.operators.graph import bipartite_bfs, unipartite_bfs
+    edges) must reproduce a two-hop BFS over the bipartite (part, order)
+    pairs row-for-row — same levels, same min-parent attachment, same
+    visited semantics."""
+    from imdb_mapreduce_spark.operators.graph import unipartite_bfs
     from imdb_mapreduce_spark.sources.silver import copurchase_edges
     from imdb_mapreduce_spark.sources.star import load_table
+    from tests.conftest import two_hop_bfs
 
     sf = "/root/testdata/sf0.001"
     l = load_table(spark, "lineitem", sf)
     # native BIGINT node domain — the registered query's domain since the
     # r06 review (a string cast on the join key defeats the bucketed layout)
-    bip_edges = l.select(
-        F.col("l_partkey").alias("node"),
-        F.col("l_orderkey").alias("via"),
-    )
-    root = int(l.agg(F.min("l_partkey")).collect()[0][0])
+    pairs = [tuple(r) for r in l.select("l_partkey", "l_orderkey").collect()]
+    root = min(part for part, _ in pairs)
     uni_edges = copurchase_edges(spark, sf).select("src", "dst")
     for level in (2, 3):
-        a = bipartite_bfs(bip_edges, "node", "via", root, level=level)
-        b = unipartite_bfs(uni_edges, "src", "dst", root, level=level)
-        rows_a = {tuple(r) for r in a.edges.collect()}
-        rows_b = {tuple(r) for r in b.edges.collect()}
-        assert rows_a == rows_b
+        want = two_hop_bfs(pairs, root, level)
+        got = unipartite_bfs(uni_edges, "src", "dst", root, level=level)
+        assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+        assert level == 2 or want[-1][2] == 2  # round 2 reached something
 
 
 def test_copurchase_edges_scan_is_bucketed_and_reregisters(spark):

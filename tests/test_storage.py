@@ -62,61 +62,6 @@ def test_bucketed_join_is_shuffle_free_on_bucket_key(spark):
     assert joined.count() > 0
 
 
-def test_bucketed_bfs_round_join_needs_no_edge_shuffle(spark):
-    """The operators/graph.py scale claim, exercised: with the edge table
-    persisted in TWO bucketed layouts (hashed on node_col for the outbound
-    hop, on via_col for the return hop — the durable analog of the
-    reference's forward/inverted adjacency copies) a BFS round never
-    re-shuffles the big table, even with every broadcast disabled. Only
-    the tiny frontier-derived sides exchange. Level 3: the root frontier is
-    a literal, which Catalyst folds into a scan filter, so round 2 is the
-    first whose outbound hop joins on ``_n1``."""
-    from imdb_mapreduce_spark.operators.graph import bipartite_bfs
-
-    l = load_table(spark, "lineitem", SF)
-    edges = l.select(
-        F.col("l_partkey").cast("string").alias("part"),
-        F.col("l_orderkey").cast("string").alias("order"),
-    )
-    write_bucketed(edges, "bfs_edges_by_part", "part", buckets=4)
-    write_bucketed(edges, "bfs_edges_by_order", "order", buckets=4)
-    root = edges.first()["part"]
-
-    # Force the shuffle-join path bucketing must carry: drop our hints via
-    # max_broadcast_rows=0 AND stop Catalyst auto-broadcasting the tiny
-    # sf0.001 tables (at the scale this simulates, nothing here is small).
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        res = bipartite_bfs(
-            spark.table("bfs_edges_by_part"),
-            node_col="part",
-            via_col="order",
-            root=root,
-            level=3,
-            checkpoint=False,
-            max_broadcast_rows=0,
-            edges_inverted=spark.table("bfs_edges_by_order"),
-        )
-        plan = _explain(res.edges)
-        n = res.edges.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    # The edge-table sides of both per-round joins read the bucket layout
-    # directly: no Exchange on the outbound hop key (_n1) or the return
-    # hop key (_v2). (Frontier-side exchanges remain — they're rows, not TB.)
-    assert "BroadcastHashJoin" not in plan
-    # (formatted mode names exchange keys in Arguments: lines; the same
-    # run WITHOUT bucketed layouts shows hashpartitioning(_n1#…) and
-    # hashpartitioning(_v2#…) exchanges — verified when writing the test)
-    assert "hashpartitioning(_n1" not in plan
-    assert "hashpartitioning(_v2" not in plan
-    # the frontier-derived sides still exchange — rows, not terabytes: the
-    # hop-1 rows move to the return hop's via key
-    assert "hashpartitioning(_via" in plan
-    assert n > 0
-
-
 def test_ivf_cell_partition_layout_prunes_probed_cells(spark, tmp_path):
     """The IVF index layout claim (pipeline/similarity.ivf_index docstring):
     persist cell assignments partitioned BY cell, and a query reads only
