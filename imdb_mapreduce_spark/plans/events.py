@@ -11,6 +11,7 @@ DECIMAL (parity.py); durations are integer epoch-microsecond diffs.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, replace
 
@@ -105,26 +106,11 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the hash match certifies cascade ≡ direct (count/sum form a
     commutative monoid over the bucket lattice). Every tier is a
     map-side-combining groupBy with group counts bounded by
-    buckets×types regardless of corpus size.
+    buckets×types regardless of corpus size (`AggSpec.cascade`).
     """
-    e = _events(spark, sf_dir)
-    m = e.groupBy(
-        F.date_trunc("minute", F.col("ts")).alias("bucket"),
-        F.col("event_type"),
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast(D2)).alias("s"),
+    return ROLLUP.cascade(
+        _events(spark, sf_dir).select("ts", "event_type", "value")
     )
-    h = m.groupBy(
-        F.date_trunc("hour", F.col("bucket")).alias("bucket"),
-        F.col("event_type"),
-    ).agg(F.sum("n_events").alias("n_events"), F.sum("s").alias("s"))
-    d = h.groupBy(
-        F.date_trunc("day", F.col("bucket")).alias("bucket"),
-        F.col("event_type"),
-    ).agg(F.sum("n_events").alias("n_events"), F.sum("s").alias("s"))
-
-    return ROLLUP.readout({"minute": m, "hour": h, "day": d})
 
 
 # ---------------------------------------------------------------------------
@@ -1283,17 +1269,7 @@ def events_multires_distinct_rollup(
     state via the same scaffold, certified by this very oracle —
     KMV-merge is associative and commutative, so sketches slot in.
     """
-    e = _events(spark, sf_dir)
-    # The minute sketch fans out THREE ways (its own readout, the hour
-    # derivation, and day via hour) — the broadcast-fan-out shape where
-    # exchange reuse stops (the realtime read's lesson, SCALING.md r13;
-    # the salted-rank minute plan measured 0 ReusedExchange and 3 raw
-    # scans without this). Materialize it once — bounded: one row per
-    # minute bucket, time-horizon-, not corpus-, proportional.
-    m = kmv_k_smallest(kmv_minute_pairs(e)).localCheckpoint(eager=True)
-    h = kmv_merge_up(m, "hour")
-    d = kmv_merge_up(h, "day")
-    return DISTINCT.readout({"minute": m, "hour": h, "day": d})
+    return DISTINCT.cascade(_events(spark, sf_dir).select("ts", "user_id"))
 
 
 def _h60(name: str) -> "F.Column":
@@ -1513,8 +1489,17 @@ def kmv_bucket_stats(df: DataFrame, tier: str) -> DataFrame:
 ERASURE_STATE_SEC: "dict[str, list[float]]" = {}
 
 
-def _note_state_sec(name: str, sec: float) -> None:
-    ERASURE_STATE_SEC.setdefault(name, []).append(round(sec, 3))
+def _erasure_state(name: str, spec: "AggSpec", e: DataFrame) -> DataFrame:
+    """The pre-erasure minute state of the batch erasure query ``name``:
+    one raw pass, pinned (bounded: one row per (bucket[, type]),
+    time-horizon-proportional — the carried relation the repair reads
+    more than once); its seconds go to ``ERASURE_STATE_SEC[name]``."""
+    t0 = time.monotonic()
+    m = spec.partials(e).localCheckpoint(eager=True)
+    ERASURE_STATE_SEC.setdefault(name, []).append(
+        round(time.monotonic() - t0, 3)
+    )
+    return m
 
 
 # The deterministic erasure set both engines share (null-safe on both
@@ -1587,13 +1572,9 @@ def events_rollup_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises dense touching; erasing a handful of users at the decade
     shows the state-proportional repair cost (SCALING.md r14)."""
     e = _events(spark, sf_dir).select("ts", "event_type", "value", "user_id")
-    # pre-erasure state: minute from raw (the fan-out relation —
-    # bounded, one row per (bucket, type)), hour/day derived from it
-    import time as _time
-
-    _t0 = _time.monotonic()
-    m = ROLLUP_ERASABLE.partials(e).localCheckpoint(eager=True)
-    _note_state_sec("events_rollup_user_erasure", _time.monotonic() - _t0)
+    # pre-erasure state: minute from raw (the fan-out relation),
+    # hour/day derived from it
+    m = _erasure_state("events_rollup_user_erasure", ROLLUP_ERASABLE, e)
     # day direct from the pinned minute state (not via the lazy hour
     # state, whose aggregate would otherwise evaluate twice in the one
     # readout action — r15 opt session 3)
@@ -1685,11 +1666,7 @@ def events_distinct_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user sub-sketches."""
     e = _events(spark, sf_dir).select("ts", "user_id")
     # pre-erasure sketch state (one raw pass; exists already in prod)
-    import time as _time
-
-    _t0 = _time.monotonic()
-    prev_m = DISTINCT.partials(e).localCheckpoint(eager=True)
-    _note_state_sec("events_distinct_user_erasure", _time.monotonic() - _t0)
+    prev_m = _erasure_state("events_distinct_user_erasure", DISTINCT, e)
     return DISTINCT.readout(
         rederive_erasure_repair(DISTINCT, e, prev_m, _erased_col())
     )
@@ -1881,9 +1858,10 @@ Materializer = Callable[[str, DataFrame], DataFrame]
 class AggSpec:
     """One mergeable aggregate class of the minute/hour/day hypertable —
     only what differs between classes. Every hypertable verb is written
-    once over a spec: the fold (`streaming/jobs.merge_batch`), the two
-    erasure repairs below, and the incremental, erasure and realtime
-    harnesses (SAMUEL, EDBT 2018: one body shared by many queries).
+    once over a spec: the batch cascade (:meth:`cascade`), the fold
+    (`streaming/jobs.merge_batch`), the two erasure repairs below, and
+    the incremental, erasure, as-of and realtime harnesses (SAMUEL,
+    EDBT 2018: one body shared by many queries).
 
     - ``partials(rows)``: raw rows → minute-grain state rows (lazy) —
       the only pass over raw;
@@ -1917,6 +1895,21 @@ class AggSpec:
             self.stats(tiers["minute"], "minute")
             .unionByName(self.stats(tiers["hour"], "hour"))
             .unionByName(self.stats(tiers["day"], "day"))
+        )
+
+    def cascade(self, rows: DataFrame) -> DataFrame:
+        """The batch cascade: the minute tier is the only pass over raw
+        ``rows``, HOUR derives from minute and DAY from hour by
+        ``merge_up`` — coarse tiers are never recomputed from raw. The
+        minute tier fans out three ways (its own readout, hour, day via
+        hour), the broadcast-fan-out shape where exchange reuse stops
+        (the realtime read's lesson, SCALING.md r13), so it is pinned
+        once — bounded: one row per minute bucket[, type],
+        time-horizon-, not corpus-, proportional."""
+        m = self.partials(rows).localCheckpoint(eager=True)
+        h = self.merge_up(m, "hour")
+        return self.readout(
+            {"minute": m, "hour": h, "day": self.merge_up(h, "day")}
         )
 
 
@@ -2048,14 +2041,9 @@ def events_multires_quantile_rollup(
     all (its pipeline is one-shot batch MapReduce over IMDb TSVs,
     `/root/reference/src/server/master.erl`); this family is the
     engine's [NORTH-STAR] extension mandate."""
-    e = _events(spark, sf_dir)
-    # The minute sample fans out THREE ways (own readout, hour, day via
-    # hour) — materialize once (bounded: one ≤K-array row per minute;
-    # the same broadcast-fan-out lesson as the distinct cascade).
-    m = bottomk_sample(qtl_minute_pairs(e)).localCheckpoint(eager=True)
-    h = bottomk_merge_up(m, "hour")
-    d = bottomk_merge_up(h, "day")
-    return QUANTILE.readout({"minute": m, "hour": h, "day": d})
+    return QUANTILE.cascade(
+        _events(spark, sf_dir).select("ts", "event_id", "user_id", "value")
+    )
 
 
 # Shared by `events_quantile_user_erasure` (batch repair); the oracle
@@ -2133,11 +2121,7 @@ def events_quantile_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     three resolutions."""
     e = _events(spark, sf_dir).select("ts", "event_id", "user_id", "value")
     # pre-erasure sample state (one raw pass; exists already in prod)
-    import time as _time
-
-    _t0 = _time.monotonic()
-    prev_m = QUANTILE.partials(e).localCheckpoint(eager=True)
-    _note_state_sec("events_quantile_user_erasure", _time.monotonic() - _t0)
+    prev_m = _erasure_state("events_quantile_user_erasure", QUANTILE, e)
     return QUANTILE.readout(
         rederive_erasure_repair(QUANTILE, e, prev_m, _erased_col())
     )

@@ -51,6 +51,7 @@ from imdb_mapreduce_spark.plans.events import (
     AggSpec,
     Materializer,
     _erased_col,
+    _h60,
     rederive_erasure_repair,
     rederive_tier,
     rollup_erasure_repair,
@@ -454,6 +455,20 @@ def streaming_cm_sketch_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+def _last_emission(log: DataFrame, keys: "tuple[str, ...]") -> DataFrame:
+    """The final state per key of an update-mode change-log: the
+    emission with the highest ``rows_seen`` (strictly increasing per
+    key), extracted with one ranking window over the tiny log."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.col("rows_seen").desc())
+    return (
+        log.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def _kmv_stream_oracle() -> str:
     from imdb_mapreduce_spark.plans.quality import KMV_K
 
@@ -496,17 +511,12 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Python-side hashlib md5 produces the identical portable fragment
     hash the Spark/DuckDB expression builds use — so a custom stateful
     Python operator still lands on the batch oracle bit-for-bit."""
-    from pyspark.sql.window import Window
-
     from imdb_mapreduce_spark.streaming.stateful import running_kmv_by_type
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     log = run_stream_to_memory(running_kmv_by_type(stream), "update")
-    w = Window.partitionBy("event_type").orderBy(F.col("rows_seen").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "rows_seen", "kth_hash", "m")
+    return _last_emission(log, ("event_type",)).select(
+        "event_type", "rows_seen", "kth_hash", "m"
     )
 
 
@@ -564,17 +574,12 @@ def streaming_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMV tiers. Same key-bounded SKEW WARNING; the salted sub-key move
     transfers unchanged when needed (the multiset law re-merges
     sub-samples exactly like keep-sets)."""
-    from pyspark.sql.window import Window
-
     from imdb_mapreduce_spark.streaming.stateful import running_qtl_by_type
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     log = run_stream_to_memory(running_qtl_by_type(stream), "update")
-    w = Window.partitionBy("event_type").orderBy(F.col("rows_seen").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "rows_seen", "m", "p50", "p90", "p99")
+    return _last_emission(log, ("event_type",)).select(
+        "event_type", "rows_seen", "m", "p50", "p90", "p99"
     )
 
 
@@ -645,15 +650,8 @@ def streaming_kmv_distinct_salted(spark: SparkSession, sf_dir: str) -> DataFrame
     log = run_stream_to_memory(
         running_kmv_by_type_salted(stream, n_salts=n_salts), "update"
     )
-    # final state per sub-key = highest rows_seen emission (strictly
-    # increasing per key, same extraction as the unsalted change-log)
-    w = Window.partitionBy("event_type", "salt").orderBy(
-        F.col("rows_seen").desc()
-    )
     final = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        _last_emission(log, ("event_type", "salt"))
         # materialized once: `final` feeds BOTH the totals and the pair
         # union below, and a memory-sink self-join trips Catalyst's
         # conflicting-reference resolution; the relation is |types|·salts
@@ -912,6 +910,34 @@ def _commit(vdir: str) -> None:
         f.write("ok\n")
 
 
+def _committed_versions(state_root: str) -> "list[int]":
+    """Ascending numbers of the COMMITTED versions under ``state_root``.
+    Only ``v<digits>`` directories bearing the ``_COMMIT`` marker count
+    — a stray file or editor artifact matching the glob must not make
+    the listing raise (ADVICE r13), and an uncommitted version is never
+    served."""
+    import glob as _glob
+    import os
+    import re as _re
+
+    return sorted(
+        int(os.path.basename(p)[1:])
+        for p in _glob.glob(os.path.join(state_root, "v*"))
+        if _re.fullmatch(r"v\d+", os.path.basename(p))
+        and os.path.exists(os.path.join(p, "_COMMIT"))
+    )
+
+
+def _read_version(spark: SparkSession, vdir: str) -> dict[str, DataFrame]:
+    """Read handles onto the three tiers of the version at ``vdir``."""
+    import os
+
+    return {
+        tier: spark.read.parquet(os.path.join(vdir, tier))
+        for tier in _MULTIRES_TIERS
+    }
+
+
 def multires_fold_version(
     spark: SparkSession,
     state_root: str,
@@ -1006,29 +1032,13 @@ def latest_committed_state(
     listing raise (ADVICE r13). Shared by the drain's post-run read and
     the r15 erasure fold (which needs the predecessor version number to
     slot its repair into the same lineage)."""
-    import glob as _glob
     import os
-    import re as _re
 
-    committed = sorted(
-        (
-            p
-            for p in _glob.glob(os.path.join(state_root, "v*"))
-            if _re.fullmatch(r"v\d+", os.path.basename(p))
-            and os.path.isdir(p)
-            and os.path.exists(os.path.join(p, "_COMMIT"))
-        ),
-        key=lambda p: int(os.path.basename(p)[1:]),
-    )
+    committed = _committed_versions(state_root)
     if not committed:
         return None
-    return (
-        int(os.path.basename(committed[-1])[1:]),
-        {
-            tier: spark.read.parquet(os.path.join(committed[-1], tier))
-            for tier in _MULTIRES_TIERS
-        },
-    )
+    v = committed[-1]
+    return v, _read_version(spark, os.path.join(state_root, f"v{v}"))
 
 
 def state_as_of(
@@ -1048,10 +1058,7 @@ def state_as_of(
             f"state_as_of: version {version} was never committed under"
             f" {state_root!r}"
         )
-    return {
-        tier: spark.read.parquet(os.path.join(vdir, tier))
-        for tier in _MULTIRES_TIERS
-    }
+    return _read_version(spark, vdir)
 
 
 def vacuum_versions(state_root: str, keep_last: int) -> "list[int]":
@@ -1064,23 +1071,12 @@ def vacuum_versions(state_root: str, keep_last: int) -> "list[int]":
     mid-vacuum leaves an uncommitted version that `state_as_of` and the
     drain's committed-scan already refuse to serve, never a torn
     readable one. Returns the dropped version numbers."""
-    import glob as _glob
     import os
-    import re as _re
     import shutil
 
     if keep_last < 1:
         raise ValueError("vacuum_versions: keep_last must be >= 1")
-    committed = sorted(
-        (
-            int(os.path.basename(p)[1:])
-            for p in _glob.glob(os.path.join(state_root, "v*"))
-            if _re.fullmatch(r"v\d+", os.path.basename(p))
-            and os.path.isdir(p)
-            and os.path.exists(os.path.join(p, "_COMMIT"))
-        )
-    )
-    dropped = committed[:-keep_last] if len(committed) > keep_last else []
+    dropped = _committed_versions(state_root)[:-keep_last]
     for v in dropped:
         vdir = os.path.join(state_root, f"v{v}")
         os.remove(os.path.join(vdir, "_COMMIT"))
@@ -1145,8 +1141,7 @@ def compact_state_version(
                 shutil.rmtree(tier_dir)
             os.rename(cdir, tier_dir)
             done.append(t)
-        with open(marker, "w") as f:
-            f.write("ok\n")
+        _commit(vdir)
         os.remove(journal)
         return done
 
@@ -1341,10 +1336,7 @@ def incremental_multires_drain(
             # check below (r16 auto-compaction)
             compact_state_version(spark, state_root, v - 1)
         if os.path.exists(os.path.join(prev_dir, "_COMMIT")):
-            prev = {
-                tier: spark.read.parquet(os.path.join(prev_dir, tier))
-                for tier in _MULTIRES_TIERS
-            }
+            prev = _read_version(spark, prev_dir)
         elif v > 0:
             # By the foreachBatch contract, batch n > 0 only runs after
             # batch n-1 committed — the ONLY legitimate empty-prev is
@@ -1565,6 +1557,8 @@ def _stage_ts_slices(events: DataFrame, d: str) -> "tuple[str, list[str]]":
 
 
 def _deliver(src: str, files: "list[str]", start: int) -> None:
+    """Copy ``files`` into ``src`` with mtimes ascending from ``start``,
+    so the file source's oldest-first ordering is deterministic."""
     import os
     import shutil
 
@@ -1725,6 +1719,65 @@ def events_quantile_erasure_incremental(
     )
 
 
+def _asof(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: AggSpec,
+    cols: "tuple[str, ...]",
+    erased: "F.Column | None",
+) -> DataFrame:
+    """The as-of harness of one aggregate class: the events table
+    streams in as four micro-batches, batch i = the rows whose md5
+    ``event_id`` prefix is i mod 4 (the repo's portable hash, so an
+    oracle can name EXACTLY the rows of batches 0-1 in SQL — unlike
+    ts-range staging, whose sampled partitioner boundaries no oracle
+    could reproduce), each carrying only ``cols``. They fold into
+    versioned state under the drain's exactly-once contract; when
+    ``erased`` is set, every committed version is purged of the erased
+    rows (`erase_versioned_history`, rewritten to a new root); the
+    readout is ``VERSION AS OF v1`` (`state_as_of`).
+
+    An empty slice still stages: its filtered write leaves one empty
+    part file, which the drain folds as a version, so v1 is always the
+    state after slices 0-1."""
+    import glob as _glob
+    import os
+
+    from imdb_mapreduce_spark.sources.star import load_table
+
+    events = load_table(spark, "events", sf_dir)
+    slc = F.pmod(_h60("event_id"), F.lit(4))
+    with tempfile.TemporaryDirectory() as d:
+        slices = []
+        for i in range(4):
+            part = os.path.join(d, f"slice{i}")
+            events.filter(slc == i).select(*cols).coalesce(1).write.parquet(
+                part
+            )
+            slices += _glob.glob(os.path.join(part, "part-*"))
+        src = os.path.join(d, "src")
+        os.makedirs(src)
+        _deliver(src, slices, start=0)
+        state_root = os.path.join(d, "state")
+        incremental_multires_drain(
+            spark, src, events.select(*cols).schema, state_root,
+            os.path.join(d, "ckpt"), spec,
+        )
+        if erased is not None:
+            purged_root = os.path.join(d, "purged")
+            erase_versioned_history(
+                spark, state_root, purged_root,
+                [spark.read.parquet(p) for p in slices], erased, spec,
+            )
+            state_root = purged_root
+        # Materialize before the tempdir vanishes (bounded: one row per
+        # (bucket[, type]) across three tiers — time-horizon-, not
+        # corpus-, proportional).
+        return spec.readout(state_as_of(spark, state_root, 1)).localCheckpoint(
+            eager=True
+        )
+
+
 @register(
     "events_rollup_time_travel",
     oracle="""
@@ -1767,64 +1820,19 @@ def events_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtracted (`state_as_of`, which fails loud on an uncommitted
     version rather than serving a torn write as history).
 
-    Batch membership is the md5-slice of ``event_id`` (the repo's
-    portable-hash discipline), so the oracle can name EXACTLY the rows
-    of batches 0-1 in SQL — unlike ts-range staging, whose sampled
-    partitioner boundaries no oracle could reproduce — and a hash-green
-    row proves as-of-v1 ≡ rollup(batches ≤ 1) with history UNPERTURBED
-    by the two batches folded after it. At 100 TB the version
-    directories are this test-scale scaffold's stand-in for a table
-    format's snapshot log (Delta/Iceberg ``VERSION AS OF``); the
-    SEMANTICS proven here — version k ≡ aggregate of prefix ≤ k, later
-    writes never mutate it — is the property those formats promise and
-    this lineage implements with plain parquet + commit markers.
+    Batch membership is the md5-slice of ``event_id`` (:func:`_asof`),
+    so a hash-green row proves as-of-v1 ≡ rollup(batches ≤ 1) with
+    history UNPERTURBED by the two batches folded after it. At 100 TB
+    the version directories are this test-scale scaffold's stand-in for
+    a table format's snapshot log (Delta/Iceberg ``VERSION AS OF``);
+    the SEMANTICS proven here — version k ≡ aggregate of prefix ≤ k,
+    later writes never mutate it — is the property those formats
+    promise and this lineage implements with plain parquet + commit
+    markers.
 
     The reference has no streaming, versioning, or time-travel surface;
     this family is the engine's [NORTH-STAR] extension mandate."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_type", "value", "event_id"
-    )
-    slc = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(4),
-    )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        os.makedirs(src)
-        for i in range(4):
-            part = os.path.join(d, f"slice{i}")
-            (
-                events.filter(slc == i)
-                .drop("event_id")
-                .coalesce(1)
-                .write.parquet(part)
-            )
-            files = _glob.glob(os.path.join(part, "part-*"))
-            if not files:  # empty slice (degenerate corpus)
-                continue
-            dst = os.path.join(src, f"b{i}.parquet")
-            shutil.copy(files[0], dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        schema = events.drop("event_id").schema
-        state = incremental_multires_drain(
-            spark, src, schema, os.path.join(d, "state"), os.path.join(d, "ckpt")
-        )
-        if state is None:  # empty source → no versions → empty rollup
-            return spark.createDataFrame([], ROLLUP.empty_schema)
-        out = ROLLUP.readout(state_as_of(spark, os.path.join(d, "state"), 1))
-        # Materialize before the tempdir vanishes (bounded: buckets×types
-        # rows — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
+    return _asof(spark, sf_dir, ROLLUP, ("ts", "event_type", "value"), None)
 
 
 @register(
@@ -1883,63 +1891,10 @@ def events_rollup_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no streaming, versioning, deletion, or
     time-travel surface; this family is the engine's [NORTH-STAR]
     extension mandate."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_type", "value", "user_id", "event_id"
+    return _asof(
+        spark, sf_dir, ROLLUP_ERASABLE, ("ts", "event_type", "value", "user_id"),
+        _erased_col(),
     )
-    slc = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(4),
-    )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        os.makedirs(src)
-        staged = []
-        for i in range(4):
-            part = os.path.join(d, f"slice{i}")
-            (
-                events.filter(slc == i)
-                .drop("event_id")
-                .coalesce(1)
-                .write.parquet(part)
-            )
-            files = _glob.glob(os.path.join(part, "part-*"))
-            if not files:  # empty slice (degenerate corpus)
-                continue
-            dst = os.path.join(src, f"b{i}.parquet")
-            shutil.copy(files[0], dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            staged.append(dst)
-        schema = events.drop("event_id").schema
-        state_root = os.path.join(d, "state")
-        incremental_multires_drain(
-            spark, src, schema, state_root, os.path.join(d, "ckpt"),
-            ROLLUP_ERASABLE,
-        )
-        if len(staged) < 2:  # degenerate: v1 never exists
-            return spark.createDataFrame([], ROLLUP_ERASABLE.empty_schema)
-        purged_root = os.path.join(d, "purged")
-        erase_versioned_history(
-            spark,
-            state_root,
-            purged_root,
-            [spark.read.parquet(p) for p in staged],
-            _erased_col(),
-            ROLLUP_ERASABLE,
-        )
-        out = ROLLUP_ERASABLE.readout(state_as_of(spark, purged_root, 1))
-        # Materialize before the tempdir vanishes (bounded: buckets×types
-        # rows — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -2001,58 +1956,10 @@ def events_quantile_erasure_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no streaming, versioning, deletion, quantile, or
     time-travel surface; this family is the engine's [NORTH-STAR]
     extension mandate."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    events = load_table(spark, "events", sf_dir).select(
-        "ts", "event_id", "user_id", "value"
+    return _asof(
+        spark, sf_dir, QUANTILE, ("ts", "event_id", "user_id", "value"),
+        _erased_col(),
     )
-    slc = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(4),
-    )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        os.makedirs(src)
-        staged = []
-        for i in range(4):
-            part = os.path.join(d, f"slice{i}")
-            # event_id STAYS in the batch (the sample ranks by its md5)
-            events.filter(slc == i).coalesce(1).write.parquet(part)
-            files = _glob.glob(os.path.join(part, "part-*"))
-            if not files:  # empty slice (degenerate corpus)
-                continue
-            dst = os.path.join(src, f"b{i}.parquet")
-            shutil.copy(files[0], dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            staged.append(dst)
-        state_root = os.path.join(d, "state")
-        incremental_multires_drain(
-            spark, src, events.schema, state_root, os.path.join(d, "ckpt"),
-            QUANTILE,
-        )
-        if len(staged) < 2:  # degenerate: v1 never exists
-            return spark.createDataFrame([], QUANTILE.empty_schema)
-        purged_root = os.path.join(d, "purged")
-        erase_versioned_history(
-            spark,
-            state_root,
-            purged_root,
-            [spark.read.parquet(p) for p in staged],
-            _erased_col(),
-            QUANTILE,
-        )
-        out = QUANTILE.readout(state_as_of(spark, purged_root, 1))
-        # Materialize before the tempdir vanishes (bounded: one row per
-        # bucket — time-horizon-, not corpus-, proportional).
-        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

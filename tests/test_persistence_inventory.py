@@ -67,19 +67,19 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
         (1, "contract-documented"),
     ("plans/events.py", "session_overlap_topk", "localCheckpoint"):
         (1, "contract-documented"),
-    # r14: the minute sketch fans out three ways (readout + hour + day
-    # via hour) — the broadcast-fan-out shape where exchange reuse
-    # stops; bounded at one row per minute bucket (time-horizon-, not
-    # corpus-, proportional).
-    ("plans/events.py", "events_multires_distinct_rollup",
-     "localCheckpoint"): (1, "bounded-relation"),
-    # r14: erasure repair — the pre-erasure minute state, one row per
-    # (bucket, type), time-horizon-proportional (the repaired minute is
-    # pinned by `_pin_minute` below).
-    ("plans/events.py", "events_rollup_user_erasure",
-     "localCheckpoint"): (1, "bounded-relation"),
-    ("plans/events.py", "events_distinct_user_erasure",
-     "localCheckpoint"): (1, "bounded-relation"),
+    # the batch cascade (all three classes, `AggSpec.cascade`): the
+    # minute tier fans out three ways (readout + hour + day via hour) —
+    # the broadcast-fan-out shape where exchange reuse stops; bounded at
+    # one row per minute bucket[, type] (time-horizon-, not corpus-,
+    # proportional).
+    ("plans/events.py", "cascade", "localCheckpoint"):
+        (1, "bounded-relation"),
+    # the batch erasure queries' pre-erasure minute state (all three
+    # classes, `_erasure_state`): one row per (bucket[, type]),
+    # time-horizon-proportional (the repaired minute is pinned by
+    # `_pin_minute` below).
+    ("plans/events.py", "_erasure_state", "localCheckpoint"):
+        (1, "bounded-relation"),
     # r15 opt: the KMV sketch relation (≤ k rows per event type) feeds
     # five downstream subtrees, several under broadcast branches where
     # ReuseExchange cannot dedupe — unpinned, the distinct+window sketch
@@ -143,35 +143,20 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     # body returns.
     ("streaming/jobs.py", "_erasure_incremental",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r15: the as-of-version readout — one row per (bucket, type) across
-    # three tiers, materialized before the tempdir state vanishes.
-    ("streaming/jobs.py", "events_rollup_time_travel",
-     "localCheckpoint"): (1, "bounded-relation"),
+    # the as-of harness's readout (all three as-of readers) — one row
+    # per (bucket[, type]) across three tiers, materialized before the
+    # tempdir lineage vanishes.
+    ("streaming/jobs.py", "_asof", "localCheckpoint"):
+        (1, "bounded-relation"),
     # r15: the history purge's running subtrahend — consumed twice per
     # version (emptiness probe + repair) and otherwise a V-long union
     # chain; bounded at one row per erased (bucket, type).
     ("streaming/jobs.py", "erase_versioned_history",
      "localCheckpoint"): (1, "bounded-relation"),
-    # r15: the purged-as-of readout — one row per (bucket, type) across
-    # three tiers, materialized before the tempdir lineage vanishes.
-    ("streaming/jobs.py", "events_rollup_erasure_asof",
-     "localCheckpoint"): (1, "bounded-relation"),
-    # r15 session 2, quantile family: the minute sample tier fans out
-    # three ways (own readout + hour + day via hour) — one ≤K-array row
-    # per minute bucket, time-horizon-proportional (same shape as the
-    # distinct cascade's pin).
-    ("plans/events.py", "events_multires_quantile_rollup",
-     "localCheckpoint"): (1, "bounded-relation"),
-    ("plans/events.py", "events_quantile_user_erasure",
-     "localCheckpoint"): (1, "bounded-relation"),
     # r15 opt: the erasure fold of a class with an inverse pins the
     # negated partials before handing them to the repair — one row per
     # erased (bucket, type), same rationale as the batch query's pin.
     ("streaming/jobs.py", "erasure_fold_merge",
-     "localCheckpoint"): (1, "bounded-relation"),
-    # final readout materialized before its tempdir state vanishes —
-    # one row per bucket across three tiers.
-    ("streaming/jobs.py", "events_quantile_erasure_asof",
      "localCheckpoint"): (1, "bounded-relation"),
     # r15: the IVF delete-in-place writes OVER the very cell directories
     # its lineage reads — the checkpoint truncates that read-overwrite

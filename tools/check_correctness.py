@@ -23,9 +23,6 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
-
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -129,18 +126,20 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from imdb_mapreduce_spark.session import get_spark
 
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
     spark = get_spark("correctness-check", master="local[8]", shuffle_partitions=8)
-    con = duck_connection(SF_DIR)
+    con = duck_connection(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
     failed, passed, rows_only = [], [], []
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failed.append(name)
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
@@ -168,7 +167,7 @@ def main() -> int:
 
     print(
         f"\n{len(passed)} passed, {len(failed)} failed, {len(rows_only)} rows-only"
-        f" @ {SF_DIR}"
+        f" @ {sf_dir}"
     )
     return 1 if failed else 0
 
