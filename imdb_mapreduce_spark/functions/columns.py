@@ -15,26 +15,11 @@ from pyspark.sql.window import Window
 # -- the reference's scalar surface (X1-X6) ---------------------------------
 
 
-def split_list(col: Column | str, sep: str = ",") -> Column:
-    """X1 — delimiter split to array (``string:split``)."""
-    return F.split(col if isinstance(col, Column) else F.col(col), sep)
-
-
 def strip_id_prefix(col: Column | str) -> Column:
     """X2 — drop the 2-char ``tt``/``nm`` prefix, parse long
     (``string:to_integer(string:sub_string(S, 3))``, server.erl:263)."""
     c = col if isinstance(col, Column) else F.col(col)
     return F.substring(c, 3, 16).cast("long")
-
-
-def trimmed(col: Column | str) -> Column:
-    """X3 — whitespace trim."""
-    return F.trim(col if isinstance(col, Column) else F.col(col))
-
-
-def joined(col: Column | str, sep: str = ", ") -> Column:
-    """X4 — array → delimited string (``string:join``)."""
-    return F.array_join(col if isinstance(col, Column) else F.col(col), sep)
 
 
 def sanitized_identifier(col: Column | str) -> Column:

@@ -74,20 +74,3 @@ def actor_to_movies(cast_edges: DataFrame) -> DataFrame:
     return cast_edges.groupBy("actor").agg(
         F.sort_array(F.collect_set("title")).alias("titles")
     )
-
-
-def write_silver(cast_edges: DataFrame, path: str, buckets: int | None = None) -> None:
-    """Persist the silver table (sink K2 analog of ``ets:tab2file``,
-    ``server.erl:161``). With ``buckets`` set, bucket by title so the BFS
-    expansion joins are co-located (no per-query shuffle at scale)."""
-    if buckets:
-        (
-            cast_edges.write.mode("overwrite")
-            .bucketBy(buckets, "title")
-            .sortBy("title")
-            .format("parquet")
-            .option("path", path)
-            .saveAsTable("cast_edges_bucketed")
-        )
-    else:
-        cast_edges.write.mode("overwrite").parquet(path)

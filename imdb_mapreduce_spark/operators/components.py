@@ -2,22 +2,19 @@
 near-dup pairs is how pairwise dedup results become keep/drop decisions in
 a training-data pipeline).
 
-Two algorithms behind one signature:
+One path behind one signature: the symmetric edge set is pinned
+(``localCheckpoint``); an edge set of at most :data:`DRIVER_THRESHOLD`
+edges is solved by a driver-side union-find, a larger one by min-label
+propagation, an iterative driver loop like the BFS (SURVEY.md §3.1
+pattern). Each round is a join + min-aggregate; ``localCheckpoint`` keeps
+lineage flat. Rounds needed = graph diameter — fine for dup clusters
+(small and dense), which is the only graph the engine runs it on.
 
-- ``label`` (default): min-label propagation, an iterative driver loop like
-  the BFS (SURVEY.md §3.1 pattern). Each round is a join + min-aggregate;
-  ``localCheckpoint`` keeps lineage flat. Rounds needed = graph diameter —
-  fine for dup clusters (small and dense), wrong for long chains.
-- ``star``: alternating large-star/small-star (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14). Converges in O(log² n)
-  rounds regardless of diameter — the 100 TB-safe path for arbitrary
-  graphs.
-
-Convergence detection in both is a per-round scalar checksum
+Convergence detection is a per-round scalar checksum
 ``(count, sum(xxhash64(...)))`` over the checkpointed state — one
-aggregate job, no join and no broadcast of the full label/edge relation
-(an earlier version broadcast the entire label set per round to diff old
-vs new; at 100 TB that broadcasts billions of rows every iteration).
+aggregate job, no join and no broadcast of the full label relation (an
+earlier version broadcast the entire label set per round to diff old vs
+new; at 100 TB that broadcasts billions of rows every iteration).
 """
 
 from __future__ import annotations
@@ -28,43 +25,76 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Label-propagation rounds before giving up with a RuntimeWarning; a
+# component of diameter above it may come back split.
+MAX_ITER = 20
+# Largest deduplicated edge count solved on the driver. Near-dup pair
+# graphs are tiny relative to the corpus that produced them, so this is
+# the path every workload takes; tests set it to 0 to run the loop.
+DRIVER_THRESHOLD = 100_000
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    algorithm: str = "label",
-    driver_threshold: int = 100_000,
-) -> DataFrame:
+
+def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``; component
     id = minimum node label in the component. Nodes are compared with
     their natural ordering (use consistent types).
 
-    ``algorithm="label"`` needs ~diameter rounds; ``algorithm="star"``
-    needs ~log² rounds on any shape. Emits a ``RuntimeWarning`` if
-    ``max_iter`` is exhausted before convergence (labels may be split).
-
-    Adaptive small-graph path: the deduplicated edge set is materialized
-    (checkpointed) before iterating anyway; if its count is at most
-    ``driver_threshold`` the components are solved with a driver-side
-    union-find instead of a multi-job iterative loop — identical output
-    (min-label components), microseconds instead of one Spark job per
-    round. Near-dup pair graphs are typically tiny relative to the corpus
-    that produced them, so this is the common case even at large scale;
-    pass ``driver_threshold=0`` to force the distributed loop.
+    The deduplicated symmetric edge set is materialized (checkpointed)
+    first; if its count is at most :data:`DRIVER_THRESHOLD` the
+    components are solved with a driver-side union-find instead of a
+    multi-job iterative loop — identical output (min-label components),
+    microseconds instead of one Spark job per round. Above it, label
+    propagation needs ~diameter rounds and emits a ``RuntimeWarning`` if
+    :data:`MAX_ITER` is exhausted before convergence (labels may be
+    split).
     """
-    if algorithm == "label":
-        return _label_propagation(pairs, src, dst, max_iter, driver_threshold)
-    if algorithm == "star":
-        return _alternating_star(pairs, src, dst, max_iter, driver_threshold)
-    raise ValueError(f"unknown algorithm: {algorithm!r} (use 'label' or 'star')")
+    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    edges = fwd.unionByName(
+        fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).distinct()
+    edges = edges.localCheckpoint(eager=True)
+    if edges.count() <= DRIVER_THRESHOLD:
+        return _driver_union_find(edges)
+
+    labels = (
+        edges.select(F.col("a").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
+    prev_sum = _checksum(labels, "node", "label")
+
+    for _ in range(MAX_ITER):
+        # neighbor labels flow along edges; every node keeps its own too
+        msgs = (
+            edges.join(labels, edges["a"] == labels["node"], "inner")
+            .select(F.col("b").alias("node"), F.col("label"))
+        )
+        labels = (
+            labels.select("node", "label")
+            .unionByName(msgs)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        cur_sum = _checksum(labels, "node", "label")
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    else:
+        warnings.warn(
+            f"connected_components did not converge within "
+            f"MAX_ITER={MAX_ITER}; components may be split.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return labels.select("node", F.col("label").alias("component"))
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Exact min-label components of a SMALL collected edge list (the
     caller has already bounded the size). Union-find with path halving;
-    component id = minimum member, matching the distributed algorithms."""
+    component id = minimum member, matching label propagation."""
     parent: dict = {}
 
     def find(x):
@@ -108,10 +138,9 @@ def local_relation(spark: SparkSession, frame: pd.DataFrame, schema: str) -> Dat
 def _checksum(df: DataFrame, *cols: str) -> tuple[int, int | None]:
     """One-scalar convergence probe: (row count, sum of xxhash64 of cols).
 
-    State transitions in both algorithms are monotone (labels only
-    decrease, star edges only contract toward minima), so an unchanged
-    checksum means an unchanged relation up to 64-bit-hash collision —
-    no join against the previous round's full state needed.
+    Labels only decrease from round to round, so an unchanged checksum
+    means an unchanged relation up to 64-bit-hash collision — no join
+    against the previous round's full state needed.
     """
     # decimal accumulator: long sums of 64-bit hashes overflow under ANSI
     row = df.agg(
@@ -119,136 +148,3 @@ def _checksum(df: DataFrame, *cols: str) -> tuple[int, int | None]:
         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return row["n"], row["h"]
-
-
-def _warn_nonconverged(algorithm: str, max_iter: int) -> None:
-    warnings.warn(
-        f"connected_components({algorithm!r}) did not converge within "
-        f"max_iter={max_iter}; components may be split. Raise max_iter or "
-        f"use algorithm='star' for high-diameter graphs.",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-
-
-def _label_propagation(
-    pairs: DataFrame, src: str, dst: str, max_iter: int, driver_threshold: int = 0
-) -> DataFrame:
-    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= driver_threshold:
-        return _driver_union_find(edges)
-
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = _checksum(labels, "node", "label")
-
-    converged = False
-    for _ in range(max_iter):
-        # neighbor labels flow along edges; every node keeps its own too
-        msgs = (
-            edges.join(labels, edges["a"] == labels["node"], "inner")
-            .select(F.col("b").alias("node"), F.col("label"))
-        )
-        labels = (
-            labels.select("node", "label")
-            .unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = _checksum(labels, "node", "label")
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        _warn_nonconverged("label", max_iter)
-    return labels.select("node", F.col("label").alias("component"))
-
-
-def _alternating_star(
-    pairs: DataFrame, src: str, dst: str, max_iter: int, driver_threshold: int = 0
-) -> DataFrame:
-    """Large-star/small-star alternation on a canonically-oriented edge set.
-
-    Edges are kept as (u, v) with u > v. At the fixpoint the edge set is a
-    union of stars, each centered at its component's minimum node, so the
-    final mapping reads directly off the edges.
-    """
-    nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .unionByName(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if edges.count() <= driver_threshold:
-        # isolated nodes (self-loop-only inputs) are absent from the
-        # canonical edges; restore them from the node set
-        solved = _driver_union_find(edges)
-        return (
-            nodes.join(solved, "node", "left")
-            .select("node", F.coalesce("component", "node").alias("component"))
-        )
-    prev_sum = _checksum(edges, "u", "v")
-
-    converged = False
-    for _ in range(max_iter):
-        # large-star: every strictly-larger neighbor of u links to
-        # m(u) = min(Γ(u) ∪ {u})
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        big_m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least(F.col("u"), F.col("mn")).alias("m"))
-        )
-        large = (
-            sym.join(big_m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # small-star: u's not-the-minimum smaller neighbors (and u itself)
-        # link to min(N(u) ∪ {u}) = min of its smaller neighbors
-        small_m = large.groupBy("u").agg(F.min("v").alias("m"))
-        with_m = large.join(small_m, "u")
-        edges = (
-            with_m.where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(small_m.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = _checksum(edges, "u", "v")
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        _warn_nonconverged("star", max_iter)
-
-    # stars point child → root (component minimum); roots and isolated
-    # nodes (e.g. self-loop-only inputs) map to themselves
-    mapping = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    return (
-        nodes.join(mapping, "node", "left")
-        .select("node", F.coalesce("component", "node").alias("component"))
-    )

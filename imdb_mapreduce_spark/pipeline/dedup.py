@@ -11,14 +11,14 @@ Four tiers, each the idiomatic scale path:
    carries a full DuckDB oracle. Scale guard: drop ultra-frequent shingles
    (stop-shingles) before the join — a shingle shared by f docs contributes
    f² join rows.
-3. **MinHash + LSH** — k independent min-hashes per doc (xxhash64 with
-   per-permutation salts), banded into LSH buckets; candidate pairs =
-   bucket-join, then verified with exact Jaccard. Sub-quadratic: the only
-   pairwise work is within buckets. (Not SQL-oracled — hash functions are
-   engine-specific; verified in tests/test_pipeline.py against tier 2.)
+3. **MinHash + LSH** — k min-hashes per doc (one md5 per shingle, then
+   k universal-hash permutations), banded into LSH buckets; candidate
+   pairs = bucket-join, then verified with exact Jaccard. Sub-quadratic:
+   the only pairwise work is within buckets. md5 and BIGINT arithmetic
+   are bit-identical in both engines, so it carries a full DuckDB oracle.
 4. **SimHash** — 64-bit bit-vote signature; near-dup = small Hamming
    distance, banded by 16-bit chunks for sub-quadratic candidate gen.
-   (Tests-only, same reason.)
+   Its token hashes are md5-derived, so it carries a full oracle too.
 
 An embedding-cosine near-dup variant lives in ``pipeline/similarity.py``.
 """
@@ -340,55 +340,8 @@ def jaccard_pairs_min_threshold(docs: DataFrame, thr: float) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tier 3 — MinHash + LSH (tests-only oracle: engine-specific hashes)
+# Tier 3 — MinHash + LSH (portable: md5 base hash, full oracle)
 # ---------------------------------------------------------------------------
-
-def minhash_signatures(docs: DataFrame, perms: int = MINHASH_PERMS) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — per-permutation minimum of salted
-    xxhash64 over the doc's shingles. One explode + one groupBy: the
-    signature build is a single shuffle regardless of perms."""
-    sh = exploded_shingles(docs).select("doc_id", "sh")
-    mins = [
-        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}") for i in range(perms)
-    ]
-    agged = sh.groupBy("doc_id").agg(*mins)
-    return agged.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(perms)]).alias("sig")
-    )
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int = LSH_BANDS, perms: int = MINHASH_PERMS
-) -> DataFrame:
-    """Candidate pairs via banded LSH: docs agreeing on ALL rows of any band.
-
-    Bucket key = (band index, hash of the band slice); a self-join per
-    bucket. Sub-quadratic because only same-bucket docs pair up.
-    """
-    rows_per_band = perms // bands
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                f" b -> struct(b as band, xxhash64(array_join(transform("
-                f"slice(sig, b * {rows_per_band} + 1, {rows_per_band}),"
-                f" x -> cast(x as string)), ',')) as bucket))"
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    a = banded.alias("a").hint("shuffle_hash")  # self-join exchange reuse
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .distinct()
-    )
 
 
 # Universal-hash permutation family for the portable minhash: h_i(x) =
@@ -409,11 +362,11 @@ def minhash_signatures_md5(docs: DataFrame, perms: int = MINHASH_PERMS) -> DataF
     parsed to a 28-bit int, then ``perms`` universal-hash permutations
     ``(a_i·h + b_i) mod p`` with literal constants.
 
-    Same single-shuffle shape and integer agg state as
-    :func:`minhash_signatures`, but every step exists identically in any
-    SQL engine (md5 + integer arithmetic), so the whole LSH pipeline is
-    SQL-oracle-checkable — unlike xxhash64, which is Spark-specific. The
-    per-row cost is one md5 instead of ``perms`` hashes.
+    One explode + one groupBy: the signature build is a single shuffle
+    regardless of perms. Every step exists identically in any SQL engine
+    (md5 + integer arithmetic), so the whole LSH pipeline is
+    SQL-oracle-checkable. The expression reference
+    :func:`minhash_signatures_arrow` is tested against.
     """
     base = exploded_shingles(docs).select(
         "doc_id",
@@ -434,8 +387,8 @@ def lsh_candidate_pairs_md5(
     sigs: DataFrame, bands: int = LSH_BANDS, perms: int = MINHASH_PERMS
 ) -> DataFrame:
     """Banded LSH over md5 signatures: bucket = md5 of the comma-joined
-    band slice; candidates = same-(band, bucket) pairs. Identical join
-    shape to :func:`lsh_candidate_pairs`."""
+    band slice; candidates = same-(band, bucket) pairs, one self-join per
+    bucket. Sub-quadratic because only same-bucket docs pair up."""
     rpb = perms // bands
     band_structs = [
         F.struct(
@@ -530,10 +483,7 @@ def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses the portable signature (one md5 per shingle + universal-hash
     permutations) so the ENTIRE pipeline — including which candidate pairs
-    the LSH bands surface — is replicated in the DuckDB oracle (previously
-    rows-only: xxhash64 is Spark-specific). The xxhash64 build
-    (:func:`minhash_signatures`) remains available and is pytest-verified
-    against exact Jaccard.
+    the LSH bands surface — is replicated in the DuckDB oracle.
 
     Signatures come from the Arrow fast path
     (:func:`minhash_signatures_arrow`) — bit-identical to the expression

@@ -438,266 +438,6 @@ def random_hyperplane_buckets(
     return emb.select("*", F.posexplode(buckets).alias("table", "bucket"))
 
 
-def ivf_index(
-    emb: DataFrame, k: int = 8, seed: int = 42
-) -> "tuple[DataFrame, list[list[float]]]":
-    """IVF coarse quantizer: k-means cells over the corpus
-    (``pyspark.ml`` KMeans, seeded). Returns the (vec_id, embedding, cell)
-    assignments plus the centroids (cell i = i-th centroid), which the
-    query side needs for nprobe > 1 probing.
-
-    At 100 TB: fit the quantizer on a sample (k-means cost is per-row ×
-    iterations), persist cell assignments partitioned BY cell so a query
-    reads only its probed cells' files — the classic IVF index layout
-    (pinned by ``tests/test_storage.py::
-    test_ivf_cell_partition_layout_prunes_probed_cells``: the probe
-    IN-list lands in PartitionFilters, i.e. directory pruning).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.select(
-        "vec_id", "embedding", array_to_vector("embedding").alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=10).fit(vecs)
-    assigned = model.transform(vecs).select(
-        "vec_id", "embedding", F.col("prediction").alias("cell")
-    )
-    centers = [c.tolist() for c in model.clusterCenters()]
-    return assigned, centers
-
-
-def ivf_cells(emb: DataFrame, k: int = 8, seed: int = 42) -> DataFrame:
-    """Cell assignments only (see :func:`ivf_index`)."""
-    return ivf_index(emb, k, seed)[0]
-
-
-def probed_cells(
-    spark: SparkSession, queries: DataFrame, centers: "list[list[float]]", nprobe: int
-) -> DataFrame:
-    """(query_id, cell) for each query's ``nprobe`` nearest centroids —
-    the query-side fan-out of IVF probing. Centroids are a driver-side
-    list (k × dim floats, tiny) broadcast as a literal relation; ranking
-    is by exact L2 distance. Corpus side stays partitioned by cell."""
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], "cell int, center array<double>"
-    )
-    d2 = F.expr(
-        "aggregate(zip_with(qe, center, (x, y) -> (CAST(x AS DOUBLE) - y) *"
-        " (CAST(x AS DOUBLE) - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("cell"))
-    return (
-        queries.crossJoin(F.broadcast(cdf))
-        .select("query_id", "cell", d2.alias("d2"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= nprobe)
-        .select("query_id", "cell")
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    index_dir: str,
-    k: int = 8,
-    seed: int = 42,
-    fit_fraction: float | None = None,
-) -> None:
-    """Materialize the IVF index: the one-time WRITE phase that makes
-    querying sub-linear in I/O.
-
-    Layout (the one ``tests/test_storage.py`` pins for pruning):
-      ``{index_dir}/cells/cell=<i>/…``  — full corpus (vec_id, embedding),
-        parquet partitioned BY cell → a probe reads only its directories;
-      ``{index_dir}/centroids/``        — k (cell, center) rows, the coarse
-        quantizer the query side ranks against.
-
-    ``fit_fraction`` fits the quantizer on a sample (k-means cost is
-    per-row × iterations) while still assigning the FULL corpus — the
-    standard 100 TB recipe: train on ~1%, transform everything once.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = emb.sparkSession
-    fit_src = emb.sample(fit_fraction, seed=seed) if fit_fraction else emb
-    model = KMeans(k=k, seed=seed, maxIter=10).fit(
-        fit_src.select(array_to_vector("embedding").alias("features"))
-    )
-    assigned = model.transform(
-        emb.select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
-    ).select("vec_id", "embedding", F.col("prediction").alias("cell"))
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{index_dir}/cells"
-    )
-    cdf = spark.createDataFrame(
-        [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())],
-        "cell int, center array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-
-
-def _ivf_index_dir(spark: SparkSession, sf_dir: str, k: int, seed: int) -> str:
-    """Resolve (and lazily build) the persisted IVF index for a corpus.
-
-    The index is keyed by corpus identity — (source path basename, source
-    parquet mtime+size fingerprint, k, seed) — under the local warehouse.
-    A regenerated embeddings.parquet therefore invalidates the index
-    automatically (the r03 lesson: never trust persisted state across a
-    testdata re-encode). Build happens at most once per corpus version;
-    every subsequent call is pure read."""
-    import json
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    fingerprint = {
-        "src": src,
-        "mtime_ns": st.st_mtime_ns,
-        "size": st.st_size,
-        "k": k,
-        "seed": seed,
-    }
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    index_dir = os.path.join(
-        repo, "spark-warehouse", "ivf", os.path.basename(sf_dir.rstrip("/"))
-    )
-    meta_path = os.path.join(index_dir, "_meta.json")
-    # Trust the fingerprint only if both index parts finished writing
-    # (_SUCCESS markers); torn meta or an externally deleted data dir must
-    # rebuild, not fail the read. Meta lands atomically after the data.
-    if os.path.exists(meta_path):
-        try:
-            with open(meta_path) as f:
-                stored = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            stored = None
-        if stored == fingerprint and all(
-            os.path.exists(os.path.join(index_dir, part, "_SUCCESS"))
-            for part in ("cells", "centroids")
-        ):
-            return index_dir
-    build_ivf_index(load_table(spark, "embeddings", sf_dir), index_dir, k, seed)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(fingerprint, f)
-    os.replace(tmp, meta_path)
-    return index_dir
-
-
-def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, nprobe: int = 1
-) -> DataFrame:
-    """IVF ANN over the PERSISTED cell-partitioned index (VERDICT r03 item
-    6: the registered read path must not refit KMeans per call).
-
-    LIBRARY FUNCTION since r06 (VERDICT r05 item 3): the REGISTERED IVF
-    query is :func:`ann_ivf_det_topk` — same probe/search pipeline with
-    md5-anchored pivots, hash-verified against the DuckDB oracle. This
-    KMeans-trained variant is the production-quality quantizer (data-
-    adaptive cells beat hash-anchored ones on clustered corpora) but its
-    float fixpoint is deliberately not replicated in SQL; its correctness
-    evidence is the pytest suite: exact-top-k-within-probed-cells,
-    nprobe-monotone recall, and full-probe ≡ brute-force equivalence
-    (tests/test_pipeline.py). Deregistering it makes the registry 100%
-    oracle-backed with zero rows-only entries.
-
-    Query flow: read the k centroids (tiny), rank them per query driver-
-    side (numpy over N_QUERIES×k distances — both sides bounded constants,
-    ~10×8 here; a large query BATCH would use :func:`probed_cells` + a
-    dynamic-partition-pruning join instead), then scan ONLY the probed
-    cells' directories — the probe IN-list is a planning-time literal, so
-    it lands in PartitionFilters (directory pruning, pinned by
-    ``tests/test_storage.py``), and the scan never touches the other
-    cells' files. Complements the LSH variant: data-adaptive cells give
-    better candidates on clustered corpora; LSH needs no training.
-    Raising ``nprobe`` is the recall knob."""
-    import numpy as np
-
-    idx = _ivf_index_dir(spark, sf_dir, k=8, seed=42)
-    centers = {
-        r["cell"]: np.array(r["center"])
-        for r in spark.read.parquet(f"{idx}/centroids").collect()
-    }
-    # Query side: N_QUERIES bounded rows — driver-side probe ranking.
-    emb = load_table(spark, "embeddings", sf_dir)
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        "vec_id", "embedding"
-    ).collect()
-    probe_pairs = []  # (query_id, probed cell)
-    for r in q_rows:
-        qe = np.array(r["embedding"], dtype="float64")
-        ranked = sorted(
-            centers, key=lambda c: (float(np.sum((qe - centers[c]) ** 2)), c)
-        )
-        probe_pairs.extend((r["vec_id"], c) for c in ranked[:nprobe])
-    probes = spark.createDataFrame(probe_pairs, "query_id bigint, qc int")
-    q = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            norm("embedding").alias("qn"),
-        )
-        .join(F.broadcast(probes), "query_id")
-    )
-    cells_needed = sorted({c for _, c in probe_pairs})
-    corpus = (
-        spark.read.parquet(f"{idx}/cells")
-        # literal IN-list → PartitionFilters → only probed directories read
-        .filter(F.col("cell").isin(cells_needed))
-        # r06: norm folds once per scanned corpus vector, not per candidate
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("ce"),
-            F.col("cell").alias("cc"),
-            norm("embedding").alias("cn"),
-        )
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            corpus,
-            (F.col("qc") == F.col("cc")) & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        # No distinct needed: each corpus vector belongs to exactly one
-        # k-means cell and the probe list holds each (query, cell) at most
-        # once, so (query_id, neighbor_id) pairs are already unique — a
-        # defensive distinct here would shuffle two 64-float arrays per
-        # candidate for nothing.
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot("qe", "ce") / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def multiprobe_query_buckets(
-    bucketed: DataFrame, probes: int = LSH_PLANES
-) -> DataFrame:
-    """Multi-probe expansion of the QUERY side only: each (table, bucket)
-    row fans out to the bucket itself plus its ``probes`` Hamming-1
-    neighbors (one sign bit flipped). The corpus side is untouched, so
-    this trades more probe reads for fewer tables / less index storage —
-    the standard recall knob when duplicating the corpus ×L is the
-    bottleneck. Measured at sf0.01: recall 0.72 → 1.00 vs brute force
-    with the default 12×5 knobs."""
-    flips = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(probes)],
-    )
-    return bucketed.select(
-        "vec_id", "embedding", "table", F.explode(flips).alias("bucket")
-    )
-
-
 def _ann_lsh_oracle() -> str:
     """DuckDB replica of the LSH-bucketed top-k: identical plane literals
     and left-associated double sums (the same primitives the r04
@@ -745,15 +485,11 @@ def _ann_lsh_oracle() -> str:
     oracle=_ann_lsh_oracle(),
     tags=("similarity", "north-star", "lsh"),
 )
-def ann_lsh_topk(
-    spark: SparkSession, sf_dir: str, multiprobe: int = 0
-) -> DataFrame:
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: score only candidates sharing a bucket in ANY of
     the hash tables (multi-table union = the recall knob; recall vs brute
     force asserted in tests). Per-query cost is |union of buckets|, not
-    |corpus| — the sub-linear scale path. ``multiprobe=k`` additionally
-    probes each query bucket's k Hamming-1 neighbors (query side only;
-    see :func:`multiprobe_query_buckets`).
+    |corpus| — the sub-linear scale path.
 
     Converted from rows-only to a full oracle in r05: the DuckDB oracle
     replicates the bucket fold bit-for-bit (same plane literals,
@@ -776,8 +512,6 @@ def ann_lsh_topk(
     qside = random_hyperplane_buckets_arrow(
         emb.filter(F.col("vec_id") < N_QUERIES), exact=True
     )
-    if multiprobe:
-        qside = multiprobe_query_buckets(qside, multiprobe)
     # r06: norms fold once per (vector, table) row here — bounded by
     # 12·|corpus| — instead of twice per scored candidate pair (strictly
     # fewer folds whenever buckets collide at all). Same double sequence,
@@ -1119,10 +853,10 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic-pivot IVF (r05): the hash-verifiable sibling of ann_ivf_topk.
+# Deterministic-pivot IVF: md5-anchored cells, the engine's one IVF.
 # ---------------------------------------------------------------------------
 
-IVF_DET_K = 8  # pivot count (matches ann_ivf_topk's k for comparability)
+IVF_DET_K = 8  # pivot count = cell count
 IVF_DET_NPROBE = 2
 
 
@@ -1253,21 +987,19 @@ def _ivf_det_oracle() -> str:
 )
 def ann_ivf_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a DETERMINISTIC coarse quantizer — the hash-verifiable
-    sibling of :func:`ann_ivf_topk` (VERDICT r04: shrink the rows-only
-    set). Same probe/search pipeline (cell assignment → nprobe probing →
-    within-cell exact cosine → top-k), but the k cells are anchored on
-    md5-ranked corpus vectors instead of a KMeans float fixpoint, so the
+    IVF: cell assignment → nprobe probing → within-cell exact cosine →
+    top-k, with the k cells anchored on md5-ranked corpus vectors, so the
     ENTIRE path — pivot choice, argmin assignment, probe ranking, scoring,
-    ranking — is bit-replicable in the DuckDB oracle. KMeans cells give
-    better candidates on clustered corpora (that quality gap is exactly
-    what ``tests`` measure as recall); this variant proves the machinery.
+    ranking — is bit-replicable in the DuckDB oracle (no training state,
+    no RNG). Within its probed cells the search is exact, and probing all
+    ``IVF_DET_K`` cells equals brute force (both pytest-pinned).
 
     Plan shape (the one that survives 100 TB): pivots are k collected rows
     baked into the plan as literals; cell assignment is ONE narrow
     projection (k distance folds + an array sort per row — no fan-out, no
-    shuffle, exactly KMeans-transform's cost model); the probe side is
-    N_QUERIES·nprobe rows broadcast into a hash join against the corpus
-    keyed by cell; top-k is a per-query window over candidates only."""
+    shuffle); the probe side is N_QUERIES·nprobe rows broadcast into a
+    hash join against the corpus keyed by cell; top-k is a per-query
+    window over candidates only."""
     emb = load_table(spark, "embeddings", sf_dir)
     pivots = ivf_det_pivots(spark, sf_dir)
     ranked = _ivf_det_ranked(pivots)
@@ -2138,15 +1870,13 @@ def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single exchange of 64·partitions partial rows regardless of corpus
     size (the textbook associative-agg scaling shape)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    from imdb_mapreduce_spark.plans.parity import DEC
-
     ex = emb.select(F.posexplode("embedding").alias("pos", "vf")).select(
         (F.col("pos") + 1).alias("dim"), F.col("vf").cast("double").alias("v")
     )
     agg = ex.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n_vals"),
-        F.sum(F.col("v").cast(DEC)).cast("double").alias("s"),
-        F.sum((F.col("v") * F.col("v")).cast(DEC)).cast("double").alias("ss"),
+        F.sum(F.col("v").cast("decimal(38,6)")).cast("double").alias("s"),
+        F.sum((F.col("v") * F.col("v")).cast("decimal(38,6)")).cast("double").alias("ss"),
         F.min("v").alias("min_val"),
         F.max("v").alias("max_val"),
     )
@@ -2286,111 +2016,6 @@ def hard_negative_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= HARD_NEG_K)
         .select("query_id", "negative_id", "neg_label", "cosine", "rnk")
     )
-
-
-def assigned_cells_two_level(emb: DataFrame, pivots) -> DataFrame:
-    """Two-level (hierarchical) coarse quantizer — the production fix for
-    the n·k assignment term SCALING.md documents: route each vector to its
-    nearest TWO super-pivots (≈√k supers; top-2 multiprobe routing, the
-    standard recall fix), then argmin over only the fine pivots owned by
-    those super-cells. Fold-rows per vector drop from k to ≈3√k; at k=160
-    that is 13 + ~24 instead of 160.
-
-    APPROXIMATE by design (the industry-standard tradeoff): a vector whose
-    true nearest fine pivot lives in a different super-cell is routed to
-    its second-best — agreement with the flat argmin is corpus-dependent
-    and pytest-floored (test_r06_ops). Not oracle-portable, hence a
-    library path: the registered query keeps the exact quantizer.
-
-    This is the ALGORITHM-SHAPE reference (expression folds, readable,
-    bit-auditable); the practical k ≤ ~10⁴ regime is served faster by the
-    flat Arrow path in :func:`_assigned_cells` (measured 0.3 s vs 2.7 s
-    at k=160), so production use at k ≫ 10³ should Arrow-ize these two
-    stages the same way before reaching for it.
-
-    Plan: two broadcast joins + two map-side-combining argmin aggregations
-    + a join back on vec_id — every stage linear in n."""
-    import math
-
-    spark = emb.sparkSession
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    k = len(pivots)
-    sk = max(1, int(math.isqrt(k - 1)) + 1)  # ceil(sqrt(k))
-    supers = pivots[::sk][:sk]  # every sk-th pivot in md5 rank order
-    # driver-side (k × sk small): each fine pivot joins its nearest super
-    def _d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) * (x - y)
-        return acc
-
-    owner = {
-        cell: min(
-            range(len(supers)),
-            key=lambda s: (_d2(vec, supers[s][1]), s),
-        )
-        for cell, vec in pivots
-    }
-    sp_schema = StructType(
-        [
-            StructField("sc", IntegerType()),
-            StructField("spe", ArrayType(DoubleType())),
-        ]
-    )
-    sp = spark.createDataFrame(
-        [(s, list(supers[s][1])) for s in range(len(supers))], sp_schema
-    )
-    fp_schema = StructType(
-        [
-            StructField("sc", IntegerType()),
-            StructField("cell", IntegerType()),
-            StructField("pe", ArrayType(DoubleType())),
-        ]
-    )
-    fp = spark.createDataFrame(
-        [(owner[cell], cell, list(vec)) for cell, vec in pivots], fp_schema
-    )
-    d2s = F.expr(
-        "aggregate(zip_with(embedding, spe,"
-        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    # Multiprobe routing: keep the TOP-2 super-cells per vector (collect
-    # of ≤sk structs, map-side combining) — the standard recall fix for
-    # hierarchical quantizers; fold-rows stay ~n·(√k + 2√k).
-    routed = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(sp))
-        .select("vec_id", F.struct(d2s.alias("d2"), F.col("sc")).alias("dsc"))
-        .groupBy("vec_id")
-        .agg(
-            F.slice(F.sort_array(F.collect_list("dsc")), 1, 2).alias("top")
-        )
-        .select("vec_id", F.explode("top").alias("dsc"))
-        .select("vec_id", F.col("dsc.sc").alias("sc"))
-    )
-    d2f = F.expr(
-        "aggregate(zip_with(embedding, pe,"
-        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    best = (
-        emb.select("vec_id", "embedding")
-        .join(routed, "vec_id")
-        .join(F.broadcast(fp), "sc")
-        .select("vec_id", F.struct(d2f.alias("d2"), F.col("cell")).alias("dc"))
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("dc"))
-        .select("vec_id", F.col("dc.cell").alias("cell"))
-    )
-    return emb.select("vec_id", "embedding").join(best, "vec_id")
 
 
 SEMDEDUP_EVAL_N = 500  # truth sample bound: all-pairs stays 125k at ANY SF

@@ -405,29 +405,6 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def approx_price_quantiles(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10_000
-) -> DataFrame:
-    """The 100 TB version of :func:`order_price_quantiles`: Greenwald-
-    Khanna sketches via ``approx_percentile`` — partial-aggregable (the
-    shuffle carries one mergeable sketch per group, never the sorted
-    values), with rank error ≤ 1/accuracy. Not oracle-registered (sketch
-    internals are engine-specific); tests bound its error against the
-    exact query instead."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
-        F.count("*").alias("n_orders"),
-        F.expr(f"approx_percentile(o_totalprice, 0.5, {accuracy})").alias(
-            "median_price"
-        ),
-        F.expr(f"approx_percentile(o_totalprice, 0.9, {accuracy})").alias(
-            "p90_price"
-        ),
-        F.min("o_totalprice").alias("min_price"),
-        F.max("o_totalprice").alias("max_price"),
-    )
-
-
 @register(
     "key_skew_profile",
     oracle="""

@@ -6,7 +6,7 @@ JSON extraction.
 These are the batch forms; ``streaming/`` runs the same logical plans as
 Structured Streaming with watermarks. Determinism rules: window orderings
 carry the unique ``event_id`` tiebreak; double sums go through exact
-DECIMAL (parity.py); durations are integer epoch-microsecond diffs.
+DECIMAL (``plans/registry.py``); durations are integer epoch-microsecond diffs.
 """
 
 from __future__ import annotations

@@ -6,12 +6,13 @@ DataFrame`` plus, when SQL-expressible, the equivalent ANSI SQL the DuckDB
 oracle runs on the same parquet tables. The driver hash-compares the two at
 sf=0.01 (row count + schema + order-insensitive value hash).
 
-Cross-engine determinism rules used throughout (see also
-``plans/parity.py``):
+Cross-engine determinism rules used throughout:
 - every computed column is aliased IDENTICALLY in Spark and SQL;
 - floating-point aggregation goes through exact DECIMAL arithmetic and is
   cast back to DOUBLE at the end — summation order then cannot change the
-  result between engines;
+  result between engines (rounding a finite double to DECIMAL(38,6) is a
+  deterministic function of the value in both, so both sum identical
+  decimals exactly);
 - arrays are emitted as sorted, comma-joined strings (list hashing across
   engines is representation-sensitive);
 - window / top-k orderings always carry a unique tiebreak column.

@@ -21,7 +21,8 @@ from imdb_mapreduce_spark.plans.registry import register
 from imdb_mapreduce_spark.sources.star import load_table
 
 # Exact-decimal types for money math (values are 2-decimal; conversion is
-# exact, so cross-engine sums are bit-identical — see parity.py).
+# exact, so cross-engine sums are bit-identical — see the registry.py
+# module docstring).
 D2 = "decimal(12,2)"  # prices, quantities
 D6 = "decimal(9,6)"   # rates (discount/tax)
 

@@ -2,75 +2,58 @@
 
 from __future__ import annotations
 
+import pytest
+
+from imdb_mapreduce_spark.operators import components
 from imdb_mapreduce_spark.operators.components import connected_components
 
 
-def _cc(spark, pairs, **kw):
-    # driver_threshold=0 forces the distributed loop — these tests verify
-    # the iterative algorithms, not the small-graph union-find shortcut
-    kw.setdefault("driver_threshold", 0)
+def _components(spark, pairs):
     df = spark.createDataFrame(pairs, ["src", "dst"])
     return {
         r["node"]: r["component"]
-        for r in connected_components(df, "src", "dst", **kw).collect()
+        for r in connected_components(df, "src", "dst").collect()
     }
 
 
-def test_two_components(spark):
-    got = _cc(spark, [(1, 2), (2, 3), (10, 11)])
+@pytest.fixture
+def distributed(monkeypatch):
+    """A zero driver threshold runs the label-propagation loop — these
+    tests verify it, not the small-graph union-find shortcut."""
+    monkeypatch.setattr(components, "DRIVER_THRESHOLD", 0)
+
+
+def test_two_components(spark, distributed):
+    got = _components(spark, [(1, 2), (2, 3), (10, 11)])
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_chain_diameter(spark):
+def test_chain_diameter(spark, distributed):
     # long chain exercises multi-round propagation
-    got = _cc(spark, [(i, i + 1) for i in range(1, 12)])
+    got = _components(spark, [(i, i + 1) for i in range(1, 12)])
     assert set(got.values()) == {1}
     assert len(got) == 12
 
 
-def test_cycle_and_strings(spark):
-    got = _cc(spark, [("b", "c"), ("c", "a"), ("a", "b"), ("x", "y")])
+def test_cycle_and_strings(spark, distributed):
+    got = _components(spark, [("b", "c"), ("c", "a"), ("a", "b"), ("x", "y")])
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def _cc_star(spark, pairs):
-    return _cc(spark, pairs, algorithm="star")
-
-
-def test_star_path_graph_beyond_label_budget(spark):
-    # Path of 61 nodes: diameter 60 >> max_iter=20, where label propagation
-    # cannot converge; alternating star needs only O(log^2 n) rounds.
-    got = _cc_star(spark, [(i, i + 1) for i in range(60)])
-    assert len(got) == 61
-    assert set(got.values()) == {0}
-
-
-def test_star_agrees_with_label_propagation(spark):
-    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (7, 7)]
-    assert _cc_star(spark, pairs) == _cc(spark, pairs)
-
-
-def test_label_nonconvergence_warns(spark):
-    import pytest as _pytest
-
+def test_label_nonconvergence_warns(spark, distributed, monkeypatch):
+    monkeypatch.setattr(components, "MAX_ITER", 3)
     df = spark.createDataFrame([(i, i + 1) for i in range(30)], ["src", "dst"])
-    with _pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(
-            df, "src", "dst", max_iter=3, driver_threshold=0
-        ).collect()
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        connected_components(df, "src", "dst").collect()
 
 
-def test_driver_union_find_matches_distributed(spark):
+def test_driver_union_find_matches_distributed(spark, monkeypatch):
     # the small-graph shortcut (default threshold) must produce exactly
-    # the distributed loop's min-label components, for both algorithms
+    # the distributed loop's min-label components
     pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (7, 7), (5, 4)]
-    df = spark.createDataFrame(pairs, ["src", "dst"])
-    fast = {
-        r["node"]: r["component"]
-        for r in connected_components(df, "src", "dst").collect()
-    }
-    assert fast == _cc(spark, pairs)
-    assert fast == _cc_star(spark, pairs)
+    fast = _components(spark, pairs)
+    monkeypatch.setattr(components, "DRIVER_THRESHOLD", 0)
+    assert fast == _components(spark, pairs)
 
 
 def test_driver_union_find_returns_a_jvm_relation(spark):
@@ -109,7 +92,7 @@ def _nx_components(pairs):
     return label
 
 
-def test_property_all_algorithms_agree_on_random_graphs(spark):
+def test_property_all_algorithms_agree_on_random_graphs(spark, monkeypatch):
     from hypothesis import given, settings, strategies as st
 
     @given(
@@ -122,16 +105,10 @@ def test_property_all_algorithms_agree_on_random_graphs(spark):
     @settings(max_examples=8, deadline=None)
     def check(pairs):
         want = _nx_components(pairs)
-        df = spark.createDataFrame(pairs, ["src", "dst"])
-        for kw in (
-            {},  # driver union-find shortcut
-            {"driver_threshold": 0},  # distributed label propagation
-            {"driver_threshold": 0, "algorithm": "star"},  # distributed star
-        ):
-            got = {
-                r["node"]: r["component"]
-                for r in connected_components(df, "src", "dst", **kw).collect()
-            }
-            assert got == want, kw
+        # driver union-find shortcut, then distributed label propagation
+        for threshold in (components.DRIVER_THRESHOLD, 0):
+            with monkeypatch.context() as m:
+                m.setattr(components, "DRIVER_THRESHOLD", threshold)
+                assert _components(spark, pairs) == want, threshold
 
     check()

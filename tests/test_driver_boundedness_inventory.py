@@ -22,7 +22,7 @@ Accepted classifications:
 - ``scalar-agg``: collect of an aggregation already reduced to ≤1 row
   (footer-probe fallbacks, checksums, max-key reads).
 - ``bounded-rows``: collect bounded by an explicit constant in code
-  (``limit(k)``, ``N_QUERIES`` filter, k-centroid index metadata).
+  (``limit(k)``, ``N_QUERIES`` filter).
 - ``bounded-export``: driver-side tree/DOT export bounded by the BFS
   operator's own budget guards (the reference's client-facing surface).
 - ``thresholded``: guarded by an explicit row-count threshold that
@@ -32,7 +32,7 @@ Accepted classifications:
   (the scalar-attach idiom; Cartesian in name only).
 - ``bounded-dims``: crossJoin where both sides are bounded-small by
   construction (time grid × event types, zone-map file list × fixed
-  probe set, bounded query set × index centroids).
+  probe set).
 - ``exact-tier``: the documented brute-force tier (bounded query
   broadcast × corpus scan) whose scale-safe sibling is registered and
   cross-referenced in its docstring.
@@ -98,18 +98,12 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
         (1, "one-row-attach"),
     ("pipeline/similarity.py", "ann_cosine_topk", "crossJoin"):
         (1, "exact-tier"),
-    ("pipeline/similarity.py", "probed_cells", "crossJoin"):
-        (1, "bounded-dims"),
-    ("pipeline/similarity.py", "ann_ivf_topk", "collect"):
-        (2, "bounded-rows"),
     ("pipeline/similarity.py", "embedding_label_centroids", "crossJoin"):
         (1, "one-row-attach"),
     ("pipeline/similarity.py", "ivf_det_pivots", "collect"):
         (1, "bounded-rows"),
     ("pipeline/similarity.py", "hard_negative_mining", "crossJoin"):
         (1, "exact-tier"),
-    ("pipeline/similarity.py", "assigned_cells_two_level", "crossJoin"):
-        (1, "bounded-dims"),
     ("pipeline/text.py", "lang_id_confusion", "crossJoin"):
         (1, "one-row-attach"),
     # r15: the erased rows' distinct owning cells (≤ k cell ids) — the

@@ -21,6 +21,7 @@ from imdb_mapreduce_spark.operators.graph_export import (
     render_png,
     sorted_vertices,
     to_dot,
+    write_dot,
 )
 from tests.conftest import two_hop_bfs
 
@@ -110,8 +111,9 @@ def test_input_validation(cast_edges):
                 costar_bfs(adjacency, "Jane Doe", "actor", level, max_vertices=budget)
 
 
-def test_dot_export(cast_edges):
-    dot = to_dot("Jane Doe", "actor", _costar(cast_edges, "Jane Doe", "actor", level=2))
+def test_dot_export(cast_edges, tmp_path):
+    edges = _costar(cast_edges, "Jane Doe", "actor", level=2)
+    dot = to_dot("Jane Doe", "actor", edges)
     assert dot.startswith("digraph G {")
     assert '  label="Jane Doe (level graph)";' in dot
     # ids are the quoted names: the digit 0 kept (reference bug graph.erl:30)
@@ -121,6 +123,11 @@ def test_dot_export(cast_edges):
     assert dot.index('"Jane Doe" -> "John Q. Smith 0"') < dot.index(
         '"Jane Doe" -> "Bob O\'Hara"'
     )
+    # the file sink writes exactly that text
+    path = str(tmp_path / "reply.dot")
+    assert write_dot("Jane Doe", "actor", edges, path) == path
+    with open(path, encoding="utf-8") as f:
+        assert f.read() == dot
 
 
 def test_result_independent_of_partitioning(spark):

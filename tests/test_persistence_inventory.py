@@ -47,9 +47,7 @@ METHODS = {"localCheckpoint", "checkpoint", "persist", "cache"}
 # (relpath, enclosing function, method) → (expected site count, class)
 INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("api.py", "__init__", "cache"): (1, "opt-in-cache"),
-    ("operators/components.py", "_alternating_star", "localCheckpoint"):
-        (3, "lineage-truncation"),
-    ("operators/components.py", "_label_propagation", "localCheckpoint"):
+    ("operators/components.py", "connected_components", "localCheckpoint"):
         (3, "lineage-truncation"),
     ("operators/graph.py", "unipartite_bfs", "localCheckpoint"):
         (1, "lineage-truncation"),

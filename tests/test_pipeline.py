@@ -1,6 +1,7 @@
 """Pipeline-operator invariants that the DuckDB oracle can't check:
-MinHash/LSH recall vs exact Jaccard, SimHash properties, LSH-ANN recall
-vs brute force, multimodal stub behavior."""
+MinHash/LSH near-dup collisions, SimHash properties, LSH-ANN recall vs
+brute force, IVF exactness within probed cells, multimodal stub
+behavior."""
 
 from __future__ import annotations
 
@@ -8,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from imdb_mapreduce_spark.pipeline.dedup import (
-    lsh_candidate_pairs,
-    minhash_signatures,
+    MINHASH_PERMS,
+    lsh_candidate_pairs_md5,
+    minhash_signatures_md5,
     simhash_sig,
     simhash_near_pairs,
 )
@@ -36,15 +38,18 @@ def near_dup_docs(spark):
 
 
 def test_minhash_identical_docs_identical_sigs(near_dup_docs):
-    sigs = {r["doc_id"]: r["sig"] for r in minhash_signatures(near_dup_docs).collect()}
+    sigs = {
+        r["doc_id"]: tuple(r[f"h{i}"] for i in range(MINHASH_PERMS))
+        for r in minhash_signatures_md5(near_dup_docs).collect()
+    }
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[4]
 
 
 def test_lsh_finds_near_dups_not_far_pairs(near_dup_docs):
-    sigs = minhash_signatures(near_dup_docs)
+    sigs = minhash_signatures_md5(near_dup_docs)
     pairs = {
-        (r["doc1"], r["doc2"]) for r in lsh_candidate_pairs(sigs).collect()
+        (r["doc1"], r["doc2"]) for r in lsh_candidate_pairs_md5(sigs).collect()
     }
     assert (1, 2) in pairs  # exact dup always collides
     assert (1, 3) in pairs  # near dup: differs in 1 of 13 words
@@ -83,42 +88,26 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     assert recall >= 0.6
 
 
-def test_ann_ivf_recall_vs_bruteforce(spark):
-    from imdb_mapreduce_spark.pipeline.similarity import (
-        ann_cosine_topk,
-        ann_ivf_topk,
-    )
-
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_cosine_topk(spark, SF).collect()
-    }
-    ivf = {
-        (r["query_id"], r["neighbor_id"]) for r in ann_ivf_topk(spark, SF).collect()
-    }
-    assert len(ivf) > 0
-    assert len(ivf & exact) > 0  # real neighbors survive cell restriction
-
-
-def test_ann_ivf_full_probe_equals_brute_force(spark):
-    """Registry-delegation evidence (r06, VERDICT r05 item 3): the KMeans
-    IVF library path with nprobe = k (every cell probed) must equal the
+def test_ann_ivf_full_probe_equals_brute_force(spark, monkeypatch):
+    """The deterministic IVF with every cell probed must equal the
     brute-force cosine top-k EXACTLY — pairs, scores, and ranks. With the
     cell restriction removed, any residual difference would be a bug in
-    the probe/scoring/ranking machinery, which is the part the registered
-    (oracle-backed) ann_ivf_det_topk shares with this variant."""
+    the probe/scoring/ranking machinery."""
+    from imdb_mapreduce_spark.pipeline import similarity
     from imdb_mapreduce_spark.pipeline.similarity import (
+        IVF_DET_K,
         ann_cosine_topk,
-        ann_ivf_topk,
+        ann_ivf_det_topk,
     )
 
+    monkeypatch.setattr(similarity, "IVF_DET_NPROBE", IVF_DET_K)
     exact = {
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rnk"])
         for r in ann_cosine_topk(spark, SF).collect()
     }
     full = {
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rnk"])
-        for r in ann_ivf_topk(spark, SF, nprobe=8).collect()
+        for r in ann_ivf_det_topk(spark, SF).collect()
     }
     assert full == exact
 
@@ -210,54 +199,6 @@ def test_embedding_lsh_dups_agrees_with_label_blocking(spark):
     assert all(label[k] == lsh[k] for k in found)  # same verify, bit-exact
 
 
-def test_ann_lsh_multiprobe_raises_recall(spark):
-    # Hamming-1 multi-probe on the query side only: strictly more
-    # candidates, strictly better recall (measured 0.72 -> 1.00 at sf0.01,
-    # 0.76 -> expected >= 0.9 here; deterministic seeded planes).
-    from imdb_mapreduce_spark.pipeline.similarity import (
-        ann_cosine_topk,
-        ann_lsh_topk,
-    )
-
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_cosine_topk(spark, SF).collect()
-    }
-    single = {
-        (r["query_id"], r["neighbor_id"]) for r in ann_lsh_topk(spark, SF).collect()
-    }
-    multi = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_lsh_topk(spark, SF, multiprobe=5).collect()
-    }
-    assert len(multi & exact) / len(exact) >= 0.9
-    assert len(multi & exact) >= len(single & exact)
-
-
-def test_ann_ivf_nprobe_raises_recall(spark):
-    # probing the query's N nearest cells (exact centroid distances) is
-    # monotone in recall: measured 0.30 / 0.50 / 0.62 at sf0.01 for
-    # nprobe 1/2/3 (deterministic: seeded k-means, fixed data).
-    from imdb_mapreduce_spark.pipeline.similarity import (
-        ann_cosine_topk,
-        ann_ivf_topk,
-    )
-
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_cosine_topk(spark, SF).collect()
-    }
-    r1 = {
-        (r["query_id"], r["neighbor_id"]) for r in ann_ivf_topk(spark, SF).collect()
-    }
-    r3 = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_ivf_topk(spark, SF, nprobe=3).collect()
-    }
-    assert len(r3 & exact) >= len(r1 & exact)
-    assert len(r3 & exact) / len(exact) >= 0.4
-
-
 def test_arrow_bucket_fast_path_matches_expression_path(spark):
     # The numpy-matmul bucket builder must agree with the codegen
     # expression path. Agreement is exact on this corpus (a disagreement
@@ -295,55 +236,57 @@ def test_arrow_bucket_fast_path_matches_expression_path(spark):
 def test_ann_ivf_is_exact_within_probed_cells(spark):
     """The sharp IVF invariant (this is the query's real contract, far
     stronger than nonzero recall): for every query, the IVF top-k equals
-    the EXACT cosine top-k restricted to vectors in the probed cells —
-    the approximation lives entirely in the cell restriction, never in
-    the scoring or ranking."""
-    import numpy as np
+    the EXACT cosine top-k restricted to vectors in the query's
+    ``IVF_DET_NPROBE`` nearest md5-pivot cells — the approximation lives
+    entirely in the cell restriction, never in the scoring or ranking.
+    Distances and dot products are re-derived here as left folds, the
+    order the engine's folds add in."""
+    import math
 
     from imdb_mapreduce_spark.pipeline.similarity import (
+        IVF_DET_NPROBE,
         N_QUERIES,
         TOP_K,
-        _ivf_index_dir,
-        ann_ivf_topk,
+        ann_ivf_det_topk,
+        ivf_det_pivots,
     )
     from imdb_mapreduce_spark.sources.star import load_table
 
-    idx = _ivf_index_dir(spark, SF, k=8, seed=42)
-    centers = {
-        r["cell"]: np.array(r["center"], dtype="float64")
-        for r in spark.read.parquet(f"{idx}/centroids").collect()
-    }
-    cell_of = {
-        r["vec_id"]: r["cell"] for r in spark.read.parquet(f"{idx}/cells").collect()
-    }
+    def fold(a, b, term):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += term(float(x), float(y))
+        return acc
+
+    pivots = ivf_det_pivots(spark, SF)
     vecs = {
-        r["vec_id"]: np.array(r["embedding"], dtype="float64")
+        r["vec_id"]: r["embedding"]
         for r in load_table(spark, "embeddings", SF).collect()
     }
+    ranked = {
+        v: sorted((fold(e, p, lambda x, y: (x - y) * (x - y)), c) for c, p in pivots)
+        for v, e in vecs.items()
+    }
+    cell_of = {v: r[0][1] for v, r in ranked.items()}
+    norm = {v: math.sqrt(fold(e, e, lambda x, y: x * y)) for v, e in vecs.items()}
 
     expected = set()
     for qid in range(N_QUERIES):
         if qid not in vecs:
             continue
-        qe = vecs[qid]
-        probe = min(
-            centers, key=lambda c: (float(np.sum((qe - centers[c]) ** 2)), c)
-        )
-        cands = [v for v, c in cell_of.items() if c == probe and v != qid]
+        probes = {c for _, c in ranked[qid][:IVF_DET_NPROBE]}
+        cands = [v for v, c in cell_of.items() if c in probes and v != qid]
         scored = sorted(
             cands,
             key=lambda v: (
-                -float(
-                    np.dot(qe, vecs[v])
-                    / (np.linalg.norm(qe) * np.linalg.norm(vecs[v]))
-                ),
+                -fold(vecs[qid], vecs[v], lambda x, y: x * y) / (norm[qid] * norm[v]),
                 v,
             ),
         )
         expected |= {(qid, v) for v in scored[:TOP_K]}
 
     got = {
-        (r["query_id"], r["neighbor_id"]) for r in ann_ivf_topk(spark, SF).collect()
+        (r["query_id"], r["neighbor_id"]) for r in ann_ivf_det_topk(spark, SF).collect()
     }
     assert got == expected
 
@@ -414,9 +357,9 @@ def test_arrow_builders_match_expressions_on_random_text(spark):
 
 
 def test_ann_ivf_det_properties(spark):
-    """The deterministic-pivot IVF (hash-verifiable sibling of ann_ivf_topk):
-    cell assignment must be the true argmin over the md5-ranked pivots, and
-    real neighbors must survive the cell restriction."""
+    """The deterministic-pivot IVF: cell assignment must be the true
+    argmin over the md5-ranked pivots, and real neighbors must survive
+    the cell restriction."""
     from imdb_mapreduce_spark.pipeline.similarity import (
         IVF_DET_K,
         TOP_K,

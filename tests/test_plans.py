@@ -222,27 +222,6 @@ def test_global_plan_hygiene_sweep(spark, queries):
             assert name in ALLOW_BNLJ, name
 
 
-def test_approx_quantiles_within_error_of_exact(spark, queries):
-    # The sketch path must stay within GK rank-error of the exact sort
-    # path, and its aggregation must be partial (mergeable sketches cross
-    # the shuffle, not sorted values).
-    from imdb_mapreduce_spark.plans.analytics import approx_price_quantiles
-
-    exact = {
-        r["priority"]: r
-        for r in queries["order_price_quantiles"].spark_fn(spark, SF).collect()
-    }
-    approx = {r["priority"]: r for r in approx_price_quantiles(spark, SF).collect()}
-    assert set(approx) == set(exact)
-    for prio, row in approx.items():
-        e = exact[prio]
-        spread = e["max_price"] - e["min_price"]
-        assert abs(row["median_price"] - e["median_price"]) <= 0.05 * spread, prio
-        assert abs(row["p90_price"] - e["p90_price"]) <= 0.05 * spread, prio
-    plan = explain_str(approx_price_quantiles(spark, SF))
-    assert "partial_approx_percentile" in plan
-
-
 def test_json_trilogy_paths_agree_and_variant_parses_jvm_side(spark):
     """The three JSON decode tiers (get_json_object string path,
     from_json struct, parse_json VARIANT) must extract the identical k

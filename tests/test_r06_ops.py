@@ -287,35 +287,6 @@ def test_hard_negative_lsh_recall_vs_bruteforce(spark):
     assert recall >= 0.5, recall  # 12x5 sign-LSH on near-orthogonal data
 
 
-def test_two_level_quantizer_agreement_and_linear_shape(spark):
-    """The hierarchical quantizer must (a) assign every vector, (b) agree
-    with the exact flat argmin on a large majority of vectors, and (c)
-    never assign a cell outside the pivot set."""
-    from imdb_mapreduce_spark.pipeline.similarity import (
-        _assigned_cells,
-        assigned_cells_two_level,
-        ivf_det_pivots,
-    )
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    emb = load_table(spark, "embeddings", SF)
-    pivots = ivf_det_pivots(spark, SF, k=16)
-    flat = {
-        r["vec_id"]: r["cell"] for r in _assigned_cells(emb, pivots).collect()
-    }
-    two = {
-        r["vec_id"]: r["cell"]
-        for r in assigned_cells_two_level(emb, pivots).collect()
-    }
-    assert set(two) == set(flat)
-    cells = {c for c, _ in pivots}
-    assert set(two.values()) <= cells
-    agree = sum(1 for v in flat if flat[v] == two[v]) / len(flat)
-    # near-orthogonal corpus = the hard routing regime; production corpora
-    # (clustered) agree far higher. Floor catches structural breakage.
-    assert agree >= 0.6, agree
-
-
 def test_semdedup_eval_metrics_reconciles(spark):
     """The audit's counts must reconcile against a numpy recompute of the
     bounded-sample truth and the cell assignment."""

@@ -63,16 +63,19 @@ def test_bucketed_join_is_shuffle_free_on_bucket_key(spark):
 
 
 def test_ivf_cell_partition_layout_prunes_probed_cells(spark, tmp_path):
-    """The IVF index layout claim (pipeline/similarity.ivf_index docstring):
-    persist cell assignments partitioned BY cell, and a query reads only
-    its probed cells' directories — partition pruning at planning time,
-    not a post-scan filter. This is what makes IVF sub-linear in I/O, not
-    just in compute."""
-    from imdb_mapreduce_spark.pipeline.similarity import ivf_cells
+    """The IVF index layout claim: persist cell assignments partitioned BY
+    cell (the deterministic md5-pivot cells ``ann_ivf_erasure_topk``
+    writes), and a query reads only its probed cells' directories —
+    partition pruning at planning time, not a post-scan filter. This is
+    what makes IVF sub-linear in I/O, not just in compute."""
+    from imdb_mapreduce_spark.pipeline.similarity import (
+        _assigned_cells,
+        ivf_det_pivots,
+    )
     from imdb_mapreduce_spark.sources.star import load_table as lt
 
     emb = lt(spark, "embeddings", SF)
-    cells = ivf_cells(emb)
+    cells = _assigned_cells(emb, ivf_det_pivots(spark, SF))
     path = str(tmp_path / "corpus_by_cell")
     cells.write.mode("overwrite").partitionBy("cell").parquet(path)
     back = read_partitioned(spark, path)
@@ -84,35 +87,6 @@ def test_ivf_cell_partition_layout_prunes_probed_cells(spark, tmp_path):
     assert "IN (0,3)" in pf
     n_probed = probed.count()
     assert 0 < n_probed < back.count()  # strictly fewer rows than the corpus
-
-
-def test_registered_ivf_query_reads_persisted_index(spark):
-    """VERDICT r03 item 6: the REGISTERED ann_ivf_topk must be a pure read
-    of the persisted cell-partitioned index — probe IN-list in
-    PartitionFilters, and no KMeans refit on a second call (the index
-    build is once per corpus fingerprint)."""
-    import json
-    import os
-
-    from imdb_mapreduce_spark.pipeline.similarity import (
-        _ivf_index_dir,
-        ann_ivf_topk,
-    )
-
-    df = ann_ivf_topk(spark, SF)  # builds the index iff absent/stale
-    plan = _explain(df)
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf, "registered IVF query must scan the cell-partitioned index"
-    assert "IN (" in pf[0], f"probe IN-list not pruned: {pf[0]}"
-    assert "KMeans" not in plan
-    # second call: same fingerprint → no rebuild (meta mtime unchanged)
-    idx = _ivf_index_dir(spark, SF, k=8, seed=42)
-    meta = os.path.join(idx, "_meta.json")
-    before = os.stat(meta).st_mtime_ns
-    ann_ivf_topk(spark, SF).collect()
-    assert os.stat(meta).st_mtime_ns == before
-    with open(meta) as f:
-        assert json.load(f)["k"] == 8
 
 
 def test_ivf_delete_in_place_touches_only_erased_cells(
