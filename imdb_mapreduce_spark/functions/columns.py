@@ -79,55 +79,6 @@ def salted_collect_set(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: spread each hot key of ``big`` over
-    ``salt_buckets`` tasks by salting, replicating ``small``'s matching
-    rows across every salt value.
-
-    When to use over AQE's skew-join split: AQE splits a skewed partition
-    AFTER shuffling it (and can't when the join consumes a bucketed /
-    pre-partitioned layout it wants to preserve); explicit salting shapes
-    the shuffle itself, and composes with bucketed tables. The salt on the
-    big side derives from ``spark_partition_id`` + a per-row counter — no
-    RNG, but NOT stable across task retries or repartitioning
-    (``monotonically_increasing_id`` re-numbers on re-execution). The
-    RESULT is still retry-safe because every salt value joins the same
-    replicated small-side rows — which salt a row lands in cannot change
-    what it matches. Replication multiplies the SMALL side by
-    ``salt_buckets``; keep it the dimension side.
-
-    Result is row-identical to ``big.join(small, on, how)``. Only
-    ``inner`` / ``left`` / ``left_semi`` are accepted: a right or full
-    outer join would emit every unmatched small-side row once per salt
-    value — ``salt_buckets`` duplicates.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "semi"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join supports how in {sorted(allowed)}, got {how!r}: "
-            "right/full outer would duplicate unmatched small-side rows "
-            "once per salt bucket"
-        )
-    salted_big = big.withColumn(
-        "_salt",
-        F.pmod(
-            F.hash(F.spark_partition_id(), F.monotonically_increasing_id()),
-            F.lit(salt_buckets),
-        ),
-    )
-    salts = F.explode(
-        F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-    ).alias("_salt")
-    replicated = small.select("*", salts)
-    return salted_big.join(replicated, [on, "_salt"], how).drop("_salt")
-
-
 def salted_running_stats(
     df: DataFrame,
     key: str = "user_id",

@@ -60,73 +60,6 @@ DRIVER_MAX_EDGES = 4_000_000
 INT64_MAX = 2**63 - 1
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
-    max_broadcast_rows: int = 1_000_000,
-) -> DataFrame:
-    """Ranks after a FIXED number of power iterations (deterministic runs
-    beat adaptive stopping for reproducible corpus builds; pair with the
-    scalar checksum probe from ``components.py`` if convergence stopping
-    is wanted). Returns (node, rank).
-
-    While the node count stays under ``max_broadcast_rows``, the rank and
-    contribution relations broadcast into each iteration's joins — the
-    big edge table is scanned from cache, never shuffled, and each round
-    pays ONE exchange (the contribution aggregation) instead of two
-    (measured r05, sf0.1: 8.0 s vs 9.3 s for 10 rounds). Past the
-    threshold the hints drop and AQE plans from runtime sizes — the same
-    guarded-broadcast discipline as ``operators/graph.unipartite_bfs``.
-
-    Dangling nodes (no out-edges) contribute nothing — the standard
-    simplification; symmetrized graphs have none.
-    """
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    deg = e.groupBy("_src").agg(F.count("*").alias("_deg"))
-    ed = e.join(deg, "_src").persist()
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .union(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    try:
-        n = nodes.count()  # bounded driver value: one scalar
-        bc = n <= max_broadcast_rows
-        base = (1.0 - damping) / n
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        for i in range(iterations):
-            r = F.broadcast(ranks) if bc else ranks
-            contribs = (
-                ed.join(r, ed._src == r.node)
-                .select("_dst", (F.col("rank") / F.col("_deg")).alias("_c"))
-                .groupBy("_dst")
-                .agg(F.sum("_c").alias("_contrib"))
-            )
-            if bc:
-                contribs = F.broadcast(contribs)
-            ranks = (
-                nodes.join(contribs, nodes.node == contribs._dst, "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce(F.col("_contrib"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            if (i + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.localCheckpoint(eager=True)
-    finally:
-        ed.unpersist()
-        nodes.unpersist()
-
-
 def pagerank_exact(
     edges: DataFrame,
     src: str = "src",
@@ -158,16 +91,16 @@ def pagerank_exact(
     ``checkpoint_every``, ``shuffle_gc``, ``final_checkpoint`` and
     ``max_broadcast_rows`` apply only to the distributed rounds.
 
-    The distributed rounds have the shuffle shape of :func:`pagerank`
-    (one join + one agg per round, checkpointed lineage). Bound check at
-    scale=10^15: total rank mass ≤ 10^15, so per-node contributions sum
+    The distributed rounds have the shuffle shape the module docstring
+    describes (one join + one agg per round, checkpointed lineage).
+    Bound check at scale=10^15: total rank mass ≤ 10^15, so per-node contributions sum
     < 10^15 and the damping multiply peaks below 10^17 — five orders of
     magnitude inside int64.
     The floor divisions leak ≤ deg ulps of mass per node per round:
     deterministic, engine-identical, and irrelevant at 10^-15 resolution.
 
-    Dangling nodes (no out-edges) contribute nothing, as in
-    :func:`pagerank`; symmetrized graphs have none.
+    Dangling nodes (no out-edges) contribute nothing — the standard
+    simplification; symmetrized graphs have none.
 
     ``deg`` names a PRECOMPUTED out-degree column on ``edges`` (the silver
     ``copurchase_edges`` table carries one since r08): the degree
@@ -227,7 +160,11 @@ def pagerank_exact(
     )
     try:
         n = nodes.count()
-        bc = n <= max_broadcast_rows  # guarded broadcast, as in pagerank()
+        # guarded broadcast: while the nodes fit, ranks and contributions
+        # broadcast into each round's joins, so a round pays one exchange
+        # (the contribution aggregation) instead of two; past the bound
+        # AQE plans from runtime sizes, as in operators/graph
+        bc = n <= max_broadcast_rows
         r0 = scale // n
         base = (scale * (damping_den - damping_num) // damping_den) // n
         ranks = nodes.withColumn("rank_scaled", F.lit(r0).cast("bigint"))

@@ -318,12 +318,34 @@ def suggest_overlap_plan(
     end: str,
 ) -> OverlapPlan:
     """Data-proportional (bin_width, max_bins_per_row, hot_bin_threshold,
-    hot_bin_salts) for ``overlap_join_binned`` — ``suggest_bin_plan``'s
-    width/budget cost model (see its docstring for the derivation and
-    calibration history) extended with the hot-bin ARMING decision, at
-    zero extra Spark jobs: the same single aggregate that sizes W also
-    yields n/d̄/horizon, from which the expected exploded population of
-    a uniform bin is n·(d̄+W)/(horizon+W); the threshold is
+    hot_bin_salts) for ``overlap_join_binned`` — one cheap aggregate
+    over the interval table, then the closed-form optimum of the
+    operator's own cost model (SCALING.md r12): explode cost ≈ c·n·d̄/W
+    rows, probe cost ≈ n²·W/T candidates (n intervals, MEAN duration d̄,
+    horizon T, c the explode:probe unit-cost ratio). d(total)/dW = 0 →
+    **W\\* = sqrt(c)·sqrt(d̄·T/n)**: W shrinks with the square root of
+    density growth — exactly the lever the measured W A/B showed paying
+    for quadratic density — scaled by the calibrated
+    ``_EXPLODE_COST_RATIO_SQRT`` (shuffled rows are ~2 orders costlier
+    than codegen probes; see the constant's comment).
+
+    The LONG TAIL sizes the explode BUDGET, not the width: an early
+    version floor-clamped W so the longest interval fit a fixed budget,
+    and the 1000× run showed that policy letting ONE long session cap
+    the resolution for all 95M — candidates blew up ×100+ and the drain
+    was killed at >38 min (SCALING.md r12 addendum 2/3). A long
+    interval exploding to many bin-rows is linear, honest work already
+    priced into the n·d̄/W term; so the returned budget is
+    max_dur//W + 2 (the guard still fails loud if data drifts LONGER
+    than the probed maximum — its real job), and W stays the mean-based
+    optimum. The result set is W-invariant, so auto-sizing is a pure
+    plan decision — same contract as the engine's footer-probe
+    persist/salt decisions.
+
+    The hot-bin ARMING decision rides along at zero extra Spark jobs:
+    the same single aggregate that sizes W also yields n/d̄/horizon,
+    from which the expected exploded population of a uniform bin is
+    n·(d̄+W)/(horizon+W); the threshold is
     max(:data:`_HOT_BIN_MIN_POP`, :data:`_HOT_BIN_EXPECTED_MULT` ×
     expected). The EXACT per-bin counting stays inside
     ``overlap_join_binned``'s pre-pass — this estimate only places the
@@ -351,40 +373,6 @@ def suggest_overlap_plan(
         _HOT_BIN_MIN_POP, int(_HOT_BIN_EXPECTED_MULT * expected_pop)
     )
     return OverlapPlan(w, budget, threshold, _HOT_BIN_SALTS)
-
-
-def suggest_bin_plan(
-    intervals: DataFrame,
-    start: str,
-    end: str,
-) -> tuple[int, int]:
-    """Data-proportional (bin_width, max_bins_per_row) for
-    ``overlap_join_binned`` — one cheap aggregate over the interval
-    table, then the closed-form optimum of the operator's own cost
-    model (SCALING.md r12): explode cost ≈ c·n·d̄/W rows, probe cost ≈
-    n²·W/T candidates (n intervals, MEAN duration d̄, horizon T, c the
-    explode:probe unit-cost ratio). d(total)/dW = 0 →
-    **W\\* = sqrt(c)·sqrt(d̄·T/n)**: W shrinks with the square root of
-    density growth — exactly the lever the measured W A/B showed paying
-    for quadratic density — scaled by the calibrated
-    ``_EXPLODE_COST_RATIO_SQRT`` (shuffled rows are ~2 orders costlier
-    than codegen probes; see the constant's comment).
-
-    The LONG TAIL sizes the explode BUDGET, not the width: an early
-    version floor-clamped W so the longest interval fit a fixed budget,
-    and the 1000× run showed that policy letting ONE long session cap
-    the resolution for all 95M — candidates blew up ×100+ and the drain
-    was killed at >38 min (SCALING.md r12 addendum 2/3). A long
-    interval exploding to many bin-rows is linear, honest work already
-    priced into the n·d̄/W term; so the returned budget is
-    max_dur//W + 2 (the guard still fails loud if data drifts LONGER
-    than the probed maximum — its real job), and W stays the mean-based
-    optimum. The result set is W-invariant, so auto-sizing is a pure
-    plan decision — same contract as the engine's footer-probe
-    persist/salt decisions.
-    """
-    plan = suggest_overlap_plan(intervals, start, end)
-    return plan.bin_width, plan.max_bins_per_row
 
 
 def band_join(

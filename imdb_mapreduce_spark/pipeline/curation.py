@@ -220,34 +220,6 @@ def sample_n_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_upsert_join(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
-    """Join-formulated MERGE for update batches with ≤1 row per key: FULL
-    OUTER on the merge key, update wins per column, unmatched updates are
-    inserts. Row-identical to the window formulation (pytest-pinned) —
-    but the shape that EXPLOITS a bucketed base table: the window variant
-    unions both sides first (union discards bucketing → full shuffle);
-    here the bucketed base side joins WITHOUT an exchange, so only the
-    small update batch shuffles. That asymmetry is the whole point of
-    maintaining a bucketed silver table under CDC
-    (``tests/test_storage.py::test_cdc_join_on_bucketed_base_shuffles_only_updates``).
-
-    Caveat: updates are FULL-ROW images (CDC after-images), so per-column
-    ``coalesce(update, base)`` is latest-wins; a delta feed that encodes
-    "set to NULL" needs an explicit tombstone column instead.
-    """
-    cols = base.columns
-    b = base.alias("b")
-    u = updates.alias("u")
-    picked = [
-        F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
-        for c in cols
-        if c != key
-    ]
-    return b.join(u, F.col(f"b.{key}") == F.col(f"u.{key}"), "full_outer").select(
-        F.coalesce(F.col(f"u.{key}"), F.col(f"b.{key}")).alias(key), *picked
-    )
-
-
 @register(
     "cdc_orders_upsert",
     oracle="""
@@ -277,11 +249,10 @@ def cdc_orders_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     The update batch here is derived deterministically (every 10th order
     re-priced +10%, exact integer cents) so the oracle can replay it.
 
-    100 TB posture: one shuffle on the merge key (window + rn=1); with the
-    base table bucketed by key (``sources/storage.write_bucketed``) even
-    that shuffle drops to the (small) update batch. In production the same
-    logic runs through a storage layer's MERGE (Delta/Iceberg) — this
-    operator IS that semantics, engine-side, for plain parquet.
+    100 TB posture: one shuffle on the merge key (window + rn=1). In
+    production the same logic runs through a storage layer's MERGE
+    (Delta/Iceberg) — this operator IS that semantics, engine-side, for
+    plain parquet.
 
     Money math: prices go through exact DECIMAL(12,2) → integer cents;
     the +10% is ``cents * 11 div 10`` in BIGINT — no float ever touches

@@ -212,8 +212,7 @@ def pagerank_coparts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle (r05, VERDICT item 4): the iteration runs in scaled-integer
     arithmetic (``operators/pagerank.pagerank_exact``, scale 10^15) —
     order-independent, expressible as 10 unrolled CTE rounds in DuckDB,
-    bit-identical, hash-comparable. The float ``pagerank`` operator
-    remains for convergence-style use."""
+    bit-identical, hash-comparable."""
     from imdb_mapreduce_spark.operators.pagerank import pagerank_exact
     from imdb_mapreduce_spark.sources.star import parquet_num_rows
 

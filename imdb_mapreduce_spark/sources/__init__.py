@@ -1,4 +1,4 @@
-from imdb_mapreduce_spark.sources.star import TABLES, load_table, load_tables
+from imdb_mapreduce_spark.sources.star import TABLES, load_table
 from imdb_mapreduce_spark.sources.imdb import (
     read_names_tsv,
     read_principals_tsv,
@@ -9,7 +9,6 @@ from imdb_mapreduce_spark.sources.imdb import (
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_names_tsv",
     "read_principals_tsv",
     "read_titles_tsv",

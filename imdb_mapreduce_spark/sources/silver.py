@@ -397,40 +397,3 @@ def copurchase_edges(
         build,
         key=by,
     )
-
-
-def cached_query_result(
-    spark: SparkSession, sf_dir: str, name: str, tables: tuple[str, ...] = ()
-) -> DataFrame:
-    """Materialized RESULT CACHE for any registered query: the first call
-    computes the query and writes its result as a silver parquet table;
-    every later call is a pure parquet read — until any source table's
-    (path, mtime, size) changes, which rebuilds automatically.
-
-    The fingerprint covers every table the query reads (``tables``;
-    defaults to all star tables when unspecified — correct but coarser
-    invalidation) plus the query name. This is the engine-service form of
-    result caching: unlike ``df.cache()`` it survives the session, is
-    shared across processes, and can never serve a result that disagrees
-    with its inputs (the r03 staleness lesson, generalized from the
-    cluster-map and IVF-index materializations to the whole registry)."""
-    from imdb_mapreduce_spark.plans.registry import all_queries
-    from imdb_mapreduce_spark.sources.star import TABLES
-
-    q = all_queries()[name]
-    deps = tables or tuple(TABLES)
-    stats = {}
-    for t in deps:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        st = os.stat(p)
-        stats[t] = [st.st_mtime_ns, st.st_size]
-    # reuse materialized()'s fingerprint/atomicity machinery; the first
-    # dep stands as src_table and the rest ride in params
-    return materialized(
-        spark,
-        sf_dir,
-        f"result__{name}",
-        deps[0],
-        {"query": name, "deps": stats},
-        lambda: q.spark_fn(spark, sf_dir),
-    )

@@ -2,9 +2,10 @@
 
 K1/K3 — the reference's human-readable adjacency dump ``key\\tv1, v2, ...``
 (``/root/reference/src/server/server.erl:379-389``; pandas equivalent
-``sort_data.py:19``). K2 — binary table snapshot (``server.erl:161,167``)
-which in Spark is simply parquet: lineage already gives fault tolerance, so
-snapshots are a storage format choice, not a replication protocol.
+``sort_data.py:19``). K2 — the binary table snapshot (``server.erl:161,167``)
+— is ``ImdbEngine.save``/``load`` in ``api.py``: parquet, because lineage
+already gives fault tolerance, so a snapshot is a storage format choice,
+not a replication protocol.
 """
 
 from __future__ import annotations
@@ -28,31 +29,3 @@ def write_adjacency_tsv(df: DataFrame, key_col: str, list_col: str, path: str) -
         .options(sep="\t", header="false")
         .csv(path)
     )
-
-
-def snapshot_parquet(df: DataFrame, path: str) -> None:
-    """Table snapshot (K2): parquet, overwrite."""
-    df.write.mode("overwrite").parquet(path)
-
-
-def restore_parquet(spark, path: str) -> DataFrame:
-    """Snapshot restore (``ets:file2tab`` analog, ``server.erl:329,334``)."""
-    return spark.read.parquet(path)
-
-
-def snapshot_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Format-parameterized snapshot (K2 generalized): parquet (default),
-    orc, or json — the columnar formats share schema+stats; json is the
-    interchange escape hatch. Every format keeps overwrite semantics."""
-    if fmt not in ("parquet", "orc", "json"):
-        raise ValueError(f"unsupported snapshot format: {fmt}")
-    df.write.mode("overwrite").format(fmt).save(path)
-
-
-def restore_table(spark, path: str, fmt: str = "parquet") -> DataFrame:
-    """Restore a :func:`snapshot_table` dump (schema from file metadata
-    for columnar formats; JSON restores need the caller to re-cast types
-    that JSON cannot carry — restore returns whatever the format kept)."""
-    if fmt not in ("parquet", "orc", "json"):
-        raise ValueError(f"unsupported snapshot format: {fmt}")
-    return spark.read.format(fmt).load(path)

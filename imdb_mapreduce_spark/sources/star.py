@@ -26,11 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor: their
-# cardinality is fixed (region=5, nation=25) or grows far slower than facts.
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
-
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -109,21 +104,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     elif dtype == "timestamp_ntz":
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every star table as a session temp view (same names the
-    DuckDB oracle uses), so the whole engine is drivable with raw
-    ``spark.sql`` — the SQL front door for users migrating off the
-    reference who think in queries, not DataFrames. Views go through
-    :func:`load_table`, so the events timestamp normalization and the
-    UTC session pin apply to SQL users too."""
-    for t, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)
 
 
 def parquet_num_rows(path: str) -> int:

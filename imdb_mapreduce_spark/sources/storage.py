@@ -7,17 +7,16 @@ Two mechanisms, both exercised by tests/test_storage.py:
   (SortMergeJoin/HashAggregate read the bucketed layout directly). This is
   the durable version of the reference's co-partitioning-by-tconst
   (SURVEY.md §2.2 note).
-- **Partitioning**: directory-partition facts on a low-cardinality derived
-  key (e.g. event date) so date-range predicates prune entire directories
-  before any I/O (PartitionFilters, not just PushedFilters).
+- **Small-file audit**: :func:`compaction_plan` sizes the rewrite that
+  ``streaming/jobs.compact_state_version`` performs on a versioned state
+  tier.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -44,22 +43,6 @@ def write_bucketed(
     )
 
 
-def write_date_partitioned(
-    df: DataFrame, path: str, ts_col: str = "ts", date_col: str = "event_date"
-) -> None:
-    """Persist partitioned by the DATE of ``ts_col`` (directory per day)."""
-    (
-        df.withColumn(date_col, F.to_date(F.col(ts_col)))
-        .write.mode("overwrite")
-        .partitionBy(date_col)
-        .parquet(path)
-    )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # the standard parquet target size
 
 
@@ -79,10 +62,10 @@ def compaction_plan(path: str, target_bytes: int = TARGET_FILE_BYTES) -> dict:
 
     files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
     if not files:
-        # hive-partitioned layouts (write_date_partitioned) keep files in
-        # key=value subdirs; compacting those through a flat rewrite would
-        # DESTROY the partitioning — refuse loudly, per-partition is the
-        # correct unit (code-review r06)
+        # hive-partitioned layouts keep files in key=value subdirs;
+        # compacting those through a flat rewrite would DESTROY the
+        # partitioning — refuse loudly, per-partition is the correct unit
+        # (code-review r06)
         subdirs = [
             d
             for d in _glob.glob(os.path.join(path, "*"))
@@ -110,28 +93,3 @@ def compaction_plan(path: str, target_bytes: int = TARGET_FILE_BYTES) -> dict:
         "small_files": sum(1 for s_ in sizes if s_ < target_bytes // 2),
         "target_files": max(1, -(-total // target_bytes)),
     }
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_bytes: int = TARGET_FILE_BYTES,
-    sort_within_by: str | None = None,
-) -> dict:
-    """Rewrite a fragmented parquet directory into ~target-size files:
-    one distributed read → repartition to the footer-derived file count →
-    write. `sort_within_by` re-sorts rows inside each output file (keeps
-    zone-map/min-max pruning effective after compaction — compaction that
-    destroys clustering trades one problem for another).
-
-    The plan count comes from compressed on-disk bytes, the honest proxy
-    when rewriting with the same codec. Returns the before/after plans."""
-    before = compaction_plan(path, target_bytes)
-    df = spark.read.parquet(path)
-    out = df.repartition(before["target_files"])
-    if sort_within_by:
-        out = out.sortWithinPartitions(sort_within_by)
-    out.write.mode("overwrite").parquet(out_path)
-    after = compaction_plan(out_path, target_bytes)
-    return {"before": before, "after": after}

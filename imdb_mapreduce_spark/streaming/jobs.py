@@ -130,22 +130,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session windows (gap-close semantics) with watermark —
-    streaming counterpart of the batch ``user_sessions`` plan."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def run_stream_to_memory(
     result: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
@@ -290,75 +274,6 @@ def streaming_dedup_10min_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
     return run_stream_to_memory(agg, "complete")
-
-
-def run_stream_to_parquet(
-    result: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-) -> None:
-    """Durable, restart-safe streaming sink: parquet files + a persistent
-    checkpoint. Exactly-once comes from the pair (offset log, commit log)
-    in the checkpoint — a re-run after a crash (or a second availableNow
-    run over unchanged input) replays nothing and appends nothing.
-    This is the production sink shape; the memory sink above is for
-    tests/oracles only."""
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def events_from_kafka_frame(kafka_df: DataFrame) -> DataFrame:
-    """Map a Kafka-shaped frame (the exact columns ``spark.readStream
-    .format("kafka")`` produces: binary key/value + topic/partition/offset/
-    timestamp) onto the typed events schema: JSON-decode the value, cast,
-    normalize ts. Works identically on batch and streaming inputs — wire
-    a real broker by swapping the source, no downstream change (no broker
-    exists in this environment, so tests feed a synthetic frame with the
-    same columns).
-
-    Producers have shipped ``ts`` two ways (matching the file encodings):
-    raw int64 nanoseconds, or an ISO-8601 string (what JSON-encoding a
-    timestamp column yields). The payload field is read as STRING and
-    branch-decoded per row — all-digit values are nanos, anything else
-    parses as a timestamp under the UTC session tz — so one adapter covers
-    both wire formats and always emits canonical TimestampType."""
-    value_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", StringType()),  # int64-ns digits OR ISO-8601
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-    parsed = kafka_df.select(
-        F.from_json(F.col("value").cast("string"), value_schema).alias("v")
-    )
-    ts_col = (
-        F.when(
-            F.col("v.ts").rlike("^-?[0-9]+$"),
-            F.timestamp_micros(F.expr("cast(v.ts as bigint) div 1000")),
-        )
-        .otherwise(F.to_timestamp(F.col("v.ts")).cast("timestamp"))
-        .alias("ts")
-    )
-    return parsed.select(
-        F.col("v.event_id").alias("event_id"),
-        ts_col,
-        F.col("v.user_id").alias("user_id"),
-        F.col("v.event_type").alias("event_type"),
-        F.col("v.value").alias("value"),
-        F.col("v.props").alias("props"),
-    )
 
 
 @register(
@@ -1061,29 +976,6 @@ def state_as_of(
     return _read_version(spark, vdir)
 
 
-def vacuum_versions(state_root: str, keep_last: int) -> "list[int]":
-    """Retention for the versioned lineage: drop every committed version
-    older than the newest ``keep_last`` — the knob that bounds how far
-    back `state_as_of` can travel (unbounded history is a storage AND a
-    GDPR liability; vacuum is the blunt instrument,
-    `erase_versioned_history` the surgical one). Crash-ordering: the
-    ``_COMMIT`` marker is removed FIRST, then the directory — a crash
-    mid-vacuum leaves an uncommitted version that `state_as_of` and the
-    drain's committed-scan already refuse to serve, never a torn
-    readable one. Returns the dropped version numbers."""
-    import os
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("vacuum_versions: keep_last must be >= 1")
-    dropped = _committed_versions(state_root)[:-keep_last]
-    for v in dropped:
-        vdir = os.path.join(state_root, f"v{v}")
-        os.remove(os.path.join(vdir, "_COMMIT"))
-        shutil.rmtree(vdir, ignore_errors=True)
-    return dropped
-
-
 def compact_state_version(
     spark: SparkSession,
     state_root: str,
@@ -1092,11 +984,11 @@ def compact_state_version(
 ) -> dict:
     """OPTIMIZE for one committed version of the lineage — the layout
     maintenance verb that completes the set (fold writes, `state_as_of`
-    time-travels, `vacuum_versions` bounds retention, the erasure/purge
-    family deletes): every micro-batch fold writes its tiers with the
-    session's parallelism, so a long lineage accumulates the classic
-    streaming-sink small-file debt — at 100 TB a scan of 1 MB files
-    spends its time opening footers, not reading pages. This rewrites
+    time-travels, the erasure/purge family deletes): every micro-batch
+    fold writes its tiers with the session's parallelism, so a long
+    lineage accumulates the classic streaming-sink small-file debt — at
+    100 TB a scan of 1 MB files spends its time opening footers, not
+    reading pages. This rewrites
     each tier of ``v{version}`` into ~target-size files WITHOUT
     changing content (same rows, fewer files), under the family's
     crash discipline, self-healing on re-run:

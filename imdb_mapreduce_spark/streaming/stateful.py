@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -30,162 +29,6 @@ from pyspark.sql.types import (
 
 if TYPE_CHECKING:
     import pandas as pd
-
-USER_STATS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("max_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = "n_events LONG, total_value DOUBLE, max_value DOUBLE"
-
-
-def _update_user_stats(
-    key: tuple[Any, ...],
-    batches: Iterator["pd.DataFrame"],
-    state: GroupState,
-) -> Iterator["pd.DataFrame"]:
-    """Cross-batch per-user accumulator: count / sum / max of ``value``.
-
-    Emits the updated running totals once per micro-batch in which the key
-    appears (a change-log stream of the per-user aggregate).
-    """
-    import pandas as pd
-
-    n, total, vmax = state.get if state.exists else (0, 0.0, float("-inf"))
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        vmax = max(vmax, float(pdf["value"].max()))
-    state.update((n, total, vmax))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [total],
-            "max_value": [vmax],
-        }
-    )
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Stateful per-user running stats over a stream (update output mode)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_stats,
-        outputStructType=USER_STATS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- watermark-driven state TTL (r06, VERDICT r05 item 7) -------------------
-
-TTL_STATS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("max_value", DoubleType()),
-        StructField("evicted", BooleanType()),
-    ]
-)
-
-# v2 (r06 review): + last_ts_ms so late events cannot SHRINK the eviction
-# deadline (the timeout must anchor on the newest event EVER seen for the
-# key, not the newest in the current batch). Schema change is
-# checkpoint-breaking like any state-shape change (see the KMV marker note).
-_TTL_STATE = (
-    "n_events LONG, total_value DOUBLE, max_value DOUBLE, last_ts_ms LONG"
-)
-
-
-def _make_ttl_update(ttl_ms: int):
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        if state.hasTimedOut:
-            # watermark passed last-seen + TTL with no new data: emit the
-            # final accumulated row flagged as evicted, then DROP the state
-            # — the unbounded-key-space guard (state size tracks the ACTIVE
-            # key set, not the lifetime key set).
-            n, total, vmax, _last = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [vmax],
-                    "evicted": [True],
-                }
-            )
-            return
-        n, total, vmax, last_ts_ms = (
-            state.get if state.exists else (0, 0.0, float("-inf"), 0)
-        )
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            vmax = max(vmax, float(pdf["value"].max()))
-            batch_max = int(pdf["ts"].max().value // 1_000_000)  # ns → ms
-            last_ts_ms = max(last_ts_ms, batch_max)
-        state.update((n, total, vmax, last_ts_ms))
-        # Timeout anchors on the newest event EVER seen for this key (kept
-        # in state), never just this batch's max — a LATE event must not
-        # shrink an active key's deadline (r06 review) — and must still sit
-        # strictly beyond the current watermark.
-        anchor = max(last_ts_ms, state.getCurrentWatermarkMs() + 1)
-        state.setTimeoutTimestamp(anchor + ttl_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "max_value": [vmax],
-                "evicted": [False],
-            }
-        )
-
-    return update
-
-
-def running_user_stats_ttl(events: DataFrame, ttl_minutes: int = 60) -> DataFrame:
-    """Per-user running stats with WATERMARK-DRIVEN STATE TTL (VERDICT r05
-    item 7): a key idle for ``ttl_minutes`` of EVENT time beyond the
-    watermark emits one final ``evicted=true`` row and its state is
-    removed — a key reappearing later restarts from zero (pinned by
-    tests/test_stateful_streaming.py). ``events`` must carry a watermark
-    on ``ts`` (``withWatermark``) — event-time timeouts are undefined
-    without one, and Spark rejects the query.
-
-    This is the 100 TB posture for stateful streams over unbounded key
-    spaces (user ids, session ids): without eviction, state grows with
-    every key EVER seen; with it, state tracks only keys active inside
-    the TTL horizon. Restart contract proven GREEN (r11):
-    ``test_ttl_pending_timeout_survives_checkpoint_restart`` registers a
-    key's eviction deadline, stops the query, restarts from the
-    checkpoint, and the timer fires post-restart with the pre-restart
-    totals — data state, event-time timers, and the commit-log watermark
-    all recover. The KMV/CM sketch states (below) deliberately stay
-    ``NoTimeout``: they are keyed by event TYPE — a tiny, closed key set
-    whose per-key state is already constant-size, where eviction would
-    discard the sketch a drained stream is about to report."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _make_ttl_update(ttl_minutes * 60_000),
-        outputStructType=TTL_STATS_SCHEMA,
-        stateStructType=_TTL_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
 
 # --- event-time timeouts: session-timeout emission (r13) -------------------
 

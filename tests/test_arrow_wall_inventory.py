@@ -46,10 +46,6 @@ STATEFUL_METHODS = {"applyInPandasWithState", "transformWithStateInPandas"}
 # non-literal grouping expression records ("<dynamic>",) and needs a row
 # here like any other site.
 INVENTORY: dict[tuple[str, str, tuple[str, ...]], str] = {
-    ("streaming/stateful.py", "running_user_stats", ("user_id",)):
-        "high-cardinality",
-    ("streaming/stateful.py", "running_user_stats_ttl", ("user_id",)):
-        "high-cardinality",
     # The unsalted KMV: |event_types| keys own the whole stream. Kept as
     # the documented simple sibling; running_kmv_by_type_salted is the
     # skew-safe tier (docstring contract checked below).

@@ -48,29 +48,6 @@ def test_salted_collect_equals_direct(spark):
     assert salted == direct
 
 
-def test_salted_join_equals_plain_join(spark):
-    from imdb_mapreduce_spark.functions.columns import salted_join
-
-    # hot key: 2000 of 2300 rows share one key (the skew shape)
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(2000)] + [(f"k{i % 3}", i) for i in range(300)],
-        ["k", "x"],
-    )
-    small = spark.createDataFrame(
-        [("hot", 10), ("k0", 20), ("k1", 30), ("orphan", 99)], ["k", "y"]
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            (r["k"], r["x"], r["y"])
-            for r in big.join(small, "k", how).collect()
-        )
-        salted = sorted(
-            (r["k"], r["x"], r["y"])
-            for r in salted_join(big, small, "k", salt_buckets=8, how=how).collect()
-        )
-        assert salted == plain, how
-
-
 def test_salted_running_stats_equals_unsalted(spark):
     """The SCALE.md ordered-window salting pattern, exercised on a
     genuinely skewed key: one user owns 50% of the events, spread over 6
@@ -181,17 +158,3 @@ def test_bfs_invariants(spark, raw_edges, level):
     assert all(1 <= lvl <= level - 1 for _, _, lvl in rows)
     # tree: every edge's parent is the root or an earlier child
     assert set(sorted_vertices(root, "actor", rows)) == set(dsts) | {root}
-
-
-def test_salted_join_rejects_outer_joins(spark):
-    """right/full outer would duplicate unmatched small-side rows once per
-    salt bucket; salted_join must refuse them up front (ADVICE r04)."""
-    import pytest
-
-    from imdb_mapreduce_spark.functions.columns import salted_join
-
-    big = spark.range(10).withColumnRenamed("id", "k")
-    small = spark.range(3).withColumnRenamed("id", "k")
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(big, small, "k", how=how)

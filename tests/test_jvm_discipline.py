@@ -72,12 +72,9 @@ def test_no_row_at_a_time_python_udfs_and_no_rdd_drops():
 # (relpath, enclosing function) → expected count of bare `pass` bodies.
 # Each is a PROTOCOL no-op, verified in place: compaction_plan's
 # `with pq.ParquetFile(f): pass` exists only to close footer handles
-# promptly (ADVICE r06 — unclosed handles piled up fds); the Python
-# DataSource reader's commit() is the no-op half of its exactly-once
-# contract (the source is deterministic, nothing to acknowledge).
+# promptly (ADVICE r06 — unclosed handles piled up fds).
 PASS_INVENTORY: dict[tuple[str, str], int] = {
     ("sources/storage.py", "compaction_plan"): 1,
-    ("sources/synthdocs.py", "commit"): 1,
 }
 
 

@@ -1,14 +1,12 @@
-"""PageRank: distributed iteration vs a pure-Python reference."""
+"""PageRank: the driver and distributed rounds vs a pure-Python reference."""
 
 from __future__ import annotations
 
 from collections import Counter, defaultdict
 
 import pytest
-from pyspark.sql import functions as F
 
 from imdb_mapreduce_spark.operators import pagerank as pr
-from imdb_mapreduce_spark.operators.pagerank import pagerank
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,7 +36,22 @@ def _py_pagerank(edges, iterations=10, damping=0.85):
     return rank
 
 
-def test_pagerank_matches_python_reference(spark):
+def _exact_vs_python(spark, monkeypatch, edges, iterations):
+    """``_py_pagerank`` and both of pagerank_exact's paths on ``edges``;
+    each path's ``rank_scaled / 10**15`` must be within 1e-9 of the
+    reference (floor-division leakage is ~deg ulps per round at scale
+    10^15)."""
+    df = spark.createDataFrame(edges, "src long, dst long")
+    want = _py_pagerank(edges, iterations=iterations)
+    paths = [_ranks(d) for d in _both_paths(df, monkeypatch, iterations=iterations)]
+    for got in paths:
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] / 10**15 - want[v]) < 1e-9, (v, got[v], want[v])
+    return want, paths
+
+
+def test_pagerank_matches_python_reference(spark, monkeypatch):
     edges = [
         (1, 2), (2, 1),
         (2, 3), (3, 2),
@@ -46,23 +59,17 @@ def test_pagerank_matches_python_reference(spark):
         (4, 1), (1, 4),
         (5, 9),  # directed edge; 9 is a sink for 5's mass
     ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(df, iterations=10).collect()}
-    want = _py_pagerank(edges)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
+    _exact_vs_python(spark, monkeypatch, edges, iterations=10)
 
 
-def test_pagerank_sums_to_one_on_symmetric_graph(spark):
+def test_pagerank_sums_to_one_on_symmetric_graph(spark, monkeypatch):
     # With every node having out-edges (symmetrized graph), total rank is
-    # conserved: sum == 1 within float tolerance.
+    # conserved: sum == 1 within the floor-division leakage.
     edges = [(a, b) for a in range(6) for b in range(6) if a != b and (a + b) % 3]
-    df = spark.createDataFrame(
-        edges + [(b, a) for a, b in edges], "src long, dst long"
-    )
-    got = pagerank(df, iterations=8).agg(F.sum("rank")).collect()[0][0]
-    assert abs(got - 1.0) < 1e-9
+    edges = edges + [(b, a) for a, b in edges]
+    _, paths = _exact_vs_python(spark, monkeypatch, edges, iterations=8)
+    for got in paths:
+        assert abs(sum(got.values()) / 10**15 - 1.0) < 1e-9
 
 
 def test_pagerank_coparts_query(spark):
@@ -103,28 +110,19 @@ def test_pagerank_coparts_matches_python_on_real_graph(spark):
     assert set(got) == set(top50)
 
 
-def test_pagerank_exact_tracks_float_pagerank(spark, distributed):
-    """The scaled-integer fixed-point iteration must agree with the float
-    iteration to ~1e-9 (floor-division leakage is ~deg ulps per round at
-    scale 10^15) and preserve the rank ordering."""
-    from imdb_mapreduce_spark.operators.pagerank import pagerank_exact
-
+def test_pagerank_exact_tracks_float_pagerank(spark, monkeypatch):
+    """On both paths the scaled-integer fixed-point iteration agrees with
+    the float reference ``_py_pagerank`` to ~1e-9 and preserves its rank
+    ordering."""
     edges = [(a, b) for a in range(8) for b in range(8) if a != b and (a + b) % 3]
     edges = edges + [(b, a) for a, b in edges]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    flt = {r["node"]: r["rank"] for r in pagerank(df, iterations=10).collect()}
-    exact = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank_exact(df, iterations=10).collect()
-    }
-    assert set(flt) == set(exact)
-    scale = 10**15
-    for v, rs in exact.items():
-        assert abs(rs / scale - flt[v]) < 1e-9, (v, rs, flt[v])
-    # ordering agrees (distinct-enough ranks on this graph)
-    by_float = sorted(flt, key=lambda v: (-flt[v], v))
-    by_exact = sorted(exact, key=lambda v: (-exact[v], v))
-    assert by_float == by_exact
+    want, paths = _exact_vs_python(spark, monkeypatch, edges, iterations=10)
+    # ordering agrees; nodes with the same residue mod 3 are symmetric and
+    # tie, exactly in integers but only to the last ulps in floats, so the
+    # reference is rounded before its ties break on the node id
+    by_python = sorted(want, key=lambda v: (-round(want[v], 12), v))
+    for got in paths:
+        assert sorted(got, key=lambda v: (-got[v], v)) == by_python
 
 
 def test_at_scale_branch_matches_default(spark, distributed):

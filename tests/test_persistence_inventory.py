@@ -51,10 +51,6 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
         (3, "lineage-truncation"),
     ("operators/graph.py", "unipartite_bfs", "localCheckpoint"):
         (1, "lineage-truncation"),
-    ("operators/pagerank.py", "pagerank", "localCheckpoint"):
-        (2, "lineage-truncation"),
-    ("operators/pagerank.py", "pagerank", "persist"):
-        (2, "scoped-unpersist"),
     ("operators/pagerank.py", "pagerank_exact", "localCheckpoint"):
         (2, "lineage-truncation"),
     ("operators/pagerank.py", "pagerank_exact", "persist"):

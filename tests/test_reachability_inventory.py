@@ -5,8 +5,9 @@ it keeps its own tests, docs and inventory rows alive while no workload
 runs it. This test computes which top-level ``def``/``class`` of the
 package is reachable from the production roots and fails on each one
 that is not, unless it is listed in ``TEST_ONLY`` with the reason it
-stays (an expression reference a fast path is tested against, a public
-API no workload calls yet).
+stays: a reference implementation a test checks a production definition
+against, or a piece of the reference system's own surface that a
+COVERAGE.md row names. No other reason is admitted.
 
 Reachability is a fixpoint over AST references, not text: a ``Name`` or
 ``Attribute`` load, or an import, that resolves to a package definition.
@@ -20,13 +21,16 @@ from inside an unreached definition does not count either. The roots are
   (not ``perfbench/tests``).
 
 A ``TEST_ONLY`` entry is stale, and fails, when its definition is gone,
-when production now reaches it, or when not even a test reaches it.
+when production now reaches it, when not even a test reaches it, or when
+its reason is not a ``reference`` to a definition production reaches or
+a ``coverage`` row that names it.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 import imdb_mapreduce_spark
 
@@ -34,51 +38,30 @@ PKG_ROOT = os.path.dirname(os.path.abspath(imdb_mapreduce_spark.__file__))
 REPO = os.path.dirname(PKG_ROOT)
 PKG = "imdb_mapreduce_spark"
 
-# (relpath, name) → why it stays although only tests reach it
-TEST_ONLY: dict[tuple[str, str], str] = {
-    # the reference's scalar surface as Column builders (COVERAGE X2, X5-X7)
-    ("functions/columns.py", "bucket_of"): "hash-partitioner expression, COVERAGE X7/P1",
-    ("functions/columns.py", "last_token"): "surname sort key, COVERAGE X6",
-    ("functions/columns.py", "sanitized_identifier"): "DOT identifier cleaner, COVERAGE X5",
-    ("functions/columns.py", "strip_id_prefix"): "tt/nm id parser, COVERAGE X2",
-    ("functions/columns.py", "salted_collect_set"): "skew-safe collect, COVERAGE A6",
-    ("functions/columns.py", "salted_join"): "skew-safe equi-join, COVERAGE §2.4",
-    ("operators/graph_export.py", "render_png"): "PNG sink API, COVERAGE K4",
-    ("operators/graph_export.py", "write_dot"): "DOT file sink API, COVERAGE K4",
-    ("operators/pagerank.py", "pagerank"): "float PageRank API beside the exact rounds",
-    ("operators/temporal.py", "suggest_bin_plan"): "data-proportional knobs for overlap_join_binned",
-    ("pipeline/curation.py", "cdc_upsert_join"): "MERGE join for bucketed bases, COVERAGE §2.4",
+# (relpath, name) → why it stays although only tests reach it, one of
+#   ("reference", "<module>.<def>"): an implementation a test checks the
+#       production definition <module>.<def> against (module relative to
+#       the package);
+#   ("coverage", "<row id>"): the reference system's own surface, named
+#       in that COVERAGE.md table row.
+TEST_ONLY: dict[tuple[str, str], tuple[str, str]] = {
+    ("functions/columns.py", "bucket_of"): ("coverage", "X7"),
+    ("functions/columns.py", "last_token"): ("coverage", "X1-X6"),
+    ("functions/columns.py", "sanitized_identifier"): ("coverage", "X1-X6"),
+    ("functions/columns.py", "strip_id_prefix"): ("coverage", "X1-X6"),
+    ("functions/columns.py", "salted_collect_set"): ("coverage", "A6"),
+    ("operators/graph_export.py", "render_png"): ("coverage", "K4"),
+    ("operators/graph_export.py", "write_dot"): ("coverage", "K4"),
     ("pipeline/dedup.py", "minhash_signatures_md5"):
-        "expression reference for minhash_signatures_arrow",
-    ("pipeline/dedup.py", "simhash_sig"): "expression reference for simhash_sig_arrow",
+        ("reference", "pipeline.dedup.minhash_signatures_arrow"),
+    ("pipeline/dedup.py", "simhash_sig"):
+        ("reference", "pipeline.dedup.simhash_sig_arrow"),
     ("pipeline/similarity.py", "random_hyperplane_buckets"):
-        "expression reference for random_hyperplane_buckets_arrow",
-    ("pipeline/similarity.py", "_bucket_col"): "helper of random_hyperplane_buckets",
-    ("sources/silver.py", "cached_query_result"): "registry-wide result cache API",
-    ("sources/sinks.py", "restore_parquet"): "snapshot restore, COVERAGE K2",
-    ("sources/sinks.py", "restore_table"): "snapshot restore, COVERAGE K2",
-    ("sources/sinks.py", "snapshot_parquet"): "sink API, COVERAGE K2",
-    ("sources/sinks.py", "snapshot_table"): "sink API, COVERAGE K2",
-    ("sources/sinks.py", "write_adjacency_tsv"): "adjacency dump sink, COVERAGE K1",
-    ("sources/star.py", "register_views"): "SQL front door: star tables as temp views",
-    ("sources/storage.py", "compact_parquet_dir"): "small-file compaction API",
-    ("sources/storage.py", "read_partitioned"): "partition-pruned read API",
-    ("sources/storage.py", "write_bucketed"): "durable hash partitioner, COVERAGE P1",
-    ("sources/storage.py", "write_date_partitioned"): "date-partitioned sink API",
-    ("sources/synthdocs.py", "SynthDocsDataSource"): "Python data source for synthetic corpora",
-    ("sources/synthdocs.py", "SynthDocsReader"): "batch reader of SynthDocsDataSource",
-    ("sources/synthdocs.py", "SynthDocsStreamReader"): "stream reader of SynthDocsDataSource",
-    ("sources/synthdocs.py", "_IdRange"): "input partition of SynthDocsReader",
-    ("sources/synthdocs.py", "_gen_rows"): "row generator of SynthDocsDataSource",
-    ("sources/synthdocs.py", "_vocab"): "word list of SynthDocsDataSource",
-    ("streaming/jobs.py", "events_from_kafka_frame"): "Kafka-frame decoder for a live source",
-    ("streaming/jobs.py", "run_stream_to_parquet"): "durable streaming sink API",
-    ("streaming/jobs.py", "session_windows"): "streaming session windows, COVERAGE streaming",
-    ("streaming/jobs.py", "vacuum_versions"): "retention for the versioned lineage",
-    ("streaming/stateful.py", "running_user_stats"): "stateful streaming operator API",
-    ("streaming/stateful.py", "running_user_stats_ttl"): "stateful streaming with state TTL",
-    ("streaming/stateful.py", "_update_user_stats"): "state update of running_user_stats",
-    ("streaming/stateful.py", "_make_ttl_update"): "state update of running_user_stats_ttl",
+        ("reference", "pipeline.similarity.random_hyperplane_buckets_arrow"),
+    ("pipeline/similarity.py", "_bucket_col"):
+        ("reference", "pipeline.similarity.random_hyperplane_buckets_arrow"),
+    ("sources/sinks.py", "write_adjacency_tsv"): ("coverage", "K1"),
+    ("sources/storage.py", "write_bucketed"): ("coverage", "P1"),
 }
 
 
@@ -306,8 +289,9 @@ def test_test_only_entries_are_not_stale():
         [os.path.join(tests, fn) for fn in sorted(os.listdir(tests)) if fn.endswith(".py")]
     )
     by_rel = {idx.relpath(m): m for m in idx.files}
+    rows = _coverage_rows()
     stale = []
-    for rel, name in sorted(TEST_ONLY):
+    for (rel, name), reason in sorted(TEST_ONLY.items()):
         mod = by_rel.get(rel)
         if mod is None or name not in idx.defs[mod]:
             stale.append((rel, name, "definition is gone"))
@@ -315,4 +299,33 @@ def test_test_only_entries_are_not_stale():
             stale.append((rel, name, "production now reaches it"))
         elif (mod, name) not in tested:
             stale.append((rel, name, "not even a test reaches it: delete it"))
+        elif not _reason_holds(idx, reached, rows, name, reason):
+            stale.append((rel, name, f"reason {reason!r} does not hold"))
     assert not stale, f"stale TEST_ONLY entries: {stale}"
+
+
+def _coverage_rows() -> dict[str, list[str]]:
+    """COVERAGE.md table row id (first cell) → the text of its rows."""
+    rows: dict[str, list[str]] = {}
+    with open(os.path.join(REPO, "COVERAGE.md")) as f:
+        for line in f:
+            cells = line.split("|")
+            if line.startswith("|") and len(cells) > 2:
+                rows.setdefault(cells[1].strip(), []).append(line)
+    return rows
+
+
+def _reason_holds(idx, reached, rows, name: str, reason) -> bool:
+    """A ``reference`` names a definition production reaches; a
+    ``coverage`` row id names ``name`` in its row text."""
+    if not (isinstance(reason, tuple) and len(reason) == 2):
+        return False
+    kind, target = reason
+    if kind == "reference":
+        mod, _, ref = target.rpartition(".")
+        mod = f"{PKG}.{mod}"
+        return ref in idx.defs.get(mod, {}) and (mod, ref) in reached
+    if kind == "coverage":
+        word = re.compile(rf"\b{re.escape(name)}\b")
+        return any(word.search(r) for r in rows.get(target, ()))
+    return False

@@ -193,45 +193,6 @@ def test_copurchase_edges_scan_is_bucketed_and_reregisters(spark):
     assert t2.count() == t.count()
 
 
-def test_cached_query_result_builds_once_and_invalidates(spark, tmp_path):
-    """Result cache for a registry query: second call reads parquet (no
-    recompute), source change rebuilds, content always equals the live
-    query."""
-    import shutil
-    import os as _os
-
-    from imdb_mapreduce_spark.plans.registry import all_queries
-    from imdb_mapreduce_spark.sources import silver
-    from imdb_mapreduce_spark.sources.silver import cached_query_result
-
-    # private sf dir so mtime manipulation can't disturb shared testdata
-    d = str(tmp_path / "sf")
-    _os.makedirs(d)
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        shutil.copyfile(f"/root/testdata/sf0.001/{t}.parquet", f"{d}/{t}.parquet")
-
-    name = "region_rollup"
-    live = {tuple(r) for r in all_queries()[name].spark_fn(spark, d).collect()}
-
-    got1 = {tuple(r) for r in cached_query_result(spark, d, name, ("region", "nation", "customer", "orders", "lineitem", "supplier", "part")).collect()}
-    assert got1 == live
-
-    base = _os.path.join(
-        silver.silver_root(), _os.path.basename(d), f"result__{name}"
-    )
-    meta0 = _os.path.getmtime(_os.path.join(base, "_meta.json"))
-    got2 = {tuple(r) for r in cached_query_result(spark, d, name, ("region", "nation", "customer", "orders", "lineitem", "supplier", "part")).collect()}
-    assert got2 == live
-    assert _os.path.getmtime(_os.path.join(base, "_meta.json")) == meta0  # no rebuild
-
-    # touch a source -> fingerprint changes -> rebuild
-    _os.utime(f"{d}/region.parquet")
-    got3 = {tuple(r) for r in cached_query_result(spark, d, name, ("region", "nation", "customer", "orders", "lineitem", "supplier", "part")).collect()}
-    assert got3 == live
-    assert _os.path.getmtime(_os.path.join(base, "_meta.json")) > meta0  # rebuilt
-
-
 def test_unipartite_round_join_keeps_bucketed_edge_side_unshuffled(spark):
     """In the non-broadcast regime (max_broadcast_rows=0) a BFS round's
     frontier⋈edges join over the NATIVE-typed silver table must exchange

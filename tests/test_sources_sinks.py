@@ -1,5 +1,5 @@
 """Sources & sinks (SURVEY.md §2.1): prejoined step0 path, TSV adjacency
-sink round-trip, parquet snapshot/restore."""
+sink round-trip, the engine's parquet snapshot/restore."""
 
 from __future__ import annotations
 
@@ -9,11 +9,7 @@ from pyspark.sql import functions as F
 
 from imdb_mapreduce_spark.ingest import movie_to_cast
 from imdb_mapreduce_spark.sources.imdb import read_prejoined_csv
-from imdb_mapreduce_spark.sources.sinks import (
-    restore_parquet,
-    snapshot_parquet,
-    write_adjacency_tsv,
-)
+from imdb_mapreduce_spark.sources.sinks import write_adjacency_tsv
 
 
 def test_prejoined_step0_path(spark, tmp_path):
@@ -62,90 +58,14 @@ def test_adjacency_tsv_sink_roundtrip(cast_edges, tmp_path, spark):
 
 
 def test_parquet_snapshot_restore(cast_edges, tmp_path, spark):
-    # K2: ets:tab2file/file2tab → parquet write/read
+    # K2: ets:tab2file/file2tab → ImdbEngine.save/load, a parquet round trip
+    from imdb_mapreduce_spark.api import ImdbEngine
+
     path = str(tmp_path / "snap")
-    snapshot_parquet(cast_edges, path)
-    back = restore_parquet(spark, path)
+    ImdbEngine(cast_edges, cache=False).save(path)
+    back = ImdbEngine.load(spark, path, cache=False).cast_edges
+    assert back.schema == cast_edges.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, cast_edges.collect()))
-
-
-def test_orc_snapshot_roundtrip(spark, tmp_path):
-    """K2 in ORC: schema and rows survive bit-exactly (ORC carries typed
-    schema + stats like parquet, so restore needs no casts)."""
-    from imdb_mapreduce_spark.sources.sinks import restore_table, snapshot_table
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    src = load_table(spark, "orders", "/root/testdata/sf0.001")
-    p = str(tmp_path / "orders_orc")
-    snapshot_table(src, p, fmt="orc")
-    back = restore_table(spark, p, fmt="orc")
-    assert back.schema == src.schema
-    assert back.subtract(src).count() == 0
-    assert src.subtract(back).count() == 0
-
-
-def test_snapshot_rejects_unknown_format(spark, tmp_path):
-    import pytest as _pytest
-
-    from imdb_mapreduce_spark.sources.sinks import snapshot_table
-    from imdb_mapreduce_spark.sources.star import load_table
-
-    src = load_table(spark, "region", "/root/testdata/sf0.001")
-    with _pytest.raises(ValueError):
-        snapshot_table(src, str(tmp_path / "x"), fmt="avro")
-
-
-def test_sql_front_door_views(spark):
-    """register_views + raw spark.sql: a join-aggregate over the views
-    must equal the DataFrame formulation (same loader underneath,
-    including the events ts normalization)."""
-    from pyspark.sql import functions as F
-
-    from imdb_mapreduce_spark.sources.star import load_table, register_views
-
-    register_views(spark, "/root/testdata/sf0.001")
-    got = {
-        (r["n_name"], r["n_customers"])
-        for r in spark.sql(
-            """
-            SELECT n.n_name, COUNT(*) AS n_customers
-            FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
-            GROUP BY n.n_name
-            """
-        ).collect()
-    }
-    c = load_table(spark, "customer", "/root/testdata/sf0.001")
-    n = load_table(spark, "nation", "/root/testdata/sf0.001")
-    want = {
-        (r["n_name"], r["n_customers"])
-        for r in c.join(n, c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.count("*").alias("n_customers"))
-        .collect()
-    }
-    assert got == want
-    # events view carries the normalized timestamp type
-    assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
-
-
-def test_json_snapshot_roundtrip_with_recast(spark, tmp_path):
-    """K2 in JSON (the interchange escape hatch): values survive; types
-    that JSON can't carry (DATE/TIMESTAMP precision, int width) come back
-    as JSON-native types and the caller re-casts — the documented
-    contract of restore_table for this format."""
-    from imdb_mapreduce_spark.sources.sinks import restore_table, snapshot_table
-    from imdb_mapreduce_spark.sources.star import load_table
-    from pyspark.sql import functions as F
-
-    src = load_table(spark, "region", "/root/testdata/sf0.001")
-    p = str(tmp_path / "region_json")
-    snapshot_table(src, p, fmt="json")
-    back = restore_table(spark, p, fmt="json").select(
-        F.col("r_regionkey").cast("long"), "r_name"
-    )
-    assert {tuple(r) for r in back.collect()} == {
-        tuple(r) for r in src.select("r_regionkey", "r_name").collect()
-    }
 
 
 def test_parquet_footer_stat_probes(spark, tmp_path):

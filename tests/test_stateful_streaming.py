@@ -19,114 +19,10 @@ from imdb_mapreduce_spark.plans.events import (
 )
 from imdb_mapreduce_spark.sources.star import load_table
 from imdb_mapreduce_spark.streaming.jobs import read_events_stream
-from imdb_mapreduce_spark.streaming.stateful import running_user_stats
 
 SF = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
-
-
-def test_stateful_user_stats_converge_to_batch(spark):
-    stream = read_events_stream(spark, f"{SF}/events.parquet")
-    result = running_user_stats(stream)
-
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # update-mode memory sink appends one row per (batch, key) — the LAST
-    # row per key is the final state.
-    import pandas as pd
-
-    emitted = spark.table(name).toPandas()
-    final = emitted.groupby("user_id").last()
-
-    batch = (
-        load_table(spark, "events", SF)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.max("value").alias("max_value"),
-        )
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(batch)
-    for uid, row in batch.iterrows():
-        got = final.loc[uid]
-        assert got["n_events"] == row["n_events"]
-        assert abs(got["total_value"] - row["total_value"]) < 1e-6
-        assert got["max_value"] == row["max_value"]
-
-
-def test_state_ttl_evicts_idle_keys_and_restarts(spark, tmp_path):
-    """VERDICT r05 item 7: watermark-driven state TTL. Key B goes idle;
-    once the watermark passes B's last event + TTL, B emits one final
-    evicted=true row and its state is dropped — when B reappears, its
-    counts RESTART from zero instead of resuming. Key A stays active the
-    whole time and accumulates normally."""
-    import os
-    import pandas as pd
-
-    from imdb_mapreduce_spark.streaming.jobs import run_stream_to_memory
-    from imdb_mapreduce_spark.streaming.stateful import running_user_stats_ttl
-
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    t0 = pd.Timestamp("2026-01-01 00:00:00")
-    h = pd.Timedelta(hours=1)
-    batches = [
-        # batch 1: A and B
-        [(1, 10.0, t0), (2, 5.0, t0)],
-        # batch 2: A only, 3h later → watermark (−10 min) passes B's
-        # last-seen + 1h TTL
-        [(1, 20.0, t0 + 3 * h)],
-        # batch 3: A only — B has no data and is timed out → evicted row
-        [(1, 30.0, t0 + 3 * h + pd.Timedelta(minutes=1))],
-        # batch 4: B reappears → must restart from zero
-        [(2, 7.0, t0 + 3 * h + pd.Timedelta(minutes=2))],
-    ]
-    for i, rows in enumerate(batches):
-        pdf = pd.DataFrame(rows, columns=["user_id", "value", "ts"])
-        path = str(d / f"b{i}.parquet")
-        # µs timestamps: Spark's vectorized reader rejects pandas' default
-        # nanosecond INT64 physical type
-        pdf.to_parquet(path, coerce_timestamps="us", allow_truncated_timestamps=True)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # stable batch order
-
-    stream = (
-        spark.readStream.schema("user_id long, value double, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-        .withWatermark("ts", "10 minutes")
-    )
-    log = run_stream_to_memory(
-        running_user_stats_ttl(stream, ttl_minutes=60), "update"
-    ).toPandas()
-
-    b_rows = log[log["user_id"] == 2].reset_index(drop=True)
-    # B: initial row (n=1), the eviction emission (n=1, evicted), then the
-    # restarted row (n=1, value 7.0 — NOT 12.0, which would mean state
-    # survived eviction)
-    assert list(b_rows["evicted"]) == [False, True, False]
-    assert list(b_rows["n_events"]) == [1, 1, 1]
-    assert b_rows.loc[2, "total_value"] == 7.0
-    assert b_rows.loc[2, "max_value"] == 7.0
-
-    a_rows = log[log["user_id"] == 1].reset_index(drop=True)
-    # A never idles past the TTL: no eviction, counts accumulate 1→2→3
-    assert not a_rows["evicted"].any()
-    assert list(a_rows["n_events"]) == [1, 2, 3]
-    assert a_rows.loc[2, "total_value"] == 60.0
 
 
 def test_salted_kmv_equals_unsalted_and_breaks_key_bound(spark):
@@ -426,104 +322,6 @@ def test_kmv_salted_checkpoint_resume_green(spark, tmp_path):
     assert got == want  # bit-identical; rows_seen exact ⇒ no re-read/reset
 
 
-def test_ttl_pending_timeout_survives_checkpoint_restart(spark, tmp_path):
-    """GREEN restart drill for the TTL operator: a key whose eviction
-    deadline has been passed by the watermark — but whose timeout has
-    not yet FIRED (no later batch ran) — must evict correctly AFTER a
-    checkpoint restart. This proves three recoveries at once: the
-    accumulated data state, the registered event-time TIMER, and the
-    WATERMARK itself (persisted in the commit log; a restart that reset
-    it to zero would never fire B's timeout).
-
-    Phase 1 drains only the first file (A and B at t0; B's 1h deadline
-    registered, watermark still behind it — availableNow's trailing
-    no-data micro-batch must NOT fire anything yet), stops; phase 2
-    restarts the SAME query from the SAME checkpoint with A-only data
-    that advances the watermark past B's deadline → B's evicted=true
-    row must carry B's PRE-RESTART totals; then B reappears and must
-    restart from zero."""
-    import os
-
-    import pandas as pd
-
-    from imdb_mapreduce_spark.streaming.stateful import running_user_stats_ttl
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt")
-    t0 = pd.Timestamp("2026-01-01 00:00:00")
-    h = pd.Timedelta(hours=1)
-    batches = {
-        0: [(1, 10.0, t0), (2, 5.0, t0)],          # A and B
-        1: [(1, 20.0, t0 + 3 * h)],                 # A advances watermark
-        2: [(1, 30.0, t0 + 3 * h + pd.Timedelta(minutes=1))],  # fires B's timer
-        3: [(2, 7.0, t0 + 3 * h + pd.Timedelta(minutes=2))],   # B reappears
-    }
-
-    def put_file(i: int) -> None:
-        pdf = pd.DataFrame(batches[i], columns=["user_id", "value", "ts"])
-        path = os.path.join(src, f"b{i}.parquet")
-        pdf.to_parquet(
-            path, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-
-    def drain(out_dir: str) -> None:
-        stream = (
-            spark.readStream.schema("user_id long, value double, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "10 minutes")
-        )
-
-        def sink(df, _epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = (
-            running_user_stats_ttl(stream, ttl_minutes=60)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # ---- phase 1: stop with B's timer registered but unfired ----
-    put_file(0)
-    out1 = str(tmp_path / "out1")
-    drain(out1)
-    log1 = pd.read_parquet(out1)
-    assert not log1["evicted"].any()  # genuinely pre-eviction at the stop
-    assert len(log1[log1["user_id"] == 2]) == 1  # B seen once, still live
-
-    # ---- phase 2: restart from the SAME checkpoint ----
-    put_file(1)
-    put_file(2)
-    put_file(3)
-    out2 = str(tmp_path / "out2")
-    drain(out2)
-    log2 = pd.read_parquet(out2)
-
-    # B's pending timeout fired post-restart with B's PRE-restart totals:
-    # data state + timer + watermark all recovered from the checkpoint
-    evicted = log2[(log2["user_id"] == 2) & log2["evicted"]]
-    assert len(evicted) == 1
-    assert evicted.iloc[0]["n_events"] == 1
-    assert evicted.iloc[0]["total_value"] == 5.0
-
-    # A's counts accumulated ACROSS the restart boundary (1+1 before, +1 after)
-    a_last = (
-        log2[log2["user_id"] == 1].sort_values("n_events").iloc[-1]
-    )
-    assert a_last["n_events"] == 3 and a_last["total_value"] == 60.0
-
-    # B's reappearance restarted from zero (state was dropped at eviction)
-    fresh = log2[(log2["user_id"] == 2) & ~log2["evicted"]]
-    assert len(fresh) == 1
-    assert fresh.iloc[0]["n_events"] == 1 and fresh.iloc[0]["total_value"] == 7.0
-
-
 def test_apply_state_handler_receives_bounded_chunks(spark, tmp_path):
     """The Python side of applyInPandasWithState receives a group as
     BOUNDED chunks (arrowMaxRecordsPerBatch), never one whole-group
@@ -604,7 +402,7 @@ def test_apply_state_handler_receives_bounded_chunks(spark, tmp_path):
 
 def test_builtin_window_agg_survives_checkpoint_restart(spark, tmp_path):
     """Completes the restart matrix: custom NoTimeout state (salted KMV
-    drill), custom EventTimeTimeout state (TTL drill), and here the
+    drill), custom EventTimeTimeout state (session-timer drill), and here the
     BUILT-IN watermarked window aggregation. Three recoveries pinned:
 
     1. PARTIAL window counts cross the restart (windows A and B are
@@ -1577,67 +1375,6 @@ def test_erase_versioned_history_sketch_purges_every_as_of_read(
                     open(os.path.join(a, f), "rb").read()
                     == open(os.path.join(b, f), "rb").read()
                 )
-
-
-def test_vacuum_versions_bounds_time_travel_and_resumes(spark, tmp_path):
-    """Retention drill: vacuum to the newest 2 versions — the dropped
-    versions' as-of reads fail loud (never serve a half-deleted
-    snapshot), the kept ones read normally, `latest_committed_state`
-    still lands on the newest, and the SAME checkpoint resumes folding
-    on top of the vacuumed lineage (batch n only needs v(n-1), which
-    retention keeps)."""
-    import os
-
-    import pandas as pd
-    import pytest
-
-    from imdb_mapreduce_spark.plans.events import _erased_col  # noqa: F401
-    from imdb_mapreduce_spark.streaming.jobs import (
-        incremental_multires_drain,
-        latest_committed_state,
-        state_as_of,
-        vacuum_versions,
-    )
-
-    t0 = pd.Timestamp("2026-03-01 00:00:00")
-    m = pd.Timedelta(minutes=1)
-    cols = ["ts", "event_type", "value"]
-    batches = {
-        i: [(t0 + (i * 10 + 1) * m, "click", float(i) + 0.25)]
-        for i in range(4)
-    }
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-
-    def put_file(i: int) -> None:
-        path = os.path.join(src, f"b{i}.parquet")
-        pd.DataFrame(batches[i], columns=cols).to_parquet(
-            path, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    st = _parse_datatype_string("ts timestamp, event_type string, value double")
-    state_root = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    for i in range(3):
-        put_file(i)
-    incremental_multires_drain(spark, src, st, state_root, ckpt)
-    assert vacuum_versions(state_root, keep_last=2) == [0]
-    with pytest.raises(ValueError, match="never committed"):
-        state_as_of(spark, state_root, 0)
-    assert state_as_of(spark, state_root, 2)["minute"].count() == 3
-    latest = latest_committed_state(spark, state_root)
-    assert latest is not None and latest[0] == 2
-    # resume on the vacuumed lineage: batch 3 reads v2 (kept) → v3
-    put_file(3)
-    final = incremental_multires_drain(spark, src, st, state_root, ckpt)
-    assert final is not None and final["minute"].count() == 4
-    # keep_last must be positive; vacuum with room to spare drops nothing
-    with pytest.raises(ValueError, match="keep_last"):
-        vacuum_versions(state_root, keep_last=0)
-    assert vacuum_versions(state_root, keep_last=10) == []
 
 
 def test_state_as_of_rejects_uncommitted_version(spark, tmp_path):

@@ -10,11 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from imdb_mapreduce_spark.sources.star import load_table
-from imdb_mapreduce_spark.sources.storage import (
-    read_partitioned,
-    write_bucketed,
-    write_date_partitioned,
-)
+from imdb_mapreduce_spark.sources.storage import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,7 +74,7 @@ def test_ivf_cell_partition_layout_prunes_probed_cells(spark, tmp_path):
     cells = _assigned_cells(emb, ivf_det_pivots(spark, SF))
     path = str(tmp_path / "corpus_by_cell")
     cells.write.mode("overwrite").partitionBy("cell").parquet(path)
-    back = read_partitioned(spark, path)
+    back = spark.read.parquet(path)
     probed = back.filter(F.col("cell").isin(0, 3))
     plan = _explain(probed)
     # the IN-list lands in PartitionFilters (directory pruning), and the
@@ -199,65 +195,6 @@ def test_ivf_delete_in_place_touches_only_erased_cells(
     }
 
 
-def test_cdc_join_on_bucketed_base_shuffles_only_updates(spark):
-    """The bucketed-base CDC claim: with orders bucketed on the merge key,
-    the join-formulated upsert exchanges ONLY the update batch — the base
-    side reads its bucket layout directly."""
-    from imdb_mapreduce_spark.pipeline.curation import cdc_upsert_join
-    from imdb_mapreduce_spark.sources.storage import write_bucketed
-
-    orders = load_table(spark, "orders", SF)
-    write_bucketed(orders, "orders_cdc_base", "o_orderkey")
-    base = spark.table("orders_cdc_base")
-    updates = (
-        orders.filter(F.col("o_orderkey") % 10 == 0)
-        .withColumn("o_orderstatus", F.lit("U"))
-    )
-    merged = cdc_upsert_join(base, updates, "o_orderkey")
-    plan = _explain(merged)
-    # exactly one exchange on the merge key — the update side
-    assert plan.count("hashpartitioning(o_orderkey") == 1, plan
-    # and the merge itself is correct: updated rows flipped, count stable
-    assert merged.count() == orders.count()
-    assert (
-        merged.filter(F.col("o_orderkey") % 10 == 0)
-        .filter(F.col("o_orderstatus") != "U")
-        .count()
-        == 0
-    )
-
-
-def test_cdc_join_equals_window_formulation(spark):
-    """cdc_upsert_join must produce the registered window-formulated
-    result row-for-row (same update batch, same precedence)."""
-    from imdb_mapreduce_spark.pipeline.curation import (
-        cdc_orders_upsert,
-        cdc_upsert_join,
-    )
-
-    orders = load_table(spark, "orders", SF)
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    base = orders.select(
-        "o_orderkey", "o_orderstatus", cents.alias("price_cents")
-    )
-    updates = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        F.expr(
-            "(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) * 11) div 10"
-        ).alias("price_cents"),
-    )
-    via_join = {
-        r["o_orderkey"]: (r["o_orderstatus"], r["price_cents"])
-        for r in cdc_upsert_join(base, updates, "o_orderkey").collect()
-    }
-    via_window = {
-        r["o_orderkey"]: (r["o_orderstatus"], r["price_cents"])
-        for r in cdc_orders_upsert(spark, SF).collect()
-    }
-    assert via_join == via_window
-
-
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Evolving a silver table in place: files written before a column
     existed coexist with files written after. mergeSchema unifies them
@@ -276,32 +213,14 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert rows == {1: None, 2: None, 3: 30}
 
 
-def test_date_partition_pruning(spark, tmp_path):
-    e = load_table(spark, "events", SF)
-    path = str(tmp_path / "events_by_day")
-    write_date_partitioned(e, path)
-    back = read_partitioned(spark, path)
-    one_day = back.filter(F.col("event_date") == "2024-01-03")
-    plan = _explain(one_day)
-    # the date predicate must prune partitions at planning, not post-scan
-    assert "PartitionFilters: [isnotnull(event_date" in plan
-    n = one_day.count()
-    assert 0 < n < e.count()
-    # value integrity after the partition round-trip
-    assert back.count() == e.count()
-
-
 def test_compaction_rewrites_small_files_and_keeps_rows(spark, tmp_path):
-    """A fragmented write (many tiny files) compacts to the footer-derived
-    target count, row-for-row equal, and sort_within_by restores per-file
-    clustering (min/max ranges disjoint-ish again)."""
-    from imdb_mapreduce_spark.sources.storage import (
-        compact_parquet_dir,
-        compaction_plan,
-    )
+    """A fragmented write (many tiny files) audits as all-small, with a
+    footer-derived target count below the file count — the plan
+    ``compact_state_version`` rewrites to (its own rewrite is pinned in
+    tests/test_state_compaction.py)."""
+    from imdb_mapreduce_spark.sources.storage import compaction_plan
 
     src = str(tmp_path / "frag")
-    out = str(tmp_path / "compact")
     df = spark.range(10_000).selectExpr("id AS k", "id % 97 AS v")
     df.repartition(64).write.parquet(src)  # 64 tiny files
 
@@ -309,22 +228,6 @@ def test_compaction_rewrites_small_files_and_keeps_rows(spark, tmp_path):
     assert plan["n_files"] == 64
     assert plan["small_files"] == 64
     assert plan["target_files"] < 64
-
-    res = compact_parquet_dir(
-        spark, src, out, target_bytes=1024 * 1024, sort_within_by="k"
-    )
-    assert res["after"]["n_files"] == plan["target_files"]
-    a = sorted(r["k"] for r in spark.read.parquet(src).collect())
-    b = sorted(r["k"] for r in spark.read.parquet(out).collect())
-    assert a == b
-    # per-file clustering: every output file's k-range is internally sorted
-    import glob
-
-    import pyarrow.parquet as pq
-
-    for f in glob.glob(out + "/*.parquet"):
-        ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks)
 
 
 def test_bucketed_pagerank_round_join_needs_no_edge_shuffle(spark, monkeypatch):

@@ -2,13 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from imdb_mapreduce_spark.plans.events import events_10min_windows
 from imdb_mapreduce_spark.streaming.jobs import (
     read_events_stream,
     run_stream_to_memory,
-    session_windows,
     tumbling_counts,
 )
 
@@ -28,18 +25,6 @@ def test_stream_tumbling_equals_batch(spark):
         for r in events_10min_windows(spark, SF).collect()
     }
     assert got == want
-
-
-def test_session_windows_stream(spark):
-    stream = read_events_stream(spark, f"{SF}/events.parquet")
-    out = run_stream_to_memory(session_windows(stream), "complete")
-    rows = out.collect()
-    assert len(rows) > 0
-    # sessions are per-user, gap-closed: start <= end, positive counts
-    assert all(r["session_start"] <= r["session_end"] for r in rows)
-    assert all(r["n_events"] >= 1 for r in rows)
-    # total events across sessions == total input events
-    assert sum(r["n_events"] for r in rows) == 1000
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -84,36 +69,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert any(r["n_events"] == 1 for r in out)
 
 
-def test_parquet_sink_exactly_once_on_rerun(spark, tmp_path):
-    # Same availableNow query run twice against the SAME checkpoint and
-    # unchanged input: the second run must replay nothing (commit log) —
-    # the restart-safety contract of the durable sink.
-    from imdb_mapreduce_spark.streaming.jobs import (
-        interval_join_streams,
-        read_events_stream,
-        run_stream_to_parquet,
-    )
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        views = read_events_stream(spark, src).filter(F.col("event_type") == "view")
-        purchases = read_events_stream(spark, src).filter(
-            F.col("event_type") == "purchase"
-        )
-        run_stream_to_parquet(interval_join_streams(views, purchases), out, ckpt)
-
-    run()
-    first = spark.read.parquet(out).count()
-    run()  # re-run: offsets already committed -> no new data
-    assert spark.read.parquet(out).count() == first
-    # and the content matches the batch join it implements
-    ev = spark.read.parquet(out)
-    assert ev.select("view_id", "purchase_id").distinct().count() == first
-
-
 def test_streaming_dedup_collapses_doubled_source(spark):
     """At-least-once delivery (every event twice) through
     dropDuplicatesWithinWatermark must reproduce the batch answer exactly
@@ -130,85 +85,3 @@ def test_streaming_dedup_collapses_doubled_source(spark):
     }
     assert got == want
     assert sum(got.values()) == 1000
-
-
-def test_kafka_shaped_source_roundtrip(spark):
-    # Encode real events rows into the exact frame shape the Kafka source
-    # produces (binary value + topic/partition/offset), decode through the
-    # adapter, and require bit-identical rows to the file-source reader.
-    from pyspark.sql import functions as FN
-
-    from imdb_mapreduce_spark.sources.star import load_table
-    from imdb_mapreduce_spark.streaming.jobs import events_from_kafka_frame
-
-    events = load_table(spark, "events", "/root/testdata/sf0.001").limit(200)
-    raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(200)
-    # The producer serializes timestamps at FULL µs precision (to_json's
-    # default format is ms-truncating and would silently lose data — the
-    # testdata is 99.9% sub-ms-bearing).
-    json_opts = {
-        "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-        "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    }
-    kafka_shaped = raw.select(
-        FN.lit(None).cast("binary").alias("key"),
-        FN.encode(
-            FN.to_json(FN.struct(*raw.columns), json_opts), "utf-8"
-        ).alias("value"),
-        FN.lit("events").alias("topic"),
-        FN.lit(0).alias("partition"),
-        FN.monotonically_increasing_id().alias("offset"),
-        FN.current_timestamp().alias("timestamp"),
-    )
-    decoded = events_from_kafka_frame(kafka_shaped)
-    assert decoded.schema == events.schema
-    assert decoded.subtract(events).count() == 0
-    assert events.subtract(decoded).count() == 0
-
-
-def test_parquet_sink_incremental_across_restart(spark, tmp_path):
-    """Checkpoint recovery with GROWING input: run, land a new source
-    file, run again with the SAME checkpoint. The second run must process
-    ONLY the new file (no reprocessing of committed offsets, no dropped
-    new data) — the crash/restart contract that makes the file-stream
-    source usable as a continuous ingest directory at scale."""
-    from imdb_mapreduce_spark.streaming.jobs import (
-        read_events_stream,
-        run_stream_to_parquet,
-    )
-
-    import pyarrow.parquet as pq
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    tbl = pq.read_table("/root/testdata/sf0.001/events.parquet")
-    import pyarrow.compute as pc
-
-    even = pc.equal(pc.bit_wise_and(tbl.column("event_id"), 1), 0)
-    half1, half2 = tbl.filter(even), tbl.filter(pc.invert(even))
-    pq.write_table(half1, str(src_dir / "batch1.parquet"))
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        stream = read_events_stream(spark, f"{src_dir}/*.parquet")
-        enriched = stream.filter(F.col("event_type") != "error").select(
-            "event_id", "user_id", "event_type"
-        )
-        run_stream_to_parquet(enriched, out, ckpt)
-
-    run()
-    n1 = spark.read.parquet(out).count()
-    import pyarrow.compute as pc2
-    n_half1 = half1.filter(pc2.not_equal(half1.column("event_type"), "error")).num_rows
-    assert n1 == n_half1
-
-    pq.write_table(half2, str(src_dir / "batch2.parquet"))
-    run()  # restart: offset log skips batch1, picks up batch2 only
-
-    final = spark.read.parquet(out)
-    n_all = tbl.filter(pc2.not_equal(tbl.column("event_type"), "error")).num_rows
-    assert final.count() == n_all  # nothing dropped
-    # exactly-once: no event id appears twice
-    assert final.select("event_id").distinct().count() == final.count()

@@ -445,15 +445,19 @@ def test_overlap_join_binned_hot_bin_salting_preserves_results(spark):
     assert base  # non-vacuous: the hot bin must actually produce pairs
 
 
-def test_suggest_bin_plan_cost_model_and_budget(spark):
+def test_suggest_overlap_plan_cost_model_and_budget(spark):
     """W* = sqrt(mean_dur * horizon / n): shrinks ~sqrt(x) as density
     grows x-fold; the long tail sizes the explode BUDGET (max_dur//W+2,
     so the longest interval passes the guard with margin) rather than
     clamping W — one long interval must not cap the resolution for
     everyone; empty input degrades to (1, 1024)."""
-    from imdb_mapreduce_spark.operators.temporal import suggest_bin_plan
+    from imdb_mapreduce_spark.operators.temporal import suggest_overlap_plan
 
     from pyspark.sql.functions import col as F_col
+
+    def suggest(intervals):
+        plan = suggest_overlap_plan(intervals, "s", "e")
+        return plan.bin_width, plan.max_bins_per_row
 
     def iv(n, dur, horizon):
         return spark.range(n).select(
@@ -461,8 +465,8 @@ def test_suggest_bin_plan_cost_model_and_budget(spark):
             (F_col("id") * (horizon // n) + dur).alias("e"),
         )
 
-    w1, _ = suggest_bin_plan(iv(1_000, 600, 1_000_000), "s", "e")
-    w2, _ = suggest_bin_plan(iv(100_000, 600, 1_000_000), "s", "e")
+    w1, _ = suggest(iv(1_000, 600, 1_000_000))
+    w2, _ = suggest(iv(100_000, 600, 1_000_000))
     # sqrt law: 100x density -> ~10x narrower bins (integer rounding slack)
     assert 8 <= w1 / max(w2, 1) <= 12
     # long tail: one whole-horizon interval leaves W mean-based and
@@ -474,13 +478,13 @@ def test_suggest_bin_plan_cost_model_and_budget(spark):
             F.lit(0).alias("s"), F.lit(999_000).alias("e")
         )
     )
-    w3, budget3 = suggest_bin_plan(long_iv, "s", "e")
+    w3, budget3 = suggest(long_iv)
     assert 999_000 // w3 + 1 <= budget3  # the long interval fits the guard
     assert w3 <= 2 * w1  # ...without inflating W for everyone
     empty = spark.range(0).select(
         F_col("id").alias("s"), F_col("id").alias("e")
     )
-    assert suggest_bin_plan(empty, "s", "e") == (1, 1024)
+    assert suggest(empty) == (1, 1024)
 
 
 def test_sweep_rollup_chunk_invariance(spark):
