@@ -14,7 +14,8 @@ PNG. Here the same session is:
 
 Both answer from the engine's :class:`Adjacency` (the reference's two
 in-RAM inverted indexes), so a ``to_dot`` after its ``request`` runs no
-Spark job.
+Spark job; on a graph within ``ADJACENCY_MAX_VALUES`` no request after
+the engine's first level-≥2 one runs a job.
 
 plus the persistence the reference got from snapshot replication:
 ``eng.save(path)`` / ``ImdbEngine.load(spark, path)``.
@@ -35,7 +36,7 @@ from imdb_mapreduce_spark.operators import graph_export
 from imdb_mapreduce_spark.operators.graph import (
     COSTAR_COLS,
     Adjacency,
-    avg_degree,
+    degree_stats,
 )
 from imdb_mapreduce_spark.operators.graph import costar_bfs
 from imdb_mapreduce_spark.operators.lookup import cast_of, movies_of
@@ -55,7 +56,9 @@ class ImdbEngine:
 
     def __init__(self, cast_edges: DataFrame, cache: bool = True):
         self.cast_edges = cast_edges.cache() if cache else cast_edges
-        # the two inverted indexes request() reads, filled on first use
+        # the two inverted indexes request() reads: loaded in full with
+        # the degrees when the graph fits ADJACENCY_MAX_VALUES, else
+        # filled key by key as requests read them
         self.adjacency = Adjacency(self.cast_edges)
         self._degrees: dict[str, float] = {}  # per query direction, on first use
         self._degrees_lock = threading.Lock()  # the service's handler threads
@@ -121,10 +124,13 @@ class ImdbEngine:
         """The flagship query, reference reply shape ``{Vertices, Edges}``
         (``master.erl:263``): display-sorted vertices + (src, dst, level)
         edges. The rounds are driver-side point lookups on the engine's
-        :class:`Adjacency`: keys an earlier request fetched cost no job,
-        the rest at most two bounded collects per round on the cached edge
-        table, bounded by the ``max_vertices`` budget (``None`` is an
-        explicitly unbounded batch use)."""
+        :class:`Adjacency`, bounded by the ``max_vertices`` budget
+        (``None`` is an explicitly unbounded batch use). The engine's
+        first level-≥2 request runs the degree aggregate and, on a graph
+        within ``ADJACENCY_MAX_VALUES``, the one collect that loads the
+        whole index, after which no request runs a job. Past that bound
+        keys an earlier request fetched cost no job, the rest at most two
+        bounded collects per round on the cached edge table."""
         edges = costar_bfs(
             self.adjacency,
             name,
@@ -136,15 +142,19 @@ class ImdbEngine:
         return graph_export.sorted_vertices(name, node_type, edges), edges
 
     def _degree(self, node_type: str, level: int = 2) -> float | None:
-        """:func:`avg_degree` of a query direction, computed once per engine.
+        """:func:`degree_stats`' average degree of a query direction. One
+        aggregate per engine computes both directions and the edge count,
+        with which the adjacency is then filled (:meth:`Adjacency.fill`).
         None when no round runs (level 1) or the direction is unknown
         (``costar_bfs`` rejects it)."""
         if level < 2 or node_type not in COSTAR_COLS:
             return None
         with self._degrees_lock:
-            if node_type not in self._degrees:
-                node_col = COSTAR_COLS[node_type][0]
-                self._degrees[node_type] = avg_degree(self.cast_edges, node_col)
+            if not self._degrees:
+                node_cols = {kind: col for kind, (col, _) in COSTAR_COLS.items()}
+                n, degrees = degree_stats(self.cast_edges, list(node_cols.values()))
+                self.adjacency.fill(n)
+                self._degrees = {kind: degrees[c] for kind, c in node_cols.items()}
             return self._degrees[node_type]
 
     def cast_of(self, title: str) -> DataFrame:

@@ -23,19 +23,26 @@ answers from its two in-RAM inverted indexes (``server.erl:111-152``),
 each round runs as two lookups — frontier → vias, then vias →
 co-entities — and min-parent attachment, the visited set and both
 budget checks run on the driver, over sets the budget bounds. The
-lookups read an :class:`Adjacency`: a bounded read-through cache of the
-two inverted indexes (actor → titles, title → actors; the reference's
-``actors_db`` and ``titles_db``), shared by both query directions. Keys
-it holds are answered from memory; the missing ones go to Spark as one
-filtered collect on the cached edge table, and each fetched key is kept
-with its distinct values, a key without rows as empty. A key another
-thread is fetching is waited for, not fetched twice. It holds at most
-:data:`ADJACENCY_MAX_VALUES` values, evicting least-recently-used keys,
-and it stays exact because the edge table is never changed after the
-engine is built (``ImdbEngine.unpersist`` clears it). So a repeated
+lookups read an :class:`Adjacency`: the two inverted indexes (actor →
+titles, title → actors; the reference's ``actors_db`` and
+``titles_db``), shared by both query directions.
+
+When both directions of the edge table hold at most
+:data:`ADJACENCY_MAX_VALUES` values (two per edge), the index is filled
+in full, as the reference loads every row before it serves: one collect
+of the edge table, after which a key the index does not hold is a key
+without rows, and no lookup runs a job. Past that bound it is read
+through: keys it holds are answered from memory; the missing ones go to
+Spark as one filtered collect on the cached edge table, and each
+fetched key is kept with its distinct values, a key without rows as
+empty. A key another thread is fetching is waited for, not fetched
+twice. It then holds at most :data:`ADJACENCY_MAX_VALUES` values,
+evicting least-recently-used keys. Either way it stays exact because
+the edge table is never changed after the engine is built
+(``ImdbEngine.unpersist`` clears it). So a repeated
 request, or one whose root an earlier round already expanded, runs no
-job, and a cached reply or refusal equals a cold one. A round is at
-most two jobs with no join, shuffle, broadcast, ``count`` or
+job, and a cached reply or refusal equals a cold one. A read-through
+round is at most two jobs with no join, shuffle, broadcast, ``count`` or
 checkpoint; a round refused on the work estimate runs none. Each key set
 enters the plan as ONE literal: a JSON array that ``from_json`` parses and
 Catalyst folds into an array constant, tested with ``array_contains``. It
@@ -105,14 +112,23 @@ def one_row(spark, *cols: Column) -> DataFrame:
     return spark.range(0, 1, 1, 1).select(*cols)
 
 
-def avg_degree(edges: DataFrame, node_col: str) -> float:
-    """Edges per distinct ``node_col`` (HyperLogLog estimate). One job, no
-    shuffle of the edge table: count and sketch both fold map-side."""
+def degree_stats(edges: DataFrame, node_cols) -> tuple[int, dict[str, float]]:
+    """The edge count and, per column of ``node_cols``, the edges per
+    distinct value (HyperLogLog estimate). One aggregate, no shuffle of
+    the edge table: the count and every sketch fold map-side (adaptive
+    execution runs it as two jobs, the partial map stage and the
+    result)."""
     stats = edges.agg(
-        F.count(F.lit(1)).alias("n_edges"),
-        F.approx_count_distinct(node_col).alias("n_nodes"),
+        F.count(F.lit(1)), *(F.approx_count_distinct(c) for c in node_cols)
     ).collect()[0]
-    return stats["n_edges"] / max(1, stats["n_nodes"])
+    n = stats[0]
+    return n, {c: n / max(1, stats[i]) for i, c in enumerate(node_cols, 1)}
+
+
+def avg_degree(edges: DataFrame, node_col: str) -> float:
+    """Edges per distinct ``node_col`` (HyperLogLog estimate), by
+    :func:`degree_stats`."""
+    return degree_stats(edges, [node_col])[1][node_col]
 
 
 # Fail-fast slack: a round is refused BEFORE its expansion (join or
@@ -226,7 +242,8 @@ def _lookup(edges: DataFrame, key_col: str, keys, val_col: str) -> list:
     return hits.select(key_col, val_col).collect()
 
 
-# The most values an Adjacency holds (an empty key counts as one):
+# The most values an Adjacency holds (an empty key counts as one), and
+# the largest graph it is filled with in full (both directions' values):
 # ImdbEngine.REQUEST_MAX_VERTICES × BFS_WORK_SLACK, what one budgeted
 # hop-2 collect may already hold on the driver.
 ADJACENCY_MAX_VALUES = 100_000 * BFS_WORK_SLACK
@@ -237,31 +254,58 @@ ADJACENCY_WAIT_S = 10.0
 
 
 class Adjacency:
-    """A bounded read-through cache of ``edges``' adjacency lists, keyed
-    by (key column, value column, key); see the module docstring. One lock
-    guards the dict operations only: it is never held across a Spark job,
-    so a miss does not block hits. A key being fetched carries an in-flight
-    marker, and a second thread that misses it waits for that fetch (at
-    most :data:`ADJACENCY_WAIT_S`) instead of running its own; if the
-    fetch raises or the wait runs out, the waiter fetches the key itself."""
+    """The two inverted indexes of ``edges`` (a ``(tconst, title,
+    actor)`` table), keyed by (key column, value column, key); see the
+    module docstring. :meth:`fill` loads a graph within
+    :data:`ADJACENCY_MAX_VALUES` in full and marks the index complete: a
+    complete index answers a key it does not hold as empty, runs no job,
+    stores nothing new and never evicts. Otherwise it is a bounded
+    read-through cache. One lock guards the dict operations only: it is
+    never held across a Spark job, so a miss, or a fill, does not block
+    hits. A key being fetched carries an in-flight marker, and a second
+    thread that misses it waits for that fetch (at most
+    :data:`ADJACENCY_WAIT_S`) instead of running its own; if the fetch
+    raises or the wait runs out, the waiter fetches the key itself."""
 
     def __init__(self, edges: DataFrame) -> None:
         self.edges = edges
-        self._lists: OrderedDict[tuple, tuple] = OrderedDict()
+        self._lists: dict[tuple, tuple] = OrderedDict()
         self._size = 0
+        self._complete = False
         self._lock = threading.Lock()
         self._inflight: dict[tuple, threading.Event] = {}
+
+    def fill(self, n_edges: int) -> None:
+        """Load both directions in full from one collect of ``edges``,
+        which has ``n_edges`` rows, and mark the index complete, if their
+        ``2 × n_edges`` values fit :data:`ADJACENCY_MAX_VALUES`; each key
+        keeps its distinct values."""
+        if 2 * n_edges > ADJACENCY_MAX_VALUES:
+            return
+        actor, title = COSTAR_COLS[ACTOR]
+        lists: dict[tuple, dict] = {}
+        for a, t in self.edges.select(actor, title).collect():
+            # as in _lookup, whose filter no null key passes
+            if a is not None:
+                lists.setdefault((actor, title, a), {})[t] = None
+            if t is not None:
+                lists.setdefault((title, actor, t), {})[a] = None
+        held = {k: tuple(vals) for k, vals in lists.items()}
+        with self._lock:
+            self._lists, self._complete = held, True
+            self._size = sum(map(len, held.values()))
 
     def lookup(self, key_col: str, keys, val_col: str) -> list[tuple]:
         """``(key, val)`` pairs of ``keys``, each val once per key. Only
         the keys neither held nor in flight run a job: one :func:`_lookup`
-        for all of them."""
+        for all of them; a complete index runs none."""
         keys = list(keys)
         lists: dict = {}
         mine: list = []
         theirs: dict = {}
         with self._lock:
-            for k in dict.fromkeys(keys):
+            held = self._lists if self._complete else None
+            for k in dict.fromkeys(keys) if held is None else ():
                 ck = (key_col, val_col, k)
                 vals = self._lists.get(ck)
                 if vals is not None:
@@ -272,6 +316,8 @@ class Adjacency:
                 else:
                     self._inflight[ck] = threading.Event()
                     mine.append(k)
+        if held is not None:
+            return [(k, v) for k in keys for v in held.get((key_col, val_col, k), ())]
         if mine:
             lists.update(self._fetch(key_col, mine, val_col, claimed=True))
         deadline = time.monotonic() + ADJACENCY_WAIT_S
@@ -287,20 +333,21 @@ class Adjacency:
         return [(k, v) for k in keys for v in lists[k]]
 
     def _fetch(self, key_col: str, keys: list, val_col: str, claimed: bool) -> dict:
-        """One :func:`_lookup` for ``keys``, kept and returned as key →
-        vals. With ``claimed`` the keys' in-flight markers are this call's:
-        they are released once the values are kept, or when the job raises."""
+        """One :func:`_lookup` for ``keys``, kept (unless a fill completed
+        the index meanwhile) and returned as key → vals. With ``claimed``
+        the keys' in-flight markers are this call's: they are released
+        once the values are kept, or when the job raises."""
         try:
             fetched: dict = {k: {} for k in keys}
             for k, v in _lookup(self.edges, key_col, keys, val_col):
                 fetched[k][v] = None
+            out = {k: tuple(vals) for k, vals in fetched.items()}
             with self._lock:
-                out = {
-                    k: self._put((key_col, val_col, k), tuple(vals))
-                    for k, vals in fetched.items()
-                }
-                while self._size > ADJACENCY_MAX_VALUES:
-                    self._size -= max(1, len(self._lists.popitem(last=False)[1]))
+                if not self._complete:
+                    for k, vals in out.items():
+                        self._put((key_col, val_col, k), vals)
+                    while self._size > ADJACENCY_MAX_VALUES:
+                        self._size -= max(1, len(self._lists.popitem(last=False)[1]))
             return out
         finally:
             if claimed:
@@ -308,13 +355,12 @@ class Adjacency:
                     for k in keys:
                         self._inflight.pop((key_col, val_col, k)).set()
 
-    def _put(self, key: tuple, vals: tuple) -> tuple:
+    def _put(self, key: tuple, vals: tuple) -> None:
         old = self._lists.pop(key, None)
         if old is not None:  # a waiter that gave up fetched it too
             self._size -= max(1, len(old))
         self._lists[key] = vals
         self._size += max(1, len(vals))
-        return vals
 
     @property
     def size(self) -> int:
@@ -323,8 +369,9 @@ class Adjacency:
 
     def clear(self) -> None:
         with self._lock:
-            self._lists.clear()
+            self._lists = OrderedDict()
             self._size = 0
+            self._complete = False
 
 
 def costar_bfs(

@@ -27,7 +27,8 @@ Accepted classifications:
   operator's own budget guards (the reference's client-facing surface).
 - ``thresholded``: guarded by an explicit row-count threshold that
   raises/falls back before unbounded driver materialization
-  (``components.py`` union-find, ``pagerank.py`` driver rounds).
+  (``components.py`` union-find, ``pagerank.py`` driver rounds, the
+  ``graph.py`` adjacency fill).
 - ``one-row-attach``: crossJoin against a 1-row broadcast aggregate
   (the scalar-attach idiom; Cartesian in name only).
 - ``bounded-dims``: crossJoin where both sides are bounded-small by
@@ -72,11 +73,17 @@ INVENTORY: dict[tuple[str, str, str], tuple[int, str]] = {
         (1, "thresholded"),
     ("operators/components.py", "_checksum", "collect"): (1, "scalar-agg"),
     # one degree aggregate shared by both BFS forms and ImdbEngine, which
-    # runs it once per query direction
-    ("operators/graph.py", "avg_degree", "collect"): (1, "scalar-agg"),
-    # the miss path of a budgeted request's point lookups
-    # (Adjacency.lookup under costar_bfs, ImdbEngine.request), one per
-    # hop, fetching only the keys the engine's Adjacency does not hold.
+    # runs it once per engine for both query directions and the edge count
+    ("operators/graph.py", "degree_stats", "collect"): (1, "scalar-agg"),
+    # Adjacency.fill: the (actor, title) pairs of the whole edge table,
+    # collected only when the aggregate's edge count n has 2n ≤
+    # ADJACENCY_MAX_VALUES (1.6 M), i.e. at most 800 k rows. At the bound
+    # that is ~0.5 GB of driver memory while the index is built and
+    # ~150 MB kept (tracemalloc, synthetic 19-character names).
+    ("operators/graph.py", "fill", "collect"): (1, "thresholded"),
+    # the miss path of a budgeted request's point lookups past the fill
+    # bound (Adjacency.lookup under costar_bfs, ImdbEngine.request), one
+    # per hop, fetching only the keys the engine's Adjacency does not hold.
     # Hop 1 returns the edges of the frontier: ≤ max_vertices keys after
     # the previous round's exact check, ~frontier × degree rows. Hop 2
     # returns one round's candidate edges, ~frontier × degree², which the

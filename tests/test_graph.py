@@ -337,47 +337,16 @@ def hazard_graph(spark):
     return df.cache()
 
 
-# Names a key literal can mangle: a comma, quotes, a backslash, NUL, a
-# non-BMP character, a trailing space; and one BMP character above the
-# surrogate range, which UTF-16 order would put after the non-BMP one.
-_HAZARD_ACTORS = ["Ann, Jr.", "Bob O'Hara", "Cy \\ Slash", 'Dee "Q" Ray',
-                  "Eve\x00Nul", "Fay \U0001F600 Grin", "Gus Trail ", "Hal \uFF21"]
-_HAZARD_TITLES = ["Now, Then", "It's", "Back\\slash", '"Quoted"', "Nul\x00l",
-                  "Smile \U0001F600", "Trailing ", "Wide \uFF21"]
-
-
-@pytest.fixture(scope="module")
-def hazard_graph(spark):
-    """A seeded random (tconst, title, actor) graph with one hub actor,
-    namesake titles (one title name on several tconsts) and the hazard
-    names above, in shuffled row order, so a first-seen parent is rarely
-    the minimum one."""
-    import random
-
-    rng = random.Random(20261017)
-    actors = _HAZARD_ACTORS + [f"Actor {i:02d}" for i in range(40)]
-    titles = _HAZARD_TITLES + [f"Title {i:02d}" for i in range(22)]
-    rows = set()
-    for tconst, title in enumerate(titles + ["Title 03", "Title 07", "Now, Then"]):
-        for actor in rng.sample(actors, rng.randint(2, 6)):
-            rows.add((tconst, title, actor))
-    for tconst in rng.sample(range(len(titles)), 14):  # the hub actor
-        rows.add((tconst, titles[tconst], "Zed Hub"))
-    rows = sorted(rows)
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "tconst long, title string, actor string")
-    return df.cache()
-
-
 def test_driver_rounds_match_distributed_rounds(hazard_graph):
     """The point-lookup rounds of ``ImdbEngine.request`` give the same
     edges, and the same refusals (kind, count and level), as a pure-Python
     BFS applying the documented rules to the collected rows, in both
     directions, at levels 1-4, under budgets that answer, trip the exact
     post-round check and trip the pre-join work estimate: each on a cold
-    :class:`Adjacency`, and every case again, in a shuffled order and twice
-    over, on ONE shared one that earlier cases have filled. Every answer
-    also equals the distributed ``unipartite_bfs`` rounds over the co-star
+    read-through :class:`Adjacency` and on one filled in full, and every
+    case again, in a shuffled order and twice over, on ONE shared
+    read-through one that earlier cases have filled. Every answer also
+    equals the distributed ``unipartite_bfs`` rounds over the co-star
     projection of the same rows."""
     import random
 
@@ -395,6 +364,9 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
     }
     outcomes = set()
     cases = []
+    filled = Adjacency(hazard_graph)
+    filled.fill(hazard_graph.count())
+    assert filled._complete
     for node_type, names in roots.items():
         node_col, via_col = COSTAR_COLS[node_type]
         pairs = [tuple(r) for r in hazard_graph.select(node_col, via_col).collect()]
@@ -411,6 +383,7 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
                 cases.append((kw, want))
                 driver = run(costar_bfs, adjacency=Adjacency(hazard_graph), **kw)
                 assert driver == want, kw
+                assert run(costar_bfs, adjacency=filled, **kw) == want, kw
                 outcomes.add(driver[:2] if driver[0] == "refused" else "answer")
                 if driver[0] == "answer":
                     if level > 1:
@@ -424,6 +397,34 @@ def test_driver_rounds_match_distributed_rounds(hazard_graph):
     random.Random(7).shuffle(cases)
     for kw, want in cases + cases:
         assert run(costar_bfs, adjacency=shared, **kw) == want, kw
+
+
+def test_filled_index_reads_null_names_as_the_lookups_do(spark):
+    """A null title or actor (a ``\\N`` name) is a value a key may hold
+    but never a key a lookup's filter matches; a filled index answers
+    every key, null included, with the pairs a read-through one fetches."""
+    rows = [(1, "A", "x"), (1, "A", None), (2, None, "x"), (2, None, "y"), (3, "B", "y")]
+    edges = spark.createDataFrame(rows, "tconst long, title string, actor string")
+    filled = Adjacency(edges)
+    filled.fill(len(rows))
+    assert filled._complete
+    for key_col, val_col in (("actor", "title"), ("title", "actor")):
+        keys = ["x", "y", "A", "B", None, "nobody"]
+        want = set(Adjacency(edges).lookup(key_col, keys, val_col))
+        assert set(filled.lookup(key_col, keys, val_col)) == want, key_col
+
+
+def _read_through(engine, monkeypatch):
+    """``engine`` after its degree aggregate ran with the fill bound at 0:
+    its :class:`Adjacency` reads the graph key by key, as past the bound,
+    and keeps the full cache capacity."""
+    from imdb_mapreduce_spark.operators import graph
+
+    with monkeypatch.context() as m:
+        m.setattr(graph, "ADJACENCY_MAX_VALUES", 0)
+        engine._degree("actor")
+    assert not engine.adjacency._complete
+    return engine
 
 
 def _jobs_of(sc, group: str, fn, *args, **kwargs):
@@ -440,31 +441,33 @@ def _jobs_of(sc, group: str, fn, *args, **kwargs):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
-    """A level-k request runs at most two jobs per round it runs (its two
-    lookups), and the round an estimated refusal stops at runs none. The
-    degree aggregate runs once per engine, first, and is not counted.
-    Replayed on the same engine, every request, refusals included, runs
-    no job and gets the same reply; so does a fresh request whose root an
-    earlier round expanded."""
+# Requests in both directions that answer, hit a dead end and are
+# refused on the exact check and on the estimate (in round 1 and 2).
+_REQUEST_CASES = [
+    ("Zed Hub", "actor", 4, 10_000, "answer"),
+    ("Ann, Jr.", "actor", 3, 10_000, "answer"),
+    ("Nobody", "actor", 3, 10_000, "answer"),
+    ("Now, Then", "movie", 4, 10_000, "answer"),
+    ("Zed Hub", "actor", 4, 12, "exact"),
+    ("Now, Then", "movie", 2, 1, "estimated"),  # in round 1: no job
+    ("Now, Then", "movie", 4, 20, "estimated"),  # in round 2
+]
+
+
+def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph, monkeypatch):
+    """Past the fill bound, a level-k request runs at most two jobs per
+    round it runs (its two lookups), and the round an estimated refusal
+    stops at runs none. The degree aggregate runs once per engine, first,
+    and is not counted. Replayed on the same engine, every request,
+    refusals included, runs no job and gets the same reply; so does a
+    fresh request whose root an earlier round expanded."""
     from imdb_mapreduce_spark.api import ImdbEngine
     from imdb_mapreduce_spark.operators.graph import BfsBudgetExceeded
 
     sc = spark.sparkContext
-    engine = ImdbEngine(hazard_graph, cache=False)
-    for node_type in ("actor", "movie"):
-        engine._degree(node_type)
-    cases = [
-        ("Zed Hub", "actor", 4, 10_000, "answer"),
-        ("Ann, Jr.", "actor", 3, 10_000, "answer"),
-        ("Nobody", "actor", 3, 10_000, "answer"),
-        ("Now, Then", "movie", 4, 10_000, "answer"),
-        ("Zed Hub", "actor", 4, 12, "exact"),
-        ("Now, Then", "movie", 2, 1, "estimated"),  # in round 1: no job
-        ("Now, Then", "movie", 4, 20, "estimated"),  # in round 2
-    ]
+    engine = _read_through(ImdbEngine(hazard_graph, cache=False), monkeypatch)
     replies = []
-    for i, (name, node_type, level, budget, want) in enumerate(cases):
+    for i, (name, node_type, level, budget, want) in enumerate(_REQUEST_CASES):
         reply, jobs = _jobs_of(
             sc, f"test-request-jobs-{i}", engine.request,
             name, node_type, level, max_vertices=budget,
@@ -482,7 +485,7 @@ def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
         assert kind == want, (name, node_type, level, budget, kind)
         assert jobs <= 2 * rounds, (name, node_type, level, budget, jobs, rounds)
 
-    for i, (name, node_type, level, budget, _) in enumerate(cases):
+    for i, (name, node_type, level, budget, _) in enumerate(_REQUEST_CASES):
         reply, jobs = _jobs_of(
             sc, f"test-request-repeat-{i}", engine.request,
             name, node_type, level, max_vertices=budget,
@@ -497,6 +500,44 @@ def test_request_runs_at_most_two_jobs_per_round(spark, hazard_graph):
     )
     assert jobs == 0, costar
     assert reply == ImdbEngine(hazard_graph, cache=False).request(costar, "actor", 2)
+
+
+def test_filled_engine_runs_no_job_after_its_first_request(
+    spark, hazard_graph, monkeypatch
+):
+    """Within the fill bound, an engine's first level-≥2 request runs the
+    degree aggregate and the one collect that fills its Adjacency in
+    full, and marks it complete. After it, fresh requests in both
+    directions run no job, and every reply and refusal equals a
+    read-through engine's. ``unpersist`` empties the index, which is then
+    no longer complete."""
+    from imdb_mapreduce_spark.api import ImdbEngine
+    from imdb_mapreduce_spark.operators.graph import degree_stats
+
+    sc = spark.sparkContext
+
+    def outcome(engine, group, name, node_type, level, budget):
+        reply, jobs = _jobs_of(
+            sc, group, engine.request, name, node_type, level, max_vertices=budget
+        )
+        return (str(reply) if isinstance(reply, BfsBudgetExceeded) else reply), jobs
+
+    engine = ImdbEngine(hazard_graph, cache=False)
+    reading = _read_through(ImdbEngine(hazard_graph, cache=False), monkeypatch)
+    first = ("Title 07", "movie", 2, 10_000)
+    got, jobs = outcome(engine, "test-filled-first", *first)
+    _, aggregate_jobs = _jobs_of(
+        sc, "test-filled-aggregate", degree_stats, hazard_graph, ["actor", "title"]
+    )
+    assert jobs == aggregate_jobs + 1 and engine.adjacency._complete
+    assert 0 < engine.adjacency.size <= 2 * hazard_graph.count()
+    assert got == outcome(reading, "test-reading-first", *first)[0]
+    for i, (*req, _) in enumerate(_REQUEST_CASES):
+        want, _ = outcome(reading, f"test-reading-{i}", *req)
+        assert outcome(engine, f"test-filled-{i}", *req) == (want, 0), req
+    engine.unpersist()
+    assert not engine.adjacency._complete
+    assert engine.adjacency.size == 0 and not engine.adjacency._lists
 
 
 def test_adjacency_stays_within_capacity_and_unpersist_empties_it(
@@ -591,22 +632,21 @@ def test_dot_ids_are_the_names_quoted(hazard_graph, tmp_path):
         assert open(out, "rb").read(8) == b"\x89PNG\r\n\x1a\n"
 
 
-def test_to_dot_draws_the_request_reply(spark, hazard_graph):
+def test_to_dot_draws_the_request_reply(spark, hazard_graph, monkeypatch):
     """``ImdbEngine.to_dot`` is the DOT of ``request``'s reply: after a
     request for the same name, type and level it runs no job and equals
-    the DOT assembled from that reply; cold, it runs at most two jobs per
-    round; over the engine's request budget it raises as ``request``
-    does."""
+    the DOT assembled from that reply; cold and past the fill bound, it
+    runs at most two jobs per round; over the engine's request budget it
+    raises as ``request`` does."""
     from imdb_mapreduce_spark.api import ImdbEngine
     from imdb_mapreduce_spark.operators import graph_export
 
     sc = spark.sparkContext
     cases = [("Zed Hub", "actor", 4), ("Now, Then", "movie", 3), ("Ann, Jr.", "actor", 2)]
-    cold = ImdbEngine(hazard_graph, cache=False)
-    warm = ImdbEngine(hazard_graph, cache=False)
-    for engine in (cold, warm):
-        for node_type in ("actor", "movie"):
-            engine._degree(node_type)
+    cold, warm = (
+        _read_through(ImdbEngine(hazard_graph, cache=False), monkeypatch)
+        for _ in range(2)
+    )
     for i, (name, node_type, level) in enumerate(cases):
         dot, jobs = _jobs_of(sc, f"test-to-dot-cold-{i}", cold.to_dot, name, node_type, level)
         assert jobs <= 2 * (level - 1), (name, jobs)

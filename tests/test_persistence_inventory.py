@@ -4,8 +4,8 @@
 The r09 1000×-corpus failure (PageRank edge cache evicting mid-iteration)
 and the r09/r10 retained-block audits established the rule: anything
 that pins executor storage needs one of (a) a bounded relation, (b) a
-scoped unpersist, (c) a data-proportional decision off a footer probe,
-or (d) a documented release-on-GC retention contract. Like the Arrow-wall
+data-proportional decision off a footer probe, or (c) a documented
+release-on-GC retention contract. Like the Arrow-wall
 and collect/crossJoin inventories, this converts that per-round manual
 audit into a failing test for the NEXT operator that persists something
 without deciding how it gets released.
@@ -23,8 +23,6 @@ Accepted classifications:
   the site carries the written retention contract (released when the
   driver GCs refs and the ContextCleaner runs; why persist/unpersist
   was rejected) — ``verify_pairs_jaccard`` is the template.
-- ``scoped-unpersist``: ``persist()`` paired with ``unpersist()`` in a
-  ``finally`` — explicitly released, no GC dependence.
 - ``probe-guarded-persist``: ``persist()`` behind a data-proportional
   decision (``persist_edges`` off a footer probe) so the cache only
   exists at scales where it fits — the r09 PageRank fix.
@@ -173,7 +171,6 @@ ALLOWED = {
     "lineage-truncation",
     "bounded-relation",
     "contract-documented",
-    "scoped-unpersist",
     "probe-guarded-persist",
     "opt-in-cache",
 }
@@ -254,20 +251,19 @@ def test_every_persistence_site_is_classified():
 
 def test_persist_classes_keep_their_release_story():
     """Structural spot-checks that each classification stays true:
-    scoped/probe-guarded persists must still unpersist; documented
-    contracts must still carry their contract text."""
+    probe-guarded persists must still unpersist; documented contracts
+    must still carry their contract text."""
     for (rel, fn_name, _m), (_n, cls) in INVENTORY.items():
-        if cls in ("scoped-unpersist", "probe-guarded-persist"):
+        if cls == "probe-guarded-persist":
             src = _source_of(rel, fn_name)
             assert "unpersist" in src, (
                 f"{rel}:{fn_name} is classified {cls} but no longer calls "
                 "unpersist — the release story is gone"
             )
-            if cls == "probe-guarded-persist":
-                assert "persist_edges" in src, (
-                    f"{rel}:{fn_name} lost its data-proportional persist "
-                    "decision"
-                )
+            assert "persist_edges" in src, (
+                f"{rel}:{fn_name} lost its data-proportional persist "
+                "decision"
+            )
         if cls == "contract-documented":
             src = _source_of(rel, fn_name).lower()
             assert any(

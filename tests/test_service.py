@@ -1,6 +1,6 @@
 """The request service over the local ``cast_edges`` fixture: concurrent
 clients, a budget refusal on a live connection, and the engine's
-once-per-direction degree aggregate."""
+once-per-engine degree aggregate and adjacency fill."""
 
 from __future__ import annotations
 
@@ -28,15 +28,16 @@ def _ask(f, req: dict) -> dict:
     return json.loads(f.readline())
 
 
-def _counting_degree(monkeypatch, fn=None) -> list[str]:
-    calls: list[str] = []
-    real = fn or api.avg_degree
+def _counting_degree(monkeypatch, fn=None) -> list[list[str]]:
+    """Records the node columns of each degree aggregate the engine runs."""
+    calls: list[list[str]] = []
+    real = fn or api.degree_stats
 
-    def counted(edges, node_col):
-        calls.append(node_col)
-        return real(edges, node_col)
+    def counted(edges, node_cols):
+        calls.append(list(node_cols))
+        return real(edges, node_cols)
 
-    monkeypatch.setattr(api, "avg_degree", counted)
+    monkeypatch.setattr(api, "degree_stats", counted)
     return calls
 
 
@@ -85,8 +86,10 @@ def test_service_round_trip_over_local_fixture(cast_edges, monkeypatch):
             want_v, want_e = engine.request(n, t, lvl)
             assert reply == {"vertices": want_v, "edges": [list(e) for e in want_e]}
     assert again["vertices"] == ["John Q. Smith 0", "Jane Doe", "Bob O'Hara"]  # by surname
-    # a dozen level >= 2 requests, yet one degree aggregate per direction
-    assert sorted(degree_calls) == ["actor", "title"]
+    # a dozen level >= 2 requests, yet one degree aggregate for both
+    # directions, and the fixture is filled in full
+    assert degree_calls == [["actor", "title"]]
+    assert engine.adjacency._complete
 
 
 def test_service_logs_one_line_per_request(cast_edges, caplog):
@@ -174,21 +177,38 @@ def _contend(ask, n: int = 16) -> list:
     return got
 
 
-def test_degree_is_computed_once_under_contending_threads(monkeypatch):
-    """Many handler threads asking for a degree at once still run one
-    aggregate per direction. Many asking the engine's adjacency for the
-    same keys at once get equal replies, and each key is fetched once: a
-    thread that misses a key another is fetching waits for that fetch."""
+def test_degree_is_computed_once_under_contending_threads(cast_edges, monkeypatch):
+    """Many handler threads sending an engine's first level-2 requests at
+    once still run one degree aggregate and one fill, and each gets the
+    reply a lone request gets. Many asking a read-through adjacency for
+    the same keys at once get equal replies, and each key is fetched
+    once: a thread that misses a key another is fetching waits for that
+    fetch."""
     from imdb_mapreduce_spark.operators import graph
 
-    def slow_degree(edges, node_col):
+    def slow_degree(edges, node_cols):
         time.sleep(0.02)  # a window for a second thread to slip in
-        return 2.0
+        return graph.degree_stats(edges, node_cols)
 
     calls = _counting_degree(monkeypatch, slow_degree)
-    engine = ImdbEngine(cast_edges=None, cache=False)
-    assert [v for _, v in _contend(engine._degree)] == [2.0] * 16
-    assert sorted(calls) == ["actor", "title"]
+    fills: list[int] = []
+    real_fill = graph.Adjacency.fill
+
+    def counted_fill(self, n_edges):
+        fills.append(n_edges)
+        real_fill(self, n_edges)
+
+    monkeypatch.setattr(graph.Adjacency, "fill", counted_fill)
+    lookups: list = []
+    monkeypatch.setattr(graph, "_lookup", lambda *a: lookups.append(a))
+    roots = {"actor": "Jane Doe", "movie": "Alpha Zero 0"}
+    engine = ImdbEngine(cast_edges)
+    got = _contend(lambda kind: engine.request(roots[kind], kind, 2))
+    assert calls == [["actor", "title"]] and fills == [cast_edges.count()]
+    assert lookups == []  # every request read the filled index
+    monkeypatch.undo()
+    want = {kind: ImdbEngine(cast_edges).request(root, kind, 2) for kind, root in roots.items()}
+    assert all(reply == want[kind] for kind, reply in got)
 
     fetches: list[tuple[str, list]] = []
 
@@ -198,11 +218,12 @@ def test_degree_is_computed_once_under_contending_threads(monkeypatch):
         return [(k, f"{k}/{i}") for k in keys if k != "dead end" for i in (1, 0, 1)]
 
     monkeypatch.setattr(graph, "_lookup", slow_lookup)
+    adjacency = graph.Adjacency(None)
     keys = {"actor": ["b", "a", "dead end"], "movie": ["T", "a", "dead end"]}
 
     def ask(kind: str) -> list:
         key_col, val_col = graph.COSTAR_COLS[kind]
-        return engine.adjacency.lookup(key_col, keys[kind], val_col)
+        return adjacency.lookup(key_col, keys[kind], val_col)
 
     want = {
         "actor": [("b", "b/1"), ("b", "b/0"), ("a", "a/1"), ("a", "a/0")],
